@@ -15,6 +15,13 @@ their scripts 1:1:
   ``src/app/grep.rs:18-34``),
 * ``process_output`` → the app's exact human-readable format.
 
+Each submit runs its plan once: with ``output_dir`` the plan is the
+write and the output is formatted from the written files by
+:func:`process_job`; without it, one ``collect()``. The plans carry
+no sort — each app's formatter applies the reference's presentation
+order to the collected rows — and vertex-degree's malformed-line check
+is an expression inside the degree plan, not a separate pass.
+
 Everything in between — scheduling, shuffle, retries, barriers — is
 Spark's driver/executors (SURVEY.md §2.3: C1-C10 map to built-ins).
 """
@@ -23,8 +30,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..sources.sinks import write_n_files
 from ..sources.text import read_lines_with_path, read_whole_files
 from .mapreduce import (
     format_grep,
@@ -33,10 +44,29 @@ from .mapreduce import (
     grep_lines,
     parse_edge_lines,
     vertex_degree,
-    word_count_report,
+    word_count,
 )
 
 APPS = ("wc", "grep", "vertex-degree")
+
+#: Each app's output-file schema: submit writes its rows in this shape
+#: and process reads them back with it (no footer-inference job).
+OUTPUT_SCHEMAS = {
+    "wc": "word string, cnt bigint",
+    "grep": "path string, line_no int, line string",
+    "vertex-degree": "vertex bigint, degree bigint",
+}
+
+#: Each app's ``process_output``; every one orders the rows itself.
+_FORMATS = {
+    "wc": format_word_count,
+    "grep": format_grep,
+    "vertex-degree": format_vertex_degree,
+}
+
+#: The error a malformed edge line raises inside the vertex-degree plan
+#: (reference: a fatal task failure, ``src/vertex_degree.rs:26-27``).
+MALFORMED_EDGE = "vertex-degree: malformed edge line"
 
 
 @dataclass
@@ -61,73 +91,67 @@ def submit_job(
     """Run one reference-style job to completion (the Spark action IS
     submit+poll — blocking, with retries and stage barriers inside).
 
-    Unknown ``app`` raises ValueError at submit time, matching the
-    coordinator's InvalidArgument."""
-    args = args or []
-    cached = None  # unpersisted in the finally below, success or not
+    Unknown ``app`` or an empty ``files`` raises ValueError at submit
+    time, matching the coordinator's InvalidArgument; so does a
+    malformed vertex-degree edge line, when the job runs.
+
+    With ``output_dir``, the plan runs once as the ``n_reduce``-file
+    write, and ``output``/``df`` come from reading those files back
+    through :func:`process_job`. Without it, the plan runs once as a
+    ``collect()``."""
+    _check_app(app)
+    if not files:
+        raise ValueError(f"{app}: no input files")
+    df = _plan(spark, app, files, args or []).to(StructType.fromDDL(OUTPUT_SCHEMAS[app]))
     try:
-        if app == "wc":
-            df = word_count_report(read_whole_files(spark, files), "content")
-            fmt = format_word_count
-        elif app == "grep":
-            term = _parse_term(args)
-            df = grep_lines(read_lines_with_path(spark, files), term)
-            fmt = format_grep
-        elif app == "vertex-degree":
-            # persist the parsed edges: the validation pass, the result,
-            # and an optional sink all consume them — one parse, not three
-            cached = parse_edge_lines(
-                read_lines_with_path(spark, files).select("line")
-            ).persist()
-            if cached.filter(~cached.valid).limit(1).count():
-                # reference: malformed line => fatal task failure => job
-                # failed with recorded errors (src/vertex_degree.rs:26-27)
-                raise ValueError("vertex-degree: malformed edge line")
-            df = vertex_degree(cached, "src", "dst")
-            fmt = format_vertex_degree
-        else:
-            raise ValueError(f"unknown app {app!r}; known: {APPS}")
-
-        n_files = 0
-        if output_dir is not None:
-            from ..sources.sinks import write_n_files
-
-            n_files = write_n_files(df, output_dir, n_reduce, by_col=df.columns[0])
-        # all actions complete before the finally drops the cache; the
-        # returned df stays valid (recomputes from source if re-used)
-        return JobResult(
-            df=df, output=fmt(df.collect()), output_dir=output_dir, n_output_files=n_files
-        )
-    finally:
-        if cached is not None:
-            cached.unpersist()
+        if output_dir is None:
+            return JobResult(df=df, output=_FORMATS[app](df.collect()))
+        n_files = write_n_files(df, output_dir, n_reduce, by_col=df.columns[0])
+    except CapturedException as exc:
+        if MALFORMED_EDGE in str(exc):
+            raise ValueError(MALFORMED_EDGE) from exc
+        raise
+    res = process_job(spark, app, output_dir)
+    res.n_output_files = n_files
+    return res
 
 
 def process_job(spark: SparkSession, app: str, output_dir: str) -> JobResult:
     """The reference's SEPARATE ``process`` invocation: re-read the
     job's output files from disk in a second client run and format
     them (``src/client.rs:66-93``, ``src/bin/client.rs:155-162``) —
-    no recomputation, only read-back + format.
+    no recomputation, only read-back + format. ``submit_job`` with an
+    ``output_dir`` formats through here too, so both give the same
+    bytes.
 
     Files are the parquet ``write_n_files`` wrote (the engine's
     ``mr-out-*`` equivalent; SURVEY.md §1.4 maps F11's
-    length-delimited codec to parquet). Hash-partitioned files carry
-    no global order, so presentation order is (re)applied here, as
-    the reference's process step re-sorts per app
-    (``src/app/wc.rs:60-66``, ``src/app/grep.rs:64-78``)."""
+    length-delimited codec to parquet), read with the app's
+    :data:`OUTPUT_SCHEMAS` entry. Hash-partitioned files carry no
+    global order; each app's formatter re-sorts the rows, as the
+    reference's process step does (``src/app/wc.rs:60-66``,
+    ``src/app/grep.rs:64-78``)."""
+    _check_app(app)
+    df = spark.read.schema(OUTPUT_SCHEMAS[app]).parquet(output_dir)
+    return JobResult(df=df, output=_FORMATS[app](df.collect()), output_dir=output_dir)
+
+
+def _check_app(app: str) -> None:
     if app not in APPS:
         raise ValueError(f"unknown app {app!r}; known: {APPS}")
-    from pyspark.sql import functions as F
 
-    df = spark.read.parquet(output_dir)
+
+def _plan(spark: SparkSession, app: str, files: list[str], args: list[str]) -> DataFrame:
+    """The app's result rows as one unsorted plan."""
     if app == "wc":
-        df = df.orderBy(F.col("cnt").asc(), F.col("word").asc())
-        fmt = format_word_count
-    elif app == "grep":
-        fmt = format_grep  # sorts (path, line_no) itself
-    else:
-        fmt = format_vertex_degree  # sorts by vertex itself
-    return JobResult(df=df, output=fmt(df.collect()), output_dir=output_dir)
+        return word_count(read_whole_files(spark, files), "content")
+    if app == "grep":
+        return grep_lines(read_lines_with_path(spark, files), _parse_term(args))
+    edges = parse_edge_lines(read_lines_with_path(spark, files).select("line"))
+    # every row's src passes through the check, so one malformed line
+    # fails the task that reads it, and with it the job
+    checked = F.when(edges.valid, edges.src).otherwise(F.raise_error(MALFORMED_EDGE))
+    return vertex_degree(edges.select(checked.alias("src"), "dst"), "src", "dst")
 
 
 def _parse_term(args: list[str]) -> str:

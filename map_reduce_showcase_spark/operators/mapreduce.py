@@ -43,9 +43,12 @@ def tokenize(text: Column) -> Column:
 def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:
     """wc: token → count (W1-W3), columns ``(word, cnt)``.
 
-    Global (count asc, word asc) presentation order (W4,
-    ``src/app/wc.rs:60-66``) is applied by :func:`word_count_report`;
-    the aggregate itself is order-free so the optimizer can fuse it.
+    The aggregate is order-free so the optimizer can fuse it, and a
+    job's writer hash-partitions it without a sort. The reference's
+    (count asc, word asc) presentation order (W4,
+    ``src/app/wc.rs:60-66``) is applied by :func:`format_word_count`
+    on the collected rows, or by :func:`word_count_report` for a
+    caller that wants an ordered frame.
     """
     from ..functions.util import rebalance
 
@@ -58,14 +61,19 @@ def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def word_count_report(text_df: DataFrame, text_col: str = "text") -> DataFrame:
-    """wc with the reference's output ordering (count asc, word asc)."""
+    """wc as a frame in the reference's output order (count asc, word
+    asc). The job façade does not use it: its output comes from
+    :func:`format_word_count`, which sorts the rows itself."""
     return word_count(text_df, text_col).orderBy(F.col("cnt").asc(), F.col("word").asc())
 
 
 def format_word_count(rows) -> str:
-    """Reference ``process_output`` format: ``"{count}\\t{word}\\n"``
-    (``src/app/wc.rs:51-74``). Driver-side, tiny: one line per
-    distinct word."""
+    """Reference ``process_output`` format: ``"{count}\\t{word}\\n"``,
+    count asc then word asc (``src/app/wc.rs:51-74``). Driver-side,
+    tiny: one line per distinct word. Python's code-point order on
+    ``str`` equals Spark's UTF-8 byte order on strings, so the rows
+    may arrive in any order."""
+    rows = sorted(rows, key=lambda r: (r["cnt"], r["word"]))
     return "".join(f"{r['cnt']}\t{r['word']}\n" for r in rows)
 
 
@@ -129,17 +137,19 @@ def vertex_degree(edges_df: DataFrame, src_col: str, dst_col: str) -> DataFrame:
 def parse_edge_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
     """Parse whitespace-separated ``src dst`` u64 edge lines (V1,
     ``src/app/vertex_degree.rs:12-27``). The reference fails the
-    whole task on a malformed line; we mirror that with a strict
-    cast check — callers get an ``(src, dst, valid)`` frame and the
-    golden harness asserts ``valid`` everywhere.
+    whole task on a malformed line; callers get an ``(src, dst,
+    valid)`` frame and decide what an invalid row does (the job
+    façade fails the job on it).
 
     Exact parity with the Rust parse: ``split_whitespace().take(2)``
     ignores any tokens past the first two, and ``parse::<u64>``
     rejects negatives — so extra trailing tokens are fine but a
-    negative vertex id is malformed."""
+    negative vertex id is malformed. ``try_element_at`` and
+    ``try_cast`` yield null instead of raising, so a missing token or
+    a non-numeric one reaches ``valid`` under ANSI mode too."""
     parts = F.split(F.trim(F.col(line_col)), r"\s+")
-    src = F.element_at(parts, 1).cast("long")
-    dst = F.element_at(parts, 2).cast("long")
+    src = F.try_element_at(parts, F.lit(1)).try_cast("long")
+    dst = F.try_element_at(parts, F.lit(2)).try_cast("long")
     return lines_df.select(
         src.alias("src"),
         dst.alias("dst"),

@@ -64,14 +64,30 @@ def write_n_files(df: DataFrame, path: str, n: int, by_col: str | None = None) -
     Returns the number of data files actually written: unlike the
     reference (whose reduce tasks write even empty files), Spark's
     writer skips empty partitions, so the count is ≤ n when keys
-    hash unevenly or there are fewer keys than partitions."""
-    import glob
-
+    hash unevenly or there are fewer keys than partitions. The count
+    is a Hadoop FS listing, so it holds on any supported filesystem."""
     from pyspark.sql import functions as F
 
     part = df.repartition(n, F.col(by_col)) if by_col else df.repartition(n)
     part.write.mode("overwrite").parquet(path)
-    return len(glob.glob(f"{path}/part-*"))
+    return len(_data_file_sizes(df.sparkSession, path))
+
+
+def _data_file_sizes(spark, path: str) -> list[int]:
+    """Byte sizes of the data files under ``path``, recursively, from a
+    Hadoop FS listing (local, HDFS, object stores); ``_``- and
+    ``.``-prefixed files (``_SUCCESS``, checksums) are not data."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    it = hpath.getFileSystem(conf).listFiles(hpath, True)
+    sizes = []
+    while it.hasNext():
+        f = it.next()
+        name = f.getPath().getName()
+        if not name.startswith("_") and not name.startswith("."):
+            sizes.append(f.getLen())
+    return sizes
 
 
 def compact_small_files(
@@ -97,17 +113,7 @@ def compact_small_files(
     overwrite a directory a reader may be listing."""
     import math
 
-    jvm = spark.sparkContext._jvm  # noqa: SLF001
-    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
-    hpath = jvm.org.apache.hadoop.fs.Path(src_path)
-    fs = hpath.getFileSystem(conf)
-    it = fs.listFiles(hpath, True)
-    total = 0
-    while it.hasNext():
-        f = it.next()
-        name = f.getPath().getName()
-        if not name.startswith("_") and not name.startswith("."):
-            total += f.getLen()
+    total = sum(_data_file_sizes(spark, src_path))
     n = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(src_path)
     if partition_by:
