@@ -14,11 +14,11 @@ quadratic bucket). ``max_shingle_df`` implements that cap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import tokens
+from ..functions.text import require_sql_text_conf, shingles_sql, tokens
 
 
 def shingle_rows(
@@ -29,43 +29,20 @@ def shingle_rows(
 ) -> DataFrame:
     """(doc_id, shingle) inverted-index rows, distinct per doc.
 
-    Two-stage plan: tokenize below an exchange, shingle above it.
-    The exchange (a) rebalances small low-partition inputs across
-    all cores — a single parquet file otherwise pins the expensive
-    higher-order shingle expressions to one task — and (b) stops
-    CollapseProject from inlining the tokenize regex into every one
-    of the shingle expression's references to the token array."""
+    The raw text is rebalanced first, so a single parquet file does
+    not pin tokenizing and shingling to one task. The token array is
+    projected once: the shingle expression references it several
+    times, so Catalyst keeps it in its own projection instead of
+    re-running the tokenize regex per reference."""
     from ..functions.util import rebalance
 
-    # rebalance the raw text FIRST so tokenize itself runs on all
-    # cores (tokenizing below the exchange would serialize it into
-    # the source's partition count)
-    docs = rebalance(docs)
-    toks_df = docs.select(
+    require_sql_text_conf(docs.sparkSession)
+    toks_df = rebalance(docs).select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("_toks")
     )
-    tk = F.col("_toks")
-    if n == 2:
-        # bigram fast path: one linear zip of the array with its own
-        # tail (the indexed transform+slice form is O(n) per gram).
-        # zip_with pads the shorter side with null and concat
-        # propagates it, so the trailing (and single-token) null
-        # grams filter out — no size guard needed. ONE parsed
-        # expression (the lambda form costs ~20 ms/lambda of py4j
-        # round trips per plan build — r18 build profile).
-        shingles = F.expr(
-            "filter(zip_with(_toks, "
-            "slice(_toks, 2, greatest(size(_toks) - 1, 0)), "
-            "(a, b) -> concat(a, ' ', b)), g -> g IS NOT NULL)"
-        )
-    else:
-        idx = F.sequence(F.lit(0), F.size(tk) - n)
-        grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i + 1, n)))
-        shingles = F.when(F.size(tk) >= n, grams).otherwise(
-            F.expr("CAST(array() AS ARRAY<STRING>)")
-        )
     return toks_df.select(
-        "doc_id", F.explode(F.array_distinct(shingles)).alias("shingle")
+        "doc_id",
+        F.explode(F.expr(f"array_distinct({shingles_sql('_toks', n)})")).alias("shingle"),
     )
 
 
@@ -84,22 +61,24 @@ def cap_shingle_df(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
     )
 
 
+def keep_jaccard(pairs: DataFrame, jac: Column, threshold: float) -> DataFrame:
+    """The verify tail every Jaccard operator ends in: the ``(d1, d2)``
+    pairs of ``pairs`` whose ``jac`` is ≥ threshold, as
+    ``(d1, d2, jaccard)`` rounded to 6 places. The exhaustive pair
+    scan and MinHash both end here, so their semantics cannot drift
+    apart."""
+    return pairs.filter(jac >= threshold).select("d1", "d2", F.round(jac, 6).alias("jaccard"))
+
+
 def jaccard_filter(
     inter: DataFrame, sizes: DataFrame, threshold: float
 ) -> DataFrame:
-    """Shared verify tail: (d1, d2, inter) + per-doc shingle sizes →
-    pairs with Jaccard ≥ threshold, rounded to 6. Used by both the
-    exhaustive pair scan and the LSH candidate-verify stage so their
-    semantics can never drift apart."""
+    """(d1, d2, inter) + per-doc shingle sizes → pairs with Jaccard ≥
+    threshold, through :func:`keep_jaccard`."""
     s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("sz").alias("sz1"))
     s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("sz").alias("sz2"))
     jac = F.col("inter") * F.lit(1.0) / (F.col("sz1") + F.col("sz2") - F.col("inter"))
-    return (
-        inter.join(s1, "d1")
-        .join(s2, "d2")
-        .filter(jac >= threshold)
-        .select("d1", "d2", F.round(jac, 6).alias("jaccard"))
-    )
+    return keep_jaccard(inter.join(s1, "d1").join(s2, "d2"), jac, threshold)
 
 
 def shingle_sizes(sh: DataFrame) -> DataFrame:

@@ -3,7 +3,10 @@
 Charikar SimHash over the document's distinct-token set: each token
 hashes to ``SIMHASH_BITS`` bits (portable 60-bit md5 hash so the
 DuckDB oracle can replay it); bit j of the fingerprint is 1 iff more
-tokens set bit j than clear it (strict majority — ties → 0).
+tokens set bit j than clear it (strict majority — ties → 0). The
+fingerprint is a per-document sketch: 32 folds over the row's own
+token-hash array in one projection, map-side, with no explode and no
+shuffle.
 
 Near-pair search uses the pigeonhole banding trick, NOT a cross
 join: split the fingerprint into ``n_bands`` chunks; any pair with
@@ -19,7 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import portable_hash60, tokens
+from ..functions.text import (
+    has_token_sql,
+    portable_hash60_spark_sql,
+    require_sql_text_conf,
+    tokens_sql,
+)
 
 #: 32 bits: at 16 bits, same-domain corpora (shared vocabulary)
 #: collapse — nearly all pairs land within Hamming 3; 32 bits keeps
@@ -30,34 +38,36 @@ SIMHASH_BITS = 32
 def simhash_docs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(doc_id, simhash) with a ``SIMHASH_BITS``-bit fingerprint."""
+    """(doc_id, simhash) with a ``SIMHASH_BITS``-bit fingerprint, for
+    every doc with at least one token.
+
+    A per-document sketch in one projection, no explode and no
+    ``groupBy``: ``hv`` holds the portable hashes of the doc's distinct
+    tokens, and bit j is set iff more than half of them set it,
+    ``2 * aggregate(hv, 0L, (acc, h) -> acc + ((h >> j) & 1)) > size(hv)``
+    (the oracle's ``sum(±1) > 0``). ``hv`` is referenced by all 32
+    folds, so Catalyst keeps it in its own projection: tokenizing and
+    md5 run once per doc. Token-less docs are dropped by a regex test
+    on the raw text, before tokenizing: a filter on ``hv`` would be
+    pushed below its projection, ``hv`` inlined, and hash every doc
+    twice."""
     from ..functions.util import rebalance
 
-    tok = rebalance(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(text_col))).alias("word"),
-    )
-    # project the md5-based hash ONCE below the aggregate — the bit
-    # expressions reference it 32 times, and referencing the raw
-    # expression would evaluate 32 md5s per token
-    hashed = tok.select("doc_id", portable_hash60(F.col("word")).alias("hv"))
-    # one parsed SQL string per aggregate (and ONE for the 32-term
-    # bit recombination) instead of ~7 Column-API calls per bit:
-    # the plan is identical, but building it costs ~40 py4j round
-    # trips instead of ~340 — measured ~1.5 s off every plan build
-    # of this operator on a py4j-slow driver
-    bit_sums = [
-        F.expr(
-            f"sum(CASE WHEN (hv >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}"
-        )
-        for j in range(SIMHASH_BITS)
-    ]
-    agg = hashed.groupBy("doc_id").agg(*bit_sums)
-    sim_sql = " + ".join(
-        f"(CASE WHEN b{j} > 0 THEN {1 << j} ELSE 0 END)"
+    require_sql_text_conf(docs.sparkSession)
+    bits = " + ".join(
+        f"(CASE WHEN 2 * aggregate(hv, 0L, (acc, h) -> acc + ((h >> {j}) & 1))"
+        f" > size(hv) THEN {1 << j} ELSE 0 END)"
         for j in range(SIMHASH_BITS)
     )
-    return agg.select("doc_id", F.expr(f"CAST({sim_sql} AS BIGINT) AS simhash"))
+    hashed = (
+        f"transform(array_distinct({tokens_sql(text_col)}), "
+        f"w -> {portable_hash60_spark_sql('w')})"
+    )
+    return (
+        rebalance(docs.filter(has_token_sql(text_col)))
+        .selectExpr(f"{id_col} AS doc_id", f"{hashed} AS hv")
+        .selectExpr("doc_id", f"CAST({bits} AS BIGINT) AS simhash")
+    )
 
 
 def simhash_near_pairs(

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import portable_hash60, tokens
+from ..functions.text import portable_hash60, require_sql_text_conf, tokens
 from ..functions.util import rebalance
 
 
@@ -56,6 +56,7 @@ def gram_positions(
 
     The gram text exists only inside the hash expression — what
     explodes and shuffles is (int, int, long) rows."""
+    require_sql_text_conf(docs.sparkSession)
     docs = rebalance(docs)
     toks = docs.select(
         F.col(id_col).alias("doc_id"), tokens(text_col).alias("_toks")

@@ -10,12 +10,13 @@ ID, shingles, fingerprints, and a portable 60-bit hash.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 #: Tokens = maximal runs of letters/digits (BPE-ish pre-tokenization
 #: boundary); keep in sync with the DuckDB oracle regexes.
-TOKEN_SPLIT = r"[^\p{L}\p{N}]+"
+TOKEN_CHARS = r"\p{L}\p{N}"
+TOKEN_SPLIT = f"[^{TOKEN_CHARS}]+"
 
 #: Tiny per-language marker lexicons for the n-gram/stopword
 #: language-ID heuristic. Deterministic and SQL-portable.
@@ -29,15 +30,43 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 STOPWORDS: tuple[str, ...] = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
+#: The parser setting the SQL-text helpers below depend on: they
+#: double their regex backslashes because the default parser unescapes
+#: string literals. With it true the doubled backslashes would reach
+#: the regex engine and tokenize wrongly, with no error.
+ESCAPED_LITERALS_CONF = "spark.sql.parser.escapedStringLiterals"
+
+def require_sql_text_conf(spark: SparkSession) -> None:
+    """Raise ``ValueError`` unless ``spark`` parses string literals as
+    the SQL-text helpers of this module assume
+    (:data:`ESCAPED_LITERALS_CONF` false). Every operator that builds
+    a plan from them calls this first. The setting can change at run
+    time, so it is read on every call."""
+    if spark.conf.get(ESCAPED_LITERALS_CONF, "false").strip().lower() != "false":
+        raise ValueError(
+            f"{ESCAPED_LITERALS_CONF}=true is not supported: the SQL-text "
+            "tokenizer writes its regex for the default parser, which "
+            "unescapes string literals; set it to false"
+        )
+
+
 def tokens_sql(text: str) -> str:
     """:func:`tokens` as SQL text over a column-name fragment — ONE
     parsed expression instead of a py4j-built lambda tree (~20 ms of
     driver round trips per build; r18 build profile). The regex
     backslashes are doubled because the SQL parser unescapes string
     literals, where the Column API passes the pattern through
-    verbatim."""
+    verbatim; see :func:`require_sql_text_conf`."""
     pattern = TOKEN_SPLIT.replace("\\", "\\\\")
     return f"filter(split(lower({text}), '{pattern}'), t -> length(t) > 0)"
+
+
+def has_token_sql(text: str) -> str:
+    """True iff :func:`tokens` of ``text`` is non-empty (NULL for a
+    NULL text): one regex search of the string the tokenizer splits,
+    no split. Backslashes doubled as in :func:`tokens_sql`."""
+    pattern = TOKEN_CHARS.replace("\\", "\\\\")
+    return f"lower({text}) RLIKE '[{pattern}]'"
 
 
 def tokens(text: Column | str) -> Column:
@@ -183,22 +212,41 @@ def top_token_count(toks: Column) -> Column:
     return F.when(F.size(toks) > 0, folded)
 
 
-def ngrams(text: Column, n: int) -> Column:
-    """Array of space-joined word n-grams; empty when < n tokens."""
-    toks = tokens(text)
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.expr("CAST(array() AS ARRAY<STRING>)")
+def shingles_sql(toks: str, n: int) -> str:
+    """Word n-grams of the token array ``toks`` (SQL text) as one
+    parsed expression; empty when there are fewer than ``n`` tokens.
+    Not de-duplicated."""
+    if n == 2:
+        # bigram fast path: one linear zip of the array with its own
+        # tail (the indexed transform+slice form is O(n) per gram).
+        # zip_with pads the shorter side with null and concat
+        # propagates it, so the trailing (and single-token) null
+        # grams filter out — no size guard needed
+        return (
+            f"filter(zip_with({toks}, "
+            f"slice({toks}, 2, greatest(size({toks}) - 1, 0)), "
+            f"(a, b) -> concat(a, ' ', b)), g -> g IS NOT NULL)"
+        )
+    return (
+        f"CASE WHEN size({toks}) >= {n} THEN transform("
+        f"sequence(0, size({toks}) - {n}), "
+        f"i -> concat_ws(' ', slice({toks}, i + 1, {n}))) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
+def ngrams(text: str, n: int) -> Column:
+    """Array of space-joined word n-grams of ``text`` (SQL text, e.g.
+    a column name); empty when < n tokens."""
+    return F.expr(shingles_sql(tokens_sql(text), n))
+
+
+def word_shingles(text: str, n: int = 3) -> Column:
     """Distinct word n-gram shingles — the MinHash/Jaccard unit."""
     return F.array_distinct(ngrams(text, n))
 
 
-def portable_hash60(s: Column) -> Column:
+def portable_hash60(s: Column | str) -> Column:
     """Deterministic 60-bit hash portable across Spark and DuckDB:
     first 15 hex chars of md5 as a BIGINT.
 
@@ -207,8 +255,18 @@ def portable_hash60(s: Column) -> Column:
 
     Used by MinHash/SimHash so the DuckDB oracle can replay the
     exact signatures. (Spark's native ``xxhash64`` is faster but not
-    reproducible in the oracle; swap it in for production.)"""
+    reproducible in the oracle; swap it in for production.) SQL text
+    takes the :func:`portable_hash60_spark_sql` form, which a test
+    pins equal to the Column form below and to the DuckDB twin."""
+    if isinstance(s, str):
+        return F.expr(portable_hash60_spark_sql(s))
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
+
+
+def portable_hash60_spark_sql(expr: str) -> str:
+    """Spark SQL text of :func:`portable_hash60`, for embedding in
+    one-parse expressions (lambdas included)."""
+    return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
 
 
 def portable_hash60_sql(expr: str) -> str:

@@ -159,7 +159,7 @@ def _minhash_sql(
     new batch, pairs canonicalized with least/greatest."""
     from ..dedup.minhash import MOD, _A_MULT, _B_MULT
 
-    # hash once into eh (the Spark side's hashed_shingle_rows twin);
+    # hash once into eh (the Spark side's per-doc ``ks`` array);
     # signatures, intersection join and sizes all reuse k
     h = (
         f"(((hi.i * {_A_MULT} + 1) % {MOD}) * (k % {MOD})"
@@ -667,7 +667,7 @@ def dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # the span frame feeds both the global DF count and the per-doc
     # join: materialize the tokenize+shingle+hash work once (8-byte
-    # rows), same trick as the minhash shingle checkpoint
+    # rows)
     spans = (
         shingle_rows(docs, n=5)
         .select("doc_id", portable_hash60(F.col("shingle")).alias("k"))

@@ -99,6 +99,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r17 profile: the whole query was one 0.34 s task)."""
     from ..functions.util import rebalance
 
+    T.require_sql_text_conf(spark)
     return rebalance(t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.round(T.punct_ratio("text"), 6).alias("punct_ratio"),

@@ -14,8 +14,9 @@ exact bucketing — and so every run of the engine buckets identically
 same way forever, no stored model needed).
 
 Scale: the bucket join shuffles each side once on the bucket id;
-multiprobe (flipping the weakest sign) trades recall for fan-out
-without rebucketing.
+multiprobe trades recall for fan-out without rebucketing: a query also
+searches every bucket at Hamming distance 1 from its own, one per
+plane (all of them, not only the one whose sign is least certain).
 """
 
 from __future__ import annotations
@@ -130,11 +131,12 @@ def cosine_pairs_lsh(
     # candidate stream, the largest intermediate in the query — with
     # a per-row check over ≤ n_bands ints. Band keys encode the band
     # number (band * 2^r + bucket), so bkey equality implies same
-    # band and the zip below compares aligned prefixes.
-    bucketed = v.select(
-        "vec_id",
-        F.array(*keys).alias("bkeys"),
-        F.posexplode(F.array(*keys)).alias("band", "bkey"),
+    # band and the zip below compares aligned prefixes. The key vector
+    # is projected once and exploded from that column; ``_outer`` (it
+    # is never empty) keeps Catalyst from inferring a size(bkeys) > 0
+    # filter and pushing it, every fold inlined, below the projection.
+    bucketed = v.select("vec_id", F.array(*keys).alias("bkeys")).selectExpr(
+        "vec_id", "bkeys", "posexplode_outer(bkeys) AS (band, bkey)"
     )
     first_match = F.expr(
         "NOT exists(zip_with(slice(a.bkeys, 1, a.band), "
@@ -175,27 +177,30 @@ def topk_cosine_lsh(
     multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k per query, searching the query's bucket
-    plus (with ``multiprobe``) every Hamming-1 neighbor bucket —
-    flipping the weakest assumption instead of rebucketing is how
-    LSH recall is tuned at scale without touching the index. Output
-    ``(query_id, cand_id, rnk, cosine)`` — same shape as the exact
-    ``topk_cosine`` so tests can measure recall."""
+    plus (with ``multiprobe``) every Hamming-1 neighbor bucket — one
+    probe per plane, each flipping one sign bit; probing instead of
+    rebucketing is how LSH recall is tuned at scale without touching
+    the index. Output ``(query_id, cand_id, rnk, cosine)`` — same
+    shape as the exact ``topk_cosine`` so tests can measure recall.
+
+    Each row's bucket is projected once, as ``b0``, before the probe
+    list ``[b0, b0 ^ 1, b0 ^ 2, …]`` is exploded from it: the bucket
+    expression (one dot-product fold per plane) then appears once per
+    side of the plan instead of once per probe."""
+    from ..functions.util import rebalance
+
     if planes is None:
         planes = hyperplane_signs()
     bucket = lsh_bucket("embedding", planes)
-    probe_list = [bucket] + (
-        [bucket.bitwiseXOR(F.lit(1 << p)) for p in range(len(planes))]
-        if multiprobe
-        else []
+    probes = ", ".join(
+        ["b0"] + ([f"b0 ^ {1 << p}" for p in range(len(planes))] if multiprobe else [])
     )
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         l2_norm("embedding").alias("q_norm"),
-        F.explode(F.array(*probe_list)).alias("bucket"),
-    )
-    from ..functions.util import rebalance
-
+        bucket.alias("b0"),
+    ).selectExpr("query_id", "q_emb", "q_norm", f"explode(array({probes})) AS bucket")
     c = rebalance(candidates).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_emb"),

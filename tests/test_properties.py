@@ -110,7 +110,8 @@ def test_minhash_pairs_subset_of_exact(spark, docs):
 
 def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
     """Cross-ENGINE foundation check: `portable_hash60` and the
-    tokenizer produce IDENTICAL results in Spark and DuckDB on an
+    tokenizer (Column and SQL-text forms alike) produce IDENTICAL
+    results in Spark and DuckDB on an
     adversarial string corpus — these two expressions underpin
     every split/sample/shuffle/dedup oracle pair, so dialect drift
     here (md5 of multi-byte text, regex class semantics, quote
@@ -146,14 +147,16 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
         "NULL",
     ]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(corpus)], ["i", "s"])
-    got = {
-        r["i"]: (r["h"], r["t"])
-        for r in df.select(
-            "i",
-            portable_hash60(F.col("s")).alias("h"),
-            tokens(F.col("s")).alias("t"),
-        ).collect()
-    }
+    rows = df.select(
+        "i",
+        portable_hash60(F.col("s")).alias("h"),
+        tokens(F.col("s")).alias("t"),
+        portable_hash60("s").alias("h_sql"),
+        tokens("s").alias("t_sql"),
+    ).collect()
+    # the Column and SQL-text forms of each expression agree
+    assert all((r["h"], r["t"]) == (r["h_sql"], r["t_sql"]) for r in rows)
+    got = {r["i"]: (r["h"], r["t"]) for r in rows}
     oracle.execute("CREATE OR REPLACE TEMP TABLE corpus(i INT, s VARCHAR)")
     oracle.executemany("INSERT INTO corpus VALUES (?, ?)", list(enumerate(corpus)))
     toks_sql = (

@@ -15,9 +15,7 @@ from map_reduce_showcase_spark.sources.sinks import (
     write_partitioned,
 )
 from map_reduce_showcase_spark.sources.tables import load_table
-
-ALPHABET = sorted(glob.glob("/root/reference/data/alphabet2/*.txt"))
-EDGES = sorted(glob.glob("/root/reference/data/graph-edges-medium/*.txt"))
+from tests.test_parity_apps import ALPHABET, EDGES
 
 
 def test_write_partitioned_prunes(spark, sf_dir):

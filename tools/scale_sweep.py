@@ -285,27 +285,26 @@ def merge_only(
 
 def _minhash_candidate_work(spark, sf_dir):
     """dedup_minhash_lsh's intrinsic work at this scale point:
-    hashed-shingle rows (the corpus-feature pass every stage scans —
-    signatures plus both verify sides) + LSH candidate pairs (what
-    the verify join's cost scales with). Both grow linearly on the
-    sweep replicas by construction (ciphered text decorrelates
-    cross-replica shingles, so buckets never mix replicas); the raw
-    time tail measured 1.75 in round 9 — ample headroom today, but
+    distinct shingles over all docs (what every sketch is computed
+    from) + LSH candidate pairs (what the in-join verify's cost scales
+    with). Both grow linearly on the sweep replicas by construction
+    (ciphered text decorrelates cross-replica shingles, so buckets
+    never mix replicas); the raw time tail measured 1.75 in round 9 —
+    ample headroom today, but
     the raw threshold has ZERO headroom for a linear query once
     per-leg overheads amortize, the exact trap that kept the triangle
     flagged through round 8. The probe reuses the pipeline's own
-    stages (same shingling, same banding), so it declares the work
+    stages (same sketches, same banding), so it declares the work
     the shipped parameters imply, not a hand-estimated proxy."""
     from map_reduce_showcase_spark.dedup.minhash import (
-        hashed_shingle_rows,
         lsh_candidate_pairs,
-        minhash_signatures,
+        minhash_sketches,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = hashed_shingle_rows(docs, n=2).localCheckpoint(eager=False)
-    cand = lsh_candidate_pairs(minhash_signatures(sh, 12), 12, 3)
-    return int(sh.count()) + int(cand.count())
+    sk = minhash_sketches(docs, n=2, num_hashes=12, rows_per_band=3)
+    n_shingles = sk.agg(F.sum("sz")).first()[0] or 0
+    return int(n_shingles) + int(lsh_candidate_pairs(sk).count())
 
 
 def _sim_lsh_probe_work(spark, sf_dir):
@@ -325,14 +324,12 @@ def _sim_lsh_probe_work(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     planes = hyperplane_signs()
-    bucket = lsh_bucket(F.col("embedding"), planes)
-    probes = F.explode(
-        F.array(
-            bucket, *[bucket.bitwiseXOR(F.lit(1 << p)) for p in range(len(planes))]
-        )
-    )
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), probes.alias("bucket")
+    bucket = lsh_bucket("embedding", planes)
+    probes = ", ".join(["b0"] + [f"b0 ^ {1 << p}" for p in range(len(planes))])
+    q = (
+        emb.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), bucket.alias("b0"))
+        .selectExpr("query_id", f"explode(array({probes})) AS bucket")
     )
     c = emb.select(F.col("vec_id").alias("cand_id"), bucket.alias("bucket"))
     pairs = (
