@@ -1,14 +1,16 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Public query contract of spark-graft (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke query; ``queries()`` maps every registered
+query name to its ``(spark, sf_dir) -> DataFrame`` builder, and
+``oracle_sql()`` maps each SQL-expressible one to its DuckDB twin, both
+in registration order. ``tools/drive_contract.py`` runs the contract:
+each query against its oracle (row count + schema + order-insensitive
+value hash).
 
 All real logic lives in ``map_reduce_showcase_spark``; this module
 is only the wiring. The registry (``plans/registry.py``) is the
 engine's analogue of the reference's app registry
-(``/root/reference/src/app/mod.rs:29-63``).
+(``src/app/mod.rs:29-63``).
 """
 
 from __future__ import annotations

@@ -120,12 +120,9 @@ def graph_triangle_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRI_CHUNK_CAP = 4096
 
 
-def _oriented_graph(
-    spark: SparkSession, sf_dir: str, checkpoint_oriented: bool = True
-):
-    """(degree frame, degree-oriented edge frame) — shared by the
-    triangle closing and by the sweep's wedge-work probe so the two
-    measure the SAME graph.
+def _oriented_graph(spark: SparkSession, sf_dir: str):
+    """(degree frame, degree-oriented edge frame) for the triangle
+    closing.
 
     deg is |V| rows, used four times downstream (two orientation
     broadcasts, the wedge aggregate, the plan-choice bound) —
@@ -133,15 +130,9 @@ def _oriented_graph(
     once. Orientation is by (degree, id): attach each endpoint's
     degree via a broadcast join — the degree table is tiny next to
     |E| and at true scale stays broadcastable far longer than the
-    edge list stays joinable.
-
-    ``checkpoint_oriented`` (default on, the r17 behavior) pins the
-    oriented edge list for callers that consume it more than once.
-    The r18 triangle closing consumes it exactly ONCE (the grouped
-    adjacency is the only consumer and is itself checkpointed), so it
-    passes False and skips both the materialization job and the
-    ~100 MB deserialized-object storage the r17 profile charged to
-    re-reading it (two 0.44 s adjacency builds → one)."""
+    edge list stays joinable. The oriented edge list stays lazy: the
+    closing consumes it exactly once (the grouped adjacency, which is
+    itself checkpointed)."""
     edges = copurchase_edges(spark, sf_dir).localCheckpoint()
 
     deg = (
@@ -169,42 +160,7 @@ def _oriented_graph(
         )
         .select(F.col("edge.u").alias("u"), F.col("edge.v").alias("v"))
     )
-    if checkpoint_oriented:
-        oriented = oriented.localCheckpoint()
     return deg, oriented
-
-
-def triangle_wedge_work(spark: SparkSession, sf_dir: str) -> int:
-    """The triangle closing's INTRINSIC candidate-intersection work
-    at this SF: Σ over closing-join input rows of the two adjacency
-    array lengths, i.e. Σ over oriented edges u→v with od(v) > 0 of
-    (od(u) + od(v)) — exactly the element count a sorted-merge
-    array_intersect walks, and exactly the inner-join semantics of
-    the closing (edges whose head has no out-neighbors join
-    nothing and cost nothing). The scale sweep records this per sf
-    point and (round 9) adjudicates the flag on tail time-per-work:
-    a flat time-per-unit across 1x/4x/16x means the plan is linear
-    in intrinsic work regardless of what the raw wall-time tail
-    reads. Measured (r8 judge run and r9 refresh): the wedge bound
-    grows EXACTLY 4.00x per 4x data leg on the sweep replicas —
-    linear, refuting the earlier "densification grows the bound
-    faster than |E|" narrative — while the raw time tail sits at
-    ~4.4 because intrinsic work consumes the entire 4.0 raw-tail
-    budget by construction and ~10%/leg drift rides on top;
-    time-per-work is 1.10-1.11."""
-    _, oriented = _oriented_graph(spark, sf_dir)
-    odeg = oriented.groupBy("u").agg(F.count(F.lit(1)).alias("od"))
-    a = odeg.alias("a")
-    b = odeg.alias("b")
-    row = (
-        oriented.alias("o")
-        .join(a, F.col("o.u") == F.col("a.u"))
-        .join(b, F.col("o.v") == F.col("b.u"))
-        .select((F.col("a.od") + F.col("b.od")).alias("w"))
-        .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("bigint").alias("work_units"))
-        .first()
-    )
-    return int(row[0])
 
 
 def _triangle_summary(spark: SparkSession, sf_dir: str, chunk_cap: int) -> DataFrame:
@@ -224,7 +180,7 @@ def _triangle_summary(spark: SparkSession, sf_dir: str, chunk_cap: int) -> DataF
     the round-6 unchunked closing, with no odeg re-aggregation, no
     modulus column, no widened join key — round 7 ran that
     scaffolding unconditionally and measured ~+24% on identical
-    data (SCALE_SWEEP tail 4.09, flagged). A cheap upper bound
+    data (a 4.09x time tail per 4x of data). A cheap upper bound
     (max UNDIRECTED degree, an aggregate over the |V|-row degree
     frame built anyway) short-circuits the exact out-degree pass in
     the common case: out-degree ≤ degree, so bound ≤ cap proves
@@ -245,10 +201,7 @@ def _triangle_summary(spark: SparkSession, sf_dir: str, chunk_cap: int) -> DataF
     NOT work here: the two sides of an intersection would disagree on
     chunk boundaries, so the global-max modulus is the price of
     alignment."""
-    # oriented stays LAZY here: the r18 closing consumes it exactly
-    # once (the grouped-adjacency build below), so the checkpointed
-    # frame is the adjacency, not the edge list.
-    deg, oriented = _oriented_graph(spark, sf_dir, checkpoint_oriented=False)
+    deg, oriented = _oriented_graph(spark, sf_dir)
 
     # Compact-forward closing: instead of materializing the wedge
     # stream as ROWS (sum outdeg² of them — 41M at sf0.1 vs 1.2M
@@ -661,21 +614,6 @@ def _pagerank_adjacency(
     )
 
 
-def pagerank_contrib_work(spark: SparkSession, sf_dir: str) -> int:
-    """PageRank's INTRINSIC work at this SF, for the scale sweep's
-    time-per-unit adjudication (same role as
-    ``triangle_wedge_work``): each iteration generates, ships, and
-    decimal-sums exactly one contribution per bidirectional edge —
-    |bi| = 2|E| — and the one-time adjacency build is another O(|E|)
-    pass on the same quantity, so total units = 2|E| x
-    PAGERANK_ITERS. Flat time-per-unit across the 1x/4x/16x legs
-    means the grouped-adjacency plan is linear in its own fan-out
-    work even if replica densification inflates the raw wall-time
-    tail."""
-    m = copurchase_edges(spark, sf_dir).count()
-    return 2 * int(m) * PAGERANK_ITERS
-
-
 _KCORE_PEEL_SQL = """
       SELECT src, dst FROM {edges}
       WHERE src IN (SELECT vertex FROM (
@@ -763,9 +701,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kcore_degrees(edges: DataFrame) -> DataFrame:
-    """Endpoint-count degree frame of an undirected edge list —
-    shared by the peel rounds and the sweep's work probe so both
-    measure the same graph shape."""
+    """Endpoint-count degree frame of an undirected edge list, one per
+    peel round."""
     return (
         edges.select(F.col("src").alias("vertex"))
         .unionAll(edges.select(F.col("dst").alias("vertex")))
@@ -783,22 +720,3 @@ def _kcore_peel(edges: DataFrame, deg: DataFrame, k: int) -> DataFrame:
         edges.join(surv, edges.src == surv.vertex, "left_semi")
         .join(surv, edges.dst == surv.vertex, "left_semi")
     )
-
-
-def kcore_edge_work(spark: SparkSession, sf_dir: str) -> int:
-    """The k-core peel's INTRINSIC work at this SF, for the scale
-    sweep's time-per-unit adjudication: each round's degree
-    aggregate and its two semi-joins are linear in that round's
-    surviving edge list, so units = |E_0| + |E_1| + |E_2| over the
-    exact rounds the query runs (replayed here with the same shared
-    helpers). Densification shrinks peel attrition — later rounds
-    keep MORE of a denser replica's edges — so the raw wall-time
-    tail can legitimately outgrow |E_0|'s growth; flat
-    time-per-unit across the sweep legs is the linearity
-    adjudicator."""
-    edges0 = copurchase_edges(spark, sf_dir).localCheckpoint()
-    e0 = edges0.count()
-    p1 = _kcore_peel(edges0, _kcore_degrees(edges0), _KCORE_K).localCheckpoint()
-    e1 = p1.count()
-    e2 = _kcore_peel(p1, _kcore_degrees(p1), _KCORE_K).count()
-    return int(e0) + int(e1) + int(e2)

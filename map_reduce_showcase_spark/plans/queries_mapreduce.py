@@ -224,7 +224,7 @@ def wc_reference_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte round trip loses nothing. This is the migration path a
     reference user walks in BOTH directions (their old files into
     this engine; this engine's output into their old ``mr-client
-    process``), registered so the driver artifact certifies it."""
+    process``), registered so the oracle sweep checks it."""
     import hashlib
     import tempfile
 

@@ -46,9 +46,9 @@ _DISC_PRICE_SQL = (
 )
 
 
-# -- integer-cents money aggregation (optimization round 17) ---------------
+# -- integer-cents money aggregation ---------------------------------------
 #
-# Profiling (plans/r17/*_before.txt + tools/profile_query.py) showed the
+# Profiling showed the
 # per-row ``CAST(double AS DECIMAL)`` is the single most expensive
 # expression in every money query: Spark's double→decimal cast goes
 # through ``BigDecimal(Double.toString(v))`` — a string format + parse +

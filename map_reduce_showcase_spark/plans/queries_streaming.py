@@ -569,8 +569,8 @@ def streaming_sessions_timeout_query(spark: SparkSession, sf_dir: str) -> DataFr
     REMOVED (with one final ``is_final=true`` row) once the watermark
     passes it. This is the bounded-state property that makes custom
     state viable at 100 TB: state tracks ACTIVE users, not all-time
-    user cardinality. Registered rows-only so the driver artifact
-    certifies the operator runs end-to-end on real SF data; the
+    user cardinality. Registered rows-only so the contract check
+    proves the operator runs end-to-end on real SF data; the
     deterministic batch-sequence eviction test pins the semantics.
 
     The result is the 1–2-row eviction census (running vs final row

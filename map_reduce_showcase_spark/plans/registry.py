@@ -1,14 +1,17 @@
-"""The engine's query registry — the driver-contract surface.
+"""The engine's query registry — the surface ``__spark_entry__`` exports.
 
 Each :class:`QuerySpec` pairs a Spark DataFrame builder with the
 equivalent ANSI SQL that DuckDB runs on the same parquet tables (the
-driver's correctness oracle). This registry plays the role of the
-reference's app registry (``src/app/mod.rs:29-63``): name → query,
-unknown name → KeyError at lookup, except queries here are
-declarative plans instead of (map_fn, reduce_fn) pairs.
+correctness oracle). This registry plays the role of the reference's
+app registry (``src/app/mod.rs:29-63``): name → query, unknown name →
+KeyError at lookup, except queries here are declarative plans instead
+of (map_fn, reduce_fn) pairs. ``register`` adds a query; ``query_map``
+and ``oracle_sql_map`` return them in registration order, after
+``_load_all`` has imported every ``queries_*`` module; the order
+depends on nothing else.
 
-Determinism rules (every builder follows them so the driver's
-order-insensitive value-hash matches):
+Determinism rules (every builder follows them so the oracle check's
+order-insensitive value hash matches):
 
 * Alias every computed column identically in Spark and SQL.
 * Money/measure aggregates: cast to DECIMAL first (exact, associative
@@ -56,691 +59,18 @@ def register(
     return deco
 
 
-# The driver's CORRECTNESS artifact records only the first ~50
-# queries() entries, so export order IS evidence policy. The policy
-# (enforced by tests/test_oracle_diff.py's window test) is computed
-# DYNAMICALLY from the repo's own CORRECTNESS_r*.json artifacts
-# instead of hand-rotated band lists each round:
-#
-#   band 0 — sentinels: always-at-head canaries so a cross-round
-#            regression is caught inside the window
-#            (pivot_event_types_daily regressed in round 2 while
-#            hidden in the tail — exactly this risk);
-#   band 1 — never driver-green: no artifact from any round proved
-#            them (new queries, or ones whose every driver run
-#            errored) — first claim on the window;
-#   band 2 — changed since green: a past round's artifact proved a
-#            DIFFERENT definition (detected by comparing the current
-#            definition fingerprint against the snapshot recorded at
-#            the green round — see changed_since_green);
-#   band 3 — proven queries ordered by the ROUND of their latest
-#            green, oldest first: stalest evidence re-verifies
-#            soonest, freshest absorbs the truncation.
-#
-# The local differential suite (tests/test_oracle_diff.py) still
-# checks ALL queries regardless of order.
-_SENTINELS = (
-    "vertex_degree_lineitem",
-    "grep_docs_packed",
-    "dedup_minhash_lsh",
-)
-
-def definition_fingerprint(spec: QuerySpec) -> str:
-    """Stable hash of the query's DEFINITION: the builder function's
-    source text plus its oracle SQL. Used to detect
-    changed-since-green queries automatically (round 5 kept a
-    hand-maintained ``_REVERIFY`` frozenset for this; it went stale
-    the moment the listed queries were re-proven, which is exactly
-    the failure mode a hand list has). Edits to a helper MODULE the
-    builder's module imports are covered by the companion
-    :func:`helper_fingerprint`; the residual blind spot is a
-    same-module private helper (e.g. ``_pagerank``) edited without
-    touching any builder — the every-round local differential still
-    proves those queries on current code."""
-    import hashlib
-    import inspect
-
-    try:
-        src = inspect.getsource(spec.builder)
-    except (OSError, TypeError):
-        src = f"<no-source:{spec.builder.__module__}.{spec.builder.__qualname__}>"
-    return hashlib.sha256(f"{src}\x00{spec.oracle or ''}".encode()).hexdigest()[:16]
-
-
-# Per-module source hashes, cached for the PROCESS LIFETIME: a
-# long-lived session that edits a helper on disk won't see its own
-# band move until restart (fine for the driver and the round tools,
-# which are fresh processes; tests that edit helpers on disk clear
-# this cache explicitly).
-_HELPER_FP_CACHE: dict[str, str] = {}
-# builder module -> its transitive helper closure (also process-
-# lifetime; the import graph is fixed once modules are loaded).
-_HELPER_CLOSURE_CACHE: dict[str, tuple[str, ...]] = {}
-
-#: helper-fingerprint algorithm era, prefixed into every emitted
-#: value. Round 7 recorded direct-imports-only hashes ("h1", bare
-#: hex); round 8 widened the walk to the transitive closure; round 9
-#: added the builder's SAME-MODULE referenced helpers and constants
-#: ("h3") — each widening moves every query's helper hash, and
-#: era-gating the comparison in ``changed_since_green`` keeps the
-#: algorithm change from reading as 170 simultaneous code edits.
-#: Bump this whenever the hashing scheme itself changes — meaning a
-#: change that MOVES any emitted value on the current registry. The
-#: round-10 widening of ``_CONST_TYPES`` to list/set/dict shipped
-#: WITHOUT a bump because it was verified output-identical (no
-#: builder references such a constant today, a fact
-#: test_no_builder_referenced_constant_is_silently_skipped pins);
-#: the first builder-referenced mutable constant will move only its
-#: own queries' hashes, which is the normal edit-detection path, not
-#: a scheme change.
-_HELPER_FP_ERA = "h3"
-
-
-def _helper_modules(builder_module: str) -> list[str]:
-    """The intra-package modules whose source feeds the helper
-    fingerprint: the TRANSITIVE closure (fixed-point over each
-    module's globals — modules imported directly, plus the defining
-    modules of imported functions/classes) reachable from
-    ``builder_module``. Round 7 walked one hop only, which left
-    helpers-of-helpers invisible — concretely ``sources/tables.py``,
-    the loader every query funnels through via ``registry.t``, was
-    reachable only THROUGH the registry module and so never moved
-    any fingerprint. The walk now traverses the registry (and the
-    builder's own module) without hashing them: the registry is
-    infrastructure imported by everything (hashing it would promote
-    every query on any registry edit), but what it imports —
-    ``sources/tables.py`` — is data-path code and is hashed.
-
-    Known residual (narrowed by h3): values imported BY VALUE that
-    carry no ``__module__`` (module-level constants, SQL string
-    fragments) don't reveal their defining module to THIS walk.
-    Since h3 that is usually harmless: a constant referenced by the
-    BUILDER (or its same-module helper closure) is hashed by VALUE
-    in ``_same_module_parts``, so editing its defining module moves
-    the fingerprint through the value itself. What remains invisible
-    is the indirect case — a CROSS-module closure helper referencing
-    a by-value-imported constant from a module imported only that
-    way: the helper's source hash doesn't change, the defining
-    module never enters the closure, and the value lives in the
-    helper's globals, not the builder's. Caught by the round-end
-    local differential instead. Since round 13 the residual's exact
-    inventory is PINNED (tests/test_oracle_diff.py::
-    test_h3_by_value_import_residual_pinned_exactly): three
-    module-level oracle-f-string fragment imports, each proven
-    definition_fingerprint-covered; a fourth appearing fails the
-    suite."""
-    import sys
-    import types
-
-    if builder_module in _HELPER_CLOSURE_CACHE:
-        return list(_HELPER_CLOSURE_CACHE[builder_module])
-    pkg = __name__.rsplit(".", 2)[0]  # map_reduce_showcase_spark
-    seen: set[str] = set()
-    queue = [builder_module]
-    while queue:
-        current = queue.pop()
-        if current in seen:
-            continue
-        seen.add(current)
-        mod = sys.modules.get(current)
-        if mod is None:
-            continue
-        for val in vars(mod).values():
-            if isinstance(val, types.ModuleType):
-                name = getattr(val, "__name__", "")
-            else:
-                name = getattr(val, "__module__", "") or ""
-            if name.startswith(pkg + ".") and name in sys.modules and name not in seen:
-                queue.append(name)
-    found = sorted(seen - {builder_module, __name__})
-    _HELPER_CLOSURE_CACHE[builder_module] = tuple(found)
-    return found
-
-
-#: module-constant types the same-module fingerprint walk hashes by
-#: canonical repr; anything else referenced by a builder is either a
-#: function/class (hashed by source), a module (covered by the
-#: closure walk), or asserted-absent by tests/test_oracle_diff.py.
-#: MUTATION HAZARD (ADVICE r10): list/set/dict are hashed by VALUE,
-#: so a module-level mutable container a builder uses as a runtime
-#: cache would make its fingerprint vary with execution order within
-#: one process. Keep builder-referenced module constants immutable
-#: in practice; a cache belongs in a private name the walk skips or
-#: behind a function.
-_CONST_TYPES = (str, int, float, bool, tuple, frozenset, list, set, dict)
-
-
-def _const_repr(val, _visiting: frozenset | None = None) -> str | None:
-    """Process-deterministic repr for a module constant, or None to
-    skip it: frozenset/set/dict iteration (hash-randomized for str
-    members) and containers holding non-primitives (whose repr embeds
-    memory addresses) would make the fingerprint differ between the
-    process that stamped the artifact and every later one — a query
-    that permanently reads as changed-since-green with a fresh value
-    each round. Containers are normalized to deterministic forms
-    (sorted element reprs for unordered ones, positional for ordered
-    ones) — ADVICE r9: a silently-skipped list/dict constant is the
-    same blind-spot class the h3 era closed for functions, so a
-    mutable constant flip must move the fingerprint too. The
-    non-primitive leaf (arbitrary objects, functions — those go
-    through the source walk instead) is the only remaining skip, and
-    ``tests/test_oracle_diff.py`` asserts no builder-referenced
-    module constant currently falls through it.
-
-    A SELF-REFERENTIAL container (a list appended to itself — only
-    constructible for mutable constants, which the _CONST_TYPES
-    comment already discourages) degrades to the None skip via the
-    ``_visiting`` identity set instead of hitting RecursionError
-    (ADVICE r10): a crash here would abort fingerprint computation
-    for the whole registry, while a skip is caught by the
-    no-silent-skip oracle-diff test."""
-    if val is None or isinstance(val, (str, int, float, bool)):
-        return repr(val)
-    if _visiting is None:
-        _visiting = frozenset()
-    if id(val) in _visiting:
-        return None  # cycle: degrade to a (test-caught) skip
-    _visiting = _visiting | {id(val)}
-    if isinstance(val, (tuple, list)):
-        elems = [_const_repr(e, _visiting) for e in val]
-        if None in elems:
-            return None
-        open_, close = ("(", ")") if isinstance(val, tuple) else ("[", "]")
-        return f"{open_}{', '.join(elems)}{close}"
-    if isinstance(val, (frozenset, set)):
-        elems = [_const_repr(e, _visiting) for e in val]
-        tag = "frozenset" if isinstance(val, frozenset) else "set"
-        return None if None in elems else f"{tag}({{{', '.join(sorted(elems))}}})"
-    if isinstance(val, dict):
-        items = [
-            (_const_repr(k, _visiting), _const_repr(v, _visiting))
-            for k, v in val.items()
-        ]
-        if any(k is None or v is None for k, v in items):
-            return None
-        return "{" + ", ".join(f"{k}: {v}" for k, v in sorted(items)) + "}"
-    return None
-
-
-def _code_names(code, _names: set | None = None) -> set:
-    """All names referenced by a code object and its nested code
-    objects (inner functions, lambdas, comprehensions). Module-level
-    so the by-value-import tripwire in tests/test_oracle_diff.py
-    walks the SAME name set the fingerprint walk below sees — a
-    second copy there would silently keep old semantics if this walk
-    is ever extended."""
-    import types
-
-    names = set() if _names is None else _names
-    names |= set(code.co_names)
-    for const in code.co_consts:
-        if isinstance(const, types.CodeType):
-            _code_names(const, names)
-    return names
-
-
-def _same_module_parts(fn) -> list[str]:
-    """``name=hash``/``name=repr`` parts for the SAME-MODULE globals
-    ``fn`` transitively references — functions/classes by source
-    hash, simple constants by repr. The builder's own module is
-    deliberately excluded from the module-closure hash (hashing it
-    whole would promote every query in a 30-query module on any
-    single edit, flooding the driver window), which until round 9
-    left same-module private helpers invisible: editing
-    ``_ensure_replay`` (called by every streaming builder in its own
-    module) or ``_pagerank``'s body, or flipping a module constant
-    like ``ADJ_CHUNK_CAP``, moved no fingerprint at all. The walk
-    here is by REFERENCE, not by file: names are collected from the
-    function's code object (and nested code objects — inner
-    functions, lambdas, comprehensions), resolved in the module's
-    globals, and same-module functions are recursed into, so only
-    the helpers a builder can actually reach promote it."""
-    import hashlib
-    import inspect
-    import sys
-    import types
-
-    mod = sys.modules.get(fn.__module__)
-    if mod is None:
-        return []
-    mod_vars = vars(mod)
-
-    def codes_of(obj) -> list:
-        if isinstance(obj, (types.FunctionType, types.MethodType)):
-            return [obj.__code__]
-        if isinstance(obj, type):  # class: walk its methods' bodies,
-            # unwrapping staticmethod/classmethod (__func__) and
-            # property accessors — a same-module helper reached only
-            # through a wrapped method must still enter the worklist
-            codes = []
-            for v in vars(obj).values():
-                if isinstance(v, property):
-                    cands = [v.fget, v.fset, v.fdel]
-                else:
-                    cands = [getattr(v, "__func__", v)]
-                codes.extend(
-                    c.__code__
-                    for c in cands
-                    if isinstance(c, types.FunctionType)
-                )
-            return codes
-        return []
-
-    parts: list[str] = []
-    seen: set[str] = set()
-    worklist = [fn]
-    while worklist:
-        cur = worklist.pop()
-        referenced: set[str] = set()
-        for code in codes_of(cur):
-            referenced |= _code_names(code)
-        for name in sorted(referenced):
-            if name in seen or name.startswith("__"):
-                continue
-            val = mod_vars.get(name)
-            if val is None or isinstance(val, types.ModuleType):
-                continue  # imported modules: covered by the closure walk
-            if getattr(val, "__module__", None) == fn.__module__ and (
-                isinstance(val, types.FunctionType) or isinstance(val, type)
-            ):
-                seen.add(name)
-                key = f"{fn.__module__}::{name}"
-                if key not in _HELPER_FP_CACHE:
-                    try:
-                        src = inspect.getsource(val)
-                    except (OSError, TypeError):
-                        src = f"<no-source:{key}>"
-                    _HELPER_FP_CACHE[key] = hashlib.sha256(
-                        src.encode()
-                    ).hexdigest()[:16]
-                parts.append(f"{key}={_HELPER_FP_CACHE[key]}")
-                worklist.append(val)
-            elif isinstance(val, _CONST_TYPES):
-                seen.add(name)
-                rep = _const_repr(val)
-                if rep is not None:
-                    parts.append(f"{fn.__module__}::{name}={rep}")
-    return sorted(parts)
-
-
-def helper_fingerprint(spec: QuerySpec) -> str:
-    """Era-prefixed hash of (a) the SOURCE of every intra-package
-    helper module transitively reachable from the builder's module
-    (``operators/``, ``dedup/``, ``similarity/``, ``functions/``,
-    ``streaming/``, ``sources/``, ``multimodal/``, sibling ``plans``
-    modules, …) and (b) the builder's SAME-MODULE referenced helpers
-    and constants (``_same_module_parts``) — closing, in order: the
-    round-6 blind spot where rewriting ``dedup/jaccard.py`` moved no
-    fingerprint, the round-7 one where a helper-of-a-helper
-    (``sources/tables.py``) didn't, and the round-9 one where a
-    same-module private helper (``_ensure_replay``, ``_pagerank``)
-    or module constant (``ADJ_CHUNK_CAP``) didn't. Recorded
-    alongside ``fingerprint`` in each LOCAL_DIFF entry from round 7
-    on; ``changed_since_green`` compares two helper values only when
-    they carry the same era prefix (older-era snapshots hash a
-    different walk and are skipped, falling forward to the earliest
-    current-era snapshot)."""
-    import hashlib
-    import inspect
-    import sys
-
-    parts: list[str] = []
-    for name in _helper_modules(spec.builder.__module__):
-        if name not in _HELPER_FP_CACHE:
-            try:
-                src = inspect.getsource(sys.modules[name])
-            except (OSError, TypeError):
-                src = f"<no-source:{name}>"
-            _HELPER_FP_CACHE[name] = hashlib.sha256(src.encode()).hexdigest()[:16]
-        parts.append(f"{name}={_HELPER_FP_CACHE[name]}")
-    parts.extend(_same_module_parts(spec.builder))
-    digest = hashlib.sha256("|".join(parts).encode()).hexdigest()[:16]
-    return f"{_HELPER_FP_ERA}:{digest}"
-
-
-def _helper_fp_era(value: str) -> str:
-    """Era of a recorded helper fingerprint; bare 16-hex values
-    predate the prefix (round 7's direct-imports walk)."""
-    return value.split(":", 1)[0] if ":" in value else "h1"
-
-
-def current_fingerprints() -> dict[str, str]:
-    """query name → fingerprint of the definition as it exists NOW."""
-    _load_all()
-    return {n: definition_fingerprint(s) for n, s in REGISTRY.items()}
-
-
-def current_helper_fingerprints() -> dict[str, str]:
-    """query name → helper-module fingerprint as it exists NOW."""
-    _load_all()
-    return {n: helper_fingerprint(s) for n, s in REGISTRY.items()}
-
-
-def _fingerprint_snapshots(
-    repo=None,
-) -> dict[int, dict[str, tuple[str, str | None]]]:
-    """round → {query: (fingerprint, helper_fingerprint-or-None)
-    recorded that round}. Sources: ``FINGERPRINTS_r*.json`` (flat
-    maps; r5 is a one-off baseline generated from the pristine
-    round-5 code before any round-6 edits) and the per-entry
-    ``fingerprint``/``helper_fingerprint`` fields that
-    ``tools/drive_contract.py`` stamps into ``LOCAL_DIFF_r*.json``
-    (``fingerprint`` from round 6 on, ``helper_fingerprint`` from
-    round 7 on — older snapshots carry None and the helper
-    comparison is skipped for them). ``repo`` defaults to this
-    checkout's root; injectable so the both-artifact-kinds merge is
-    unit-testable against a synthetic artifact directory."""
-    import json
-    import pathlib
-    import re
-
-    snaps: dict[int, dict[str, tuple[str, str | None]]] = {}
-    if repo is None:
-        repo = pathlib.Path(__file__).resolve().parent.parent.parent
-    for art in sorted(repo.glob("FINGERPRINTS_r*.json")) + sorted(
-        repo.glob("LOCAL_DIFF_r*.json")
-    ):
-        m = re.search(r"r(\d+)", art.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(art.read_text())
-        except (OSError, ValueError):
-            continue
-        snap = snaps.setdefault(rnd, {})
-        for n, e in data.items():
-            if isinstance(e, str):  # FINGERPRINTS flat map
-                fp, helper = e, None
-            elif isinstance(e, dict) and e.get("fingerprint"):
-                fp, helper = e["fingerprint"], e.get("helper_fingerprint")
-            else:
-                continue
-            if n not in snap:
-                snap[n] = (fp, helper)
-            elif snap[n][1] is None and helper is not None:
-                # a round with both a flat FINGERPRINTS map and a
-                # LOCAL_DIFF: keep the first source's definition
-                # fingerprint, fill the helper slot the later source
-                # carries — dropping it would silently skip the
-                # helper comparison for that round
-                snap[n] = (snap[n][0], helper)
-    return snaps
-
-
-def changed_since_green(
-    green: dict[str, int],
-    snapshots: dict[int, dict[str, str | tuple[str, str | None]]],
-    current: dict[str, str],
-    current_helpers: dict[str, str] | None = None,
-) -> set[str]:
-    """Names whose definition changed AFTER their latest driver-green
-    round — the old artifact certifies different code, so they must
-    re-enter the driver window. Rule: take the EARLIEST fingerprint
-    snapshot at round >= the green round; if it disagrees with the
-    current fingerprint the definition moved since the proof. No
-    snapshot that late → assume unchanged.
-
-    The helper-module comparison additionally requires era-comparable
-    values (the hashing walk changed between rounds — "h1" vs "h2"
-    prefixes). When the earliest snapshot's helper value is missing
-    or from an older era, the comparison FALLS FORWARD to the
-    earliest snapshot >= the green round that carries a current-era
-    helper value, instead of skipping helper detection outright:
-    round 8's gate compared only the earliest snapshot, which left
-    every query whose latest green predated the era bump (120/169
-    after r8) permanently blind to helper edits even though newer
-    artifacts carried comparable values. The fallen-forward snapshot
-    certifies the helper state only from ITS round onward — a helper
-    edit landed between the green round and that snapshot stays
-    invisible here, the same accepted edge as the pre-snapshot era
-    below.
-
-    Known era edges, accepted by design and covered every round by
-    the local differential (which proves ALL queries on current
-    code):
-
-    * The snapshot era starts at round 5 (and the helper field at
-      round 7): for a query whose latest green predates the first
-      snapshot carrying it, the band only certifies "unchanged since
-      that first snapshot" — an edit landed between the green round
-      and the snapshot era is invisible here.
-    * A round's snapshot is stamped when the LOCAL differential runs
-      (end of round, after all edits), not at the driver's run
-      earlier that round — an edit landed in that within-round gap is
-      recorded as "the green code". The window is closed procedurally
-      (the differential is generated LAST each round) rather than
-      structurally.
-
-    Names no longer in ``current`` are skipped: a removed or renamed
-    query has nothing to re-verify, and surfacing it here would make
-    the band contain unregistered names."""
-    out: set[str] = set()
-    for name, g in green.items():
-        if name not in current:
-            continue
-        rounds = sorted(r for r, snap in snapshots.items() if r >= g and name in snap)
-        if not rounds:
-            continue
-        snap_val = snapshots[rounds[0]][name]
-        snap_fp = snap_val[0] if isinstance(snap_val, tuple) else snap_val
-        if snap_fp != current[name]:
-            out.add(name)
-            continue
-        if current_helpers is None or name not in current_helpers:
-            continue
-        cur_helper = current_helpers[name]
-        cur_era = _helper_fp_era(cur_helper)
-        for r in rounds:
-            val = snapshots[r][name]
-            helper = val[1] if isinstance(val, tuple) else None
-            if helper is None or _helper_fp_era(helper) != cur_era:
-                continue  # fall forward to a current-era snapshot
-            if helper != cur_helper:
-                out.add(name)
-            break
-    return out
-
-
-#: Era-transition seed (round 9, h2→h3). Queries whose ROUND-9 helper
-#: edits were detected by h2-vs-h2 comparison but whose evidence
-#: demand evaporated when the era bump landed mid-round: the h2
-#: snapshots era-skip, and the first h3 snapshot (LOCAL_DIFF_r09) was
-#: stamped AFTER those edits, so it matches the current tree and the
-#: fall-forward finds nothing to disagree with. This fact — "these
-#: six had helper edits between their last driver green and the first
-#: h3 stamp" — is not derivable from committed artifacts, hence the
-#: one literal set. SELF-EXPIRING, not a hand list in the round-5
-#: sense: the seed applies only while a member's latest driver green
-#: predates the bump round, so the first driver proof at round ≥ 9
-#: retires it permanently.
-_H3_TRANSITION_REVERIFY = frozenset(
-    {
-        "streaming_tumbling_counts",
-        "streaming_stateful_counts",
-        "streaming_session_counts",
-        "streaming_stream_stream_join",
-        "streaming_exactly_once_restart",
-        "q3_bucketed_orders",
-    }
-)
-_H3_ERA_BUMP_ROUND = 9
-
-#: every era transition's seed, in one registry: (member names, bump
-#: round). A member is seed-covered only while its latest driver
-#: green predates the bump round (self-expiring). Future era bumps
-#: append here — both ``reverify_band`` and the committed-era
-#: invariant test (tests/test_oracle_diff.py) iterate this list, so
-#: a bump shipped without regenerating the LOCAL_DIFF differential in
-#: the same change fails the test unless a seed covers the affected
-#: queries.
-_TRANSITION_SEEDS: tuple[tuple[frozenset, int], ...] = (
-    (_H3_TRANSITION_REVERIFY, _H3_ERA_BUMP_ROUND),
-)
-
-
-def seed_covered(name: str, green_round: int) -> bool:
-    """True while an era-transition seed still demands driver
-    re-proof for ``name`` (its latest green predates the seed's bump
-    round)."""
-    return any(
-        name in members and green_round < bump
-        for members, bump in _TRANSITION_SEEDS
-    )
-
-
-def reverify_band() -> set[str]:
-    """The computed re-verify band (replaces round 5's hand-kept
-    ``_REVERIFY`` frozenset, which went stale as soon as its members
-    were re-proven), plus the self-expiring h2→h3 transition seed."""
-    _load_all()
-    green = _latest_green_round()
-    out = changed_since_green(
-        green,
-        _fingerprint_snapshots(),
-        current_fingerprints(),
-        current_helper_fingerprints(),
-    )
-    for members, bump in _TRANSITION_SEEDS:
-        for name in members:
-            if name in REGISTRY and green.get(name, 0) < bump:
-                out.add(name)
-    return out
-
-
-def _rows_only_proven(name: str, entry: dict) -> bool:
-    """Whether a driver artifact entry is the STRONGEST proof a
-    rows-only query can ever earn. A query registered with
-    ``oracle=None`` (non-SQL-expressible by design, e.g. micro-batch
-    eviction timing) can never be hash-green, so under a
-    hash-green-only policy band 1 ("never driver-green") re-claims a
-    window slot for it every round forever — burning one of the ~50
-    driver slots on an entry whose verdict cannot improve (r14
-    verdict #3). The driver's rows-only check (``err: "no_oracle"``
-    with a positive ``spark_rows``) IS that query's full available
-    evidence, so it counts as proven-at-that-round — but ONLY while
-    the spec is still rows-only TODAY: the moment an oracle is added,
-    the weaker proof stops counting and the query re-enters band 1
-    until a hash-green artifact exists."""
-    spec = REGISTRY.get(name)
-    return (
-        spec is not None
-        and spec.oracle is None
-        and entry.get("err") == "no_oracle"
-        and entry.get("hash_match") is None
-        and (entry.get("spark_rows") or 0) > 0
-    )
-
-
-def _latest_green_round() -> dict[str, int]:
-    """query name → highest round whose CORRECTNESS artifact proved
-    it: rows+schema+hash all matching, or — for queries that are
-    rows-only BY CURRENT DEFINITION — a clean rows-only record (see
-    :func:`_rows_only_proven`). Missing key = never green."""
-    import json
-    import pathlib
-    import re
-
-    _load_all()
-    latest: dict[str, int] = {}
-    repo = pathlib.Path(__file__).resolve().parent.parent.parent
-    for art in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", art.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            entries = json.loads(art.read_text())
-        except (OSError, ValueError):
-            continue
-        for n, e in entries.items():
-            if not isinstance(e, dict):
-                continue
-            if (
-                e.get("rows_match")
-                and e.get("schema_match")
-                and e.get("hash_match")
-            ) or _rows_only_proven(n, e):
-                latest[n] = max(latest.get(n, 0), rnd)
-    return latest
-
-
-def definition_changed_band() -> set[str]:
-    """The subset of the re-verify band whose OWN definition
-    fingerprint (builder source + oracle SQL) moved since the latest
-    driver-green proof — exactly :func:`changed_since_green` with the
-    helper comparison disabled. These are the riskiest entries in the
-    band: the code the old artifact certified is literally different,
-    not merely downstream of an edited helper, so the export order
-    ranks them ahead of helper-only promotions (r17 verdict #2: the
-    five cents-rewritten money queries sorted BEHIND ~120 helper-only
-    entries under pure stalest-first and would not have reached the
-    driver's ~50-slot window for ~3 rounds)."""
-    _load_all()
-    return changed_since_green(
-        _latest_green_round(),
-        _fingerprint_snapshots(),
-        current_fingerprints(),
-        None,
-    )
-
-
-def _export_ordered() -> list[QuerySpec]:
-    _load_all()
-    specs = list(REGISTRY.values())
-    green = _latest_green_round()
-    # the ONE band definition (computed fingerprint diff + the
-    # self-expiring era-transition seed) — window_report and the
-    # export order must never disagree on what needs re-proof
-    reverify = reverify_band()
-    def_changed = definition_changed_band()
-    sentinel_pos = {n: i for i, n in enumerate(_SENTINELS)}
-
-    def key(p: tuple[int, QuerySpec]):
-        i, spec = p
-        if spec.name in sentinel_pos:
-            return (0, 0, sentinel_pos[spec.name], 0)
-        if spec.name not in green:
-            return (1, 0, 0, i)  # never proven — registration order
-        if spec.name in reverify:
-            # proven, but the definition changed since that proof —
-            # the old artifact certifies different code (band is
-            # COMPUTED from fingerprint snapshots, never hand-kept).
-            # Within the band, three tiers: entries whose OWN
-            # definition changed outrank helper-only promotions (the
-            # old proof certifies literally different code — r17
-            # verdict #2); rows-only specs (oracle=None) sort LAST —
-            # a window slot spent on one can only re-earn the weakest
-            # proof there is, so under band contention it must never
-            # displace a hash-verifiable candidate (the r14 no-slot-
-            # burn policy, generalized to the whole-registry-band
-            # state r17's global helper edit created). Within a tier:
-            # stalest latest-green first, so each tier drains across
-            # driver rounds in evidence-age order, the same
-            # discipline as the proven tail.
-            if spec.oracle is None:
-                tier = 2
-            elif spec.name in def_changed:
-                tier = 0
-            else:
-                tier = 1
-            return (2, tier, green[spec.name], i)
-        # proven: stalest latest-green first, registration order ties
-        return (3, 0, green[spec.name], i)
-
-    return [s for _, s in sorted(enumerate(specs), key=key)]
-
-
 def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """``queries()`` payload for ``__spark_entry__``."""
-    return {spec.name: spec.builder for spec in _export_ordered()}
+    """``queries()`` payload for ``__spark_entry__``, in registration
+    order."""
+    _load_all()
+    return {name: spec.builder for name, spec in REGISTRY.items()}
 
 
 def oracle_sql_map() -> dict[str, str]:
-    """``oracle_sql()`` payload — only SQL-expressible queries."""
-    return {
-        spec.name: spec.oracle for spec in _export_ordered() if spec.oracle is not None
-    }
+    """``oracle_sql()`` payload — only SQL-expressible queries, in
+    registration order."""
+    _load_all()
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -756,12 +86,10 @@ def _load_all() -> None:
     global _LOADED
     if _LOADED:
         return
-    # Import order IS registry order, and registry order decides which
-    # queries the driver's capped (~50-entry) correctness artifact
-    # verifies. The algorithmically riskiest families — dedup,
-    # similarity, events, multimodal (hash-replayed pipelines) — go
-    # first; the relational tail is conventional SQL with the deepest
-    # local test coverage, so it can absorb any truncation.
+    # Import order is registration order, which is the order
+    # ``query_map`` and ``oracle_sql_map`` export: the reference's
+    # MapReduce apps first, then the operator families, then the
+    # relational queries.
     from . import queries_mapreduce  # noqa: F401
     from . import queries_graph  # noqa: F401
     from . import queries_dedup  # noqa: F401

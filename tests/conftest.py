@@ -1,16 +1,15 @@
 """Shared pytest fixtures: one local SparkSession + DuckDB oracle
-connection per test session (mirrors the driver's harness).
+connection per test session (the oracle views mirror
+``tools/drive_contract.py``).
 
-Also home of the ``slow`` tier (r12 verdict #7): the full suite runs
-~550-750 s depending on box state, which is the round-end gate, but a
-builder iterating on one operator needs a fast inner loop. The
-inventory below centrally marks the expensive tests so
+Also home of the ``slow`` tier: the full suite is the gate, but
+iterating on one operator needs a fast inner loop. The inventory
+below centrally marks the expensive tests so
 
     python -m pytest tests/ -m "not slow" -q
 
-runs the remaining ~140 tests in well under 90 s. The round-end
-recipe and the driver still run the FULL suite — the tier exists to
-tighten the inner loop, never to weaken the gate."""
+runs the rest quickly. The gate still runs the FULL suite — the tier
+exists to tighten the inner loop, never to weaken the gate."""
 
 from __future__ import annotations
 
@@ -31,16 +30,14 @@ SLOW_FILES = {
     "test_bench_contract.py",
 }
 
-#: (file, function) pairs ≳1.5 s in the round-13 --durations=0 sweep
+#: (file, function) pairs ≳1.5 s in a --durations=0 sweep
 #: (parametrized functions count as their summed parametrizations —
-#: test_query_matches_oracle alone is ~250 s: it IS the local
-#: differential, which drive_contract covers round-end anyway).
+#: test_query_matches_oracle alone is ~250 s: it IS the oracle sweep).
 #: tests/test_properties.py::test_slow_inventory_resolves pins every
 #: entry to an existing test so renames can't silently unmark.
 SLOW_FUNCS = {
     ("test_oracle_diff.py", "test_query_matches_oracle"),
     ("test_oracle_diff.py", "test_rows_only_queries_run"),
-    ("test_oracle_diff.py", "test_const_repr_is_insertion_order_independent_property"),
     ("test_semantics.py", "test_sort_spills_gracefully_under_memory_pressure"),
     ("test_semantics.py", "test_native_minhash_agrees_with_spark_ml_lsh"),
     ("test_properties.py", "test_fuzzy_match_groups_match_python_model"),
@@ -54,7 +51,6 @@ SLOW_FUNCS = {
     ("test_components.py", "test_pagerank_chunk_cap_invariant"),
     ("test_components.py", "test_components_match_union_find"),
     ("test_components.py", "test_triangle_chunk_cap_invariant"),
-    ("test_components.py", "test_graph_work_probes_measure_the_queries_own_graph"),
     ("test_plans.py", "test_apply_near_label_join_broadcasts"),
     ("test_plans.py", "test_keep_best_quality_window_excludes_unclustered"),
     ("test_plans.py", "test_incremental_minhash_avoids_cartesian"),
@@ -79,7 +75,7 @@ def pytest_configure(config):
     config.addinivalue_line(
         "markers",
         "slow: expensive test excluded from the fast inner-loop tier "
-        "(-m 'not slow'); the round-end gate runs everything",
+        "(-m 'not slow'); the full suite runs everything",
     )
 
 
@@ -103,7 +99,7 @@ def spark():
 @pytest.fixture(scope="session")
 def oracle():
     """DuckDB connection with the catalog tables registered as views
-    — exactly how the driver runs ``oracle_sql()``."""
+    — the way ``tools/drive_contract.py`` runs ``oracle_sql()``."""
     con = duckdb.connect()
     from map_reduce_showcase_spark.sources.tables import TABLE_NAMES
 

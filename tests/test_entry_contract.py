@@ -1,13 +1,7 @@
-"""Contract tests for ``__spark_entry__.py`` — the driver's wiring.
-
-``tools/drive_contract.py`` exercises this module every round, but a
-wiring regression (entry() broken, queries() losing the export order,
-an oracle key with no query) would otherwise surface only there —
-outside pytest. Dict ORDER matters here: the driver's correctness
-artifact records only the first ~50 ``queries()`` entries, so the
-mapping must preserve ``registry._export_ordered`` exactly
-(sentinels first, then never-green, then the changed-since-green
-band, then stalest-green-first)."""
+"""Contract tests for ``__spark_entry__.py``: ``entry`` returns the
+flagship rows, and ``queries()`` / ``oracle_sql()`` export every
+registered query (and every oracle) in registration order.
+``tools/drive_contract.py`` runs the same module end to end."""
 
 import importlib.util
 import pathlib
@@ -34,8 +28,7 @@ def test_entry_returns_flagship_rows(entry_mod, spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
     assert len(rows) > 0
-    # stable schema the driver smoke-checks across rounds (the
-    # column names every BENCH/CORRECTNESS round has recorded)
+    # stable schema of the flagship word count
     assert [f.name for f in df.schema.fields] == ["word", "cnt"]
 
 
@@ -47,25 +40,18 @@ def test_queries_and_oracles_are_consistent(entry_mod):
     # every registered query is exported, every oracle has a query
     assert set(q) == set(REGISTRY)
     assert set(o) <= set(q)
+    assert list(o) == [n for n in REGISTRY if n in o]
     assert all(isinstance(s, str) and s.strip() for s in o.values())
     assert all(callable(fn) for fn in q.values())
     # the only oracle-less exports are the registry's oracle=None
-    # entries (rows-only by design — the judge sees which)
+    # entries (rows-only by design)
     rows_only = {n for n in q if n not in o}
     assert rows_only == {
         n for n, spec in REGISTRY.items() if spec.oracle is None
     }
 
 
-def test_queries_preserves_evidence_order(entry_mod):
-    """queries() must iterate in _export_ordered order — the driver
-    records only the window head, so losing the ordering silently
-    re-points the round's evidence at the wrong queries."""
-    from map_reduce_showcase_spark.plans.registry import (
-        _SENTINELS,
-        _export_ordered,
-    )
+def test_queries_follow_registration_order(entry_mod):
+    from map_reduce_showcase_spark.plans import REGISTRY
 
-    exported = list(entry_mod.queries())
-    assert exported == [s.name for s in _export_ordered()]
-    assert tuple(exported[:3]) == _SENTINELS
+    assert list(entry_mod.queries()) == list(REGISTRY)

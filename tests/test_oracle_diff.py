@@ -56,8 +56,7 @@ def test_query_matches_oracle(name, spark, oracle, sf_dir):
     assert len(got) == len(want), f"{name}: rowcount spark={len(got)} oracle={len(want)}"
     # vacuity guard: a 0-row result hash-matches its oracle trivially
     # — the schema is proven but the query's logic never executed on
-    # a row (q8/q9/q11/q20 sat "green" like this for four rounds).
-    # Queries that may legitimately be empty at small SF must say so
+    # a row. Queries that may legitimately be empty at small SF must say so
     # with an explicit may_be_empty tag.
     if "may_be_empty" not in spec.tags:
         assert len(got) > 0, (
@@ -111,1224 +110,12 @@ def test_rows_only_queries_run(name, spark, sf_dir):
         assert n > 0, f"{name}: 0 rows — vacuous; fix the slice or tag may_be_empty"
 
 
-def test_unverified_queries_export_inside_driver_window():
-    """The driver's CORRECTNESS artifact records only the first ~50
-    queries() entries. Every query with no green driver verdict from
-    ANY past round (new or changed since) must therefore export
-    inside the first 50 slots; the truncation tail may contain ONLY
-    queries some round's artifact already proved."""
-    import json
-    import pathlib
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _rows_only_proven,
-        query_map,
-    )
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    order = list(query_map())  # triggers _load_all for _rows_only_proven
-    green: set[str] = set()
-    for art in sorted(repo.glob("CORRECTNESS_r*.json")):
-        for n, e in json.loads(art.read_text()).items():
-            if (
-                e.get("rows_match") and e.get("schema_match") and e.get("hash_match")
-            ) or _rows_only_proven(n, e):
-                # hash-green, or — for a query that is rows-only BY
-                # CURRENT DEFINITION — the strongest proof it can ever
-                # earn (r14 verdict #3: a permanent never-green entry
-                # burned one window slot every round forever)
-                green.add(n)
-    # (pivot_event_types_daily regressed in round 2 while hidden in
-    # the tail; its fix got fresh green evidence in CORRECTNESS_r03,
-    # so it may ride the tail again like any other proven query)
-    tail = order[50:]
-    not_proven = [n for n in tail if n not in green]
-    assert not not_proven, f"unverified queries stuck in truncation tail: {not_proven}"
-
-
-def test_rows_only_proof_policy():
-    """r14 verdict #3: a rows-only-by-design query whose driver
-    artifact shows a clean rows-only record (err: no_oracle,
-    spark_rows > 0) is proven-at-that-round — it must NOT re-claim a
-    band-1 window slot forever. The weaker proof counts ONLY while
-    the spec is still rows-only today: adding an oracle demotes every
-    past rows-only record back to not-proof."""
-    from map_reduce_showcase_spark.plans.registry import (
-        REGISTRY,
-        _latest_green_round,
-        _load_all,
-        _rows_only_proven,
-        query_map,
-    )
-
-    _load_all()
-    clean = {"rows_match": None, "schema_match": None, "hash_match": None,
-             "spark_rows": 2, "oracle_rows": None, "err": "no_oracle"}
-    # the real permanent rows-only entry: currently oracle-less, so a
-    # clean rows-only record is full proof...
-    name = "streaming_sessions_timeout_eviction"
-    assert REGISTRY[name].oracle is None
-    assert _rows_only_proven(name, clean)
-    # ...and the artifacts on disk do prove it: it carries a green
-    # round, so it never claims a band-1 (never-proven) slot
-    green = _latest_green_round()
-    assert name in green
-    order = list(query_map())
-    # The no-slot-burn property, stated precisely (r18 — the original
-    # blanket "never in the first 50" broke the moment r17's global
-    # helper edit legitimately put the WHOLE registry in the reverify
-    # band): the rows-only entry may occupy a window slot only when
-    # doing so displaces no hash-verifiable re-proof candidate —
-    # i.e. every oracle-carrying query that is unproven or inside the
-    # reverify band must already be in the window with it.
-    if name in order[:50]:
-        from map_reduce_showcase_spark.plans.registry import reverify_band
-
-        window = set(order[:50])
-        demand = [
-            n
-            for n, s in REGISTRY.items()
-            if s.oracle is not None and (n not in green or n in reverify_band())
-        ]
-        pushed_out = [n for n in demand if n not in window]
-        assert not pushed_out, (
-            "rows-only entry displaced hash-verifiable candidates: "
-            f"{pushed_out[:5]}..."
-        )
-    # zero rows is vacuous — never proof
-    assert not _rows_only_proven(name, {**clean, "spark_rows": 0})
-    # a driver ERROR is never proof
-    assert not _rows_only_proven(name, {**clean, "err": "SomeError: boom"})
-    # an oracle-PAIRED query's no_oracle record is never proof (e.g. a
-    # stale artifact from before its oracle existed)
-    oracled = next(n for n, s in REGISTRY.items() if s.oracle is not None)
-    assert not _rows_only_proven(oracled, clean)
-    # hash-green entries must not double-count through this path
-    assert not _rows_only_proven(
-        name, {**clean, "hash_match": True, "err": None}
-    )
-
-
-def test_export_order_is_evidence_priority():
-    """The computed export order must be: sentinels, then every
-    never-driver-green query, then the re-verify band (definition
-    changed since the last green — the old artifact certifies
-    different code), then proven queries with latest-green round
-    non-decreasing (stalest evidence re-verifies first)."""
-    from map_reduce_showcase_spark.plans.registry import (
-        _SENTINELS,
-        _latest_green_round,
-        query_map,
-        reverify_band,
-    )
-
-    order = list(query_map())
-    green = _latest_green_round()
-    reverify = reverify_band()
-    assert tuple(order[: len(_SENTINELS)]) == _SENTINELS
-
-    rest = order[len(_SENTINELS) :]
-    # band rank per name: 1 never-green, 2 re-verify, 3 proven
-    def band(n):
-        if n not in green:
-            return 1
-        return 2 if n in reverify else 3
-
-    bands = [band(n) for n in rest]
-    assert bands == sorted(bands), "band order must be never-green, re-verify, proven"
-    rounds = [green[n] for n, b in zip(rest, bands) if b == 3]
-    assert rounds == sorted(rounds), "proven queries must be stalest-first"
-    # the re-verify band must drain through the driver's ~50 window:
-    # when it fits, every member exports inside it; when a GLOBAL
-    # helper edit puts more members in the band than the window holds
-    # (r17: the shared table loader moved all 171 fingerprints), the
-    # window must contain NOTHING but sentinels/never-green/re-verify
-    # — no proven query may take a slot ahead of an unproven redefinition
-    # — and the band itself drains tier-first (definition-changed,
-    # then helper-only, then rows-only — r17 verdict #2 / the r14
-    # no-slot-burn policy), stalest-green-first within each tier.
-    # Sentinels are excluded from BOTH the window assertion and the
-    # free-slot count (ADVICE r17): they always export first and
-    # legitimately grade band 3 whenever they are freshly proven and
-    # not themselves in the band, which is their steady state.
-    in_window = order[:50]
-    sentinels = set(_SENTINELS)
-    nonsent_reverify = (reverify & set(order)) - sentinels
-    free_slots = 50 - sum(
-        1 for n in in_window if n in sentinels or band(n) == 1
-    )
-    if len(nonsent_reverify) <= free_slots:
-        assert nonsent_reverify <= set(in_window), (
-            "every re-verify query must export inside the 50-entry window"
-        )
-    else:
-        assert all(band(n) < 3 for n in in_window if n not in sentinels), (
-            "an oversized re-verify band must fill the whole window "
-            "before any already-proven query gets a slot"
-        )
-        from map_reduce_showcase_spark.plans.registry import (
-            REGISTRY,
-            definition_changed_band,
-        )
-
-        def_changed = definition_changed_band()
-
-        def tier(n):
-            if REGISTRY[n].oracle is None:
-                return 2
-            return 0 if n in def_changed else 1
-
-        band_keys = [(tier(n), green[n]) for n in rest if band(n) == 2]
-        assert band_keys == sorted(band_keys), (
-            "an oversized re-verify band must drain def-changed-first, "
-            "rows-only-last, stalest-green-first within each tier"
-        )
-
-
-def test_changed_since_green_auto_promotes():
-    """The re-verify band is COMPUTED: editing a query's definition
-    after a driver green must promote it with no registry edit (the
-    round-5 hand-kept frozenset went stale the moment its members
-    were re-proven — this mechanism replaces it)."""
-    from map_reduce_showcase_spark.plans.registry import changed_since_green
-
-    green = {"q_edited": 4, "q_stable": 4, "q_pre_snapshot_era": 2, "q_removed": 4}
-    snapshots = {
-        5: {"q_edited": "aaaa", "q_stable": "bbbb", "q_removed": "eeee"},
-        6: {"q_edited": "cccc", "q_stable": "bbbb"},
-    }
-    current = {"q_edited": "cccc", "q_stable": "bbbb", "q_pre_snapshot_era": "dddd"}
-    # q_edited: earliest snapshot >= green round (r5) says 'aaaa',
-    # current is 'cccc' → the r4 artifact proved different code
-    # q_stable: unchanged across the era → stays proven
-    # q_pre_snapshot_era: green predates every snapshot... but r5/r6
-    # snapshots don't carry it, so no verdict is possible → unchanged
-    # q_removed: green once, since deleted from the registry — removal
-    # is not a re-verify case and the band must only contain
-    # registered names
-    assert changed_since_green(green, snapshots, current) == {"q_edited"}
-    # never-driver-green queries are band 1's concern, not this band's
-    assert changed_since_green({}, snapshots, current) == set()
-
-
-def test_changed_since_green_sees_helper_module_edits():
-    """Round 6's documented blind spot: a rewrite of a helper module
-    the builder imports (``dedup/jaccard.py``) moved no fingerprint.
-    From round 7 snapshots carry a helper_fingerprint; a mismatch on
-    EITHER component promotes, and pre-r7 snapshots (plain-string or
-    helper=None) simply skip the helper comparison."""
-    from map_reduce_showcase_spark.plans.registry import changed_since_green
-
-    green = {"q_helper_edited": 7, "q_both_stable": 7, "q_pre_helper_era": 6}
-    snapshots = {
-        6: {"q_pre_helper_era": ("ffff", None)},  # no helper field yet
-        7: {
-            "q_helper_edited": ("aaaa", "h-old"),
-            "q_both_stable": ("bbbb", "h-same"),
-        },
-    }
-    current = {"q_helper_edited": "aaaa", "q_both_stable": "bbbb", "q_pre_helper_era": "ffff"}
-    helpers = {
-        "q_helper_edited": "h-NEW",  # builder untouched, helper rewritten
-        "q_both_stable": "h-same",
-        "q_pre_helper_era": "h-whatever",  # no snapshot helper → skipped
-    }
-    assert changed_since_green(green, snapshots, current, helpers) == {
-        "q_helper_edited"
-    }
-    # without current helper fps (older callers) the comparison is
-    # definition-only — same behavior as round 6
-    assert changed_since_green(green, snapshots, current) == set()
-
-
-def test_changed_since_green_era_gate_falls_forward():
-    """ADVICE r8 (medium): when the EARLIEST snapshot >= the green
-    round carries an old-era (or missing) helper fingerprint, the
-    helper comparison must fall forward to the earliest CURRENT-era
-    snapshot rather than be skipped — otherwise every query whose
-    latest green predates an era bump is permanently blind to helper
-    edits even though newer artifacts carry comparable values."""
-    from map_reduce_showcase_spark.plans.registry import changed_since_green
-
-    green = {"q_old_green": 5, "q_old_green_stable": 5}
-    snapshots = {
-        # r7: h1-era bare-hex helper values (pre-prefix walk)
-        7: {
-            "q_old_green": ("aaaa", "0123456789abcdef"),
-            "q_old_green_stable": ("bbbb", "fedcba9876543210"),
-        },
-        # r8: first h2-era snapshot
-        8: {
-            "q_old_green": ("aaaa", "h2:one"),
-            "q_old_green_stable": ("bbbb", "h2:two"),
-        },
-    }
-    current = {"q_old_green": "aaaa", "q_old_green_stable": "bbbb"}
-    helpers = {
-        "q_old_green": "h2:EDITED",  # helper moved after the r8 snapshot
-        "q_old_green_stable": "h2:two",
-    }
-    # earliest snapshot (r7) is h1-era → fall forward to r8's h2 value
-    assert changed_since_green(green, snapshots, current, helpers) == {
-        "q_old_green"
-    }
-    # no current-era snapshot at all → comparison is skipped, as before
-    assert (
-        changed_since_green(
-            {"q": 5}, {7: {"q": ("cccc", "deadbeefdeadbeef")}}, {"q": "cccc"},
-            {"q": "h2:whatever"},
-        )
-        == set()
-    )
-
-
-def test_helper_fingerprint_moves_when_imported_helper_source_moves():
-    """The done-criterion for the blind-spot fix, run for real: edit
-    ``dedup/jaccard.py`` on disk (append a comment) and the helper
-    fingerprint of the containment queries — whose builders are
-    untouched — must move, with zero registry edits. Restores the
-    file bytes in all cases."""
-    import linecache
-    import pathlib
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _HELPER_FP_CACHE,
-        REGISTRY,
-        _load_all,
-        definition_fingerprint,
-        helper_fingerprint,
-    )
-
-    _load_all()
-    spec = REGISTRY["dedup_ngram_jaccard"]
-    target = (
-        pathlib.Path(__file__).resolve().parent.parent
-        / "map_reduce_showcase_spark"
-        / "dedup"
-        / "jaccard.py"
-    )
-    original = target.read_bytes()
-    _HELPER_FP_CACHE.clear()
-    linecache.clearcache()
-    fp_before, helper_before = definition_fingerprint(spec), helper_fingerprint(spec)
-    try:
-        target.write_bytes(original + b"\n# helper-rewrite stand-in\n")
-        _HELPER_FP_CACHE.clear()
-        linecache.clearcache()
-        assert definition_fingerprint(spec) == fp_before  # builder untouched
-        assert helper_fingerprint(spec) != helper_before  # helper edit seen
-    finally:
-        target.write_bytes(original)
-        _HELPER_FP_CACHE.clear()
-        linecache.clearcache()
-    assert helper_fingerprint(spec) == helper_before  # restored
-
-
-def test_tables_edit_moves_every_querys_helper_fingerprint():
-    """The round-8 transitive-walk done criterion, run for real: an
-    on-disk edit of ``sources/tables.py`` — the loader every query
-    funnels through via ``registry.t``, one hop TOO DEEP for the
-    round-7 walk — must move the helper fingerprint of EVERY
-    registered query while moving no definition fingerprint.
-    Restores the file bytes in all cases."""
-    import linecache
-    import pathlib
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _HELPER_FP_CACHE,
-        REGISTRY,
-        _load_all,
-        definition_fingerprint,
-        helper_fingerprint,
-    )
-
-    _load_all()
-    target = (
-        pathlib.Path(__file__).resolve().parent.parent
-        / "map_reduce_showcase_spark"
-        / "sources"
-        / "tables.py"
-    )
-    original = target.read_bytes()
-    _HELPER_FP_CACHE.clear()
-    linecache.clearcache()
-    helpers_before = {n: helper_fingerprint(s) for n, s in REGISTRY.items()}
-    defs_before = {n: definition_fingerprint(s) for n, s in REGISTRY.items()}
-    try:
-        target.write_bytes(original + b"\n# loader-rewrite stand-in\n")
-        _HELPER_FP_CACHE.clear()
-        linecache.clearcache()
-        unmoved = {
-            n for n, s in REGISTRY.items() if helper_fingerprint(s) == helpers_before[n]
-        }
-        assert unmoved == set(), (
-            f"{len(unmoved)} queries blind to a tables.py edit: "
-            f"{sorted(unmoved)[:5]}..."
-        )
-        # ...and it is a HELPER move, not a definition move
-        assert {
-            n: definition_fingerprint(s) for n, s in REGISTRY.items()
-        } == defs_before
-    finally:
-        target.write_bytes(original)
-        _HELPER_FP_CACHE.clear()
-        linecache.clearcache()
-    assert {n: helper_fingerprint(s) for n, s in REGISTRY.items()} == helpers_before
-
-
-def test_same_module_helper_and_constant_edits_move_helper_fingerprint(tmp_path):
-    """Round-9 blind-spot closure (h3 era): the builder's own module
-    is excluded from the module-closure hash (hashing it whole would
-    promote every query in a 30-query module on any edit), so
-    same-module private helpers and constants moved NO fingerprint —
-    editing ``_ensure_replay`` or flipping ``ADJ_CHUNK_CAP`` was
-    invisible to the band. The reference walk must move the helper
-    fingerprint for (a) a helper-body edit, (b) a constant flip,
-    while never moving the definition fingerprint."""
-    import importlib.util
-    import linecache
-    import sys
-    import types
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _HELPER_FP_CACHE,
-        helper_fingerprint,
-    )
-
-    mod_file = tmp_path / "fake_same_module_probe.py"
-
-    def load(cap: int, helper_body: str) -> types.SimpleNamespace:
-        mod_file.write_text(
-            f"CAP = {cap}\n"
-            f"def _helper(x):\n"
-            f"    return {helper_body}\n"
-            f"def builder(spark, sf_dir):\n"
-            f"    return _helper(1)\n"
-        )
-        _HELPER_FP_CACHE.clear()
-        linecache.clearcache()
-        spec = importlib.util.spec_from_file_location(
-            "fake_same_module_probe", mod_file
-        )
-        mod = importlib.util.module_from_spec(spec)
-        sys.modules["fake_same_module_probe"] = mod
-        spec.loader.exec_module(mod)
-        return types.SimpleNamespace(builder=mod.builder)
-
-    try:
-        base = helper_fingerprint(load(4, "x + CAP"))
-        # (a) same-module helper BODY edit
-        body_edit = helper_fingerprint(load(4, "x - CAP"))
-        assert body_edit != base
-        # (b) same-module CONSTANT flip (helper body restored)
-        cap_edit = helper_fingerprint(load(5, "x + CAP"))
-        assert cap_edit != base and cap_edit != body_edit
-        # identical source reproduces the base value (determinism)
-        assert helper_fingerprint(load(4, "x + CAP")) == base
-    finally:
-        sys.modules.pop("fake_same_module_probe", None)
-        _HELPER_FP_CACHE.clear()
-        linecache.clearcache()
-
-
-def test_same_module_walk_reaches_the_known_blind_spots():
-    """The two concrete helpers the round-9 memory records as
-    invisible must be reachable now: ``_ensure_replay`` from every
-    streaming builder, and ``_pagerank``/``ADJ_CHUNK_CAP`` from the
-    PageRank builder."""
-    from map_reduce_showcase_spark.plans.registry import (
-        REGISTRY,
-        _load_all,
-        _same_module_parts,
-    )
-
-    _load_all()
-
-    def part_names(query: str) -> set[str]:
-        return {
-            p.split("=", 1)[0].rsplit("::", 1)[1]
-            for p in _same_module_parts(REGISTRY[query].builder)
-        }
-
-    assert "_ensure_replay" in part_names("streaming_tumbling_counts")
-    pagerank = part_names("graph_pagerank")
-    assert {"_pagerank", "_pagerank_adjacency", "ADJ_CHUNK_CAP"} <= pagerank
-
-
-def test_same_module_constant_reprs_are_process_deterministic(tmp_path):
-    """frozenset iteration order is hash-randomized for str members
-    and a tuple holding a function reprs a memory address — either
-    would make the fingerprint differ between the stamping process
-    and every later one (a query permanently changed-since-green
-    with a fresh value each round). Canonical frozenset form must be
-    sorted; non-primitive-bearing constants must be SKIPPED, not
-    repr'd."""
-    import importlib.util
-    import sys
-    import types
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _HELPER_FP_CACHE,
-        _same_module_parts,
-    )
-
-    mod_file = tmp_path / "fake_const_probe.py"
-    mod_file.write_text(
-        "STOPWORDS = frozenset({'the', 'a', 'an'})\n"
-        "def _h(x):\n"
-        "    return x\n"
-        "BAD = (_h,)\n"
-        "def builder(spark, sf_dir):\n"
-        "    return (STOPWORDS, BAD, _h)\n"
-    )
-    spec = importlib.util.spec_from_file_location("fake_const_probe", mod_file)
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["fake_const_probe"] = mod
-    try:
-        spec.loader.exec_module(mod)
-        _HELPER_FP_CACHE.clear()
-        parts = _same_module_parts(mod.builder)
-        joined = "|".join(parts)
-        # canonical sorted frozenset form, independent of iteration order
-        assert "STOPWORDS=frozenset({'a', 'an', 'the'})" in joined
-        # the function-bearing tuple is skipped, never repr'd with an address
-        assert "BAD" not in joined
-        assert "0x" not in joined
-        # the function itself is still hashed by source
-        assert "::_h=" in joined
-    finally:
-        sys.modules.pop("fake_const_probe", None)
-        _HELPER_FP_CACHE.clear()
-
-
-def test_mutable_container_constants_move_the_fingerprint(tmp_path):
-    """ADVICE r9: list/set/dict module constants used to fall through
-    const_repr silently, so flipping one moved no fingerprint — the
-    same blind-spot class the h3 era closed for same-module helpers.
-    They now hash by canonical (iteration-order-independent) forms,
-    and a value flip must change the emitted parts."""
-    import importlib.util
-    import sys
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _HELPER_FP_CACHE,
-        _same_module_parts,
-    )
-
-    mod_file = tmp_path / "fake_mutable_const_probe.py"
-    body = (
-        "CHUNKS = [4, 8, {k}]\n"
-        "WEIGHTS = {{'b': 2, 'a': 1}}\n"
-        "LANGS = {{'fr', 'en', 'de'}}\n"
-        "def builder(spark, sf_dir):\n"
-        "    return (CHUNKS, WEIGHTS, LANGS)\n"
-    )
-    mod_file.write_text(body.format(k=16))
-    spec = importlib.util.spec_from_file_location(
-        "fake_mutable_const_probe", mod_file
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules["fake_mutable_const_probe"] = mod
-    try:
-        spec.loader.exec_module(mod)
-        _HELPER_FP_CACHE.clear()
-        parts = "|".join(_same_module_parts(mod.builder))
-        assert "CHUNKS=[4, 8, 16]" in parts
-        # dict/set forms are sorted — independent of insertion/hash order
-        assert "WEIGHTS={'a': 1, 'b': 2}" in parts
-        assert "LANGS=set({'de', 'en', 'fr'})" in parts
-        # the blind spot itself: a constant FLIP moves the parts
-        mod_file.write_text(body.format(k=32))
-        mod2 = importlib.util.module_from_spec(
-            importlib.util.spec_from_file_location(
-                "fake_mutable_const_probe", mod_file
-            )
-        )
-        sys.modules["fake_mutable_const_probe"] = mod2
-        spec.loader.__class__(
-            "fake_mutable_const_probe", str(mod_file)
-        ).exec_module(mod2)
-        _HELPER_FP_CACHE.clear()
-        parts2 = "|".join(_same_module_parts(mod2.builder))
-        assert "CHUNKS=[4, 8, 32]" in parts2
-        assert parts != parts2
-    finally:
-        sys.modules.pop("fake_mutable_const_probe", None)
-        _HELPER_FP_CACHE.clear()
-
-
-def test_const_repr_is_insertion_order_independent_property():
-    """Property (hypothesis): for ANY nested structure of primitives
-    and containers, ``_const_repr`` is invariant under dict/set
-    insertion order — the determinism the fingerprint depends on (a
-    repr that varied across processes would make a query read as
-    permanently changed-since-green with a fresh value each round).
-    Also: a structure containing an unhashable leaf (function) is
-    skipped as a whole (None), never repr'd with a memory address."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from map_reduce_showcase_spark.plans.registry import _const_repr
-
-    prims = (
-        st.none()
-        | st.booleans()
-        | st.integers(min_value=-(2**40), max_value=2**40)
-        | st.floats(allow_nan=False, allow_infinity=False)
-        | st.text(max_size=8)
-    )
-    # hashable nests for set members / dict keys
-    hashable = st.recursive(
-        prims,
-        lambda c: st.tuples(c, c) | st.frozensets(c, max_size=3),
-        max_leaves=6,
-    )
-    nested = st.recursive(
-        prims,
-        lambda c: (
-            st.lists(c, max_size=4)
-            | st.tuples(c, c)
-            | st.frozensets(hashable, max_size=4)
-            | st.dictionaries(hashable, c, max_size=4)
-        ),
-        max_leaves=12,
-    )
-
-    def reordered(v):
-        """Structurally equal value with reversed insertion order in
-        every dict and rebuilt sets — models a different process
-        observing the same constant."""
-        if isinstance(v, dict):
-            return {reordered(k): reordered(x) for k, x in reversed(list(v.items()))}
-        if isinstance(v, frozenset):
-            return frozenset(reordered(x) for x in sorted(v, key=repr, reverse=True))
-        if isinstance(v, set):
-            return {reordered(x) for x in sorted(v, key=repr, reverse=True)}
-        if isinstance(v, tuple):
-            return tuple(reordered(x) for x in v)
-        if isinstance(v, list):
-            return [reordered(x) for x in v]
-        return v
-
-    @settings(max_examples=150, deadline=None)
-    @given(nested)
-    def prop(v):
-        r = _const_repr(v)
-        assert r is not None, f"primitive-only structure skipped: {v!r}"
-        assert r == _const_repr(reordered(v))
-        assert "0x" not in r or "0x" in repr(v)  # no memory addresses
-
-    prop()
-
-    # unhashable leaves poison the whole constant into a SKIP
-    assert _const_repr([1, (2, test_const_repr_is_insertion_order_independent_property)]) is None
-    assert _const_repr({"k": {"n": lambda: 1}}) is None
-
-
-def test_no_builder_referenced_constant_is_silently_skipped():
-    """The forward-looking guard ADVICE r9 asked for: walk every
-    registered builder exactly like ``_same_module_parts`` (same-
-    module functions/classes recursed by reference) and assert that
-    every referenced same-module global is either hashed by source
-    (function/class), covered by the module-closure walk (module), or
-    hashed by a non-None canonical const repr — i.e. the silent-skip
-    path is EMPTY on the real registry, so a future constant of an
-    unhashable shape (container of functions, compiled regex, Column
-    singleton) fails here instead of becoming an invisible edit."""
-    import sys
-    import types
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _CONST_TYPES,
-        _code_names,
-        _const_repr,
-        _load_all,
-        REGISTRY,
-    )
-
-    _load_all()
-    offenders: list[str] = []
-    for qname, spec in REGISTRY.items():
-        fn = spec.builder
-        mod_vars = vars(sys.modules[fn.__module__])
-
-        seen: set[str] = set()
-        worklist = [fn]
-        while worklist:
-            cur = worklist.pop()
-            if isinstance(cur, type):
-                # mirror registry.codes_of exactly, property accessors
-                # included — a constant referenced only from a
-                # property body must not escape this guard
-                codes = []
-                for v in vars(cur).values():
-                    if isinstance(v, property):
-                        cands = [v.fget, v.fset, v.fdel]
-                    else:
-                        cands = [getattr(v, "__func__", v)]
-                    codes.extend(
-                        c.__code__
-                        for c in cands
-                        if isinstance(c, types.FunctionType)
-                    )
-            else:
-                codes = [cur.__code__]
-            referenced: set[str] = set()
-            for code in codes:
-                _code_names(code, referenced)
-            for name in referenced:
-                if name in seen or name.startswith("__"):
-                    continue
-                val = mod_vars.get(name)
-                if val is None or isinstance(val, types.ModuleType):
-                    continue
-                seen.add(name)
-                if getattr(val, "__module__", None) == fn.__module__ and (
-                    isinstance(val, types.FunctionType)
-                    or isinstance(val, type)
-                ):
-                    worklist.append(val)
-                elif isinstance(val, (types.FunctionType, type)):
-                    continue  # other-module callable: closure walk
-                elif isinstance(val, _CONST_TYPES):
-                    if _const_repr(val) is None:
-                        offenders.append(
-                            f"{qname}: {fn.__module__}::{name} "
-                            f"({type(val).__name__} holding non-primitives)"
-                        )
-                else:
-                    offenders.append(
-                        f"{qname}: {fn.__module__}::{name} "
-                        f"(unhashed type {type(val).__name__})"
-                    )
-    assert not offenders, (
-        "builder-referenced module constants invisible to the helper "
-        "fingerprint walk:\n" + "\n".join(sorted(set(offenders)))
-    )
-
-
-def test_no_builder_reachable_cross_module_by_value_constant():
-    """Tripwire for the LAST documented h3 residual (round-10 verdict
-    #3, stated in ``registry._helper_modules``'s docstring): a
-    CROSS-module closure helper referencing a constant it imported by
-    value (``from X import CONST``) from a module that never enters
-    the closure — the helper's source hash doesn't move when X's
-    definition changes, the value lives in the helper's globals (not
-    the builder's, so ``_same_module_parts`` never hashes it), and X
-    stays invisible to the module walk.
-
-    The walk here follows each builder's RUNTIME function closure
-    across modules (names in code objects, resolved in each
-    function's own module globals; intra-package functions recursed).
-    For every referenced constant that is import-bound in a module
-    OTHER than the builder's, the AST-resolved origin module must be
-    inside that module's helper closure (closures are transitive, so
-    per-module visibility implies builder visibility). Builder-module
-    constants are exempt (hashed by value), and module-level-only
-    uses — oracle f-string fragments like ``_TOKENS_SQL``, expanded
-    into the oracle TEXT at registration — never appear in runtime
-    code objects and are covered by ``definition_fingerprint``
-    instead (the four current cross-module fragment imports are
-    exactly that shape). Scope: plain functions; a cross-module
-    CLASS whose methods reference import-bound constants would need
-    the registry walk extended first — none exists today."""
-    from map_reduce_showcase_spark.plans import registry as R
-
-    R._load_all()
-    violations = _by_value_import_violations(
-        [(n, s.builder) for n, s in R.REGISTRY.items()]
-    )
-    assert not violations, (
-        "cross-module by-value constant imports reachable from "
-        "builder code, invisible to the helper fingerprint walk:\n"
-        + "\n".join(sorted(set(violations)))
-    )
-
-
-def _by_value_import_violations(
-    builders: list, pkg: str | None = None
-) -> list[str]:
-    """The guard's walk, pure enough for a failure-direction test:
-    ``builders`` is (name, fn) pairs; ``pkg`` overrides the package
-    prefix so synthetic on-disk modules can stand in for the real
-    tree. See test_no_builder_reachable_cross_module_by_value_constant
-    for what counts as a violation."""
-    import ast
-    import inspect
-    import sys
-    import types
-
-    from map_reduce_showcase_spark.plans import registry as R
-
-    if pkg is None:
-        pkg = R.__name__.rsplit(".", 2)[0]
-
-    def _resolve_origin(mname: str, mod, level: int, module: str | None):
-        if level == 0:
-            return module
-        # stdlib relative-import resolution — can't drift from the
-        # interpreter's own rules the way hand-rolled level/__path__
-        # arithmetic could
-        import importlib.util
-
-        try:
-            return importlib.util.resolve_name(
-                "." * level + (module or ""), mod.__package__
-            )
-        except (ImportError, ValueError):
-            return None
-
-    _bound_cache: dict[str, dict[str, str]] = {}
-
-    def import_bound(mname: str) -> dict[str, str]:
-        """name -> intra-package origin module for every ``from X
-        import name`` binding in ``mname``'s source (asname-aware)."""
-        if mname in _bound_cache:
-            return _bound_cache[mname]
-        out: dict[str, str] = {}
-        mod = sys.modules.get(mname)
-        try:
-            tree = ast.parse(inspect.getsource(mod))
-        except (OSError, TypeError, SyntaxError):
-            tree = ast.parse("")
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom):
-                origin = _resolve_origin(mname, mod, node.level, node.module)
-                if origin and origin.startswith(pkg):
-                    for a in node.names:
-                        out[a.asname or a.name] = origin
-        _bound_cache[mname] = out
-        return out
-
-    violations: list[str] = []
-    for qname, fn in builders:
-        seen: set[tuple[str, str]] = set()
-        work: list[types.FunctionType] = [fn]
-        while work:
-            cur = work.pop()
-            key = (cur.__module__, cur.__qualname__)
-            if key in seen or not cur.__module__.startswith(pkg):
-                continue
-            seen.add(key)
-            mod = sys.modules.get(cur.__module__)
-            if mod is None:
-                continue
-            bound = import_bound(cur.__module__)
-            referenced: set[str] = set()
-            R._code_names(cur.__code__, referenced)
-            for name in sorted(referenced):
-                val = vars(mod).get(name)
-                if isinstance(val, types.FunctionType) and getattr(
-                    val, "__module__", ""
-                ).startswith(pkg):
-                    work.append(val)
-                elif (
-                    isinstance(val, R._CONST_TYPES)
-                    and name in bound
-                    and cur.__module__ != fn.__module__
-                ):
-                    closure = set(R._helper_modules(cur.__module__)) | {
-                        cur.__module__,
-                        R.__name__,
-                    }
-                    if bound[name] not in closure:
-                        violations.append(
-                            f"{qname}: {cur.__module__}.{name} imported "
-                            f"by value from {bound[name]} (outside the "
-                            f"helper closure — edits there move no "
-                            f"fingerprint)"
-                        )
-    return violations
-
-
-def test_by_value_import_guard_fires_on_the_residual_shape(tmp_path):
-    """Failure direction: the guard must actually FLAG the documented
-    residual — builder in module A calls helper in module B, and B
-    did ``from X import CONST`` where X enters no closure. Built as
-    real on-disk modules (the walk needs source) under a synthetic
-    package root."""
-    import sys
-    import textwrap
-
-    pkg_dir = tmp_path / "fp_resid_pkg"
-    pkg_dir.mkdir()
-    (pkg_dir / "__init__.py").write_text("")
-    (pkg_dir / "x.py").write_text("CONST = 7\n")
-    (pkg_dir / "b.py").write_text(
-        textwrap.dedent(
-            """
-            from fp_resid_pkg.x import CONST
-
-            def helper():
-                return CONST + 1
-            """
-        )
-    )
-    (pkg_dir / "a.py").write_text(
-        textwrap.dedent(
-            """
-            from fp_resid_pkg.b import helper
-
-            def builder(spark, sf_dir):
-                return helper()
-            """
-        )
-    )
-    sys.path.insert(0, str(tmp_path))
-    try:
-        import importlib
-
-        a = importlib.import_module("fp_resid_pkg.a")
-        violations = _by_value_import_violations(
-            [("synthetic", a.builder)], pkg="fp_resid_pkg"
-        )
-        assert len(violations) == 1 and "fp_resid_pkg.x" in violations[0], (
-            violations
-        )
-        # control: a constant DEFINED in the helper module (covered
-        # by B's source hash) must not flag
-        (pkg_dir / "b2.py").write_text(
-            "LOCAL_CONST = 7\n\ndef helper():\n    return LOCAL_CONST\n"
-        )
-        (pkg_dir / "a2.py").write_text(
-            "from fp_resid_pkg.b2 import helper\n\n"
-            "def builder(spark, sf_dir):\n    return helper()\n"
-        )
-        # the finder cached the package dir listing at the first
-        # import above; without this the later-written a2/b2 may be
-        # invisible on filesystems with coarse directory mtimes
-        importlib.invalidate_caches()
-        a2 = importlib.import_module("fp_resid_pkg.a2")
-        assert (
-            _by_value_import_violations(
-                [("clean", a2.builder)], pkg="fp_resid_pkg"
-            )
-            == []
-        )
-    finally:
-        sys.path.remove(str(tmp_path))
-        for m in list(sys.modules):
-            if m.startswith("fp_resid_pkg"):
-                sys.modules.pop(m)
-
-
-def _module_level_by_value_imports(
-    modnames: list[str], pkg: str
-) -> list[tuple[str, str, str]]:
-    """``(module, name, origin)`` for every module-level ``from X
-    import NAME`` in ``modnames`` where NAME is bound to a plain
-    constant (``registry._CONST_TYPES``) and the intra-package origin
-    X escapes the importing module's helper closure — i.e. editing
-    X's definition of NAME moves no helper fingerprint through the
-    module walk. Pure so the pin test and the synthetic
-    failure-direction test share one detector."""
-    import ast
-    import importlib.util
-    import inspect
-    import sys
-
-    from map_reduce_showcase_spark.plans import registry as R
-
-    hits: list[tuple[str, str, str]] = []
-    for mname in modnames:
-        mod = sys.modules.get(mname)
-        if mod is None:
-            continue
-        try:
-            tree = ast.parse(inspect.getsource(mod))
-        except (OSError, TypeError, SyntaxError):
-            continue
-        # direct children only — a function-LOCAL `from X import NAME`
-        # must not count as a module-level binding (review r13:
-        # ast.walk would attribute a same-named module-level constant
-        # to the local import's origin and flag a phantom residual)
-        for node in tree.body:
-            if not isinstance(node, ast.ImportFrom):
-                continue
-            if node.level:
-                try:
-                    origin = importlib.util.resolve_name(
-                        "." * node.level + (node.module or ""),
-                        mod.__package__,
-                    )
-                except (ImportError, ValueError):
-                    continue
-            else:
-                origin = node.module
-            if not (origin and origin.startswith(pkg)):
-                continue
-            for a in node.names:
-                val = vars(mod).get(a.asname or a.name)
-                if isinstance(val, R._CONST_TYPES):
-                    closure = set(R._helper_modules(mname)) | {
-                        mname,
-                        R.__name__,
-                    }
-                    if origin not in closure:
-                        hits.append((mname, a.name, origin))
-    return sorted(hits)
-
-
-#: The EXACT current inventory of the h3 residual (round-12 verdict
-#: #3: pin it while the registry is frozen — cheaper than an h4 era
-#: and sufficient because every member is oracle-f-string-only). The
-#: verdict's "4 known hits" counted the four ``from .queries_text
-#: import`` statements; ``queries_pipeline``'s is NOT in this list
-#: because that module also imports two functions from queries_text,
-#: which pulls queries_text into its helper closure — its constants
-#: are therefore walk-covered, leaving these three escapes.
-_PKG = "map_reduce_showcase_spark"
-_KNOWN_BY_VALUE_RESIDUAL = [
-    (f"{_PKG}.plans.queries_dedup", "_TOKENS_SQL", f"{_PKG}.plans.queries_text"),
-    (f"{_PKG}.plans.queries_packing", "_NTOK_SQL", f"{_PKG}.plans.queries_text"),
-    (
-        f"{_PKG}.plans.queries_relational2",
-        "_TOKENS_SQL",
-        f"{_PKG}.plans.queries_text",
-    ),
-]
-
-
-def test_h3_by_value_import_residual_pinned_exactly():
-    """Round-12 verdict #3: the by-value-import escapes that the h3
-    helper walk cannot see are pinned to the exact known list — a new
-    one appearing (or one silently vanishing, which would mean the
-    closure semantics changed) fails the suite and forces a decision:
-    either restructure the import so the origin enters the closure,
-    or extend this pin with the same oracle-coverage proof.
-
-    Each pinned member must also be provably covered by
-    ``definition_fingerprint``: the fragment's EXPANDED text appears
-    in at least one registered oracle from the importing module, so
-    editing the fragment's definition in queries_text moves those
-    queries' definition fingerprints even though no helper
-    fingerprint moves. (Runtime builder-side uses need no pin:
-    builder-module constants are hashed by VALUE in
-    ``_same_module_parts``, and cross-module runtime helpers are
-    asserted violation-free by
-    test_no_builder_reachable_cross_module_by_value_constant.)"""
-    import sys
-
-    from map_reduce_showcase_spark.plans import registry as R
-
-    R._load_all()
-    modnames = [m for m in sys.modules if m.startswith(_PKG)]
-    assert (
-        _module_level_by_value_imports(modnames, _PKG)
-        == _KNOWN_BY_VALUE_RESIDUAL
-    )
-    for mname, name, _origin in _KNOWN_BY_VALUE_RESIDUAL:
-        frag = vars(sys.modules[mname])[name]
-        assert isinstance(frag, str) and frag, (mname, name)
-        oracles = [
-            s.oracle
-            for s in R.REGISTRY.values()
-            if s.builder.__module__ == mname and s.oracle
-        ]
-        assert any(frag in o for o in oracles), (
-            f"{mname}.{name}: fragment no longer expanded into any "
-            f"registered oracle from its module — the residual is no "
-            f"longer definition_fingerprint-covered; restructure the "
-            f"import or extend the fingerprint walk"
-        )
-
-
-def test_by_value_residual_pin_fires_on_a_synthetic_fifth_hit(tmp_path):
-    """Failure direction for the pin: a new module-level constant
-    import whose origin escapes the closure must be DETECTED (the pin
-    equality would then fail on the real tree). Control: a module
-    whose constant is defined locally stays clean."""
-    import importlib
-    import sys
-    import textwrap
-
-    pkg_dir = tmp_path / "pin_resid_pkg"
-    pkg_dir.mkdir()
-    (pkg_dir / "__init__.py").write_text("")
-    (pkg_dir / "x.py").write_text("_FRAG_SQL = 'len(tokens)'\n")
-    (pkg_dir / "user.py").write_text(
-        textwrap.dedent(
-            """
-            from pin_resid_pkg.x import _FRAG_SQL
-
-            ORACLE = f"SELECT {_FRAG_SQL} AS n"
-            """
-        )
-    )
-    (pkg_dir / "clean.py").write_text(
-        "_LOCAL_SQL = 'x'\n\nORACLE = f\"SELECT {_LOCAL_SQL}\"\n"
-    )
-    sys.path.insert(0, str(tmp_path))
-    try:
-        importlib.invalidate_caches()
-        importlib.import_module("pin_resid_pkg.user")
-        importlib.import_module("pin_resid_pkg.clean")
-        hits = _module_level_by_value_imports(
-            ["pin_resid_pkg.user", "pin_resid_pkg.clean"], "pin_resid_pkg"
-        )
-        assert hits == [
-            ("pin_resid_pkg.user", "_FRAG_SQL", "pin_resid_pkg.x")
-        ]
-    finally:
-        sys.path.remove(str(tmp_path))
-        for m in list(sys.modules):
-            if m.startswith("pin_resid_pkg"):
-                sys.modules.pop(m)
-
-
-def _era_violations(
-    artifact: dict, current_era: str, green: dict, seed_covered
-) -> list[str]:
-    """Names in a LOCAL_DIFF-shaped artifact whose helper fingerprint
-    carries a non-current era and is not excused by an active
-    transition seed — the committed-era invariant's core, kept pure
-    so the failure direction is testable against synthetic
-    artifacts."""
-    bad = []
-    for name, e in artifact.items():
-        h = e.get("helper_fingerprint") if isinstance(e, dict) else None
-        if not h:
-            continue
-        era = h.split(":", 1)[0] if ":" in h else "h1"
-        if era == current_era:
-            continue
-        if seed_covered(name, green.get(name, 0)):
-            continue
-        bad.append(name)
-    return sorted(bad)
-
-
-def test_committed_local_diff_era_matches_current_era():
-    """The committed-era invariant (r9 verdict #4): the NEWEST
-    committed LOCAL_DIFF artifact must carry helper fingerprints of
-    the CURRENT era (or an active transition seed must cover every
-    stale-era query). h1→h2 shipped blind — every pre-bump snapshot
-    era-skipped and nothing demanded regeneration until the judge
-    caught it; h2→h3 shipped covered only because the builder
-    hand-sequenced the regeneration into the bump commit. This test
-    makes the third bump unable to ship blind: bumping
-    ``_HELPER_FP_ERA`` without regenerating the differential in the
-    same change (or seeding the affected queries) fails here."""
-    import json
-    import pathlib
-    import re
-
-    from map_reduce_showcase_spark.plans.registry import (
-        _HELPER_FP_ERA,
-        _latest_green_round,
-        seed_covered,
-    )
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    diffs = sorted(
-        repo.glob("LOCAL_DIFF_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
-    assert diffs, "no committed LOCAL_DIFF artifact — run the round-end recipe"
-    newest = diffs[-1]
-    artifact = json.loads(newest.read_text())
-    bad = _era_violations(
-        artifact, _HELPER_FP_ERA, _latest_green_round(), seed_covered
-    )
-    assert not bad, (
-        f"{newest.name} carries stale-era helper fingerprints for "
-        f"{len(bad)} queries (current era {_HELPER_FP_ERA!r}) with no "
-        f"active transition seed: {bad[:8]}... — regenerate the local "
-        f"differential in the SAME change as the era bump, or seed the "
-        f"affected queries in registry._TRANSITION_SEEDS"
-    )
-
-
-def test_era_violation_detection_fails_on_blind_bump():
-    """The failure direction of the committed-era invariant, pinned
-    against synthetic artifacts so the real-repo test above can't
-    pass vacuously: a stale-era entry with no seed is a violation; an
-    ACTIVE seed excuses it; an EXPIRED seed (member already
-    driver-green at/after the bump) does not."""
-    art = {
-        "q_stale": {"helper_fingerprint": "h3:aaaa"},
-        "q_current": {"helper_fingerprint": "h4:bbbb"},
-        "q_bare_h1": {"helper_fingerprint": "cccc"},  # pre-prefix era
-        "q_seeded": {"helper_fingerprint": "h3:dddd"},
-        "q_seed_expired": {"helper_fingerprint": "h3:eeee"},
-        "q_rows_only": {"helper_fingerprint": None},
-    }
-    green = {"q_seeded": 9, "q_seed_expired": 10}
-    seed = {"q_seeded", "q_seed_expired"}
-
-    def covered(name, g):
-        return name in seed and g < 10
-
-    bad = _era_violations(art, "h4", green, covered)
-    assert bad == ["q_bare_h1", "q_seed_expired", "q_stale"]
-    # same artifact under its own era: clean
-    assert _era_violations(
-        {"q": {"helper_fingerprint": "h3:aaaa"}}, "h3", {}, covered
-    ) == []
-
-
-def test_h3_transition_seed_holds_until_driver_green():
-    """The six queries whose round-9 helper edits lost their band
-    promotion to the h2→h3 era bump (the first h3 snapshot was
-    stamped after the edits, so fall-forward finds agreement) must be
-    seeded back into the re-verify band — and the seed must expire on
-    its own once a member's latest driver green reaches the bump
-    round."""
-    from map_reduce_showcase_spark.plans.registry import (
-        _H3_ERA_BUMP_ROUND,
-        _H3_TRANSITION_REVERIFY,
-        _latest_green_round,
-        reverify_band,
-    )
-
-    green = _latest_green_round()
-    band = reverify_band()
-    for name in _H3_TRANSITION_REVERIFY:
-        if green.get(name, 0) < _H3_ERA_BUMP_ROUND:
-            assert name in band, name
-        else:
-            # driver has re-proven it since the bump: the seed must
-            # not hold it in the band by itself
-            pass  # expiry is the green-round guard, exercised above
-
-
-def test_fingerprint_snapshots_merge_helper_slot_across_artifact_kinds(tmp_path):
-    """A round carrying BOTH a flat FINGERPRINTS map and a
-    LOCAL_DIFF must keep the first source's definition fingerprint
-    and fill the helper slot from the later source — dropping the
-    helper (the pre-fix behavior) silently skips the helper
-    comparison for that round."""
-    import json
-
-    from map_reduce_showcase_spark.plans.registry import _fingerprint_snapshots
-
-    (tmp_path / "FINGERPRINTS_r05.json").write_text(json.dumps({"q": "flatfp"}))
-    (tmp_path / "LOCAL_DIFF_r05.json").write_text(
-        json.dumps(
-            {
-                "q": {"fingerprint": "localfp", "helper_fingerprint": "h2:abc"},
-                "q_only_here": {"fingerprint": "newfp", "helper_fingerprint": None},
-            }
-        )
-    )
-    (tmp_path / "LOCAL_DIFF_r06.json").write_text(
-        json.dumps({"q": {"fingerprint": "r6fp", "helper_fingerprint": "h2:def"}})
-    )
-    snaps = _fingerprint_snapshots(tmp_path)
-    # both-kinds round: flat map's definition wins, helper filled in
-    assert snaps[5]["q"] == ("flatfp", "h2:abc")
-    assert snaps[5]["q_only_here"] == ("newfp", None)
-    # single-kind round untouched by the merge rule
-    assert snaps[6]["q"] == ("r6fp", "h2:def")
-
-
 def test_harness_record_encoding_matches_driver(spark, oracle, sf_dir):
-    """The local harness's artifact encoding must mirror the
-    driver's: match fields are ``None`` ("not evaluated") for
-    rows-only and errored entries, and booleans ONLY when the
-    comparison actually ran — so an artifact consumer filtering on
-    ``rows_match == False`` sees real failures, never the eviction
-    query (the round-5 artifact encoded rows-only as triple-False)."""
+    """``check_query`` records: match fields are ``None`` ("not
+    evaluated") for rows-only and errored entries, and booleans ONLY
+    when the comparison actually ran — so a consumer filtering on
+    ``rows_match == False`` sees real failures, never a rows-only
+    query."""
     import sys
 
     sys.path.insert(0, str(__import__("pathlib").Path(__file__).parent.parent / "tools"))
@@ -1367,11 +154,10 @@ def test_harness_record_encoding_matches_driver(spark, oracle, sf_dir):
 
 
 def test_eviction_census_rows_only_record_is_pinned(spark, oracle, sf_dir):
-    """r9 verdict #5: the eviction query's rows-only record must
-    assert the deterministic census shape (2 rows, one running + one
-    final group, evicted-users bounded by running-users), not log a
-    bare count — the window's one non-check becomes a real check
-    without a SQL oracle."""
+    """The eviction query's rows-only record asserts the deterministic
+    census shape (2 rows, one running + one final group, evicted-users
+    bounded by running-users), not a bare count — a real check without
+    a SQL oracle."""
     import sys
 
     sys.path.insert(
@@ -1380,8 +166,7 @@ def test_eviction_census_rows_only_record_is_pinned(spark, oracle, sf_dir):
     from drive_contract import SF, _check_eviction_census, check_query
 
     name = "streaming_sessions_timeout_eviction"
-    # r11 verdict #2: the pin is value-anchored against the oracle
-    # con — the RUNNING census's n_users must equal DuckDB's
+    # the pin is value-anchored against the oracle con — the RUNNING census's n_users must equal DuckDB's
     # COUNT(DISTINCT user_id) (== the oracle-green twin's row count),
     # so the healthy frame here must carry the fixture's real count
     nd = oracle.execute("SELECT COUNT(DISTINCT user_id) FROM events").fetchone()[0]
@@ -1389,7 +174,7 @@ def test_eviction_census_rows_only_record_is_pinned(spark, oracle, sf_dir):
         [(False, 3 * nd, nd), (True, 7, 7)],
         "is_final boolean, n_rows long, n_users long",
     )
-    # the pin applies at the driver-parity default SF only — the
+    # the pin applies at the default SF only — the
     # builders here ignore sf, so pass SF to engage it
     rec, why = check_query(name, good, None, (), spark, oracle, SF)
     assert why is None
@@ -1415,7 +200,7 @@ def test_eviction_census_rows_only_record_is_pinned(spark, oracle, sf_dir):
     assert why is None and rec["status"] == "rows_only"
 
     # a checker CRASH (schema changed under it) fails the entry, not
-    # the whole artifact run
+    # the whole run
     renamed = lambda s, sf: s.createDataFrame(  # noqa: E731
         [(False, 40, 12), (True, 7, 7)], "done boolean, n_rows long, n_users long"
     )
@@ -1440,7 +225,7 @@ def test_eviction_census_rows_only_record_is_pinned(spark, oracle, sf_dir):
     assert "more evicted users" in _check_eviction_census(
         mk([(False, 4, 2), (True, 5, 5)])
     )
-    # cross-entry value anchor (r11 verdict #2): with a con, the
+    # cross-entry value anchor: with a con, the
     # running census must equal COUNT(DISTINCT user_id) — the row
     # count the twin streaming_eviction_final_state's oracle proves.
     # The shape-only checks above pass con=None and stay shape-only.
@@ -1453,17 +238,3 @@ def test_eviction_census_rows_only_record_is_pinned(spark, oracle, sf_dir):
     # legitimately undercounts (no flush sentinels in this replay)
     under_final = mk([(False, 3 * nd, nd), (True, nd - 1, nd - 1)])
     assert _check_eviction_census(under_final, oracle) is None
-
-
-def test_current_reverify_band_members_are_fresh_or_flagged():
-    """Every registered query's fingerprint must either match its
-    latest-green-era snapshot (not in the band) or sit in the band —
-    i.e. the band plus the fresh set covers the registry with no
-    manual bookkeeping left anywhere."""
-    from map_reduce_showcase_spark.plans.registry import (
-        current_fingerprints,
-        reverify_band,
-    )
-
-    band = reverify_band()
-    assert band <= set(current_fingerprints()), "band names must be registered"

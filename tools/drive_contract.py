@@ -1,23 +1,24 @@
-"""Driver-harness simulation per .claude/skills/verify/SKILL.md.
+"""Contract check for ``__spark_entry__.py``: an entry smoke test,
+then every registered query against its DuckDB oracle.
 
-With ``--artifact PATH`` it also writes a CORRECTNESS-shaped JSON
-(per-query rows/schema/hash match) covering ALL registered queries —
-the local-evidence twin of the driver's ~50-entry artifact, for the
-queries the capped window can't reach in a given round. Each entry
-additionally carries the query's definition ``fingerprint`` (builder
-source + oracle SQL hash), which is what lets the registry compute
-the changed-since-green re-verify band instead of hand-maintaining
-it (``plans/registry.py::changed_since_green``).
+Usage: ``python tools/drive_contract.py [--sf-dir DIR] [--driver-mem MEM]``.
+
+Builds a plain ``local[8]`` SparkSession (only the UTC time zone set,
+not the package's tuned ``get_spark()``), runs ``entry(spark)`` as a
+smoke test (it must return rows), then runs every ``queries()`` entry
+at ``--sf-dir`` and compares it with its ``oracle_sql()`` twin run by
+DuckDB over views of the same parquet files: row count, sorted column
+names and an order-insensitive value hash. Queries without an oracle
+are checked for rows (and, for the ones in ``PINNED_ROWS_ONLY``, for a
+pinned shape). Exits 1 if any query fails.
 
 Importable: the per-query comparison lives in :func:`check_query`
-so the harness's record encoding is unit-testable (rows-only and
-errored entries must carry ``None`` match fields like the driver's
-artifact does, NOT ``False`` — a consumer filtering on
-``rows_match == False`` must see only real comparison failures).
+(``perfbench/checks.py`` reuses it). Rows-only and errored records
+carry ``None`` match fields, not ``False``, so a consumer filtering on
+``rows_match == False`` sees only real comparison failures.
 """
 import argparse
 import decimal
-import json
 import os
 import sys
 import time
@@ -26,8 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
 import pandas as pd
-
-from bench_constants import HEADLINE
 
 SF = "/root/testdata/sf0.01"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -53,27 +52,23 @@ def value_hash(df: pd.DataFrame):
 
 
 def _check_eviction_census(df: pd.DataFrame, con=None):
-    """Pinned expectation for ``streaming_sessions_timeout_eviction``
-    (r9 verdict #5): the replay fixture is deterministic, so the
-    rows-only record can assert the census SHAPE instead of logging a
-    bare count — 2 rows (one running, one final), both groups
-    populated, and the evicted-user census bounded by the running
-    one (every evicted user emitted at least one non-final update
-    before its timeout fired). Returns a failure reason or None.
+    """Pinned expectation for ``streaming_sessions_timeout_eviction``.
+    The replay fixture is deterministic, so the rows-only record
+    asserts the census SHAPE instead of a bare count: 2 rows (one
+    running, one final), both groups populated, and the evicted-user
+    census bounded by the running one (every evicted user emitted at
+    least one non-final update before its timeout fired). Returns a
+    failure reason or None.
 
-    Since round 12 the pin is also VALUE-anchored cross-entry (r11
-    verdict #2): the RUNNING census's ``n_users`` must equal DuckDB's
-    ``COUNT(DISTINCT user_id)`` over events — which is exactly the
-    row count the oracle-green twin ``streaming_eviction_final_state``
-    proves (its oracle is ``GROUP BY user_id``), so this ties the
-    rows-only entry to the twin through an independent engine. The
-    verdict phrased the equality over the FINAL census, but that
-    cannot hold by construction: the census replay deliberately has
-    NO flush sentinels (that is the twin's addition), so users whose
-    last events sit within ``gap`` of the replay's max ts end the
-    stream un-evicted — at r10's sf0.01 that was 146 final vs 150
-    running users. Every user DOES emit at least one non-final update
-    in the batch its events arrive (``streaming/stateful.py:147`` —
+    The pin is also VALUE-anchored: the RUNNING census's ``n_users``
+    must equal DuckDB's ``COUNT(DISTINCT user_id)`` over events, which
+    is the row count the oracle-checked twin
+    ``streaming_eviction_final_state`` proves (its oracle is ``GROUP BY
+    user_id``). The equality cannot hold for the FINAL census: the
+    census replay has no flush sentinels (that is the twin's addition),
+    so users whose last events sit within ``gap`` of the replay's max
+    ts end the stream un-evicted. Every user does emit a non-final
+    update in the batch its events arrive (``streaming/stateful.py``:
     the data path always yields an ``is_final=False`` row), so the
     running census is the batch-invariant side of the equality; the
     final census stays bounded by it (asserted above)."""
@@ -107,26 +102,22 @@ def _check_eviction_census(df: pd.DataFrame, con=None):
 
 
 #: rows-only queries with a deterministic fixture get a PINNED shape
-#: assertion instead of a bare row count — the driver window's one
-#: non-check becomes a real check without needing a SQL oracle. The
-#: pins describe the DEFAULT-SF fixture only and are skipped at other
-#: ``--sf-dir``s: the eviction census is documented as 1-2 rows in
-#: general (a dataset whose final watermark never passes any timeout
-#: legitimately emits no final row), so applying the 2-row pin in the
-#: sf0.1 re-validation mode could poison a healthy run with a false
-#: failure.
+#: assertion instead of a bare row count. The pins describe the
+#: DEFAULT-SF fixture only and are skipped at other ``--sf-dir``s: the
+#: eviction census is 1-2 rows in general (a dataset whose final
+#: watermark never passes any timeout legitimately emits no final
+#: row), so the 2-row pin would fail a healthy run at another scale.
 PINNED_ROWS_ONLY = {
     "streaming_sessions_timeout_eviction": _check_eviction_census,
 }
 
 
 def check_query(name, fn, oracle_sql, tags, spark, con, sf=SF):
-    """Run one registered query against its oracle and return the
-    artifact record. Match fields start as ``None`` ("not
-    evaluated") and only become booleans when the corresponding
-    comparison actually ran — mirroring the driver's encoding, so
-    rows-only and errored entries can't be misread as triple
-    failures. Returns (record, failure_reason_or_None)."""
+    """Run one registered query against its oracle and return its
+    record. Match fields start as ``None`` ("not evaluated") and only
+    become booleans when the corresponding comparison actually ran, so
+    rows-only and errored entries can't be misread as triple failures.
+    Returns (record, failure_reason_or_None)."""
     rec = {
         "rows_match": None,
         "schema_match": None,
@@ -143,17 +134,14 @@ def check_query(name, fn, oracle_sql, tags, spark, con, sf=SF):
         return rec, rec["err"]
     rec["spark_rows"] = len(got)
     # vacuity gate: a 0-row frame hash-matches trivially (schema
-    # proven, logic never executed on a row) — q8/q9/q11/q20 sat
-    # green through four rounds this way. Queries whose emptiness
+    # proven, logic never executed on a row). Queries whose emptiness
     # is semantically legitimate must carry the may_be_empty tag.
     if len(got) == 0 and "may_be_empty" not in tags:
         rec["err"] = "vacuous: 0 rows without may_be_empty tag"
         return rec, rec["err"]
     if oracle_sql is None:
-        # realpath-normalized: `--sf-dir /root/testdata/sf0.01/` (or
-        # any path alias of the default SF) must still apply the pin —
-        # exact string equality silently downgraded the round's one
-        # real rows-only check to a bare count (ADVICE r10)
+        # realpath-normalized: a trailing slash or any other alias of
+        # the default SF still applies the pin
         at_default_sf = os.path.realpath(sf) == os.path.realpath(SF)
         pinned = PINNED_ROWS_ONLY.get(name) if at_default_sf else None
         if name in PINNED_ROWS_ONLY and not at_default_sf:
@@ -166,8 +154,8 @@ def check_query(name, fn, oracle_sql, tags, spark, con, sf=SF):
             rec["status"] = "rows_only"
             return rec, None
         # failure-isolated like every other comparison: a checker
-        # crash (e.g. the query's schema changed under it) must fail
-        # THIS entry, not abort the whole 170-query artifact run
+        # crash (e.g. the query's schema changed under it) fails THIS
+        # entry, not the whole run
         try:
             why = pinned(got, con)
         except Exception as exc:  # noqa: BLE001
@@ -202,32 +190,22 @@ def main() -> int:
 
     import __spark_entry__ as E
     from map_reduce_showcase_spark.plans import REGISTRY
-    from map_reduce_showcase_spark.plans.registry import (
-        _load_all,
-        definition_fingerprint,
-        helper_fingerprint,
-    )
-
-    _load_all()
 
     ap = argparse.ArgumentParser()
-    ap.add_argument("--artifact", default=None, help="write per-query JSON here")
     ap.add_argument(
         "--sf-dir",
         default=SF,
         help="testdata directory for both Spark and the DuckDB views "
-        "(default: the driver's sf0.01; use sf0.1 for a 10x-scale "
+        "(default: sf0.01; use sf0.1 for a 10x-scale "
         "re-validation — slower, mostly on the DuckDB oracle side)",
     )
     ap.add_argument(
         "--driver-mem",
         default=None,
-        help="spark.driver.memory override. Default None = the "
-        "driver's own plain session (1g) — correct for sf0.01 "
-        "parity. A 170-query run at --sf-dir sf0.1 starves a 1g "
-        "heap partway through (measured round 9: the JVM died and "
-        "every later query failed with ConnectionRefused); use 12g "
-        "there.",
+        help="spark.driver.memory override. Default None = a plain "
+        "session's 1g, enough at sf0.01. A full run at --sf-dir sf0.1 "
+        "starves a 1g heap partway through (the JVM dies and every "
+        "later query fails with ConnectionRefused); use 12g there.",
     )
     args = ap.parse_args()
     sf_dir = args.sf_dir
@@ -254,27 +232,11 @@ def main() -> int:
     queries = E.queries()
     oracles = E.oracle_sql()
     fails = []
-    records: dict[str, dict] = {}
     t0 = time.time()
     for i, (name, fn) in enumerate(queries.items()):
-        spec = REGISTRY.get(name)
         rec, why = check_query(
-            name, fn, oracles.get(name), spec.tags if spec else (), spark, con,
-            sf=sf_dir,
+            name, fn, oracles.get(name), REGISTRY[name].tags, spark, con, sf=sf_dir
         )
-        if spec is not None:
-            rec["fingerprint"] = definition_fingerprint(spec)
-            # helper-module source hash (round 7 on): lets the
-            # registry auto-promote queries whose builder is
-            # untouched but whose imported helper was rewritten
-            rec["helper_fingerprint"] = helper_fingerprint(spec)
-            # anchor-set membership (ADVICE r16): recorded so the
-            # NEXT round's freshness gate can see HEADLINE-list
-            # changes (a rename/swap previously bypassed the
-            # mandatory-ABBA gate via the new-query exemption)
-            if name in HEADLINE:
-                rec["headline"] = True
-        records[name] = rec
         if why:
             fails.append((name, why))
         elif rec["status"] == "rows_only_pinned":
@@ -288,10 +250,6 @@ def main() -> int:
     print(f"\n{len(queries)} queries in {time.time()-t0:.0f}s; {len(fails)} failures")
     for name, why in fails:
         print(f"FAIL {name}: {why}")
-    if args.artifact:
-        with open(args.artifact, "w") as fh:
-            json.dump(records, fh, indent=1, sort_keys=False)
-        print(f"wrote {args.artifact} ({len(records)} entries)")
     return 1 if fails else 0
 
 
