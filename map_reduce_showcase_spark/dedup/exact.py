@@ -19,7 +19,7 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     """Duplicate groups: fingerprint → (keeper, n_copies) for groups
     with >1 member. ``keeper`` = min id (deterministic survivor)."""
     return (
-        docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        docs.selectExpr(id_col, f"{fingerprint(text_col)} AS fp")
         .groupBy("fp")
         .agg(
             F.min(id_col).alias("keeper"),
@@ -33,7 +33,7 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 def exact_dup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """One-row corpus summary: total docs, distinct fingerprints,
     number of excess copies an exact dedup pass would remove."""
-    return docs.select(fingerprint(F.col(text_col)).alias("fp")).agg(
+    return docs.selectExpr(f"{fingerprint(text_col)} AS fp").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count_distinct(F.col("fp")).alias("n_distinct"),
         (F.count(F.lit(1)) - F.count_distinct(F.col("fp"))).alias("n_dupes"),

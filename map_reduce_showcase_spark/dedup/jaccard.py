@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import require_sql_text_conf, shingles_sql, tokens
+from ..functions.text import portable_hash60, shingles, tokens
 
 
 def shingle_rows(
@@ -36,13 +36,10 @@ def shingle_rows(
     re-running the tokenize regex per reference."""
     from ..functions.util import rebalance
 
-    require_sql_text_conf(docs.sparkSession)
-    toks_df = rebalance(docs).select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("_toks")
-    )
-    return toks_df.select(
-        "doc_id",
-        F.explode(F.expr(f"array_distinct({shingles_sql('_toks', n)})")).alias("shingle"),
+    return (
+        rebalance(docs)
+        .selectExpr(f"{id_col} AS doc_id", f"{tokens(text_col)} AS _toks")
+        .selectExpr("doc_id", f"explode(array_distinct({shingles('_toks', n)})) AS shingle")
     )
 
 
@@ -143,9 +140,7 @@ def containment_pairs(
     the highest non-control value in round 4)."""
     sh = shingle_rows(docs, n, text_col, id_col)
     if hash_shingles:
-        from ..functions.text import portable_hash60
-
-        sh = sh.select("doc_id", portable_hash60(F.col("shingle")).alias("shingle"))
+        sh = sh.selectExpr("doc_id", f"{portable_hash60('shingle')} AS shingle")
     sh = cap_shingle_df(sh, max_shingle_df)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (

@@ -36,12 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    portable_hash60_spark_sql,
-    require_sql_text_conf,
-    shingles_sql,
-    tokens_sql,
-)
+from ..functions.text import portable_hash60, shingles, tokens
 from .jaccard import keep_jaccard
 
 #: Universal-hash family h_i(x) = (a_i·x + b_i) mod MOD over the
@@ -89,7 +84,6 @@ def minhash_sketches(
     would otherwise infer for them fold away instead of moving down."""
     from ..functions.util import rebalance
 
-    require_sql_text_conf(docs.sparkSession)
     n_bands = num_hashes // rows_per_band
     mins = []
     for i in range(n_bands * rows_per_band):
@@ -102,12 +96,12 @@ def minhash_sketches(
         "concat(" + ", ',', ".join(mins[b * rows_per_band:(b + 1) * rows_per_band]) + ")"
         for b in range(n_bands)
     )
-    hashed = f"transform({shingles_sql('_toks', n)}, s -> {portable_hash60_spark_sql('s')})"
+    hashed = f"transform({shingles('_toks', n)}, s -> {portable_hash60('s')})"
     return (
         rebalance(docs)
         .selectExpr(
             f"{id_col} AS doc_id",
-            f"coalesce({tokens_sql(text_col)}, CAST(array() AS ARRAY<STRING>)) AS _toks",
+            f"coalesce({tokens(text_col)}, CAST(array() AS ARRAY<STRING>)) AS _toks",
         )
         .selectExpr("doc_id", f"array_distinct({hashed}) AS ks")
         .selectExpr("doc_id", "size(ks) AS sz", "ks", f"array({bkeys}) AS bkeys")
@@ -162,12 +156,12 @@ def lsh_candidate_pairs(sketches: DataFrame, is_new=None) -> DataFrame:
         a = bands.alias("a")
         pair = F.expr("a.doc_id < b.doc_id")
     else:
-        a = bands.filter(is_new(F.col("doc_id"))).alias("a")
+        a = bands.filter(is_new("doc_id")).alias("a")
         # the ordering term dedups the new×new quadrant (seen from
         # both sides) while keeping new×old rows, whose old side
         # never appears on the filtered ``a`` side
-        pair = F.expr("a.doc_id <> b.doc_id") & (
-            F.expr("a.doc_id < b.doc_id") | ~is_new(F.col("b.doc_id"))
+        pair = F.expr(
+            f"a.doc_id <> b.doc_id AND (a.doc_id < b.doc_id OR NOT ({is_new('b.doc_id')}))"
         )
     return a.join(bands.alias("b").hint("merge"), same_band & pair).selectExpr(
         "least(a.doc_id, b.doc_id) AS d1",
@@ -209,8 +203,9 @@ def incremental_minhash_near_dup_pairs(
     pipeline actually runs every day: dedup TODAY'S batch against
     the whole corpus without ever re-pairing the corpus with itself.
 
-    ``is_new`` is a deterministic Column-predicate factory over the
-    doc id (e.g. a hash bucket or an ingest-date comparison); being
+    ``is_new`` is a deterministic SQL-text predicate factory over the
+    doc id (``is_new("b.doc_id")`` returns e.g. ``"b.doc_id % 5 = 0"``:
+    a hash bucket or an ingest-date comparison); being
     a pure function of the id, it filters the band frame directly —
     no flag column needs carrying through the pipeline. Candidates
     require a NEW doc on at least one side, so the old×old quadrant

@@ -22,12 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import (
-    has_token_sql,
-    portable_hash60_spark_sql,
-    require_sql_text_conf,
-    tokens_sql,
-)
+from ..functions.text import has_token, portable_hash60, tokens
 
 #: 32 bits: at 16 bits, same-domain corpora (shared vocabulary)
 #: collapse — nearly all pairs land within Hamming 3; 32 bits keeps
@@ -53,18 +48,17 @@ def simhash_docs(
     twice."""
     from ..functions.util import rebalance
 
-    require_sql_text_conf(docs.sparkSession)
     bits = " + ".join(
         f"(CASE WHEN 2 * aggregate(hv, 0L, (acc, h) -> acc + ((h >> {j}) & 1))"
         f" > size(hv) THEN {1 << j} ELSE 0 END)"
         for j in range(SIMHASH_BITS)
     )
     hashed = (
-        f"transform(array_distinct({tokens_sql(text_col)}), "
-        f"w -> {portable_hash60_spark_sql('w')})"
+        f"transform(array_distinct({tokens(text_col)}), "
+        f"w -> {portable_hash60('w')})"
     )
     return (
-        rebalance(docs.filter(has_token_sql(text_col)))
+        rebalance(docs.filter(has_token(text_col)))
         .selectExpr(f"{id_col} AS doc_id", f"{hashed} AS hv")
         .selectExpr("doc_id", f"CAST({bits} AS BIGINT) AS simhash")
     )

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import portable_hash60, require_sql_text_conf, tokens
+from ..functions.text import portable_hash60, tokens
 from ..functions.util import rebalance
 
 
@@ -56,22 +56,15 @@ def gram_positions(
 
     The gram text exists only inside the hash expression — what
     explodes and shuffles is (int, int, long) rows."""
-    require_sql_text_conf(docs.sparkSession)
-    docs = rebalance(docs)
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), tokens(text_col).alias("_toks")
-    )
-    tk = F.col("_toks")
+    toks = rebalance(docs).selectExpr(f"{id_col} AS doc_id", f"{tokens(text_col)} AS _toks")
     # sequence(1, size-k+1) — guarded: sequence(1, 0) would count DOWN
-    idx = F.when(
-        F.size(tk) >= k, F.sequence(F.lit(1), F.size(tk) - (k - 1))
-    ).otherwise(F.expr("CAST(array() AS ARRAY<INT>)"))
-    return toks.select(
-        "doc_id", F.explode(idx).alias("pos"), "_toks"
-    ).select(
-        "doc_id",
-        F.col("pos").cast("bigint").alias("pos"),
-        portable_hash60(F.concat_ws(" ", F.slice(tk, F.col("pos"), k))).alias("h"),
+    idx = (
+        f"CASE WHEN size(_toks) >= {k} THEN sequence(1, size(_toks) - {k - 1}) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END"
+    )
+    gram = f"concat_ws(' ', slice(_toks, pos, {k}))"
+    return toks.selectExpr("doc_id", f"explode({idx}) AS pos", "_toks").selectExpr(
+        "doc_id", "CAST(pos AS BIGINT) AS pos", f"{portable_hash60(gram)} AS h"
     )
 
 

@@ -1,4 +1,5 @@
-"""Vector column expressions over ``array<float>`` embeddings.
+"""Vector expressions over ``array<float>`` embeddings, as Spark SQL
+text.
 
 All built on ``zip_with``/``aggregate`` higher-order functions —
 JVM-side, codegen'd, no Python. Elements are cast to DOUBLE before
@@ -6,73 +7,38 @@ any arithmetic and accumulated with a sequential left fold so results
 are bit-reproducible (and replayable by the DuckDB oracle, which also
 folds sequentially).
 
-Every helper accepts either a ``Column`` or a SQL TEXT fragment (a
-column name or an ``array(...)`` literal). The text path builds the
-whole fold as ONE parsed ``F.expr`` — the Column-API lambda path
-costs ~20 ms of py4j round trips PER lambda to construct (r18
-measured ``lsh_bucket`` alone at 0.24 s of driver time per plan
-build, ~40% of sim_topk_lsh's bench cost), while the parsed tree is
-identical expression for expression, so results are bit-equal
-(pinned by tests/test_similarity.py::test_vector_expr_text_path).
+Every helper takes SQL text (a column name, a struct field such as
+``c.cv``, or an ``array(...)`` literal) and returns SQL text, so a
+whole fold is ONE parsed expression inside ``selectExpr`` /
+``F.expr``: building the same tree with Column-API lambdas costs
+~20 ms of py4j round trips PER lambda.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def _d(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
-
-
-def _d_sql(v: str) -> str:
+def _doubles(v: str) -> str:
     return f"transform({v}, v_ -> CAST(v_ AS DOUBLE))"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
+def dot(a: str, b: str) -> str:
     """Sequential-fold dot product in double precision."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(_d(a), _d(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def dot_sql(a: str, b: str) -> str:
-    """The :func:`dot` fold as SQL text, for embedding into larger
-    single-parse expressions (one ``F.expr`` instead of one py4j
-    round trip per lambda)."""
     return (
-        f"aggregate(zip_with({_d_sql(a)}, {_d_sql(b)}, (x, y) -> x * y), "
+        f"aggregate(zip_with({_doubles(a)}, {_doubles(b)}, (x, y) -> x * y), "
         f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
     )
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(
-            f"SQRT(aggregate({_d_sql(a)}, CAST(0.0 AS DOUBLE), "
-            f"(acc, x) -> acc + (x * x)))"
-        )
-    return F.sqrt(
-        F.aggregate(_d(a), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
+def l2_norm(a: str) -> str:
+    return f"SQRT(aggregate({_doubles(a)}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + (x * x)))"
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
+def cosine_similarity(a: str, b: str) -> str:
     """dot(a,b) / (||a||·||b||), deterministic double arithmetic."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    return f"({dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
 
 
-def cosine_from_norms(
-    a: Column | str,
-    b: Column | str,
-    norm_a: Column | str,
-    norm_b: Column | str,
-) -> Column:
+def cosine_from_norms(a: str, b: str, norm_a: str, norm_b: str) -> str:
     """``cosine_similarity`` with the norms precomputed.
 
     Scoring joins evaluate cosine once per PAIR; the norm of each
@@ -82,6 +48,4 @@ def cosine_from_norms(
     row before the join and pass the columns here. The arithmetic is
     the identical expression tree (sqrt of a sequential fold, one
     divide), so results are bit-equal to ``cosine_similarity``."""
-    na = F.col(norm_a) if isinstance(norm_a, str) else norm_a
-    nb = F.col(norm_b) if isinstance(norm_b, str) else norm_b
-    return dot(a, b) / (na * nb)
+    return f"({dot(a, b)} / ({norm_a} * {norm_b}))"

@@ -19,7 +19,7 @@ from ..dedup import (
     simhash_near_pairs,
 )
 from ..dedup.simhash import SIMHASH_BITS
-from ..functions.text import portable_hash60_sql
+from ..functions.text import portable_hash60_duckdb
 from ..similarity.lsh import cosine_pairs_lsh, hyperplane_signs
 from .queries_text import _TOKENS_SQL
 from .registry import register, t
@@ -362,7 +362,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return incremental_minhash_near_dup_pairs(
         t(spark, sf_dir, "documents"),
-        is_new=lambda c: portable_hash60(c.cast("string")) % 5 == 0,
+        is_new=lambda c: f"{portable_hash60(f'CAST({c} AS STRING)')} % 5 = 0",
         n=2,
         num_hashes=12,
         rows_per_band=3,
@@ -442,15 +442,14 @@ def dedup_apply_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint window carries md5 hashes, never text, and the same
     marked frame IS the filtered corpus (``WHERE is_keeper``) that
     feeds the next pipeline stage."""
-    from ..functions.text import tokens as _tokens
+    from ..functions.text import fingerprint
 
     docs = t(spark, sf_dir, "documents")
-    fp = F.md5(F.concat_ws(" ", _tokens(F.col("text"))))
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("fp")
     marked = (
-        docs.select("doc_id", "lang", "n_chars", fp.alias("fp"))
+        docs.selectExpr("doc_id", "lang", "n_chars", f"{fingerprint('text')} AS fp")
         .withColumn("is_keeper", F.col("doc_id") == F.min("doc_id").over(w))
     )
     return marked.groupBy("lang").agg(
@@ -625,7 +624,7 @@ _SPANS5_SQL = f"""
     "dedup_repeated_passages",
     oracle=f"""
     WITH spans AS (
-      SELECT doc_id, {portable_hash60_sql("unnest(" + _SPANS5_SQL + ")")} AS k
+      SELECT doc_id, {portable_hash60_duckdb("unnest(" + _SPANS5_SQL + ")")} AS k
       FROM documents
     ),
     sdf AS (SELECT k, COUNT(*) AS df FROM spans GROUP BY k),
@@ -670,7 +669,7 @@ def dedup_repeated_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows)
     spans = (
         shingle_rows(docs, n=5)
-        .select("doc_id", portable_hash60(F.col("shingle")).alias("k"))
+        .selectExpr("doc_id", f"{portable_hash60('shingle')} AS k")
         .localCheckpoint(eager=False)
     )
     sdf = spans.groupBy("k").agg(F.count(F.lit(1)).alias("df"))
@@ -720,7 +719,7 @@ _SUBSTR_MAX_GRAM_DF = 250
     WITH
     sh AS (SELECT doc_id, {_SHINGLES_SQL} AS shingles FROM documents),
     e0 AS (SELECT doc_id,
-                  {portable_hash60_sql("unnest(shingles)")} AS shingle
+                  {portable_hash60_duckdb("unnest(shingles)")} AS shingle
            FROM sh),
     e AS (SELECT doc_id, shingle FROM e0
           QUALIFY COUNT(*) OVER (PARTITION BY shingle) <= {_CONTAIN_MAX_DF}),
@@ -773,7 +772,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     g AS (SELECT doc_id, unnest(generate_series(1, len(tk) - 9)) AS pos, tk
           FROM w WHERE len(tk) >= 10),
     grams AS (SELECT doc_id, pos,
-                     {portable_hash60_sql("array_to_string(tk[pos:pos+9], ' ')")} AS h
+                     {portable_hash60_duckdb("array_to_string(tk[pos:pos+9], ' ')")} AS h
               FROM g),
     dup AS (SELECT h FROM grams GROUP BY h
             HAVING COUNT(*) >= 2 AND COUNT(*) <= {_SUBSTR_MAX_GRAM_DF}),

@@ -78,7 +78,7 @@ def pack_sequences_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             F.pmod(F.col("doc_id"), F.lit(N_SHARDS)).cast("bigint").alias("shard"),
-            token_count(F.col("text")).cast("bigint").alias("ntok"),
+            F.expr(f"CAST({token_count('text')} AS BIGINT)").alias("ntok"),
         )
         .withColumn("cum_before", F.sum("ntok").over(w) - F.col("ntok"))
         .groupBy(
@@ -116,8 +116,8 @@ def pack_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     is proportional to corpus token count over window size, and the
     operation is embarrassingly parallel (no shuffle at all until a
     consumer groups)."""
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id", token_count(F.col("text")).cast("bigint").alias("ntok")
+    docs = t(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"CAST({token_count('text')} AS BIGINT) AS ntok"
     )
     n_chunks = F.ceil(F.col("ntok") / F.lit(float(CHUNK_TOKENS))).cast("bigint")
     return (
@@ -173,7 +173,7 @@ def mixture_lang_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(token_count(F.col("text")).cast("bigint")).alias("lang_tokens"),
+            F.expr(f"sum(CAST({token_count('text')} AS BIGINT))").alias("lang_tokens"),
         )
     )
     tot = lt.agg(

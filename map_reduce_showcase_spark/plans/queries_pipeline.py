@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import portable_hash60, portable_hash60_sql
+from ..functions.text import portable_hash60, portable_hash60_duckdb
 from .queries_text import (
     _NBIGRAM_DISTINCT_SQL,
     _NDIST_SQL,
@@ -21,6 +21,13 @@ from .queries_text import (
     _lang_score_sql,
 )
 from .registry import register, t
+
+
+def _salted_hash(salt: str, col: str = "doc_id") -> str:
+    """:func:`portable_hash60` of ``'<salt>#' || col``: one
+    deterministic draw per row and purpose, replayable by the oracle."""
+    return portable_hash60(f"concat('{salt}#', CAST({col} AS STRING))")
+
 
 # DuckDB twins of the funnel's stage predicates (see
 # pipeline_filter_funnel below) — identical expressions to the
@@ -105,12 +112,11 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpivoted driver-side-free via ``stack``."""
     from ..functions import text as T
 
-    txt = F.col("text")
-    toks = T.tokens(txt)
+    toks = F.expr(T.tokens("text"))
     n = F.size(toks)
     safe_n = F.greatest(n, F.lit(1)).cast("double")
     ndist = F.size(F.array_distinct(toks))
-    topcnt = T.top_token_count(toks)
+    topcnt = F.expr(T.top_token_count(T.tokens("text")))
     bigrams = F.zip_with(
         F.slice(toks, 1, n - 1),
         F.slice(toks, 2, n - 1),
@@ -127,8 +133,8 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (dup_bigram <= 0.75)
     )
 
-    s1 = T.language_id(txt) != "und"
-    s2 = s1 & (T.quality_score(txt) >= 0.25)
+    s1 = F.expr(f"{T.language_id('text')} <> 'und'")
+    s2 = s1 & F.expr(f"{T.quality_score('text')} >= 0.25D")
     s3 = s2 & keep_rep
 
     from pyspark.sql.window import Window
@@ -235,8 +241,8 @@ def salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "split_train_val_test",
     oracle=f"""
     SELECT CASE
-             WHEN {portable_hash60_sql("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
-             WHEN {portable_hash60_sql("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
+             WHEN {portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
+             WHEN {portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
              ELSE 'test'
            END AS split,
            lang,
@@ -254,7 +260,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     property a reproducible training pipeline needs; ``randomSplit``
     re-deals on every run). Stratification is just the lang grouping
     shown here."""
-    bucket = portable_hash60(F.col("doc_id").cast("string")) % 100
+    bucket = F.expr(f"{portable_hash60('CAST(doc_id AS STRING)')} % 100")
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
@@ -270,7 +276,7 @@ def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _REBAL_U_SQL = (
-    portable_hash60_sql("'rebal#' || CAST(doc_id AS VARCHAR)") + " % 1000000"
+    portable_hash60_duckdb("'rebal#' || CAST(doc_id AS VARCHAR)") + " % 1000000"
 )
 
 
@@ -313,9 +319,7 @@ def sample_rebalance_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
     target = counts.agg(F.min("n_docs").alias("target"))
-    u = portable_hash60(
-        F.concat(F.lit("rebal#"), F.col("doc_id").cast("string"))
-    ) % F.lit(1_000_000)
+    u = F.expr(f"{_salted_hash('rebal')} % 1000000")
     keep = (u * F.col("n_docs")) < (F.col("target") * F.lit(1_000_000))
     return (
         docs.join(F.broadcast(counts), "lang")
@@ -446,9 +450,7 @@ def sample_temperature_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_target"),
         )
     )
-    u = portable_hash60(
-        F.concat(F.lit("temp#"), F.col("doc_id").cast("string"))
-    ) % F.lit(1_000_000)
+    u = F.expr(f"{_salted_hash('temp')} % 1000000")
     keep = (u * F.col("n_docs")) < (
         F.least(F.col("n_target"), F.col("n_docs")) * F.lit(1_000_000)
     )
@@ -473,7 +475,7 @@ def sample_temperature_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sc AS (
       SELECT doc_id, lang, {_QUALITY_SQL} AS q,
-             ({portable_hash60_sql("CAST(doc_id AS VARCHAR)")} + 1)
+             ({portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} + 1)
                / 1152921504606846976.0 AS u
       FROM documents
     )
@@ -503,10 +505,8 @@ def sample_weighted_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import quality_score
 
     docs = t(spark, sf_dir, "documents")
-    q = quality_score(F.col("text"))
-    u = (portable_hash60(F.col("doc_id").cast("string")) + F.lit(1)) / F.lit(
-        float(1 << 60)
-    )
+    q = F.expr(quality_score("text"))
+    u = F.expr(f"({portable_hash60('CAST(doc_id AS STRING)')} + 1) / CAST({1 << 60}L AS DOUBLE)")
     key = F.log(u) / (q + F.lit(0.01))
     return (
         docs.select("doc_id", "lang", q.alias("quality"), key.alias("_k"))
@@ -568,8 +568,8 @@ def shuffle_train_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SPLIT_SQL = f"""CASE
-      WHEN {portable_hash60_sql("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
-      WHEN {portable_hash60_sql("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
+      WHEN {portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
+      WHEN {portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
       ELSE 'test'
     END"""
 
@@ -614,12 +614,12 @@ def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import fingerprint
 
     docs = t(spark, sf_dir, "documents")
-    bucket = portable_hash60(F.col("doc_id").cast("string")) % 100
+    bucket = F.expr(f"{portable_hash60('CAST(doc_id AS STRING)')} % 100")
     split = (
         F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     )
     marked = docs.select(
-        split.alias("split"), fingerprint(F.col("text")).alias("fp")
+        split.alias("split"), F.expr(fingerprint("text")).alias("fp")
     )
     train_fps = (
         marked.filter(F.col("split") == "train").select("fp").distinct()
@@ -667,7 +667,7 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import text as T
 
     docs = t(spark, sf_dir, "documents").select(
-        T.quality_score(F.col("text")).alias("q"), "n_chars"
+        F.expr(T.quality_score("text")).alias("q"), "n_chars"
     )
     swept = docs.select(
         "q", "n_chars", F.explode(F.array([F.lit(v) for v in (0.2, 0.4, 0.6, 0.8)])).alias("thr")
@@ -681,8 +681,8 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SNAP_H_SQL = portable_hash60_sql("'snap#' || CAST(doc_id AS VARCHAR)")
-_EDIT_H_SQL = portable_hash60_sql("'edit#' || CAST(doc_id AS VARCHAR)")
+_SNAP_H_SQL = portable_hash60_duckdb("'snap#' || CAST(doc_id AS VARCHAR)")
+_EDIT_H_SQL = portable_hash60_duckdb("'edit#' || CAST(doc_id AS VARCHAR)")
 _V1_PRED_SQL = f"{_SNAP_H_SQL} % 100 < 90"
 _V2_PRED_SQL = f"{_SNAP_H_SQL} % 100 >= 5"
 _CHANGED_SQL = f"{_EDIT_H_SQL} % 7 = 0"
@@ -730,14 +730,9 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import fingerprint
 
     docs = t(spark, sf_dir, "documents")
-    snap = portable_hash60(
-        F.concat(F.lit("snap#"), F.col("doc_id").cast("string"))
-    ) % 100
-    edited = (
-        portable_hash60(F.concat(F.lit("edit#"), F.col("doc_id").cast("string"))) % 7
-        == 0
-    )
-    fp = fingerprint(F.col("text"))
+    snap = F.expr(f"{_salted_hash('snap')} % 100")
+    edited = F.expr(f"{_salted_hash('edit')} % 7 = 0")
+    fp = F.expr(fingerprint("text"))
     v1 = docs.filter(snap < 90).select(
         F.col("doc_id").alias("id1"), fp.alias("fp1")
     )
@@ -758,7 +753,7 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UPD_H_SQL = portable_hash60_sql("'upd#' || CAST(o_orderkey AS VARCHAR)")
+_UPD_H_SQL = portable_hash60_duckdb("'upd#' || CAST(o_orderkey AS VARCHAR)")
 _UPD_PRED_SQL = f"{_UPD_H_SQL} % 10 = 0"
 
 
@@ -801,11 +796,7 @@ def pipeline_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     with file-level pruning of untouched files; this query pins
     the arithmetic those implementations must reproduce."""
     o = t(spark, sf_dir, "orders")
-    upd_pred = (
-        portable_hash60(F.concat(F.lit("upd#"), F.col("o_orderkey").cast("string")))
-        % 10
-        == 0
-    )
+    upd_pred = F.expr(f"{_salted_hash('upd', 'o_orderkey')} % 10 = 0")
     # the bump factor must be a DECIMAL literal — a Python float
     # would degrade the whole expression to double and make the
     # post-merge sum partition-order-dependent

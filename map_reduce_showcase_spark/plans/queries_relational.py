@@ -22,7 +22,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -128,25 +128,23 @@ _DISC_PRICE_SQL = (
 MAX_SPLIT_ROWS = 110_000_000
 
 
-def cents(c, scale: int = 2):
+def cents(c: Column, scale: int = 2) -> Column:
     """Exact integer ``c·10^scale`` (a LONG) of a clean money double —
     see the module-comment precondition."""
-    col = F.col(c) if isinstance(c, str) else c
-    return (col * float(10**scale) + F.lit(0.5)).cast("long")
+    return (c * float(10**scale) + F.lit(0.5)).cast("long")
 
 
-def unscale(c, scale: int):
+def unscale(c: Column, scale: int) -> Column:
     """Exact ``c / 10^scale`` as DOUBLE for an integer-cents sum
     (long or decimal): one exact decimal division + one correctly-
     rounded decimal→double cast, evaluated once per group row."""
-    col = F.col(c) if isinstance(c, str) else c
-    return (col.cast("decimal(38,0)") / F.lit(10**scale)).cast("double")
+    return (c.cast("decimal(38,0)") / F.lit(10**scale)).cast("double")
 
 
 def disc_price_cents():
     """``cents(l_extendedprice·(1−l_discount), 4)`` in long math —
     the integer-cents twin of :func:`disc_price`."""
-    return cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
+    return cents(F.col("l_extendedprice")) * (F.lit(100) - cents(F.col("l_discount")))
 
 
 def sum_cents_2level(df: DataFrame, keys: list[str], sums: dict, counts):
@@ -213,7 +211,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row double→decimal casts at ~0.4 s of the 0.8 s scan stage,
     and the cents form measured value-identical and 2.4× faster."""
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-    qty, price, disc = cents("l_quantity"), cents("l_extendedprice"), cents("l_discount")
+    qty, price, disc = (cents(F.col(c)) for c in ("l_quantity", "l_extendedprice", "l_discount"))
     dp = disc_price_cents()                    # e4-scaled
     # charge = dp·(100 + tax_cents) is summed SPLIT: Σcharge =
     # 100·Σdp + Σ(dp·tax_cents), recombined per GROUP in exact
@@ -221,7 +219,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~1.1e11 for the fused product — the difference between ≥10×
     # worst-case partial headroom and an overflow on a pathological
     # split (module comment table; r17 verdict #1).
-    charge_tax = dp * cents("l_tax")           # e6-scaled, ≤ 8e9/row
+    charge_tax = dp * cents(F.col("l_tax"))    # e6-scaled, ≤ 8e9/row
     g = sum_cents_2level(
         li,
         ["l_returnflag", "l_linestatus"],
@@ -231,13 +229,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return g.select(
         "l_returnflag",
         "l_linestatus",
-        unscale("_q", 2).alias("sum_qty"),
-        unscale("_p", 2).alias("sum_base_price"),
-        unscale("_dp", 4).alias("sum_disc_price"),
+        unscale(F.col("_q"), 2).alias("sum_qty"),
+        unscale(F.col("_p"), 2).alias("sum_base_price"),
+        unscale(F.col("_dp"), 4).alias("sum_disc_price"),
         unscale(F.col("_dp") * F.lit(100) + F.col("_cht"), 6).alias("sum_charge"),
-        (unscale("_q", 2) / F.col("count_order")).alias("avg_qty"),
-        (unscale("_p", 2) / F.col("count_order")).alias("avg_price"),
-        (unscale("_d", 2) / F.col("count_order")).alias("avg_disc"),
+        (unscale(F.col("_q"), 2) / F.col("count_order")).alias("avg_qty"),
+        (unscale(F.col("_p"), 2) / F.col("count_order")).alias("avg_price"),
+        (unscale(F.col("_d"), 2) / F.col("count_order")).alias("avg_disc"),
         "count_order",
     )
 
@@ -277,7 +275,12 @@ def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(disc_price_cents()).alias("_rev"))
-        .select("o_orderkey", unscale("_rev", 4).alias("revenue"), "o_orderdate", "o_orderpriority")
+        .select(
+            "o_orderkey",
+            unscale(F.col("_rev"), 4).alias("revenue"),
+            "o_orderdate",
+            "o_orderpriority",
+        )
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
     )
@@ -314,7 +317,7 @@ def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
     g = sum_cents_2level(joined, ["n_name"], {"_rev": disc_price_cents()}, [])
-    return g.select("n_name", unscale("_rev", 4).alias("revenue"))
+    return g.select("n_name", unscale(F.col("_rev"), 4).alias("revenue"))
 
 
 @register(
@@ -409,7 +412,7 @@ def join_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         {"_rev": disc_price_cents()},
         ["n_items"],
     )
-    return g.select("p_brand", unscale("_rev", 4).alias("revenue"), "n_items")
+    return g.select("p_brand", unscale(F.col("_rev"), 4).alias("revenue"), "n_items")
 
 
 @register(
@@ -485,13 +488,13 @@ def join_outer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = t(spark, sf_dir, "orders")
     per_cust = o.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.sum(cents("o_totalprice")).alias("_spend"),
+        F.sum(cents(F.col("o_totalprice"))).alias("_spend"),
     )
     return c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left").select(
         "c_custkey",
         "c_name",
         F.coalesce(F.col("_n"), F.lit(0)).alias("n_orders"),
-        F.coalesce(unscale("_spend", 2), F.lit(0.0)).alias("total_spend"),
+        F.coalesce(unscale(F.col("_spend"), 2), F.lit(0.0)).alias("total_spend"),
     )
 
 

@@ -246,9 +246,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate (an eager .count() here would run a job at plan-build
     # time — builders must stay lazy plans)
     nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
-    terms = docs.select(
-        "doc_id", F.explode(T.tokens(F.col("text"))).alias("word")
-    )
+    terms = docs.selectExpr("doc_id", f"explode({T.tokens('text')}) AS word")
     tf = terms.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     df_ = terms.distinct().groupBy("word").agg(F.count(F.lit(1)).alias("df"))
     idf = (F.lit(1.0) + F.col("_nd")) / (F.lit(1.0) + F.col("df"))

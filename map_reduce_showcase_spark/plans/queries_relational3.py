@@ -240,7 +240,7 @@ def array_functions_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-function surface over the token column: sort, distinct,
     slice, join, contains — higher-order-function territory where
     the reference had raw bytes."""
-    toks = T.tokens(F.col("text"))
+    toks = F.expr(T.tokens("text"))
     return t(spark, sf_dir, "documents").select(
         "doc_id",
         F.array_join(F.slice(F.array_sort(F.array_distinct(toks)), 1, 3), "-").alias("first3"),

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..similarity.brute_force import topk_cosine
+from ..similarity.brute_force import QC_COSINE, keep_topk, topk_cosine
 from ..similarity.lsh import N_PLANES, hyperplane_signs, topk_cosine_lsh
 from .registry import register, t
 
@@ -44,7 +44,7 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with/aggregate fold, no Python), per-query rank window."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    return topk_cosine(queries, emb, k=TOP_K).withColumn("rnk", F.col("rnk").cast("int"))
+    return topk_cosine(queries, emb, k=TOP_K)
 
 
 def _planes_sql() -> list[str]:
@@ -103,9 +103,7 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the identical bucketing from inlined ±1 literals."""
     emb = t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
-    return topk_cosine_lsh(queries, emb, k=TOP_K).withColumn(
-        "rnk", F.col("rnk").cast("int")
-    )
+    return topk_cosine_lsh(queries, emb, k=TOP_K)
 
 
 _CENTROID_SQL = """
@@ -235,40 +233,22 @@ def sim_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap the scoring stage for the LSH/IVF bucketed variant when the
     query batch itself is huge. The label filter rides the probe
     (scan-time), so mining cost equals plain ANN cost."""
-    from ..functions.vectors import cosine_from_norms, l2_norm
+    from ..functions.vectors import l2_norm
 
     emb = t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_norm"),
-        F.col("label").alias("qlabel"),
+    norm = l2_norm("embedding")
+    q = emb.filter(F.col("vec_id") < N_QUERIES).selectExpr(
+        "vec_id AS query_id", "embedding AS q_emb", f"{norm} AS q_norm", "label AS qlabel"
     )
-    c = emb.select(
-        F.col("vec_id").alias("neg_id"),
-        F.col("embedding").alias("c_emb"),
-        l2_norm("embedding").alias("c_norm"),
-        F.col("label").alias("neg_label"),
+    c = emb.selectExpr(
+        "vec_id AS neg_id", "embedding AS c_emb", f"{norm} AS c_norm", "label AS neg_label"
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neg_id"))
-    return (
+    scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neg_label") != F.col("qlabel"))
-        .select(
-            "query_id",
-            "neg_id",
-            "neg_label",
-            cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm").alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id", "neg_id", "neg_label", "rnk",
-            F.round(F.col("cos"), 6).alias("cosine"),
-        )
+        .selectExpr("query_id", "neg_id", "neg_label", f"{QC_COSINE} AS cos")
     )
+    return keep_topk(scored, TOP_K, "neg_id", ("neg_label",))
 
 
 @register(
@@ -326,11 +306,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = t(spark, sf_dir, "embeddings")
     cells = ivf_assign(emb, centroid_vectors(emb))
-    v = emb.join(cells, "vec_id").select(
-        "vec_id",
-        F.col("embedding").alias("_emb"),
-        l2_norm("embedding").alias("_norm"),
-        "cell",
+    v = emb.join(cells, "vec_id").selectExpr(
+        "vec_id", "embedding AS _emb", f"{l2_norm('embedding')} AS _norm", "cell"
     )
     x = v.select(
         F.col("vec_id").alias("_xid"),
@@ -347,10 +324,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         x.join(y, "cell")
         .filter(F.col("_xid") < F.col("drop_id"))
-        .filter(
-            cosine_from_norms("_xe", "_ye", "_xn", "_yn")
-            >= 0.45
-        )
+        .filter(f"{cosine_from_norms('_xe', '_ye', '_xn', '_yn')} >= 0.45D")
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_dup_pairs"),
@@ -526,21 +500,12 @@ def sim_user_affinity_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nq = norms.select(F.col("user_id").alias("query_id"), F.col("n2").alias("n2q"))
     nc = norms.select(F.col("user_id").alias("cand_id"), F.col("n2").alias("n2c"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
-        dots.join(F.broadcast(nq), "query_id")
-        .join(nc, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            (
-                F.col("dot").cast("double")
-                / F.sqrt((F.col("n2q") * F.col("n2c")).cast("double"))
-            ).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= 5)
-        .select("query_id", "cand_id", "rnk", F.round(F.col("cos"), 6).alias("cosine"))
+    scored = dots.join(F.broadcast(nq), "query_id").join(nc, "cand_id").select(
+        "query_id",
+        "cand_id",
+        (
+            F.col("dot").cast("double")
+            / F.sqrt((F.col("n2q") * F.col("n2c")).cast("double"))
+        ).alias("cos"),
     )
+    return keep_topk(scored, 5)

@@ -66,12 +66,12 @@ def _lang_case_sql() -> str:
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts (whitespace/punct tokenizer) —
     the unit-economics column every corpus pipeline needs."""
-    toks = T.tokens(F.col("text"))
-    return t(spark, sf_dir, "documents").select(
+    toks = T.tokens("text")
+    return t(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        F.size(toks).cast("int").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("int").alias("n_distinct_tokens"),
-        F.col("n_chars").cast("long").alias("n_chars"),
+        f"CAST(size({toks}) AS INT) AS n_tokens",
+        f"CAST(size(array_distinct({toks})) AS INT) AS n_distinct_tokens",
+        "CAST(n_chars AS BIGINT) AS n_chars",
     )
 
 
@@ -99,12 +99,11 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r17 profile: the whole query was one 0.34 s task)."""
     from ..functions.util import rebalance
 
-    T.require_sql_text_conf(spark)
-    return rebalance(t(spark, sf_dir, "documents")).select(
+    return rebalance(t(spark, sf_dir, "documents")).selectExpr(
         "doc_id",
-        F.round(T.punct_ratio("text"), 6).alias("punct_ratio"),
-        F.round(T.stopword_ratio("text"), 6).alias("stopword_ratio"),
-        T.quality_score("text").alias("quality"),
+        f"round({T.punct_ratio('text')}, 6) AS punct_ratio",
+        f"round({T.stopword_ratio('text')}, 6) AS stopword_ratio",
+        f"{T.quality_score('text')} AS quality",
     )
 
 
@@ -133,7 +132,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the heuristic's behavior — not its accuracy — is under test."""
     docs = t(spark, sf_dir, "documents")
     return (
-        docs.select(F.col("lang").alias("labeled_lang"), T.language_id(F.col("text")).alias("pred_lang"))
+        docs.selectExpr("lang AS labeled_lang", f"{T.language_id('text')} AS pred_lang")
         .groupBy("labeled_lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -144,7 +143,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id,
            md5(array_to_string({_TOKENS_SQL}, ' ')) AS fingerprint,
-           {T.portable_hash60_sql("array_to_string(" + _TOKENS_SQL + ", ' ')")} AS fingerprint60
+           {T.portable_hash60_duckdb("array_to_string(" + _TOKENS_SQL + ", ' ')")} AS fingerprint60
     FROM documents
     """,
     tags=("text", "fingerprint"),
@@ -153,11 +152,11 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalization-robust document fingerprints: md5 over the
     token-normalized text plus the portable 60-bit variant used by
     the sketch operators. The exact-dedup join key at any scale."""
-    normalized = F.concat_ws(" ", T.tokens(F.col("text")))
-    return t(spark, sf_dir, "documents").select(
+    normalized = f"concat_ws(' ', {T.tokens('text')})"
+    return t(spark, sf_dir, "documents").selectExpr(
         "doc_id",
-        F.md5(normalized).alias("fingerprint"),
-        T.portable_hash60(normalized).alias("fingerprint60"),
+        f"{T.fingerprint('text')} AS fingerprint",
+        f"{T.portable_hash60(normalized)} AS fingerprint60",
     )
 
 
@@ -184,7 +183,7 @@ def text_word_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builder a lazy plan (no job at build time)
     nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
     return (
-        docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("word"))
+        docs.selectExpr("doc_id", f"explode({T.tokens('text')}) AS word")
         .distinct()
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -249,11 +248,11 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the adversarial high-vocabulary docs that made the naive
     distinct × filter scan quadratic). Thresholds: distinct_ratio ≥
     0.2, top_token_frac ≤ 0.2, dup_bigram_frac ≤ 0.75."""
-    toks = T.tokens(F.col("text"))
+    toks = F.expr(T.tokens("text"))
     n = F.size(toks)
     safe_n = F.greatest(n, F.lit(1)).cast("double")
     ndist = F.size(F.array_distinct(toks))
-    topcnt = T.top_token_count(toks)
+    topcnt = F.expr(T.top_token_count(T.tokens("text")))
     bigrams = F.zip_with(
         F.slice(toks, 1, n - 1),
         F.slice(toks, 2, n - 1),
@@ -491,8 +490,7 @@ def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-row frames, never a driver collect."""
     from ..functions import text as T
 
-    toks = T.tokens(F.col("text"))
-    docs = t(spark, sf_dir, "documents").select(toks.alias("toks"))
+    docs = t(spark, sf_dir, "documents").selectExpr(f"{T.tokens('text')} AS toks")
     uc = (
         docs.select(F.explode("toks").alias("w"))
         .groupBy("w")
@@ -641,7 +639,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, per-doc agg); the occurrence stream is never sorted."""
     occ = (
         t(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(T.tokens(F.col("text"))).alias("word"))
+        .selectExpr("doc_id", f"explode({T.tokens('text')}) AS word")
     )
     vocab = occ.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     tot = vocab.agg(F.sum("c").cast("bigint").alias("n"))
@@ -784,7 +782,7 @@ def text_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive-class counts — are order-independent and
     hash-stable."""
     docs = t(spark, sf_dir, "documents")
-    tok = F.explode(T.tokens(F.col("text"))).alias("tok")
+    tok = F.expr(f"explode({T.tokens('text')})").alias("tok")
     bucket = (
         F.conv(F.substring(F.md5(F.concat(F.lit("b#"), F.col("tok"))), 1, 8), 16, 10)
         .cast("bigint")
@@ -859,7 +857,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the vocab phase reuses the existing word-count output
     (`wc_word_count`) instead of re-counting."""
     docs = t(spark, sf_dir, "documents")
-    toks = docs.select("lang", F.explode(T.tokens(F.col("text"))).alias("tok"))
+    toks = docs.selectExpr("lang", f"explode({T.tokens('text')}) AS tok")
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     # top-500 via orderBy+limit = TakeOrderedAndProject (distributed
     # top-k, bounded per-partition heaps) — NEVER a single-partition
@@ -926,7 +924,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge iterations would re-run only the vocab-sized half."""
     docs = t(spark, sf_dir, "documents")
     vocab = (
-        docs.select(F.explode(T.tokens(F.col("text"))).alias("w"))
+        docs.selectExpr(f"explode({T.tokens('text')}) AS w")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .filter(F.length("w") >= 2)
@@ -998,7 +996,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a TakeOrderedAndProject. Query-term count scales the column
     width, not the shuffle volume."""
     docs = t(spark, sf_dir, "documents")
-    toks = T.tokens(F.col("text"))
+    toks = F.expr(T.tokens("text"))
     # factory, not a default-arg lambda: a two-parameter lambda would
     # make F.filter pass (element, index) and bind the index to term
     def _tf(term: str):
@@ -1111,7 +1109,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 plans. Per-doc sums accumulate in DECIMAL over rounded
     per-bucket ratios: order-independent, hash-stable."""
     docs = t(spark, sf_dir, "documents")
-    toks = T.tokens(F.col("text"))
+    toks = F.expr(T.tokens("text"))
 
     def bucket(col):
         return (

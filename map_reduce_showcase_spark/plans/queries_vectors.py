@@ -230,7 +230,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     scored = (
-        docs.select("doc_id", "lang", T.quality_score(F.col("text")).alias("q"))
+        docs.selectExpr("doc_id", "lang", f"{T.quality_score('text')} AS q")
         .join(F.broadcast(comp), "doc_id", "left")
     )
     w = Window.partitionBy("component").orderBy(F.col("q").desc(), F.col("doc_id"))

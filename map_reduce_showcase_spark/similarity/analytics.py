@@ -52,24 +52,16 @@ def kmeans_assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     order because max scans every element."""
     from ..functions.vectors import dot, l2_norm
 
-    cent_row = centroids.select(
-        F.struct(
-            F.col("cid"), F.col("cv"), l2_norm("cv").alias("cn")
-        ).alias("c")
+    cent_row = centroids.selectExpr(
+        f"named_struct('cid', cid, 'cv', cv, 'cn', {l2_norm('cv')}) AS c"
     ).agg(F.collect_list("c").alias("cs"))
-    vn = l2_norm("v")
-    best = F.array_max(
-        F.transform(
-            "cs",
-            lambda c: F.struct(
-                (dot(F.col("v"), c["cv"]) / (vn * c["cn"])).alias("cos"),
-                (-c["cid"]).alias("ncid"),
-            ),
-        )
+    best = (
+        f"array_max(transform(cs, c -> named_struct("
+        f"'cos', {dot('v', 'c.cv')} / ({l2_norm('v')} * c.cn), 'ncid', -c.cid)))"
     )
     return (
         vectors.crossJoin(F.broadcast(cent_row))
-        .withColumn("b", best)
+        .withColumn("b", F.expr(best))
         .select(
             "vec_id",
             "v",

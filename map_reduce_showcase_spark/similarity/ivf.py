@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine_from_norms, l2_norm
 from .analytics import label_centroids
+from .brute_force import QC_COSINE, keep_topk
 
 
 def centroid_vectors(vectors: DataFrame) -> DataFrame:
@@ -57,15 +58,11 @@ def ivf_assign(
     # (broadcast side) instead of once per (vector × centroid) pair
     scored = (
         rebalance(vectors)
-        .select(
-            "vec_id",
-            F.col("embedding").alias("_emb"),
-            l2_norm("embedding").alias("_norm"),
-        )
-        .crossJoin(F.broadcast(centroids.withColumn("_cnorm", l2_norm("centvec"))))
+        .selectExpr("vec_id", "embedding AS _emb", f"{l2_norm('embedding')} AS _norm")
+        .crossJoin(F.broadcast(centroids.withColumn("_cnorm", F.expr(l2_norm("centvec")))))
     )
     w = Window.partitionBy("vec_id").orderBy(
-        cosine_from_norms("_emb", "centvec", "_norm", "_cnorm").desc(),
+        F.expr(cosine_from_norms("_emb", "centvec", "_norm", "_cnorm")).desc(),
         F.col("label"),
     )
     return (
@@ -89,33 +86,15 @@ def topk_cosine_ivf(
     cells = ivf_assign(vectors, centroids)
     v = vectors.join(cells, "vec_id")
     q_src = vectors.filter(F.col("vec_id") < n_queries)
-    q = q_src.join(ivf_assign(q_src, centroids, nprobe), "vec_id").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_norm"),
-        "cell",
+    q = q_src.join(ivf_assign(q_src, centroids, nprobe), "vec_id").selectExpr(
+        "vec_id AS query_id", "embedding AS q_emb", f"{l2_norm('embedding')} AS q_norm", "cell"
     )
-    c = v.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        l2_norm("embedding").alias("c_norm"),
-        "cell",
+    c = v.selectExpr(
+        "vec_id AS cand_id", "embedding AS c_emb", f"{l2_norm('embedding')} AS c_norm", "cell"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
+    scored = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm").alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "cand_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            F.round(F.col("cos"), 6).alias("cosine"),
-        )
+        .selectExpr("query_id", "cand_id", f"{QC_COSINE} AS cos")
     )
+    return keep_topk(scored, k)

@@ -25,9 +25,9 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.vectors import cosine_from_norms, dot_sql, l2_norm
+from ..functions.vectors import cosine_from_norms, dot, l2_norm
+from .brute_force import QC_COSINE, keep_topk
 
 DIM = 64
 #: 4 planes → 16 cells. For weakly-correlated vectors P(two vectors
@@ -67,7 +67,7 @@ def lsh_bucket(emb_sql: str, planes: list[list[float]]) -> Column:
     per plan build (r18; ~40% of sim_topk_lsh's bench time was
     building plans, not running them)."""
     terms = " + ".join(
-        f"(CASE WHEN {dot_sql(emb_sql, _plane_sql(plane))} >= 0 "
+        f"(CASE WHEN {dot(emb_sql, _plane_sql(plane))} >= 0 "
         f"THEN {1 << p} ELSE 0 END)"
         for p, plane in enumerate(planes)
     )
@@ -87,7 +87,7 @@ def banded_band_keys(
     keys = []
     for b in range(n_bands):
         terms = " + ".join(
-            f"(CASE WHEN {dot_sql(emb_sql, _plane_sql(planes[b * rows_per_band + j]))}"
+            f"(CASE WHEN {dot(emb_sql, _plane_sql(planes[b * rows_per_band + j]))}"
             f" >= 0 THEN {1 << j} ELSE 0 END)"
             for j in range(rows_per_band)
         )
@@ -150,17 +150,9 @@ def cosine_pairs_lsh(
         .select(F.col("a.vec_id").alias("v1"), F.col("b.vec_id").alias("v2"))
     )
     # norms folded once per vector, not once per candidate pair
-    e1 = v.select(
-        F.col("vec_id").alias("v1"),
-        F.col("embedding").alias("e1"),
-        l2_norm("embedding").alias("n1"),
-    )
-    e2 = v.select(
-        F.col("vec_id").alias("v2"),
-        F.col("embedding").alias("e2"),
-        l2_norm("embedding").alias("n2"),
-    )
-    cos = cosine_from_norms("e1", "e2", "n1", "n2")
+    e1 = v.selectExpr("vec_id AS v1", "embedding AS e1", f"{l2_norm('embedding')} AS n1")
+    e2 = v.selectExpr("vec_id AS v2", "embedding AS e2", f"{l2_norm('embedding')} AS n2")
+    cos = F.expr(cosine_from_norms("e1", "e2", "n1", "n2"))
     return (
         cand.join(e1, "v1")
         .join(e2, "v2")
@@ -198,25 +190,18 @@ def topk_cosine_lsh(
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        l2_norm("embedding").alias("q_norm"),
+        F.expr(l2_norm("embedding")).alias("q_norm"),
         bucket.alias("b0"),
     ).selectExpr("query_id", "q_emb", "q_norm", f"explode(array({probes})) AS bucket")
     c = rebalance(candidates).select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("c_emb"),
-        l2_norm("embedding").alias("c_norm"),
+        F.expr(l2_norm("embedding")).alias("c_norm"),
         bucket.alias("bucket"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cand_id"))
-    return (
+    scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            cosine_from_norms("q_emb", "c_emb", "q_norm", "c_norm").alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "cand_id", "rnk", F.round(F.col("cos"), 6).alias("cosine"))
+        .selectExpr("query_id", "cand_id", f"{QC_COSINE} AS cos")
     )
+    return keep_topk(scored, k)

@@ -20,6 +20,13 @@ parallel); packets stream through an Arrow-friendly generator, no
 whole-directory materialization. The byte-level codec lives in
 :func:`read_kv_pairs` / :func:`write_kv_pairs` so tests can
 round-trip the exact on-disk format without Spark.
+
+Local paths only, on both sides: the codec reads and writes with
+Python's ``open``, so a path is a local filesystem path or a
+``file:`` URI (the scheme is stripped). Any other scheme
+(``hdfs://``, ``s3a://``, ``viewfs://``…) raises ``ValueError``
+naming it, instead of writing a local directory called ``viewfs:``
+or reading zero rows.
 """
 
 from __future__ import annotations
@@ -28,6 +35,7 @@ import glob
 import os
 import struct
 from collections.abc import Iterator
+from urllib.parse import urlsplit
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import (
@@ -44,6 +52,20 @@ SCHEMA = StructType(
         StructField("value", BinaryType()),
     ]
 )
+
+
+def _local_path(path: str) -> str:
+    """``path`` as a local filesystem path: a ``file:`` URI loses its
+    scheme, a plain path is returned as is, and any other scheme
+    raises ``ValueError`` naming it."""
+    parts = urlsplit(path)
+    if not parts.scheme:
+        return path
+    if parts.scheme == "file" and parts.netloc in ("", "localhost"):
+        return parts.path
+    raise ValueError(
+        f"lengthdelim reads and writes local paths only, not {parts.scheme!r}: {path}"
+    )
 
 
 def write_kv_pairs(path: str, pairs: list[tuple[bytes, bytes]]) -> None:
@@ -80,9 +102,9 @@ class _FilePartition(InputPartition):
 
 class _Reader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
+        if not options.get("path"):
             raise ValueError("lengthdelim source requires a path")
+        self.path = _local_path(options["path"])
 
     def partitions(self):
         p = self.path
@@ -125,13 +147,13 @@ def write_n_files_reference_format(
     Rows hash-partition on the key (the reference's
     ``ihash(key) % n_reduce`` role — exact FNV layout is a non-goal,
     SURVEY §1.4) and each partition writes its own file from its own
-    task via the shared codec. Local-fs paths here; at cluster scale
-    point ``out_dir`` at shared storage. Returns the file count."""
-    import os as _os
-
+    task via the shared codec. ``out_dir`` is a local path or a
+    ``file:`` URI (see the module docstring); at cluster scale it
+    must be storage every executor mounts. Returns the file count."""
     from pyspark.sql import functions as F
 
-    _os.makedirs(out_dir, exist_ok=True)
+    out_dir = _local_path(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
     part = df.select(
         F.col(key_col).alias("key"), F.col(value_col).alias("value")
     ).repartition(n_reduce, F.col("key"))

@@ -46,7 +46,7 @@ def test_cents_matches_decimal_cast(spark, sf_dir, table, col, scale):
     dec_units = (
         F.col(col).cast(f"decimal(18,{scale})") * F.lit(10**scale)
     ).cast("long")
-    bad = df.filter(cents(col, scale) != dec_units).count()
+    bad = df.filter(cents(F.col(col), scale) != dec_units).count()
     assert bad == 0, f"{table}.{col}: {bad} rows where cents != decimal cast"
 
 
@@ -102,7 +102,7 @@ def test_unscale_is_exact_division(spark, sf_dir):
     long would already be wrong."""
     big = (1 << 60) + 12345  # not representable as a double
     df = spark.createDataFrame([(big,)], "s long")
-    got = df.select(unscale("s", 2).alias("d")).collect()[0]["d"]
+    got = df.select(unscale(F.col("s"), 2).alias("d")).collect()[0]["d"]
     want = df.select(
         (F.col("s").cast("decimal(38,2)") / F.lit(100))
         .cast("double")
@@ -149,5 +149,5 @@ def test_salt_fanout_overflow_headroom():
         sum_cents_2level,
     )
 
-    assert 'dp * cents("l_tax")' in inspect.getsource(q1_pricing_summary)
+    assert 'dp * cents(F.col("l_tax"))' in inspect.getsource(q1_pricing_summary)
     assert "spark_partition_id" in inspect.getsource(sum_cents_2level)

@@ -110,8 +110,7 @@ def test_minhash_pairs_subset_of_exact(spark, docs):
 
 def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
     """Cross-ENGINE foundation check: `portable_hash60` and the
-    tokenizer (Column and SQL-text forms alike) produce IDENTICAL
-    results in Spark and DuckDB on an
+    tokenizer produce IDENTICAL results in Spark and DuckDB on an
     adversarial string corpus — these two expressions underpin
     every split/sample/shuffle/dedup oracle pair, so dialect drift
     here (md5 of multi-byte text, regex class semantics, quote
@@ -119,11 +118,9 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
     one Spark job + one DuckDB query over the whole corpus."""
     import duckdb  # noqa: F401 — oracle fixture provides the conn
 
-    from pyspark.sql import functions as F
-
     from map_reduce_showcase_spark.functions.text import (
         portable_hash60,
-        portable_hash60_sql,
+        portable_hash60_duckdb,
         tokens,
     )
 
@@ -147,15 +144,7 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
         "NULL",
     ]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(corpus)], ["i", "s"])
-    rows = df.select(
-        "i",
-        portable_hash60(F.col("s")).alias("h"),
-        tokens(F.col("s")).alias("t"),
-        portable_hash60("s").alias("h_sql"),
-        tokens("s").alias("t_sql"),
-    ).collect()
-    # the Column and SQL-text forms of each expression agree
-    assert all((r["h"], r["t"]) == (r["h_sql"], r["t_sql"]) for r in rows)
+    rows = df.selectExpr("i", f"{portable_hash60('s')} AS h", f"{tokens('s')} AS t").collect()
     got = {r["i"]: (r["h"], r["t"]) for r in rows}
     oracle.execute("CREATE OR REPLACE TEMP TABLE corpus(i INT, s VARCHAR)")
     oracle.executemany("INSERT INTO corpus VALUES (?, ?)", list(enumerate(corpus)))
@@ -166,7 +155,7 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
     want = {
         i: (h, t)
         for i, h, t in oracle.execute(
-            f"SELECT i, {portable_hash60_sql('s')} AS h, {toks_sql} AS t FROM corpus"
+            f"SELECT i, {portable_hash60_duckdb('s')} AS h, {toks_sql} AS t FROM corpus"
         ).fetchall()
     }
     assert got == want
@@ -203,12 +192,10 @@ def test_top_token_count_matches_counter(spark, toks):
     """functions.text.top_token_count (sorted-run-max fold) equals
     the most-common multiplicity from collections.Counter; NULL on an
     empty array (array_max's convention, which the fold replaced)."""
-    from pyspark.sql import functions as F
-
     from map_reduce_showcase_spark.functions.text import top_token_count
 
     df = spark.createDataFrame([(toks,)], "toks: array<string>")
-    got = df.select(top_token_count(F.col("toks")).alias("c")).first()["c"]
+    got = df.selectExpr(f"{top_token_count('toks')} AS c").first()["c"]
     want = max(collections.Counter(toks).values()) if toks else None
     assert got == want
 

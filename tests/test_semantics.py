@@ -77,7 +77,7 @@ def test_native_minhash_agrees_with_spark_ml_lsh(spark, sf_dir):
 
     D = 1 << 18
     sh = (
-        docs.select("doc_id", F.explode(word_shingles("text")).alias("s"))
+        docs.selectExpr("doc_id", f"explode({word_shingles('text')}) AS s")
         .select("doc_id", (F.abs(F.hash("s")) % D).alias("idx"))
         .distinct()
     )

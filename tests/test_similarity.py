@@ -101,7 +101,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
     v = emb.select(
         "vec_id",
         F.col("embedding").alias("e"),
-        l2_norm(F.col("embedding")).alias("nrm"),
+        F.expr(l2_norm("embedding")).alias("nrm"),
     )
     a = v.select(
         F.col("vec_id").alias("a"), F.col("e").alias("ea"), F.col("nrm").alias("na")
@@ -113,10 +113,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
         (r["a"], r["b"])
         for r in a.crossJoin(b)
         .filter(F.col("a") < F.col("b"))
-        .filter(
-            cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            >= 0.45
-        )
+        .filter(f"{cosine_from_norms('ea', 'eb', 'na', 'nb')} >= 0.45D")
         .collect()
     }
     cells = ivf_assign(emb, centroid_vectors(emb))
@@ -130,10 +127,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
         (r["a"], r["b"])
         for r in va.join(vb, "cell")
         .filter(F.col("a") < F.col("b"))
-        .filter(
-            cosine_from_norms(F.col("ea"), F.col("eb"), F.col("na"), F.col("nb"))
-            >= 0.45
-        )
+        .filter(f"{cosine_from_norms('ea', 'eb', 'na', 'nb')} >= 0.45D")
         .collect()
     }
     assert within <= exact, "cell factoring must never invent a pair"
@@ -143,11 +137,10 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
 
 
 def test_vector_expr_text_path(spark, sf_dir):
-    """The SQL-text fast path of the vector helpers (one parsed
-    F.expr instead of a py4j-built lambda tree — r18 driver-cost
-    fix) must be bit-equal to the Column-API lambda path, row for
-    row."""
-    from pyspark.sql import functions as F
+    """dot, l2_norm and cosine_from_norms are sequential left folds in
+    double precision, so each is bit-equal, row for row, to the same
+    fold in Python (``math.sqrt`` for the norm)."""
+    import math
 
     from map_reduce_showcase_spark.functions.vectors import (
         cosine_from_norms,
@@ -156,38 +149,45 @@ def test_vector_expr_text_path(spark, sf_dir):
     )
     from map_reduce_showcase_spark.sources.tables import load_table
 
-    emb = load_table(spark, sf_dir, "embeddings").limit(64)
-    both = emb.select(
-        l2_norm("embedding").alias("n_text"),
-        l2_norm(F.col("embedding")).alias("n_col"),
-        dot("embedding", "embedding").alias("d_text"),
-        dot(F.col("embedding"), F.col("embedding")).alias("d_col"),
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    emb = load_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(64)
+    rows = (
+        emb.selectExpr("embedding AS a", "reverse(embedding) AS b")
+        .selectExpr(
+            "a",
+            "b",
+            f"{l2_norm('a')} AS na",
+            f"{l2_norm('b')} AS nb",
+            f"{dot('a', 'b')} AS d",
+        )
+        .selectExpr("*", f"{cosine_from_norms('a', 'b', 'na', 'nb')} AS c")
+        .collect()
     )
-    for r in both.collect():
-        assert repr(r["n_text"]) == repr(r["n_col"])
-        assert repr(r["d_text"]) == repr(r["d_col"])
-    paired = emb.select(
-        F.col("embedding").alias("e1"),
-        F.col("embedding").alias("e2"),
-        l2_norm("embedding").alias("n1"),
-        l2_norm("embedding").alias("n2"),
-    ).select(
-        cosine_from_norms("e1", "e2", "n1", "n2").alias("c_text"),
-        cosine_from_norms(
-            F.col("e1"), F.col("e2"), F.col("n1"), F.col("n2")
-        ).alias("c_col"),
-    )
-    for r in paired.collect():
-        assert repr(r["c_text"]) == repr(r["c_col"])
+    assert len(rows) == 64
+    for r in rows:
+        na, nb = math.sqrt(fold(r["a"], r["a"])), math.sqrt(fold(r["b"], r["b"]))
+        assert repr(r["na"]) == repr(na)
+        assert repr(r["nb"]) == repr(nb)
+        assert repr(r["d"]) == repr(fold(r["a"], r["b"]))
+        assert repr(r["c"]) == repr(fold(r["a"], r["b"]) / (na * nb))
 
 
 def test_tokens_expr_text_path(spark, sf_dir):
-    """Same pin for the tokenizer/quality-signal text path: the SQL
-    parser unescapes string literals, so the regex doubling in
-    tokens_sql must reproduce the Column path exactly."""
-    from pyspark.sql import functions as F
+    """Same pin for the tokenizer/quality-signal text: tokens,
+    punct_ratio, stopword_ratio and quality_score of 64 documents
+    equal, row for row and bit for bit, a Python model of the same
+    formulas (the regex reaches the engine as ``[^\\p{L}\\p{N}]+``,
+    not with its backslashes dropped or doubled)."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
 
     from map_reduce_showcase_spark.functions.text import (
+        STOPWORDS,
         punct_ratio,
         quality_score,
         stopword_ratio,
@@ -195,19 +195,29 @@ def test_tokens_expr_text_path(spark, sf_dir):
     )
     from map_reduce_showcase_spark.sources.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents").limit(64)
-    both = docs.select(
-        tokens("text").alias("t_text"),
-        tokens(F.col("text")).alias("t_col"),
-        punct_ratio("text").alias("p_text"),
-        punct_ratio(F.col("text")).alias("p_col"),
-        stopword_ratio("text").alias("s_text"),
-        stopword_ratio(F.col("text")).alias("s_col"),
-        quality_score("text").alias("q_text"),
-        quality_score(F.col("text")).alias("q_col"),
-    )
-    for r in both.collect():
-        assert r["t_text"] == r["t_col"]
-        assert repr(r["p_text"]) == repr(r["p_col"])
-        assert repr(r["s_text"]) == repr(r["s_col"])
-        assert repr(r["q_text"]) == repr(r["q_col"])
+    token = re.compile(r"[^\W_]+")
+
+    def punct(text):
+        # Java's \s without UNICODE_CHARACTER_CLASS is these six
+        kept = [c for c in text if not (c.isalnum() or c in " \t\n\x0b\f\r")]
+        return float(len(kept)) / float(max(len(text), 1))
+
+    docs = load_table(spark, sf_dir, "documents").orderBy("doc_id").limit(64)
+    rows = docs.selectExpr(
+        "text",
+        f"{tokens('text')} AS t",
+        f"{punct_ratio('text')} AS p",
+        f"{stopword_ratio('text')} AS s",
+        f"{quality_score('text')} AS q",
+    ).collect()
+    assert len(rows) == 64
+    for r in rows:
+        toks = token.findall(r["text"].lower())
+        sw = float(sum(t in STOPWORDS for t in toks)) / float(max(len(toks), 1))
+        p = punct(r["text"])
+        raw = max(min(0.5 * min(len(toks) / 64.0, 1.0) + 0.5 * sw - p, 1.0), 0.0)
+        q = float(Decimal(repr(raw)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+        assert r["t"] == toks
+        assert repr(r["p"]) == repr(p)
+        assert repr(r["s"]) == repr(sw)
+        assert repr(r["q"]) == repr(q)

@@ -476,6 +476,34 @@ def test_reference_format_write_read_round_trip(spark, tmp_path):
     assert len(v) == 8 and struct.unpack(">Q", v)[0] == expected[k.decode()]
 
 
+def test_lengthdelim_is_local_only(spark, tmp_path, monkeypatch):
+    """Both sides of the lengthdelim interop take local paths only: a
+    ``file:`` URI works like its path, and any other scheme raises a
+    ValueError naming it, where the writer used to create a local
+    directory called ``viewfs:`` and the reader to return zero rows."""
+    import os
+
+    from map_reduce_showcase_spark.sources.lengthdelim import (
+        LengthDelimitedDataSource,
+        write_n_files_reference_format,
+    )
+
+    spark.dataSource.register(LengthDelimitedDataSource)
+    monkeypatch.chdir(tmp_path)
+    kv = spark.createDataFrame([(b"k", b"v")], "key binary, value binary")
+    with pytest.raises(ValueError, match="'viewfs'"):
+        write_n_files_reference_format(kv, "viewfs:///data/x", 4)
+    assert not os.path.exists("viewfs:")
+    with pytest.raises(Exception, match="'viewfs'"):
+        spark.read.format("lengthdelim").load("viewfs:///data/x").collect()
+
+    out = tmp_path / "out"
+    assert write_n_files_reference_format(kv, f"file://{out}", 2) == 2
+    assert sorted(os.listdir(out)) == ["mr-out-0", "mr-out-1"]
+    back = spark.read.format("lengthdelim").load(f"file://{out}").collect()
+    assert [(bytes(r["key"]), bytes(r["value"])) for r in back] == [(b"k", b"v")]
+
+
 def test_compact_preserves_hive_partitioning(spark, sf_dir, tmp_path):
     """Compacting a hive-partitioned directory must keep the layout
     (partition dirs survive, values pruneable) while reducing file

@@ -1,6 +1,7 @@
 """Per-document sketches (MinHash, SimHash, sign-LSH buckets): edge cases
-on a small in-memory corpus, the plans they build, and the parser
-setting their SQL text depends on."""
+on a small in-memory corpus, the plans they build, and the SQL text they
+are built from, which must parse the same under either setting of
+``spark.sql.parser.escapedStringLiterals``."""
 
 from __future__ import annotations
 
@@ -16,7 +17,13 @@ from map_reduce_showcase_spark.dedup import (
     simhash_docs,
 )
 from map_reduce_showcase_spark.dedup.simhash import SIMHASH_BITS
-from map_reduce_showcase_spark.functions.text import ESCAPED_LITERALS_CONF
+from map_reduce_showcase_spark.functions.text import (
+    TOKEN_SPLIT,
+    punct_ratio,
+    quality_score,
+    stopword_ratio,
+    tokens,
+)
 from map_reduce_showcase_spark.plans import REGISTRY
 from map_reduce_showcase_spark.plans.registry import _load_all
 from map_reduce_showcase_spark.similarity.lsh import hyperplane_signs, topk_cosine_lsh
@@ -89,7 +96,7 @@ def test_simhash_omits_tokenless_docs_and_matches_python_model(docs):
 
 def test_incremental_minhash_is_the_full_result_touching_the_batch(docs):
     def is_new(c):
-        return c.isin(6, 9, 10)
+        return f"{c} IN (6, 9, 10)"
 
     full = _pairs(minhash_near_dup_pairs(docs, n=2, threshold=0.5))
     inc = _pairs(incremental_minhash_near_dup_pairs(docs, is_new, n=2, threshold=0.5))
@@ -98,20 +105,74 @@ def test_incremental_minhash_is_the_full_result_touching_the_batch(docs):
     assert inc == touching
 
 
-def test_sql_text_operators_reject_escaped_string_literals(spark, docs):
-    """The setting can change at run time: a session whose earlier
-    builds passed the check must fail once it flips, while other
-    sessions keep working."""
+def _frames(session, sf_dir: str) -> dict:
+    corpus = session.createDataFrame(sorted(DOCS.items()), "doc_id long, text string")
+    sample = load_table(session, sf_dir, "documents").orderBy("doc_id").limit(64)
+    frames = {
+        "minhash_near_dup_pairs": minhash_near_dup_pairs(corpus, n=2, threshold=0.5),
+        "simhash_docs": simhash_docs(corpus),
+        "signals": sample.selectExpr(
+            "doc_id",
+            f"{tokens('text')} AS t",
+            f"{punct_ratio('text')} AS p",
+            f"{stopword_ratio('text')} AS s",
+            f"{quality_score('text')} AS q",
+        ),
+    }
+    for name in ("text_quality", "text_token_stats", "dedup_exact_stats"):
+        frames[name] = REGISTRY[name].builder(session, sf_dir)
+    return frames
+
+
+def test_sql_text_operators_reject_escaped_string_literals(spark):
+    """No string literal in the operators' SQL text holds a backslash
+    escape, so the setting can change at run time: a session whose
+    earlier builds ran flips ``escapedStringLiterals`` and its later
+    builds return the same rows, while other sessions keep working."""
+    for text in (tokens("text"), punct_ratio("text"), quality_score("text")):
+        assert "\\" not in text, text
     other = spark.newSession()
     flipped = other.createDataFrame(sorted(DOCS.items()), "doc_id long, text string")
-    minhash_near_dup_pairs(flipped)
-    simhash_docs(flipped)
-    other.conf.set(ESCAPED_LITERALS_CONF, "true")
-    with pytest.raises(ValueError, match=ESCAPED_LITERALS_CONF):
-        minhash_near_dup_pairs(flipped)
-    with pytest.raises(ValueError, match=ESCAPED_LITERALS_CONF):
-        simhash_docs(flipped)
-    assert simhash_docs(docs).count() == len(DOCS) - len(NO_TOKENS)
+    before = [
+        sorted(repr(tuple(r)) for r in f.collect())
+        for f in (minhash_near_dup_pairs(flipped, n=2, threshold=0.5), simhash_docs(flipped))
+    ]
+    other.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    after = [
+        sorted(repr(tuple(r)) for r in f.collect())
+        for f in (minhash_near_dup_pairs(flipped, n=2, threshold=0.5), simhash_docs(flipped))
+    ]
+    assert before[0] and before[1]
+    assert after == before
+    assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+    assert len(before[1]) == len(DOCS) - len(NO_TOKENS)
+
+
+def test_sql_text_parses_the_same_with_escaped_string_literals(spark, sf_dir):
+    """The helpers write each regex backslash as ``chr(92)``, so no
+    string literal holds one: a session that reads string literals
+    raw (``escapedStringLiterals=true``) returns, bit for bit, the rows
+    of a default session, for the sketch operators, the text queries,
+    exact dedup, and the token and quality signals of 64 documents."""
+    escaped = spark.newSession()
+    escaped.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    want = _frames(spark, sf_dir)
+    got = _frames(escaped, sf_dir)
+    for name, frame in want.items():
+        rows = sorted(repr(tuple(r)) for r in frame.collect())
+        assert rows, name
+        assert sorted(repr(tuple(r)) for r in got[name].collect()) == rows, name
+
+
+@pytest.mark.parametrize("name", ["text_quality", "dedup_simhash", "dedup_minhash_lsh"])
+def test_token_regex_folds_to_a_literal(spark, sf_dir, name):
+    """``ConstantFolding`` turns the ``concat(..., chr(92), ...)`` pattern
+    into the one literal regex, so it is compiled once and not rebuilt
+    per row."""
+    optimized, _ = _plans(REGISTRY[name].builder(spark, sf_dir))
+    assert TOKEN_SPLIT in optimized
+    assert "chr(" not in optimized
+    assert "concat('[" not in optimized and "concat([" not in optimized
 
 
 def _plans(df) -> tuple[str, str]:
