@@ -47,13 +47,9 @@ from map_reduce_showcase_spark.plans import REGISTRY
 from map_reduce_showcase_spark.plans.registry import _load_all
 from map_reduce_showcase_spark.session import get_spark
 
-# Shared with tools/ab_compare.py and tools/freshness_check.py via
-# the engine-free constants module (ADVICE r13) — re-exported here so
-# bench.BOX_LOAD_THRESHOLD_1M / bench.HEADLINE readers (tests, docs)
-# keep a single source of truth. HEADLINE/EXTENDED moved there in r16
-# so the freshness tripwire's mandatory-ABBA gate (r15 verdict #2) can
-# know which queries feed the anchor without paying — or inheriting a
-# failure from — the full registry import chain.
+# Re-exported from the engine-free constants module so
+# bench.BOX_LOAD_THRESHOLD_1M / bench.HEADLINE readers (tests) keep a
+# single source of truth.
 from bench_constants import (  # noqa: E402,F401
     ANCHOR_BAND_MIN_OF_3_SEC,
     BOX_LOAD_THRESHOLD_1M,
@@ -317,15 +313,14 @@ def _measure_set(
 
 
 # Steal helpers live in engine-free bench_constants (shared with
-# tools/ab_compare.py, which must not import the registry chain —
-# ADVICE r13); thin aliases keep bench-internal call sites readable.
+# perfbench, which must not import the registry chain); thin aliases
+# keep bench-internal call sites readable.
 # Why the stamp exists: hypervisor-denied cycles are the one form of
 # external load no loadavg/idle-gate stamp can see (measured live in
 # round 15: clean gate, start load 0.2, zero competing guest
 # processes — and the headline read 39.8 s, 3.5x the band, while a
 # 32-core burn probe showed 8.2% of guest capacity stolen). Stamped
-# as a delta across the measured window so tools/bench_trend.py can
-# adjudicate such a run mechanically.
+# as a delta across the measured window.
 from bench_constants import read_cpu_steal as _read_cpu_steal  # noqa: E402
 from bench_constants import steal_record as _steal_record  # noqa: E402
 

@@ -1,22 +1,18 @@
-"""Shared measurement constants — importable WITHOUT the engine.
+"""Measurement constants and host-steal helpers — importable WITHOUT
+the engine.
 
 ``bench.py``'s module top level imports the full plans REGISTRY /
-session chain (it has to — it runs queries), so any tool that imported
-a constant *from bench* paid that whole import cost, and inherited any
-registry import failure, before even parsing its own args (ADVICE r13
-on ``tools/ab_compare.py``). Constants shared across measurement tools
-live here instead; ``bench.py`` re-exports them so existing
-``bench.BOX_LOAD_THRESHOLD_1M`` readers keep working and the
-single-source-of-truth test (``tests/test_ab_compare.py``) still pins
-the two views equal.
+session chain (it has to — it runs queries). This module imports
+nothing from the package, so ``perfbench`` reads the steal helpers
+(:func:`read_cpu_steal`, :func:`steal_record`) without paying for, or
+inheriting a failure from, that import chain. ``bench.py`` re-exports
+the box-load and anchor-band constants so ``bench.BOX_LOAD_THRESHOLD_1M``
+readers keep working.
 """
 
 #: Headline set: reference-app parity + the heavy relational /
 #: window / dedup / similarity representatives. Frozen since round 10
-#: so cross-round anchor totals compare like sets. Lives here (not in
-#: bench.py) since r16 so ``tools/freshness_check.py``'s
-#: mandatory-ABBA gate (r15 verdict #2) can know which queries feed
-#: the anchor without importing the engine.
+#: so cross-round anchor totals compare like sets.
 HEADLINE = [
     "wc_word_count",
     "grep_docs",
@@ -66,47 +62,18 @@ BOX_LOAD_THRESHOLD_1M = 2.0
 #: scale too) OR ``IDLE_SETTLE_MIN_SEC`` elapsed since the wait
 #: trajectory's last above-threshold 1m sample (bounded settle when
 #: the 5m average would take too long to decay). ``bench.py`` stamps
-#: which criterion gated (``gate_criterion``) so
-#: ``tools/bench_trend.py`` can grade an unsettled run
-#: ``load_suspect`` mechanically.
+#: which criterion gated (``gate_criterion``).
 BOX_LOAD_THRESHOLD_5M = 2.0
 IDLE_SETTLE_MIN_SEC = 120.0
-
-#: Host-steal adjudication threshold (round 15): this box is a VM,
-#: and the HOST can deny it cycles ("steal" time, /proc/stat field 8)
-#: in ways no loadavg stamp can see — measured live in round 15:
-#: guest start-load 0.2, gate clean, yet a 32-core burn probe showed
-#: 8.2% of guest CPU capacity stolen and the headline read 39.8 s
-#: (3.5x) on code whose prior run graded in-band. ``bench.py`` stamps
-#: the steal delta across the measured window; an above-band reading
-#: with steal >= this % of capacity is ``load_suspect`` (external).
-#: Unlike the retired end-of-run loadavg check (ADVICE r14), steal
-#: CANNOT be self-caused: a code regression burns guest cycles, it
-#: does not make the host deny them — so thresholding it has no
-#: self-masking failure mode. Idle-host baseline reads ~0.1%;
-#: 2.0% of a 32-cpu capacity over a ~6-min run is ~230 denied
-#: cpu-seconds, far beyond background flutter.
-STEAL_SUSPECT_PCT = 2.0
-
-#: Companion threshold on steal as % of DEMAND (denied /
-#: (granted + denied)): the capacity percentage dilutes denial by the
-#: span's idle phases — a run that bursts 32-wide for a fraction of
-#: its span can lose >5% of the cycles it actually asked for while
-#: capacity-steal reads 1.7% (observed live in r15: a 13.84 s
-#: above-band headline, launch probe 0.01%, 135 cpu-sec denied
-#: mid-run). Demand-steal is self-masking-safe in the conservative
-#: direction: a guest regression grows the denominator and LOWERS
-#: the percentage, so a regression can only become MORE visible.
-STEAL_SUSPECT_DEMAND_PCT = 2.0
 
 #: Host-speed probe SUSPECT threshold (r16 verdict #3): above this,
 #: the fixed-work probe (``bench.cpu_work_probe_sec`` — memset 256
 #: MiB + sha256, min-of-3, engine-free) says the box's effective
 #: speed is degraded in the way NO steal or loadavg stamp can see
 #: (frequency cap / memory-bandwidth denial — the r16 episode's
-#: 17.506 s clean-stamped run). ``tools/bench_trend.py`` grades an
-#: above-band reading whose bracketing probe maximum crosses this
-#: threshold ``host_slow_suspect`` (box state, like load_suspect).
+#: 17.506 s clean-stamped run). An above-band reading whose
+#: bracketing probe maximum crosses this threshold is
+#: ``host_slow_suspect`` (box state, like load_suspect).
 #: Self-masking-safe: an engine regression cannot slow a probe that
 #: never touches the engine. CALIBRATION (every point committed):
 #:   clean, quiet-hunt builder sessions (r16, in-band/recovery runs
@@ -145,8 +112,7 @@ STEAL_SUSPECT_DEMAND_PCT = 2.0
 CPU_WORK_PROBE_SLOW_SEC = 0.40
 
 #: Min-of-3 idle-box fresh-JVM headline-total ANCHOR band (the value
-#: ``bench.py`` stamps as ``min_of_3_fresh_jvm_spread_sec`` and
-#: ``tools/bench_trend.py`` adjudicates against). ELEVEN idle runs on
+#: ``bench.py`` stamps as ``min_of_3_fresh_jvm_spread_sec``). ELEVEN idle runs on
 #: headline-identical code: 11.90/12.19 s (round-10, back to back),
 #: 11.889 s (r11), 11.862 s (r12), 11.17/10.529 s (r13 pair, after
 #: that round's testdata regeneration — a faster data regime), and
@@ -188,19 +154,14 @@ CPU_WORK_PROBE_SLOW_SEC = 0.40
 #: headline-window steal): 13.062 s (headline steal 0.28%/1.95%) and
 #: 13.975 s (0.28%/1.95%). With r15's 12.898 that is three clean
 #: points above the 12.53 stable edge; the edge moves to cover the
-#: maximum. The regression-detection duty this widening would
-#: otherwise erode moved in the same round to the mandatory
-#: interleaved-ABBA gate for headline-touching diffs
-#: (tools/freshness_check.py::ab_gate_findings).
+#: maximum.
 #: --- r17 RE-ANCHOR (code era, not an edge move) ------------------
 #: Everything in the long provenance block above describes the
-#: r10-r16 ENGINE's band, retired to ANCHOR_BAND_PRE_R17OPT_SEC
-#: below (same values, frozen). Round 17 was the first OPTIMIZATION
-#: round: the headline code itself changed (integer-cents money
-#: aggregation, table-handle cache, pinned expansion/window
-#: exchanges, PageRank per-vertex decimal cast, rebalanced
-#: single-row-group scans — OPTIMIZATION_r17.md), so the band is
-#: re-SEEDED, the same act as the r13/r14 original seeding, not an
+#: r10-r16 ENGINE's band [10.53, 13.98]. Round 17 was the first
+#: OPTIMIZATION round: the headline code itself changed
+#: (integer-cents money aggregation, table-handle cache, pinned
+#: expansion/window exchanges, PageRank per-vertex decimal cast,
+#: rebalanced single-row-group scans), so the band is re-SEEDED, the same act as the r13/r14 original seeding, not an
 #: edge move against the old stable edge. Seed cohort (quiet_hunt,
 #: 2026-08-18, evidence/r17/HUNT_r17opt.jsonl — the whole session
 #: sat inside a documented external-load/steal episode; 0 of 12
@@ -376,183 +337,12 @@ def anchor_edge_retirement_met(
 
 ANCHOR_EDGE_RETIREMENT_MET = anchor_edge_retirement_met()
 
-#: Single-run-era (r01-r09) idle fresh-JVM total spread on identical
-#: code, for grading THOSE artifacts only — a single-run total carries
-#: warm-up/GC noise min-of-3 removes, so comparing eras point-to-band
-#: flatters/penalizes by ~18% (BASELINE.md anchor rows). The loaded-
-#: box session point was 19.75 s.
-SINGLE_RUN_ERA_BAND_SEC = [13.94, 16.45]
-
-#: Observed idle ranges for the non-anchor ``extended_queries``
-#: heavies (r13 verdict #4), same min-of-3 protocol, measured AFTER
-#: the headline loop (so every point carries Spark's own accumulated
-#: self-load — the [before, after] stamps distinguish that from
-#: EXTERNAL load). Eight idle runs: the r13 pair + the pre-regen r14
-#: pair (2026-08-15) + the post-regen r14 QUADRUPLET (2026-08-16; the
-#: regenerated regime reads triangle 4.805/5.10/3.98/4.115 — above
-#: the old 3.59-4.41 edge on two of four runs, edge moved with
-#: provenance — fuzzy 2.377-2.625 nudging the old 2.44 low edge
-#: down, and containment 1.678-1.947, whose third-run 1.947 moved
-#: the high edge and whose fourth run, 1.8, confirms the edge is
-#: not still growing).
-#: Machine-readable copy of SCALING.md's "Extended-heavy observed
-#: ranges"; ``tools/bench_trend.py`` grades against these.
-#: (r15: containment high edge 1.947 → 1.99 — the round-15 clean-
-#: stamps run, BENCH_LOCAL_r15, read 1.989 in its postheadline
-#: section with steal 0.28%/1.71% and a clean gate on the churned-
-#: afternoon box state that also moved the headline edge.)
-#: r17 RE-SEED (code era — the engine changed; the r10-r16 ranges are
-#: archived as EXTENDED_OBSERVED_RANGES_PRE_R17OPT_SEC). Seeded from
-#: the postheadline sections of the 2026-08-18 quiet-hunt cohort
-#: (evidence/r17/, all inside the documented steal episode, so both
-#: edges are PROVISIONAL): triangle 3.115-3.559, pagerank 3.274-4.133,
-#: fuzzy 1.512-1.932, containment 1.329-1.779 over 4 runs; edges =
-#: envelope ±~10%. Recorded-only section (non-gating) since r16.
-EXTENDED_OBSERVED_RANGES_SEC = {
-    "graph_triangle_summary": [2.80, 3.92],
-    "graph_pagerank": [2.95, 4.55],
-    "dedup_fuzzy_names": [1.35, 2.13],
-    "dedup_containment_pairs": [1.20, 1.96],
-}
-
-#: FRESH-order ranges for the r15+ primary extended section (r14
-#: verdict #4): the heavies measured in their OWN fresh JVM (run
-#: LAST — the child-before-headline variant measurably perturbed the
-#: headline anchor, see SCALING.md round-15 findings), so the numbers
-#: stop riding Spark's in-JVM accumulated self-load. Fresh-order reads HIGHER than the legacy
-#: after-headline envelope on most heavies: the legacy section ran
-#: in a fully-JIT-compiled JVM with the sf0.1 tables hot in page
-#: cache from the headline loop, while the child warms only at
-#: sf0.001 (min-of-3 amortizes but does not erase the cold costs).
-#: Calibrated 2026-08-16 from the SIX lowest-steal child windows
-#: during the round-15 host-contention incident (see
-#: SCALING.md#noise-band "Hypervisor steal"), in
-#: triangle/pagerank/fuzzy/containment order:
-#:   A (steal 0.05% cap / 0.27% dem)  4.517/5.498/2.890/1.987
-#:   B (0.32% cap)                    4.805/6.339/3.173/1.808
-#:   C (0.51% cap)                    4.981/6.119/3.257/2.304
-#:   D (0.35% / 1.97% — the committed BENCH_LOCAL_r15 child)
-#:                                    4.649/5.976/3.329/1.996
-#:   E (0.25% / 1.42%)                5.019/7.038/2.804/2.122
-#:   F (pre-stamp, lowest observed)   4.865/5.607/2.646/1.610
-#: Observed envelopes: triangle 4.517-5.019, pagerank 5.498-7.038,
-#: fuzzy 2.646-3.329, containment 1.610-2.304. Initial edges were
-#: the three-point envelope +/-10% (the r14 lesson: few-point
-#: envelopes underestimate the ~3-13% within-regime spread, and the
-#: calibration day's host was noisy even in its quiet windows);
-#: point E's clean-stamps pagerank 7.038 then moved that edge to
-#: 7.10. Re-pin from additional clean-steal runs as they accumulate.
-#: ROUND-16 quiet-day recalibration pass (r15 verdict #5): three
-#: clean-stamp children during the r16 host-degradation episode, in
-#: triangle/pagerank/fuzzy/containment order:
-#:   G (0.13% cap / 0.70% dem)   4.402/5.771/2.837/1.828 — in-band
-#:   H (0.01% / 0.06% — the cleanest child window ever stamped)
-#:                               4.042/4.751/2.233/1.638 — triangle/
-#:       pagerank/fuzzy BELOW the low edges: the truly-quiet box runs
-#:       faster than every noisy-day calibration point
-#:   I (0.28% / 1.53%)           4.568/5.942/3.122/1.969 — in-band
-#:   J (0.02% / 0.13% — the committed BENCH_LOCAL_r16 child)
-#:                               4.613/6.177/3.021/1.979 — in-band
-#: Verdict: HIGH edges confirmed over four clean children (none
-#: approached an edge);
-#: low edges left where they are — below_band is recorded-only
-#: maintenance, and H is a single point (the two-clean-points edge
-#: discipline applies downward too).
-#: r17 RE-SEED (code era — archived pre-r17 values in
-#: EXTENDED_FRESH_RANGES_PRE_R17OPT_SEC). Seeded from the two
-#: least-polluted fresh children of the 2026-08-18 cohort (attempts
-#: 1 and 8: triangle 3.777/3.80, pagerank 4.145/4.382, fuzzy
-#: 1.721/2.207, containment 1.34/1.81), edges = envelope ±~15% (the
-#: r14 few-point lesson). EXCLUDED episode children (child-window
-#: demand-steal 3.3-8.8%): triangle 6.17/7.18/11.98 — the same
-#: monotone-with-steal signature as the headline outliers. Both
-#: edges PROVISIONAL pending a quiet-box recalibration (top r18
-#: evidence task).
-#: (triangle high edge 4.40 -> 4.70 same night: the second hunt's
-#: cleanest run read 4.581 with its child window at 2.32% demand —
-#: barely over threshold, the best upper evidence the episode allowed;
-#: triangle is the cohort's most steal-sensitive heavy, spanning
-#: 3.78-11.98 across the ten runs in lockstep with the child steal.)
-EXTENDED_FRESH_RANGES_SEC = {
-    "graph_triangle_summary": [3.20, 4.70],
-    "graph_pagerank": [3.50, 5.05],
-    "dedup_fuzzy_names": [1.45, 2.55],
-    "dedup_containment_pairs": [1.15, 2.10],
-}
-
-
-# --- CODE-ERA dispatch (round 17, first optimization round) ---------------
-#
-# The bands above describe the box + data regime ON A GIVEN ENGINE.
-# Round 17 changed the engine itself (integer-cents money aggregation,
-# session-scoped table-handle cache, pinned expansion/window exchanges,
-# per-vertex PageRank decimal cast, rebalanced self-join/scan stages —
-# see OPTIMIZATION_r17.md), so r17+ artifacts grade against the
-# CURRENT-era constants while pre-r17 artifacts keep grading against
-# the engine they actually ran (cross-era point-to-band comparison is
-# the same mistake as the single-run/min-of-3 mixup BASELINE.md
-# documents — the r16 code cannot "regress" against a band the r17
-# code defined, and vice versa). The retired pre-optimization bands
-# are archived verbatim below with their full provenance left in the
-# comments above; ``tools/bench_trend.py`` dispatches on the
-# artifact's round number.
-FIRST_OPTIMIZED_ROUND = 17
-
-#: the r10-r16 engine's min-of-3 anchor band (provenance: the long
-#: comment block above ANCHOR_BAND_MIN_OF_3_SEC, which described this
-#: band until r17), including the r16 episode-widened 13.98 edge and
-#: its support/retirement state, frozen at retirement:
-#:   stable edge 12.53, support [12.861, 12.898, 13.062, 13.515,
-#:   13.975], episode subset [13.062, 13.975], retirement chain
-#:   [[11.885, "r16-recovery"], [11.325, "r16-recovery"],
-#:    [11.566, "r16-driver"]] (unmet at freeze).
-ANCHOR_BAND_PRE_R17OPT_SEC = [10.53, 13.98]
-
-#: the r10-r16 engine's extended ranges, frozen at the r17 rebuild
-#: (provenance in the comment blocks above the current-era dicts).
-EXTENDED_OBSERVED_RANGES_PRE_R17OPT_SEC = {
-    "graph_triangle_summary": [3.59, 5.10],
-    "graph_pagerank": [4.75, 6.18],
-    "dedup_fuzzy_names": [2.377, 2.92],
-    "dedup_containment_pairs": [1.47, 1.99],
-}
-EXTENDED_FRESH_RANGES_PRE_R17OPT_SEC = {
-    "graph_triangle_summary": [4.30, 5.50],
-    "graph_pagerank": [5.00, 7.10],
-    "dedup_fuzzy_names": [2.40, 3.60],
-    "dedup_containment_pairs": [1.45, 2.55],
-}
-
-
-def anchor_band_for_round(round_no):
-    """Era dispatch: the min-of-3 anchor band the given round's engine
-    ran under. ``None`` (unknown round) grades as current — a NEW
-    artifact must never sneak onto a retired band."""
-    if round_no is not None and round_no < FIRST_OPTIMIZED_ROUND:
-        return ANCHOR_BAND_PRE_R17OPT_SEC
-    return ANCHOR_BAND_MIN_OF_3_SEC
-
-
-def extended_ranges_for_round(round_no, fresh_order: bool):
-    """Era dispatch for the extended-heavy ranges (fresh-JVM primary
-    vs legacy after-headline secondary)."""
-    if round_no is not None and round_no < FIRST_OPTIMIZED_ROUND:
-        return (
-            EXTENDED_FRESH_RANGES_PRE_R17OPT_SEC
-            if fresh_order
-            else EXTENDED_OBSERVED_RANGES_PRE_R17OPT_SEC
-        )
-    return (
-        EXTENDED_FRESH_RANGES_SEC if fresh_order else EXTENDED_OBSERVED_RANGES_SEC
-    )
-
 
 def read_cpu_steal():
     """``(steal, busy, total)`` jiffies from the aggregate cpu line of
     ``/proc/stat``, or None where unavailable. Engine-free on purpose:
-    both ``bench.py`` and ``tools/ab_compare.py`` stamp steal windows,
-    and the A/B tool must not import the registry chain (ADVICE r13).
-    busy = user+nice+system+irq+softirq (idle/iowait excluded, steal
+    ``perfbench`` stamps steal windows without importing the registry
+    chain. busy = user+nice+system+irq+softirq (idle/iowait excluded, steal
     itself excluded). See ``steal_record`` for why both a capacity and
     a demand view are derived."""
     try:

@@ -95,12 +95,20 @@ def quality_score(text: str) -> str:
     """Deterministic [0,1] quality heuristic: length band + stopword
     presence − punctuation noise. A stand-in for model-based quality
     classifiers; the *shape* (pure expression, no UDF) is the point:
-    it runs at scan speed over 100 TB."""
+    it runs at scan speed over 100 TB.
+
+    NULL for a NULL text: the clamp alone would score it 1.0, since
+    ``least`` skips a NULL argument, so the score is multiplied by a
+    factor that is 1 or NULL. A CASE around the whole score would hide
+    its tokenizer from Spark's subexpression elimination, which skips
+    conditional branches, and double the CPU of a projection that also
+    selects :func:`stopword_ratio`."""
     return (
-        f"round(greatest(least("
+        f"(round(greatest(least("
         f"(0.5D * least(CAST({token_count(text)} AS DOUBLE) / 64.0D, 1.0D))"
         f" + (0.5D * {stopword_ratio(text)})"
         f" - {punct_ratio(text)}, 1.0D), 0.0D), 6)"
+        f" * CASE WHEN {text} IS NOT NULL THEN 1.0D END)"
     )
 
 

@@ -13,8 +13,7 @@ from .queries_text import (
     _NBIGRAM_DISTINCT_SQL,
     _NDIST_SQL,
     _NTOK_SQL,
-    _PUNCT_SQL,
-    _STOPRATIO_SQL,
+    _QUALITY_SQL,
     _TOKENS_SQL,
     _TOPCNT_SQL,
     _lang_case_sql,
@@ -29,14 +28,9 @@ def _salted_hash(salt: str, col: str = "doc_id") -> str:
     return portable_hash60(f"concat('{salt}#', CAST({col} AS STRING))")
 
 
-# DuckDB twins of the funnel's stage predicates (see
-# pipeline_filter_funnel below) — identical expressions to the
-# text_quality / text_repetition_filter oracles.
-_QUALITY_SQL = f"""
-    round(greatest(least(
-      0.5 * least(CAST({_NTOK_SQL} AS DOUBLE) / 64.0, 1.0)
-      + 0.5 * ({_STOPRATIO_SQL}) - ({_PUNCT_SQL}), 1.0), 0.0), 6)
-"""
+# DuckDB twin of the funnel's repetition predicate (see
+# pipeline_filter_funnel below) — the text_repetition_filter oracle's
+# expression.
 _REP_KEEP_SQL = f"""
     (CAST({_NDIST_SQL} AS DOUBLE) / CAST(greatest({_NTOK_SQL}, 1) AS DOUBLE) >= 0.2
      AND CAST({_TOPCNT_SQL} AS DOUBLE)

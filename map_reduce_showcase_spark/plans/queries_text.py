@@ -34,6 +34,12 @@ _PUNCT_SQL = (
 _STOPRATIO_SQL = (
     f"CAST({_STOP_HITS_SQL} AS DOUBLE) / CAST(greatest({_NTOK_SQL}, 1) AS DOUBLE)"
 )
+_QUALITY_SQL = f"""
+    (round(greatest(least(
+      0.5 * least(CAST({_NTOK_SQL} AS DOUBLE) / 64.0, 1.0)
+      + 0.5 * ({_STOPRATIO_SQL}) - ({_PUNCT_SQL}), 1.0), 0.0), 6)
+     * CASE WHEN text IS NOT NULL THEN CAST(1.0 AS DOUBLE) END)
+"""
 
 
 def _lang_score_sql(lang: str) -> str:
@@ -81,10 +87,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id,
            round({_PUNCT_SQL}, 6) AS punct_ratio,
            round({_STOPRATIO_SQL}, 6) AS stopword_ratio,
-           round(greatest(least(
-             0.5 * least(CAST({_NTOK_SQL} AS DOUBLE) / 64.0, 1.0)
-             + 0.5 * ({_STOPRATIO_SQL})
-             - ({_PUNCT_SQL}), 1.0), 0.0), 6) AS quality
+           {_QUALITY_SQL} AS quality
     FROM documents
     """,
     tags=("text", "quality"),

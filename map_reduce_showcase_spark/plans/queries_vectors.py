@@ -159,7 +159,7 @@ def dedup_apply_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _keep_best_oracle() -> str:
     from .queries_dedup import _minhash_sql
-    from .queries_pipeline import _QUALITY_SQL
+    from .queries_text import _QUALITY_SQL
 
     minhash_pairs = _minhash_sql(12, 3)
     return f"""

@@ -2,8 +2,8 @@
 
 The reference's only sink is ``n_reduce`` length-delimited local
 files, one per reduce partition (``src/worker/mod.rs:138-144``).
-Spark's writer subsumes it; the helpers here encode the layouts that
-matter at 100 TB:
+Spark's writer subsumes it; the four writers here encode the layouts
+that matter at 100 TB:
 
 * :func:`write_partitioned` — hive-style directory partitioning:
   readers prune partitions from the path (the single biggest scan
@@ -14,9 +14,12 @@ matter at 100 TB:
   production).
 * :func:`write_n_files` — the reference's exact contract (N output
   files for N reduce partitions), for parity.
+* :func:`compact_small_files` — rewrites a small-file directory into
+  target-sized files, keeping its hive layout.
 
-All writes are Parquet unless stated; CSV/JSON writers exist for
-interchange and are covered in tests/test_sinks.py round-trips.
+All four write Parquet through the Hadoop FS API, so any supported
+filesystem works; ``tests/test_sinks_jobs.py`` round-trips each one,
+also on a ``viewfs://`` mount.
 """
 
 from __future__ import annotations

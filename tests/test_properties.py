@@ -161,6 +161,24 @@ def test_portable_hash_and_tokens_agree_with_duckdb(spark, oracle):
     assert got == want
 
 
+def test_quality_score_null_text_scores_null_in_both_engines(spark, oracle):
+    """Spark's ``quality_score`` and its DuckDB twin ``_QUALITY_SQL``
+    give a NULL text NULL (``least`` skips a NULL, so the bare clamp
+    would score it 1.0 and pass every quality threshold), an empty
+    text 0.0, and a normal sentence the same score."""
+    from map_reduce_showcase_spark.functions.text import quality_score
+    from map_reduce_showcase_spark.plans.queries_text import _QUALITY_SQL
+
+    corpus = [(0, None), (1, ""), (2, "The cat sat on the mat, and it was happy.")]
+    df = spark.createDataFrame(corpus, "i int, text string")
+    got = dict(df.selectExpr("i", f"{quality_score('text')} AS q").collect())
+    oracle.execute("CREATE OR REPLACE TEMP TABLE quality_docs(i INT, text VARCHAR)")
+    oracle.executemany("INSERT INTO quality_docs VALUES (?, ?)", corpus)
+    want = dict(oracle.execute(f"SELECT i, {_QUALITY_SQL} FROM quality_docs").fetchall())
+    assert got[0] is None and got[1] == 0.0 and got[2] > 0.0
+    assert got == want
+
+
 def test_turkish_dotted_capital_is_a_known_lower_divergence(spark, oracle):
     """PINNED DIVERGENCE, not a bug: `lower('İ')` differs between
     engines — the JVM (and Python) apply full Unicode lowering

@@ -530,3 +530,51 @@ def test_compact_preserves_hive_partitioning(spark, sf_dir, tmp_path):
         back.filter(F.col("lang") == "en").count()
         == docs.filter(F.col("lang") == "en").count()
     )
+
+
+def test_writers_on_viewfs_mount(spark, sf_dir, tmp_path):
+    """The writers go through the Hadoop FS API, so they work on a
+    non-local filesystem: here a ``viewfs://`` mount of ``tmp_path``
+    (Hadoop's client-side mount table). The mount table is named for
+    this run alone, so the FileSystem cache cannot serve a stale
+    mount."""
+    import uuid
+
+    from map_reduce_showcase_spark.operators.jobs import process_job
+    from map_reduce_showcase_spark.sources.sinks import compact_small_files
+
+    mt = f"graft{uuid.uuid4().hex[:12]}"
+    key = f"fs.viewfs.mounttable.{mt}.link./data"
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    hconf.set(key, f"file://{tmp_path}")
+    root = f"viewfs://{mt}/data"
+    table = f"t_docs_{mt}"
+    try:
+        local = submit_job(
+            spark, "wc", ALPHABET, output_dir=str(tmp_path / "wc_local"), n_reduce=3
+        )
+        mounted = submit_job(spark, "wc", ALPHABET, output_dir=f"{root}/wc", n_reduce=3)
+        assert mounted.output and mounted.output == local.output
+        assert mounted.n_output_files == local.n_output_files
+        assert len(glob.glob(f"{tmp_path}/wc/part-*")) == mounted.n_output_files
+        assert process_job(spark, "wc", f"{root}/wc").output == local.output
+
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars", "lang")
+        want = sorted(docs.collect())
+        assert want
+
+        def back(path):
+            return sorted(spark.read.parquet(path).select(*docs.columns).collect())
+
+        write_partitioned(docs, f"{root}/part", "lang")
+        assert glob.glob(f"{tmp_path}/part/lang=*")
+        assert back(f"{root}/part") == want
+        compact_small_files(spark, f"{root}/part", f"{root}/compact", partition_by=("lang",))
+        assert glob.glob(f"{tmp_path}/compact/lang=*")
+        assert back(f"{root}/compact") == want
+        write_bucketed(docs, table, "doc_id", 4, path=f"{root}/bucketed")
+        assert glob.glob(f"{tmp_path}/bucketed/part-*")
+        assert sorted(spark.table(table).select(*docs.columns).collect()) == want
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        hconf.unset(key)
