@@ -13,7 +13,7 @@ subcommand, which re-reads the files a prior ``submit
 (``src/client.rs:66-93``, ``src/bin/client.rs:155-162``). Run as::
 
     python -m map_reduce_showcase_spark.cli submit \\
-        --app grep --files /root/reference/data/gutenberg/*.txt \\
+        --app grep --files tests/fixtures/gutenberg/*.txt \\
         --output-dir /tmp/out --args --term Elizabeth
     python -m map_reduce_showcase_spark.cli process \\
         --app grep --output-dir /tmp/out

@@ -91,9 +91,10 @@ def submit_job(
     """Run one reference-style job to completion (the Spark action IS
     submit+poll — blocking, with retries and stage barriers inside).
 
-    Unknown ``app`` or an empty ``files`` raises ValueError at submit
-    time, matching the coordinator's InvalidArgument; so does a
-    malformed vertex-degree edge line, when the job runs.
+    Unknown ``app``, an empty ``files`` or ``n_reduce < 1`` raises
+    ValueError at submit time, matching the coordinator's
+    InvalidArgument; so does a malformed vertex-degree edge line, when
+    the job runs.
 
     With ``output_dir``, the plan runs once as the ``n_reduce``-file
     write, and ``output``/``df`` come from reading those files back
@@ -102,6 +103,8 @@ def submit_job(
     _check_app(app)
     if not files:
         raise ValueError(f"{app}: no input files")
+    if n_reduce < 1:
+        raise ValueError(f"{app}: n_reduce must be at least 1, got {n_reduce}")
     df = _plan(spark, app, files, args or []).to(StructType.fromDDL(OUTPUT_SCHEMAS[app]))
     try:
         if output_dir is None:

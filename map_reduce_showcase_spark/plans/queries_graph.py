@@ -111,8 +111,8 @@ def graph_triangle_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: flag). Chunking engages only past 4096 out-neighbors, where one
 #: row would otherwise carry a ~32 KB+ array times its full edge
 #: fan-in into a single hash partition. Deliberately NOT lower: an
-#: interleaved same-JVM A/B (round 7, SCALING.md) measured cap=64
-#: (K=4-6 at the sweep points) a consistent 12-27% SLOWER —
+#: interleaved same-JVM A/B measured cap=64 (K=4-6 at the sweep
+#: points) a consistent 12-27% SLOWER —
 #: sub-cap degrees are tiny, so eager chunking only multiplies
 #: closing-join rows without relieving any hot task. The cap-2
 #: invariant test keeps the engaged path bit-exact so the defense
@@ -248,7 +248,7 @@ def _triangle_summary(spark: SparkSession, sf_dir: str, chunk_cap: int) -> DataF
         # exchange of the edge list, a sort of BOTH sides, and a
         # second build of the same adjacency aggregate) is replaced
         # by one explode in the stage already holding adj. The per-
-        # edge array payload (the bench's biggest single shuffle,
+        # edge array payload (the query's biggest single shuffle,
         # 156 MB at sf0.1) still moves exactly once — that is the
         # compact-forward minimum — but is no longer SORTED: the
         # closing join is a hinted shuffled-hash join whose BUILD

@@ -74,7 +74,7 @@ def _stream_dirs(
     """Deterministic, REUSED scratch dirs for a streaming query's
     (input replay, checkpoint) — keyed by query, a CONTENT signature
     of the source, and the query's input PROJECTION, so repeated
-    invocations (bench warm-up, plan tests, driver runs, the full
+    invocations (benchmark passes, plan tests, driver runs, the full
     pytest suite) reuse one replay copy instead of leaking a fresh
     mkdtemp each call, and neither a testdata regeneration (signature
     moves with size/mtime/footer bytes) nor an edit to the query's

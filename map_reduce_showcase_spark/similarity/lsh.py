@@ -64,8 +64,7 @@ def lsh_bucket(emb_sql: str, planes: list[list[float]]) -> Column:
     SQL text (a column name), and the whole bucket — every plane's
     dot-product fold included — is ONE parsed expression: the
     Column-API form of the same tree cost 0.24 s of py4j round trips
-    per plan build (r18; ~40% of sim_topk_lsh's bench time was
-    building plans, not running them)."""
+    per plan build."""
     terms = " + ".join(
         f"(CASE WHEN {dot(emb_sql, _plane_sql(plane))} >= 0 "
         f"THEN {1 << p} ELSE 0 END)"

@@ -80,11 +80,6 @@ def _parquet_files(path: str, limit: int = 1) -> list[str]:
     return out
 
 
-def _first_parquet_file(path: str) -> str:
-    """A parquet data file under ``path`` (itself, or one part file)."""
-    return _parquet_files(path, 1)[0]
-
-
 def _epoch_long_to_ts_expr(path: str) -> str:
     """SQL expr converting a raw INT64 ``ts`` to TIMESTAMP.
 
@@ -194,9 +189,9 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
 #: logical plan + resolved schema — no rows are computed or stored,
 #: every action still scans the parquet files. What it removes is the
 #: per-call driver work of ``spark.read.parquet`` (file listing +
-#: footer/schema resolution, measured 0.15 s per call in r17 — paid
-#: by every builder invocation, every bench rep), which is exactly
-#: what a registered catalog table amortizes in a real deployment.
+#: footer/schema resolution, measured 0.15 s per call — paid by
+#: every builder invocation), which is exactly what a registered
+#: catalog table amortizes in a real deployment.
 #: Keyed by applicationId so a stopped/rebuilt session can never
 #: serve stale JVM references; keyed by realpath so the same data
 #: reached via different spellings shares one entry. Staleness: a
@@ -223,10 +218,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         _TABLE_CACHE[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:

@@ -24,10 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 #: whole files where essentially every test is expensive by nature
-#: (stateful streaming replays; the bench harness's measured loops)
+#: (stateful streaming replays)
 SLOW_FILES = {
     "test_streaming.py",
-    "test_bench_contract.py",
 }
 
 #: (file, function) pairs ≳1.5 s in a --durations=0 sweep

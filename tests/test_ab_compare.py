@@ -1,17 +1,12 @@
 """Pins the engine-free hypervisor-steal helpers in ``bench_constants``
-(``read_cpu_steal`` / ``steal_record``) that perfbench and ``bench.py``
-stamp their runs with. The file is named for the A/B timer that once
-shared these helpers; the timer is gone, the helpers stay. No
-SparkSession needed."""
-
-import importlib.util
-import pathlib
+(``read_cpu_steal`` / ``steal_record``) that perfbench stamps its runs
+with. The file is named for the A/B timer that once shared these
+helpers; the timer is gone, the helpers stay. No SparkSession needed."""
 
 
 def test_steal_helpers_shared_and_engine_free():
     """Pin the record math, the degenerate windows and the live
-    ``/proc/stat`` read, and that ``bench.py``'s aliases are those same
-    functions."""
+    ``/proc/stat`` read."""
     import bench_constants as bc
 
     # 200 denied / (200 + 800 granted) = 20% of demand,
@@ -30,11 +25,3 @@ def test_steal_helpers_shared_and_engine_free():
     assert live is not None and len(live) == 3
     assert all(v >= 0 for v in live) and live[2] >= live[1] >= 0
 
-    spec = importlib.util.spec_from_file_location(
-        "bench_for_steal_test",
-        pathlib.Path(__file__).resolve().parent.parent / "bench.py",
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-    assert bench._read_cpu_steal is bc.read_cpu_steal
-    assert bench._steal_record is bc.steal_record

@@ -90,6 +90,25 @@ def test_submit_rejects_an_empty_file_list(spark, app):
 
 
 @pytest.mark.parametrize("with_output", [False, True], ids=["collect", "write"])
+@pytest.mark.parametrize("n_reduce", [0, -1])
+def test_submit_rejects_a_non_positive_n_reduce(spark, tmp_path, n_reduce, with_output):
+    files = _write(tmp_path / "docs", DOCS)
+    out_dir = str(tmp_path / "out") if with_output else None
+    with pytest.raises(ValueError, match="n_reduce must be at least 1"):
+        submit_job(spark, "wc", files, output_dir=out_dir, n_reduce=n_reduce)
+    assert not glob.glob(str(tmp_path / "out" / "*"))
+
+
+def test_cli_rejects_a_zero_num_reduce(spark, tmp_path, capsys):
+    from map_reduce_showcase_spark.cli import main
+
+    files = _write(tmp_path / "docs", DOCS)
+    rc = main(["submit", "--app", "wc", "--files", *files, "--num-reduce", "0"])
+    assert rc == 2
+    assert "error: wc: n_reduce must be at least 1" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("with_output", [False, True], ids=["collect", "write"])
 @pytest.mark.parametrize(
     "bad", ["x 7", "5", "", "-1 2"], ids=["non-numeric", "one-token", "empty", "negative"]
 )

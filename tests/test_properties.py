@@ -491,3 +491,33 @@ def test_slow_inventory_resolves():
             f"SLOW_FUNCS: {fname}::{func} no longer exists — update "
             f"the inventory in tests/conftest.py"
         )
+
+
+def test_tracked_files_cite_no_missing_repo_file():
+    """Every ``tools/<name>.py`` and upper-case ``<NAME>.md`` that a
+    tracked Python file or a current doc mentions must exist in the
+    repo, so deleting a tool or doc also mends what cites it.
+    ``CHANGES.md`` and ``ROADMAP.md`` record history and
+    ``SURVEY.md`` / ``PAPER.md`` cite the reference's own files, so
+    they are not scanned."""
+    import pathlib
+    import re
+    import subprocess
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tracked = subprocess.run(
+        ["git", "ls-files"], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.splitlines()
+    docs = {"README.md", "SCALING.md", "BASELINE.md", ".claude/skills/verify/SKILL.md"}
+    scanned = [p for p in tracked if p.endswith(".py") or p in docs]
+    md_names = {pathlib.PurePath(p).name for p in tracked if p.endswith(".md")}
+    missing = []
+    for rel in scanned:
+        text = (root / rel).read_text(encoding="utf-8")
+        for tool in re.findall(r"\btools/(\w+\.py)\b", text):
+            if f"tools/{tool}" not in tracked:
+                missing.append(f"{rel}: tools/{tool}")
+        for doc in re.findall(r"\b([A-Z][A-Z0-9_]*\.md)\b", text):
+            if doc not in md_names:
+                missing.append(f"{rel}: {doc}")
+    assert not missing, missing

@@ -79,7 +79,7 @@ def test_semantic_dedup_recall_vs_all_pairs(spark, sf_dir):
     loss against the full pairwise ground truth (cos ≥ 0.45, a<b).
     MEASURED on this corpus: recall ≈ 0.29 — the synthetic geometry
     is adversarial (planted pairs at cos 0.45-0.51 vs background up
-    to 0.449, SCALING.md), so single-cell assignment splits most
+    to 0.449), so single-cell assignment splits most
     near pairs across cells. The pinned band catches drift in both
     directions: collapse toward 0 = degenerate all-singleton cells;
     jump toward 1 = clustering degenerated to one quadratic cell.
