@@ -11,20 +11,19 @@ exchange assertion), leaving only the tiny post-join aggregation
 shuffle. On a real cluster the bucketed write is the one-time ETL
 step; here the builder materializes session-scoped bucketed tables
 from the parquet catalog on first use (Spark's in-memory catalog is
-per-session, so each fresh driver session rewrites them — which also
-makes the query immune to cross-round testdata regeneration).
+per-session, so each fresh driver session rewrites them from the
+current parquet).
 """
 
 from __future__ import annotations
 
 import hashlib
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import sweep_stale_scratch, touch_scratch
+from ..session import scratch_dir
 from ..sources.sinks import write_bucketed
 from .queries_relational import _DISC_PRICE_SQL, disc_price
 from .registry import register, t
@@ -45,32 +44,16 @@ def ensure_bucketed(
     one session never collide; the in-memory catalog scopes it to
     this session, so a fresh session always rebuilds from the
     current parquet (no stale-data risk across testdata
-    regenerations)."""
+    regenerations). The files live under the session's scratch
+    dir, so they go away with the SparkContext."""
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     name = f"mrs_bkt_{table}_{tag}"
-    app = spark.sparkContext.applicationId
-    # Stamp this application's scratch as in-use on EVERY call — also
-    # on the tableExists reuse path, where nothing else touches disk.
-    # A sibling session's sweep judges liveness by newest mtime, and
-    # a >24 h interactive session re-reading its day-old copy would
-    # otherwise look dead (reads don't move mtimes).
-    touch_scratch(f"{tempfile.gettempdir()}/mrs_bkt/{app}")
     if not spark.catalog.tableExists(name):
-        # external table under the system temp dir: keeps driver-cwd
-        # warehouse dirs out of the picture. The path is keyed by
-        # THIS session's application id (not just the table name):
-        # /tmp is shared, and two concurrent sessions materializing
-        # the same table would otherwise rmtree each other's files
-        # mid-write. A leftover directory from a crashed run of the
-        # SAME app id is still cleared first — saveAsTable refuses
-        # with LOCATION_ALREADY_EXISTS otherwise.
-        # app-id keying prevents cross-session rmtree races but means
-        # every session materializes its own copy; without this sweep
-        # finished sessions' copies accumulate unboundedly on a
-        # shared box. Day-old siblings are certainly-dead sessions
-        # (live concurrent ones have recent mtimes and are kept).
-        sweep_stale_scratch(f"{tempfile.gettempdir()}/mrs_bkt", keep={app})
-        loc = f"{tempfile.gettempdir()}/mrs_bkt/{app}/{name}"
+        # external table: keeps driver-cwd warehouse dirs out of the
+        # picture. A directory left by a failed write is cleared
+        # first — saveAsTable refuses with LOCATION_ALREADY_EXISTS
+        # otherwise.
+        loc = scratch_dir(spark, name)
         shutil.rmtree(loc, ignore_errors=True)
         write_bucketed(t(spark, sf_dir, table), name, bucket_col, N_BUCKETS, path=loc)
     return name

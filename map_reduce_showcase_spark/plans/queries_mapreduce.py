@@ -187,12 +187,15 @@ def process_readback_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
     disk (``process``, ``src/client.rs:66-93``) — the returned rows
     come from the written files, not the in-session DataFrame, so
     the oracle hash certifies the sink+source round-trip, not just
-    the aggregation."""
-    import tempfile
+    the aggregation. Each call writes a fresh dir under the
+    session's scratch, so a later call never replaces the files an
+    earlier frame reads."""
+    import uuid
 
+    from ..session import scratch_dir
     from ..sources.sinks import write_n_files
 
-    out_dir = f"{tempfile.gettempdir()}/mrs_readback_wc"
+    out_dir = scratch_dir(spark, f"readback_wc_{uuid.uuid4().hex}")
     write_n_files(
         word_count(t(spark, sf_dir, "documents"), "text"),
         out_dir,
@@ -224,9 +227,9 @@ def wc_reference_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte round trip loses nothing. This is the migration path a
     reference user walks in BOTH directions (their old files into
     this engine; this engine's output into their old ``mr-client
-    process``), registered so the oracle sweep checks it."""
-    import hashlib
-    import tempfile
+    process``), registered so the oracle sweep checks it. Each call
+    writes a fresh dir under the session's scratch."""
+    import uuid
 
     from pyspark.sql.functions import (
         col,
@@ -238,6 +241,7 @@ def wc_reference_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         unhex,
     )
 
+    from ..session import scratch_dir
     from ..sources.lengthdelim import (
         LengthDelimitedDataSource,
         write_n_files_reference_format,
@@ -253,13 +257,7 @@ def wc_reference_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode(col("word"), "UTF-8").alias("key"),
         unhex(lpad(hex_(col("cnt")), 16, "0")).alias("value"),
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    out = f"{tempfile.gettempdir()}/mrs_refout_{tag}"
-    # clear first: a leftover run with a different shard count would
-    # leave extra mr-out-* files the directory read would pick up
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir(spark, f"refout_{uuid.uuid4().hex}")
     write_n_files_reference_format(kv, out, n_reduce=4)
     back = spark.read.format("lengthdelim").load(out)
     return back.select(

@@ -18,92 +18,41 @@ the file source swapped for Kafka and the memory sink for a
 from __future__ import annotations
 
 import hashlib
+import os
 import shutil
-import tempfile
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import sweep_stale_scratch
+from ..session import scratch_dir
 from ..streaming.demo import read_events_stream, streaming_tumbling_counts
 from ..streaming.stateful import streaming_user_totals_exact
 from .registry import register, t
 
 
-def _tail_sample(path: str, n: int = 128) -> str:
-    """Last ``n`` bytes of a file, hex — for parquet this covers the
-    footer (metadata + row counts), which changes whenever content
-    does even if size and mtime are preserved."""
-    import os
-
-    with open(path, "rb") as fh:
-        fh.seek(max(os.path.getsize(path) - n, 0))
-        return fh.read(n).hex()
-
-
-def _source_signature(sf_dir: str) -> str:
-    """Cheap content signature of the events source: every data
-    file's (relative path, size, mtime) plus a tail byte sample. A
-    testdata regeneration — even at the same path — changes it, which
-    retires the old scratch dir and forces a fresh replay copy. The
-    tail sample closes the mtime-preserving hole (cp -p / rsync -a /
-    tar keep timestamps, but a parquet rewrite perturbs the footer
-    bytes sampled here)."""
-    import os
-
-    src = f"{sf_dir}/events.parquet"
-    parts: list[str] = [src]
-    if os.path.isdir(src):
-        for root, _dirs, files in sorted(os.walk(src)):
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                parts.append(
-                    f"{os.path.relpath(root, src)}/{f}:{st.st_size}:"
-                    f"{st.st_mtime_ns}:{_tail_sample(p)}"
-                )
-    elif os.path.exists(src):
-        st = os.stat(src)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}:{_tail_sample(src)}")
-    return hashlib.md5("|".join(parts).encode()).hexdigest()[:12]
-
-
 def _stream_dirs(
-    spark: SparkSession, name: str, sf_dir: str, proj: str
-) -> tuple[str, str, bool]:
-    """Deterministic, REUSED scratch dirs for a streaming query's
-    (input replay, checkpoint) — keyed by query, a CONTENT signature
-    of the source, and the query's input PROJECTION, so repeated
-    invocations (benchmark passes, plan tests, driver runs, the full
-    pytest suite) reuse one replay copy instead of leaking a fresh
-    mkdtemp each call, and neither a testdata regeneration (signature
-    moves with size/mtime/footer bytes) nor an edit to the query's
-    select/cast list (``proj`` moves) can serve a stale copy with the
-    wrong schema. Returns (in_dir, ckpt, copy_ready): ``copy_ready``
-    is True when a completed replay copy (Spark's _SUCCESS marker)
-    already exists and the write can be skipped. The checkpoint is
-    wiped before every run: resuming a finished availableNow
-    checkpoint would replay nothing and return an empty table.
-
-    Concurrency: /tmp is machine-shared, so the checkpoint dir is
-    keyed by THIS session's applicationId — two concurrent sessions
-    must not rmtree each other's live checkpoint mid-run (the same
-    hazard ``queries_bucketed.ensure_bucketed`` fixed for bucketed
-    tables); the shared replay copy is claimed atomically by
-    :func:`_ensure_replay`. Per-application dirs left by finished or
-    crashed sessions are swept best-effort once they age out."""
-    import os
-
-    tag = hashlib.md5(
-        f"{_source_signature(sf_dir)}|{proj}".encode()
-    ).hexdigest()[:12]
-    base = f"{tempfile.gettempdir()}/mrs_stream_{name}_{tag}"
-    app = spark.sparkContext.applicationId
-    ckpt = f"{base}/ckpt_{app}"
+    spark: SparkSession, name: str, sf_dir: str, write_replay: Callable[[str], None]
+) -> tuple[str, str]:
+    """(input replay, checkpoint) dirs for a streaming query, under
+    this session's scratch and keyed by the query name and the real
+    path of ``sf_dir``. The replay copy is written once per session:
+    ``write_replay`` fills a staging sibling, which is then renamed
+    into place, so a write that failed part-way is never served and
+    later calls reuse the copy. The checkpoint is wiped before every
+    run: resuming a finished availableNow checkpoint would replay
+    nothing and return an empty table."""
+    tag = hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
+    base = scratch_dir(spark, f"stream_{name}_{tag}")
+    in_dir, ckpt = f"{base}/in", f"{base}/ckpt"
     shutil.rmtree(ckpt, ignore_errors=True)
-    sweep_stale_scratch(base, keep={f"ckpt_{app}", "in"})
-    in_dir = f"{base}/in"
-    return in_dir, ckpt, os.path.exists(f"{in_dir}/_SUCCESS")
+    if not os.path.isdir(in_dir):
+        stage = f"{base}/in_stage"
+        shutil.rmtree(stage, ignore_errors=True)
+        write_replay(stage)
+        os.rename(stage, in_dir)
+    return in_dir, ckpt
 
 
 def _stamp_increasing_mtimes(path: str) -> list[str]:
@@ -130,130 +79,6 @@ def _stamp_increasing_mtimes(path: str) -> list[str]:
     for i, f in enumerate(parts):
         os.utime(f, (now - 3600 + 2 * i, now - 3600 + 2 * i))
     return parts
-
-
-def _ensure_replay(spark: SparkSession, in_dir: str, write_fn) -> str:
-    """Materialize the SHARED replay copy exactly once across
-    concurrent sessions: ``write_fn`` writes into an application-id
-    staging dir, which is then atomically ``rename()``-d into place.
-    The first session wins the claim; losers discard their staging
-    copy and read the winner's (rename fails when the target
-    exists, and a completed rename implies a completed write — the
-    _SUCCESS marker was written inside the staging dir).
-
-    Returns the directory to stream from. That is ``in_dir`` in
-    every resolved outcome; when the claim CANNOT be resolved —
-    the eviction lock is still held at the lock-leak deadline and
-    no complete shared copy ever appeared — the session's own
-    complete staging copy is returned instead, so the caller never
-    streams from a partial source (round 7 silently discarded the
-    staging copy here and read whatever occupied ``in_dir``).
-
-    Evicting a PARTIAL occupant (no _SUCCESS — a legacy or crashed
-    copy) is the one non-atomic step, so it runs under an exclusive
-    ``flock`` on a lock FILE with the _SUCCESS re-check INSIDE the
-    lock: without it, two losers can interleave so that B rmtree's
-    the complete copy A just renamed into place and A's
-    already-started streaming read fails mid-run (part filenames
-    differ between writes). ``flock`` (kernel advisory lock on the
-    inode) replaces round 8's path-based lockfile-plus-age-break
-    protocol, whose stale-lock break was CAS-*style* but still
-    path-based — a contender whose age check raced another breaker
-    could rename away a freshly created successor lock (ADVICE r8).
-    With ``flock`` that class is gone: a crashed holder's lock is
-    released by the kernel with its process (no leak, so no age
-    heuristic and no break step), and mutual exclusion is on the
-    inode, not the path. The lock file itself is inert and never
-    unlinked — unlinking would let a later contender lock a NEW
-    inode while an old fd still holds the old one, silently
-    splitting the mutex. The replay scratch lives on node-local
-    ``/tmp`` (contending sessions share the box), where ``flock``
-    semantics are exact."""
-    import fcntl
-    import os
-    import time
-
-    app = spark.sparkContext.applicationId
-    stage = f"{os.path.dirname(in_dir)}/in_stage_{app}"
-    shutil.rmtree(stage, ignore_errors=True)
-    write_fn(stage)
-    try:
-        os.rename(stage, in_dir)
-        return in_dir
-    except OSError:
-        pass
-    # Lost the claim, or a partial copy occupies in_dir: a complete
-    # copy (_SUCCESS) is served as-is; a partial one is evicted under
-    # the lock and replaced by this session's complete staging copy.
-    # Keep contending until the deadline — a healthy holder's
-    # eviction is sub-second, so in practice this resolves in one or
-    # two iterations; the deadline only guards against a LIVE holder
-    # stuck longer than any sane eviction.
-    lock = f"{os.path.dirname(in_dir)}/in_evict.lock"
-    deadline = time.time() + _EVICT_WAIT_MAX_S
-    while time.time() < deadline:
-        if os.path.exists(f"{in_dir}/_SUCCESS"):
-            shutil.rmtree(stage, ignore_errors=True)
-            return in_dir
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_WRONLY, 0o644)
-        except PermissionError:
-            # cross-user contention: another user's session created
-            # the lock file with a mode we can't open for write
-            # (EACCES/EPERM). Treat it like a held lock — keep
-            # re-checking for the winner's complete copy until the
-            # deadline, then serve our own staging copy below.
-            time.sleep(0.2)
-            continue
-        except OSError:
-            # any other failure is ENVIRONMENTAL, not contention —
-            # ENOSPC, EROFS, the scratch parent swept away by a
-            # racing cleaner. Busy-waiting the full deadline on
-            # those masked a hard failure into a one-minute stall
-            # per call (ADVICE r9); stop contending and resolve via
-            # the own-staging-copy fallback (or its RuntimeError)
-            # immediately.
-            break
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except OSError:
-            os.close(fd)
-            time.sleep(0.2)  # another session is evicting; re-check
-            continue
-        try:
-            # re-check under the lock: a winner may have renamed a
-            # complete copy in since the unlocked check above
-            if not os.path.exists(f"{in_dir}/_SUCCESS"):
-                shutil.rmtree(in_dir, ignore_errors=True)
-                try:
-                    os.rename(stage, in_dir)
-                    return in_dir
-                except OSError:
-                    # a fast-path winner renamed its complete copy
-                    # in between our rmtree and rename; the loop's
-                    # top re-check will serve it
-                    pass
-        finally:
-            os.close(fd)  # closing the fd releases the flock
-    # Unresolved: never stream a partial in_dir — serve this
-    # session's own complete copy (per-application, so no other
-    # session will evict it mid-read; the scratch sweep reclaims it
-    # once it ages out).
-    if os.path.exists(f"{stage}/_SUCCESS"):
-        return stage
-    raise RuntimeError(
-        f"replay source unresolved: {in_dir} has no _SUCCESS, the "
-        f"eviction lock never released within {_EVICT_WAIT_MAX_S}s, "
-        f"and the staging copy {stage} is incomplete"
-    )
-
-
-#: upper bound on contending for the eviction flock before falling
-#: back to the session's own staging copy. A crashed holder releases
-#: instantly (kernel-held lock), so this only bounds waiting on a
-#: live-but-stuck holder; eviction itself is a sub-second
-#: rmtree+rename.
-_EVICT_WAIT_MAX_S = 65
 
 
 _QUERY_NAME = "mrs_streaming_smoke_sink"
@@ -286,17 +111,15 @@ def streaming_tumbling_counts_query(spark: SparkSession, sf_dir: str) -> DataFra
     incrementally — state is (window × event_type) rows in the state
     store; swap source for Kafka and sink for foreachBatch and
     nothing else changes."""
-    in_dir, ckpt, copy_ready = _stream_dirs(spark, "tumbling", sf_dir, "*,ts:timestamp")
-    if not copy_ready:
-        in_dir = _ensure_replay(
-            spark,
-            in_dir,
-            lambda p: t(spark, sf_dir, "events")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(p),
-        )
+    in_dir, ckpt = _stream_dirs(
+        spark,
+        "tumbling",
+        sf_dir,
+        lambda p: t(spark, sf_dir, "events")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .repartition(4)
+        .write.parquet(p),
+    )
     for q in spark.streams.active:
         if q.name == _QUERY_NAME:
             q.stop()
@@ -344,19 +167,15 @@ def streaming_stateful_counts_query(spark: SparkSession, sf_dir: str) -> DataFra
     only their own rows to Python. Production adds a
     ``GroupStateTimeout`` so idle keys expire instead of growing
     state with key cardinality forever."""
-    in_dir, ckpt, copy_ready = _stream_dirs(
-        spark, "stateful", sf_dir, "user_id:bigint,value:double"
+    in_dir, ckpt = _stream_dirs(
+        spark,
+        "stateful",
+        sf_dir,
+        lambda p: t(spark, sf_dir, "events")
+        .select("user_id", "value")
+        .repartition(4)
+        .write.parquet(p),
     )
-    if not copy_ready:
-        in_dir = _ensure_replay(
-            spark,
-            in_dir,
-            lambda p: t(spark, sf_dir, "events")
-            .select("user_id", "value")
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(p),
-        )
     for q in spark.streams.active:
         if q.name == _STATEFUL_QUERY_NAME:
             q.stop()
@@ -433,19 +252,15 @@ def streaming_session_counts_query(spark: SparkSession, sf_dir: str) -> DataFram
     closed sessions EMIT and EVICT instead of accumulating (that
     bounded-state variant is exercised in tests/test_streaming.py).
     """
-    in_dir, ckpt, copy_ready = _stream_dirs(
-        spark, "session", sf_dir, "user_id:bigint,ts:timestamp"
+    in_dir, ckpt = _stream_dirs(
+        spark,
+        "session",
+        sf_dir,
+        lambda p: t(spark, sf_dir, "events")
+        .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
+        .repartition(4)
+        .write.parquet(p),
     )
-    if not copy_ready:
-        in_dir = _ensure_replay(
-            spark,
-            in_dir,
-            lambda p: t(spark, sf_dir, "events")
-            .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(p),
-        )
     for q in spark.streams.active:
         if q.name == _SESSION_QUERY_NAME:
             q.stop()
@@ -512,17 +327,15 @@ def streaming_stream_stream_join_query(spark: SparkSession, sf_dir: str) -> Data
     a 100 TB/day clickstream join's state finite."""
     from ..streaming.demo import streaming_click_purchase_join
 
-    in_dir, ckpt, copy_ready = _stream_dirs(spark, "ssjoin", sf_dir, "*,ts:timestamp")
-    if not copy_ready:
-        in_dir = _ensure_replay(
-            spark,
-            in_dir,
-            lambda p: t(spark, sf_dir, "events")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(p),
-        )
+    in_dir, ckpt = _stream_dirs(
+        spark,
+        "ssjoin",
+        sf_dir,
+        lambda p: t(spark, sf_dir, "events")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .repartition(4)
+        .write.parquet(p),
+    )
     for q in spark.streams.active:
         if q.name == _SSJOIN_QUERY_NAME:
             q.stop()
@@ -578,31 +391,19 @@ def streaming_sessions_timeout_query(spark: SparkSession, sf_dir: str) -> DataFr
     shape at every SF."""
     from ..streaming.stateful import streaming_user_sessions_with_timeout
 
-    # proj carries "+stamped" (round 12): the replay writer's
-    # SEMANTICS changed when mtime stamping landed, and the scratch
-    # key must move with it — a cached pre-stamping copy over the
-    # same testdata would otherwise be served forever with natural
-    # (unordered) part mtimes, exactly the flaky-drop hazard the
-    # stamping fixes (the twin set the precedent: its proj gained
-    # "+flush2" when the flush sentinels landed)
-    in_dir, ckpt, copy_ready = _stream_dirs(
-        spark, "timeout", sf_dir, "user_id:bigint,ts:timestamp@range4+stamped"
-    )
-    if not copy_ready:
+    def write_replay(p: str) -> None:
+        t(spark, sf_dir, "events").select(
+            "user_id", F.col("ts").cast("timestamp").alias("ts")
+        ).repartitionByRange(4, "ts").write.parquet(p)
+        # strictly increasing mtimes in range order, same hazard
+        # the twin's replay stamps against: a higher-ts file
+        # replaying first jumps the watermark ahead and silently
+        # drops every earlier file's rows — which would also
+        # undercount the running census the drive_contract pin
+        # value-anchors to COUNT(DISTINCT user_id)
+        _stamp_increasing_mtimes(p)
 
-        def write_replay(p: str) -> None:
-            t(spark, sf_dir, "events").select(
-                "user_id", F.col("ts").cast("timestamp").alias("ts")
-            ).repartitionByRange(4, "ts").write.mode("overwrite").parquet(p)
-            # strictly increasing mtimes in range order, same hazard
-            # the twin's replay stamps against: a higher-ts file
-            # replaying first jumps the watermark ahead and silently
-            # drops every earlier file's rows — which would also
-            # undercount the running census the drive_contract pin
-            # value-anchors to COUNT(DISTINCT user_id)
-            _stamp_increasing_mtimes(p)
-
-        in_dir = _ensure_replay(spark, in_dir, write_replay)
+    in_dir, ckpt = _stream_dirs(spark, "timeout", sf_dir, write_replay)
     for q in spark.streams.active:
         if q.name == _TIMEOUT_QUERY_NAME:
             q.stop()
@@ -652,9 +453,9 @@ _FLUSH_USER = -1
 )
 def streaming_eviction_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The eviction operator's BATCH-INVARIANT final state, with a
-    full value-hash oracle (round-10 verdict #1 — the companion to
-    the rows-only ``streaming_sessions_timeout_eviction``, whose
-    per-row update log genuinely depends on micro-batch boundaries).
+    full value-hash oracle: the companion to the rows-only
+    ``streaming_sessions_timeout_eviction``, whose per-row update log
+    genuinely depends on micro-batch boundaries.
 
     Same watermark-evicting sessionizer
     (``streaming/stateful.py::streaming_user_sessions_with_timeout``),
@@ -695,54 +496,48 @@ def streaming_eviction_final_state(spark: SparkSession, sf_dir: str) -> DataFram
     emission at the end of a bounded replay."""
     from ..streaming.stateful import streaming_user_sessions_with_timeout
 
-    in_dir, ckpt, copy_ready = _stream_dirs(
-        spark, "evictfinal", sf_dir, "user_id:bigint,ts:timestamp@range4+flush2"
-    )
-    if not copy_ready:
+    def write_replay(p: str) -> None:
+        import datetime
+        import glob
+        import time
 
-        def write_replay(p: str) -> None:
-            import datetime
-            import glob
-            import os
-            import time
-
-            ev = t(spark, sf_dir, "events").select(
-                "user_id", F.col("ts").cast("timestamp").alias("ts")
+        ev = t(spark, sf_dir, "events").select(
+            "user_id", F.col("ts").cast("timestamp").alias("ts")
+        )
+        # one scan serves both the flush timestamps and the
+        # sentinel-domain check: a real user_id == _FLUSH_USER
+        # would be filtered out of the census with the sentinel,
+        # and the oracle diff would flag the miss as a bare hash
+        # mismatch (confusing to root-cause)
+        max_ts, n_sentinel = ev.agg(
+            F.max("ts"),
+            F.count_if(F.col("user_id") == F.lit(_FLUSH_USER)),
+        ).first()
+        if n_sentinel:
+            raise AssertionError(
+                f"events contains the flush sentinel user_id "
+                f"{_FLUSH_USER} ({n_sentinel} rows); pick a "
+                f"sentinel outside the domain"
             )
-            # one scan serves both the flush timestamps and the
-            # sentinel-domain check: a real user_id == _FLUSH_USER
-            # would be filtered out of the census with the sentinel,
-            # and the oracle diff would flag the miss as a bare hash
-            # mismatch (confusing to root-cause)
-            max_ts, n_sentinel = ev.agg(
-                F.max("ts"),
-                F.count_if(F.col("user_id") == F.lit(_FLUSH_USER)),
-            ).first()
-            if n_sentinel:
-                raise AssertionError(
-                    f"events contains the flush sentinel user_id "
-                    f"{_FLUSH_USER} ({n_sentinel} rows); pick a "
-                    f"sentinel outside the domain"
-                )
-            ev.repartitionByRange(4, "ts").write.mode("overwrite").parquet(p)
-            seen = set(_stamp_increasing_mtimes(p))
-            # the flush files must replay AFTER every part file and in
-            # write order; their natural mtimes come from two separate
-            # append jobs and could tie on a coarse-mtime filesystem,
-            # so stamp them explicitly too — at `now + 2k`, strictly
-            # after every backdated part (see the helper's contract)
-            now = time.time()
-            for k, hours in enumerate((1, 2)):
-                spark.createDataFrame(
-                    [(_FLUSH_USER, max_ts + datetime.timedelta(hours=hours))],
-                    "user_id BIGINT, ts TIMESTAMP",
-                ).coalesce(1).write.mode("append").parquet(p)
-                for f in sorted(glob.glob(f"{p}/part-*")):
-                    if f not in seen:
-                        os.utime(f, (now + 2 * k, now + 2 * k))
-                        seen.add(f)
+        ev.repartitionByRange(4, "ts").write.parquet(p)
+        seen = set(_stamp_increasing_mtimes(p))
+        # the flush files must replay AFTER every part file and in
+        # write order; their natural mtimes come from two separate
+        # append jobs and could tie on a coarse-mtime filesystem,
+        # so stamp them explicitly too — at `now + 2k`, strictly
+        # after every backdated part (see the helper's contract)
+        now = time.time()
+        for k, hours in enumerate((1, 2)):
+            spark.createDataFrame(
+                [(_FLUSH_USER, max_ts + datetime.timedelta(hours=hours))],
+                "user_id BIGINT, ts TIMESTAMP",
+            ).coalesce(1).write.mode("append").parquet(p)
+            for f in sorted(glob.glob(f"{p}/part-*")):
+                if f not in seen:
+                    os.utime(f, (now + 2 * k, now + 2 * k))
+                    seen.add(f)
 
-        in_dir = _ensure_replay(spark, in_dir, write_replay)
+    in_dir, ckpt = _stream_dirs(spark, "evictfinal", sf_dir, write_replay)
     for q in spark.streams.active:
         if q.name == _FINAL_QUERY_NAME:
             q.stop()
@@ -800,19 +595,12 @@ def streaming_exactly_once_restart(spark: SparkSession, sf_dir: str) -> DataFram
     Any batch-1 reprocessing on restart doubles phase 1's n_rows;
     any loss drops it; either breaks the hash match.
 
-    Scratch: arrivals/checkpoint/sink are all per-application (the
-    two-phase arrival order is per-invocation state, so unlike the
-    other streaming queries there is no shared replay copy to
-    claim); day-old siblings are swept."""
-    tag = hashlib.md5(
-        f"{_source_signature(sf_dir)}|user_id:bigint,phase:int@restart".encode()
-    ).hexdigest()[:12]
-    base = f"{tempfile.gettempdir()}/mrs_stream_restart_{tag}"
-    app = spark.sparkContext.applicationId
-    arrivals, ckpt, out = f"{base}/arr_{app}", f"{base}/ckpt_{app}", f"{base}/out_{app}"
-    for d in (arrivals, ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
-    sweep_stale_scratch(base, keep={f"arr_{app}", f"ckpt_{app}", f"out_{app}"})
+    Scratch: arrivals, checkpoint and sink go to a fresh dir per call
+    under the session's scratch. The two-phase arrival order is
+    per-call state, and the returned frame reads the sink files, so
+    a later call must not touch them."""
+    base = scratch_dir(spark, f"stream_restart_{uuid.uuid4().hex}")
+    arrivals, ckpt, out = f"{base}/arr", f"{base}/ckpt", f"{base}/out"
 
     ev = t(spark, sf_dir, "events").select(
         "user_id",
@@ -835,9 +623,9 @@ def streaming_exactly_once_restart(spark: SparkSession, sf_dir: str) -> DataFram
         )
         q.awaitTermination()
 
-    ev.filter(F.col("phase") == 1).write.mode("overwrite").parquet(f"{arrivals}/b1")
+    ev.filter(F.col("phase") == 1).write.parquet(f"{arrivals}/b1")
     run_epoch()  # epoch 1: consumes batch 1, then the "cluster restarts"
-    ev.filter(F.col("phase") == 2).write.mode("overwrite").parquet(f"{arrivals}/b2")
+    ev.filter(F.col("phase") == 2).write.parquet(f"{arrivals}/b2")
     run_epoch()  # epoch 2: same checkpoint — must pick up ONLY batch 2
 
     return (

@@ -1,4 +1,5 @@
-"""SparkSession construction with scale-aware defaults.
+"""SparkSession construction with scale-aware defaults, and the
+per-application scratch path the package writes under.
 
 Local testing runs on ``local[N]`` but every knob here is chosen for
 the 100 TB / 1000-executor deployment story:
@@ -22,113 +23,22 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _newest_mtime(
-    path: str,
-    max_entries: int = 4096,
-    hotspots: tuple[str, ...] = ("offsets", "commits"),
-) -> float:
-    """Newest mtime in the breadth-first prefix of ``path``'s tree
-    (the path itself, dirs, files), scanning at most ``max_entries``
-    entries.
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """``<SparkFiles root>/mrs/<name>``: the path for package scratch
+    data (replay copies, checkpoints, bucketed tables, round-trip
+    outputs) named ``name``.
 
-    POSIX directory mtime only moves when a DIRECT child is added or
-    removed — a live Spark checkpoint appending offsets/commits files
-    two levels down, or a bucketed table whose files are merely being
-    READ, leaves the top-level mtime at creation time. Liveness must
-    therefore come from the newest nested mtime (plus the explicit
-    ``touch_scratch`` reuse stamps), not the root's own.
-
-    On hitting the cap the decision comes from the sampled prefix
-    instead of defaulting to "live": round 7 returned time.time()
-    here, which made any tree larger than the cap immortal — a
-    crashed session's big checkpoint was never reclaimed, exactly
-    the unbounded /tmp growth the sweep exists to prevent. BFS makes
-    the sample the shallow prefix, where every liveness signal this
-    package emits actually lives: ``touch_scratch`` stamps the ROOT,
-    streaming checkpoints keep ``offsets/``/``commits/`` fresh one
-    level down, and parquet writers touch the table dir itself. A
-    hypothetical live tree whose only fresh mtimes sit deeper than
-    the first ``max_entries`` BFS entries could be mis-swept; no
-    scratch layout here has that shape, and reuse paths re-stamp the
-    root precisely so the shallow sample is authoritative. As a
-    belt-and-braces guard for future scratch shapes (ADVICE r8), the
-    known liveness hotspots — the root stamp and a streaming
-    checkpoint's ``offsets/``/``commits/`` dirs, whose mtimes move on
-    every batch because offset/commit files are their DIRECT
-    children — are stat-ed unconditionally before the capped walk,
-    so no directory fan-out can push them past the sample. The
-    ``hotspots`` default covers every scratch shape this package
-    writes today; a future owner of a scratch layout whose liveness
-    signal sits elsewhere (e.g. a state store, or a checkpoint nested
-    another level down) passes its own relative paths rather than
-    widening this list in place."""
-    from collections import deque
-
-    newest = 0.0
-    for hot in hotspots:
-        try:
-            newest = max(newest, os.lstat(os.path.join(path, hot)).st_mtime)
-        except OSError:
-            pass
-    seen = 0
-    queue = deque([path])
-    while queue:
-        p = queue.popleft()
-        try:
-            newest = max(newest, os.lstat(p).st_mtime)
-        except OSError:
-            continue
-        seen += 1
-        if seen > max_entries:
-            break
-        if os.path.isdir(p) and not os.path.islink(p):
-            try:
-                queue.extend(os.path.join(p, c) for c in sorted(os.listdir(p)))
-            except OSError:
-                pass
-    return newest
-
-
-def touch_scratch(path: str) -> None:
-    """Stamp ``path`` as in-use NOW (best-effort ``os.utime``): reuse
-    points call this so liveness means "last used", not "last
-    written" — a >24 h interactive session re-reading its day-old
-    bucketed copy refreshes the stamp and a sibling's sweep keeps
-    it."""
-    try:
-        os.utime(path)
-    except OSError:
-        pass
-
-
-def sweep_stale_scratch(base: str, keep: set[str], max_age_s: int = 86400) -> None:
-    """Best-effort reclamation of shared-/tmp scratch left by
-    finished or crashed sessions (old checkpoints, staging copies,
-    per-application bucketed-table materializations): anything under
-    ``base`` not named in ``keep`` and unused for ``max_age_s``
-    seconds is removed. Never raises — reclamation must not fail the
-    query that triggered it. "Unused" is judged by the NEWEST mtime
-    found anywhere in the candidate tree (see ``_newest_mtime`` — a
-    root dir's own mtime goes stale while nested checkpoint files
-    keep being written) combined with the ``touch_scratch`` stamps
-    that reuse paths refresh, so a LIVE long-running session's
-    scratch is never swept mid-read by a sibling."""
-    import shutil
-    import time
-
-    try:
-        entries = os.listdir(base)
-    except OSError:
-        return
-    for entry in entries:
-        if entry in keep:
-            continue
-        p = os.path.join(base, entry)
-        try:
-            if time.time() - _newest_mtime(p) > max_age_s:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            pass
+    The SparkFiles root is Spark's own per-application temp dir below
+    ``SPARK_LOCAL_DIRS``. It is driver-local and lives as long as the
+    SparkContext: ``spark.stop()`` removes it, a new context gets a
+    fresh one, and the JVM's shutdown hook removes it if the Python
+    driver dies. No two applications share the path, so nothing here
+    is locked or swept. Like any driver-local path it serves
+    local-mode scratch only; on a cluster the writers would target
+    shared storage instead. The directory is not created: Spark's
+    writers make their own output dirs."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    return os.path.join(root, "mrs", name)
 
 
 def get_spark(

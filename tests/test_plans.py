@@ -458,12 +458,12 @@ def test_bucketed_q3_join_has_no_fact_exchange(spark, sf_dir):
 def test_ensure_bucketed_idempotent_and_session_keyed(spark, sf_dir):
     """Two ensure calls for the same table must resolve to ONE
     materialization (second call is a pure catalog hit — same name,
-    files untouched), and the backing location must be keyed by this
-    session's application id so two concurrent sessions under the
-    shared /tmp can never rmtree each other's files mid-write."""
+    files untouched), and the backing location must lie under this
+    application's scratch root, which no other session shares."""
     import os
 
     from map_reduce_showcase_spark.plans.queries_bucketed import ensure_bucketed
+    from map_reduce_showcase_spark.session import scratch_dir
 
     n1 = ensure_bucketed(spark, sf_dir, "orders", "o_orderkey")
     loc = next(
@@ -471,8 +471,9 @@ def test_ensure_bucketed_idempotent_and_session_keyed(spark, sf_dir):
         for r in spark.sql(f"DESCRIBE FORMATTED {n1}").collect()
         if r[0].strip() == "Location"
     )
-    assert spark.sparkContext.applicationId in loc, loc
     path = loc.removeprefix("file:")
+    root = os.path.realpath(os.path.dirname(scratch_dir(spark, n1)))
+    assert os.path.commonpath([os.path.realpath(path), root]) == root, (path, root)
     before = {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
     n2 = ensure_bucketed(spark, sf_dir, "orders", "o_orderkey")
     assert n2 == n1

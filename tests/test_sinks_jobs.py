@@ -171,6 +171,22 @@ def test_process_readback_matches_submit(spark, tmp_path, app, args):
     assert processed.output  # non-trivial golden
 
 
+@pytest.mark.parametrize("name", ["process_readback_wc", "wc_reference_file_roundtrip"])
+def test_file_roundtrip_rebuild_keeps_earlier_frame(spark, oracle, sf_dir, name):
+    """A file round-trip query reads back files it wrote; building it
+    a second time must not replace the files a frame built earlier
+    reads. The first frame, collected after the rebuild, still equals
+    the oracle."""
+    from map_reduce_showcase_spark.plans.registry import REGISTRY, _load_all
+
+    _load_all()
+    spec = REGISTRY[name]
+    first = spec.builder(spark, sf_dir)
+    spec.builder(spark, sf_dir)
+    got = sorted(tuple(r) for r in first.collect())
+    assert got and got == sorted(oracle.execute(spec.oracle).fetchall())
+
+
 def test_cli_process_subcommand(spark, tmp_path, capsys):
     from map_reduce_showcase_spark.cli import main
 

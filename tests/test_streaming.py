@@ -417,418 +417,112 @@ def test_event_time_timeout_evicts_idle_user_state(spark, tmp_path):
     assert all(not r["is_final"] for r in rows if r["user_id"] == 1)
 
 
-def test_stream_scratch_retires_on_source_change(spark, tmp_path, sf_dir):
-    """The streaming replay scratch dir is keyed by (source content
-    signature, query projection): same content+projection → same dir
-    (copy reused); touched/regenerated content, content rewritten
-    with PRESERVED mtime (cp -p style), or an edited projection →
-    different dir (a stale or wrong-schema replay copy can never be
-    served)."""
-    import os
-    import shutil
-
-    from map_reduce_showcase_spark.plans.queries_streaming import _stream_dirs
-
-    src = tmp_path / "sf"
-    src.mkdir()
-    ev = src / "events.parquet"
-    shutil.copy(f"{sf_dir}/events.parquet", ev)
-    d1, c1, ready1 = _stream_dirs(spark, "unittest", str(src), "a:int")
-    assert not ready1  # nothing materialized yet
-    # checkpoint dir is per-application: a concurrent session on
-    # this machine gets a different ckpt and can't rmtree this one
-    assert spark.sparkContext.applicationId in os.path.basename(c1)
-    d1b, _c, _r = _stream_dirs(spark, "unittest", str(src), "a:int")
-    assert d1 == d1b  # unchanged source+projection → same scratch dir
-    dp, _c, _r = _stream_dirs(spark, "unittest", str(src), "a:int,b:string")
-    assert dp != d1  # edited projection → fresh dir (schema safety)
-    os.utime(ev)  # simulate regeneration
-    d2, _c, _r = _stream_dirs(spark, "unittest", str(src), "a:int")
-    assert d2 != d1  # content signature moved → fresh dir
-    # rewrite content but put the old mtime back (cp -p / rsync -a):
-    # the tail byte sample must still retire the dir
-    st = os.stat(ev)
-    with open(ev, "r+b") as fh:
-        fh.seek(max(st.st_size - 16, 0))
-        tail = fh.read(16)
-        fh.seek(max(st.st_size - 16, 0))
-        fh.write(bytes(b ^ 0xFF for b in tail))
-    os.utime(ev, ns=(st.st_atime_ns, st.st_mtime_ns))
-    d3, _c, _r = _stream_dirs(spark, "unittest", str(src), "a:int")
-    assert d3 not in (d1, d2)  # footer bytes moved despite same size+mtime
-
-
-def _age_tree(path, age_s=2 * 86400):
-    """Set every mtime under ``path`` (dirs and files) to ``age_s``
-    seconds ago — simulating a tree nobody wrote OR used since."""
-    import os
-    import time
-
-    old = time.time() - age_s
-    for root, dirs, files in os.walk(path, topdown=False):
-        for n in files + dirs:
-            os.utime(os.path.join(root, n), (old, old))
-    os.utime(path, (old, old))
-
-
-def test_sweep_stale_scratch_reclaims_only_aged_siblings(tmp_path):
-    """Shared-/tmp scratch hygiene: dirs whose ENTIRE tree aged out
-    are reclaimed; recent dirs (live concurrent sessions) and
-    explicitly kept names survive; a missing base is a no-op."""
+def test_stream_replay_is_reused_within_session(spark, sf_dir, tmp_path):
+    """Within one session a streaming query's replay copy is written
+    once: a second ``streaming_stateful_counts`` call leaves the
+    replay's part files untouched, returns the same rows, and runs on
+    a fresh checkpoint. A staging dir whose write failed before the
+    rename is never read."""
+    import glob
     import os
 
-    from map_reduce_showcase_spark.session import sweep_stale_scratch
+    from map_reduce_showcase_spark.plans import queries_streaming as qs
+    from map_reduce_showcase_spark.session import scratch_dir
 
-    base = tmp_path / "scratch"
-    for name in ("app_old", "app_recent", "app_mine"):
-        (base / name).mkdir(parents=True)
-        (base / name / "f").write_text("x")
-    _age_tree(base / "app_old")
-    sweep_stale_scratch(str(base), keep={"app_mine"})
-    assert sorted(os.listdir(base)) == ["app_mine", "app_recent"]
-    # keep wins even over age
-    _age_tree(base / "app_mine")
-    sweep_stale_scratch(str(base), keep={"app_mine"})
-    assert "app_mine" in os.listdir(base)
-    sweep_stale_scratch(str(base / "does-not-exist"), keep=set())  # no raise
+    def run():
+        frame = qs.streaming_stateful_counts_query(spark, sf_dir)
+        return sorted(tuple(r) for r in frame.collect())
+
+    rows1 = run()
+    (base,) = glob.glob(scratch_dir(spark, "stream_stateful_*"))
+    parts = {f: os.stat(f).st_mtime_ns for f in glob.glob(f"{base}/in/part-*")}
+    assert parts
+    marker = f"{base}/ckpt/from_first_run"
+    open(marker, "w").close()
+    rows2 = run()
+    assert rows2 == rows1 and rows1
+    assert {f: os.stat(f).st_mtime_ns for f in glob.glob(f"{base}/in/part-*")} == parts
+    assert os.path.isdir(f"{base}/ckpt/offsets") and not os.path.exists(marker)
+
+    def write_then_fail(p):
+        os.makedirs(p)
+        open(f"{p}/part-0", "w").write("partial")
+        raise RuntimeError("replay write failed")
+
+    def write_ok(p):
+        os.makedirs(p)
+        open(f"{p}/part-1", "w").write("complete")
+
+    with pytest.raises(RuntimeError):
+        qs._stream_dirs(spark, "unittest", str(tmp_path), write_then_fail)
+    in_dir, _ckpt = qs._stream_dirs(spark, "unittest", str(tmp_path), write_ok)
+    assert os.listdir(in_dir) == ["part-1"]
 
 
-def test_sweep_capped_scan_still_reclaims_big_dead_trees(tmp_path, monkeypatch):
-    """Round 7's cap behavior made any tree with more entries than
-    the scan cap immortal (`_newest_mtime` returned time.time() on
-    hitting it) — a crashed session's large checkpoint accumulated
-    in /tmp forever. Now the decision comes from the BFS-sampled
-    prefix: an entirely aged big tree is reclaimed; a big tree whose
-    shallow prefix carries a fresh liveness signal (the root
-    ``touch_scratch`` stamp every reuse path refreshes) survives."""
-    import functools
+#: child script for the scratch lifecycle test: builds the bucketed
+#: and streaming scratch in its own session, prints the scratch root
+#: and what it held, stops the session and reports whether the root
+#: survived the stop
+_SCRATCH_CHILD = """
+import json, os, sys
+from map_reduce_showcase_spark.plans.queries_bucketed import ensure_bucketed
+from map_reduce_showcase_spark.plans.queries_streaming import (
+    streaming_tumbling_counts_query,
+)
+from map_reduce_showcase_spark.session import get_spark, scratch_dir
+
+sf_dir = sys.argv[1]
+spark = get_spark(app_name="scratch-lifecycle", master="local[2]", shuffle_partitions=4)
+spark.sparkContext.setLogLevel("OFF")
+ensure_bucketed(spark, sf_dir, "orders", "o_orderkey")
+rows = streaming_tumbling_counts_query(spark, sf_dir).count()
+root = os.path.dirname(scratch_dir(spark, "probe"))
+entries = sorted(os.listdir(root))
+spark.stop()
+print(json.dumps({"root": root, "entries": entries, "rows": rows,
+                  "after_stop": os.path.exists(root)}))
+"""
+
+
+def test_scratch_does_not_outlive_its_session(sf_dir, tmp_path):
+    """Package scratch lives under the session's own Spark temp dir:
+    a child session that builds a bucketed table and a streaming
+    replay finds both under its scratch root, and ``spark.stop()``
+    removes that root. Nothing lands as ``mrs_*`` in the system temp
+    dir, neither the shared one nor the child's own ``TMPDIR``."""
+    import json
     import os
+    import subprocess
+    import sys
 
-    from map_reduce_showcase_spark import session as sess
+    def mrs_entries(d):
+        return {e for e in os.listdir(d) if e.startswith("mrs_")}
 
-    base = tmp_path / "scratch"
-    for name in ("big_dead", "big_live"):
-        d = base / name
-        for sub in range(8):
-            (d / f"sub{sub}").mkdir(parents=True)
-            for f in range(8):
-                (d / f"sub{sub}" / f"f{f}").write_text("x")
-        _age_tree(d)
-    # 1 root + 8 dirs + 64 files = 73 entries per tree; cap below it
-    real_newest = sess._newest_mtime
-    monkeypatch.setattr(
-        sess, "_newest_mtime", functools.partial(real_newest, max_entries=16)
+    child_tmp = tmp_path / "tmp"
+    child_tmp.mkdir()
+    before = mrs_entries(tempfile.gettempdir())
+    proc = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD, sf_dir],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g", "TMPDIR": str(child_tmp)},
     )
-    sess.touch_scratch(str(base / "big_live"))  # fresh root stamp
-    sess.sweep_stale_scratch(str(base), keep=set())
-    assert sorted(os.listdir(base)) == ["big_live"]
-
-
-def test_sweep_hotspot_stat_survives_adversarial_fanout(tmp_path, monkeypatch):
-    """ADVICE r8: a live checkpoint whose ONLY fresh mtimes sit past
-    the capped BFS sample (a dir with more direct children than the
-    cap, all sorting before ``offsets``, root stamp not refreshed)
-    could be mis-swept. The known liveness hotspots — ``offsets/``
-    and ``commits/`` — are now stat-ed unconditionally before the
-    walk, so no fan-out can hide them."""
-    import functools
-    import os
-
-    from map_reduce_showcase_spark import session as sess
-
-    base = tmp_path / "scratch"
-    ckpt = base / "ckpt_fanout"
-    # 40 aged direct children that BFS-sort BEFORE "offsets"; with the
-    # cap at 16 the sample never reaches the offsets dir itself
-    for i in range(40):
-        (ckpt / f"a{i:03d}").mkdir(parents=True)
-    (ckpt / "offsets").mkdir()
-    (ckpt / "offsets" / "0").write_text("batch0")
-    _age_tree(ckpt)
-    # a NEW batch lands: only offsets/ (direct child added) is fresh
-    (ckpt / "offsets" / "1").write_text("batch1")
-    old = __import__("time").time() - 2 * 86400
-    os.utime(ckpt, (old, old))  # root stamp NOT refreshed
-    real_newest = sess._newest_mtime
-    monkeypatch.setattr(
-        sess, "_newest_mtime", functools.partial(real_newest, max_entries=16)
-    )
-    sess.sweep_stale_scratch(str(base), keep=set())
-    assert os.listdir(base) == ["ckpt_fanout"], "live checkpoint swept"
-
-
-def test_sweep_liveness_is_usage_based(tmp_path):
-    """A candidate is swept only when old AND unused. POSIX dir mtime
-    alone is NOT liveness — it goes stale while nested checkpoint
-    files keep being written (offsets/commits land two levels down)
-    and never moves on reads at all — so liveness is the NEWEST
-    nested mtime plus the ``touch_scratch`` stamp reuse paths
-    refresh (``ensure_bucketed`` re-reading a day-old bucketed
-    copy)."""
-    import os
-    import time
-
-    from map_reduce_showcase_spark.session import sweep_stale_scratch, touch_scratch
-
-    base = tmp_path / "scratch"
-    for name in ("ckpt_live", "bkt_touched", "app_dead"):
-        (base / name / "sub").mkdir(parents=True)
-        (base / name / "sub" / "f").write_text("x")
-        _age_tree(base / name)
-    # live checkpoint: top dir old, but a NESTED commit file is fresh
-    (base / "ckpt_live" / "sub" / "commits").write_text("b1")
-    # day-old bucketed copy, just re-read: the reuse path stamps it
-    touch_scratch(str(base / "bkt_touched"))
-    sweep_stale_scratch(str(base), keep=set())
-    assert sorted(os.listdir(base)) == ["bkt_touched", "ckpt_live"]
-    # the stamp is "last used", so it decays: re-age and it sweeps
-    _age_tree(base / "bkt_touched")
-    old = time.time() - 2 * 86400
-    os.utime(base / "ckpt_live" / "sub" / "commits", (old, old))
-    _age_tree(base / "ckpt_live")
-    sweep_stale_scratch(str(base), keep=set())
-    assert os.listdir(base) == []
-    touch_scratch(str(base / "nonexistent"))  # best-effort: no raise
-
-
-def test_stream_replay_claim_is_atomic(spark, tmp_path):
-    """The shared replay copy is claimed via staged-write + rename:
-    the winner's complete copy is installed; a later writer keeps
-    the winner's copy and discards its own stage; a PARTIAL copy
-    occupying in_dir (no _SUCCESS — a crashed legacy writer) is
-    replaced, not served."""
-    import os
-
-    from map_reduce_showcase_spark.plans.queries_streaming import _ensure_replay
-
-    base = tmp_path / "scratch"
-    base.mkdir()
-    in_dir = str(base / "in")
-
-    def write_v1(p):
-        os.makedirs(p)
-        open(f"{p}/part-0", "w").write("v1")
-        open(f"{p}/_SUCCESS", "w").close()
-
-    _ensure_replay(spark, in_dir, write_v1)
-    assert open(f"{in_dir}/part-0").read() == "v1"
-
-    def write_v2(p):
-        os.makedirs(p)
-        open(f"{p}/part-0", "w").write("v2")
-        open(f"{p}/_SUCCESS", "w").close()
-
-    # loser path: in_dir already complete → keep v1, stage discarded
-    _ensure_replay(spark, in_dir, write_v2)
-    assert open(f"{in_dir}/part-0").read() == "v1"
-    assert not [e for e in os.listdir(base) if e.startswith("in_stage")]
-
-    # partial occupant (no _SUCCESS) must be replaced
-    os.remove(f"{in_dir}/_SUCCESS")
-    _ensure_replay(spark, in_dir, write_v2)
-    assert open(f"{in_dir}/part-0").read() == "v2"
-    assert os.path.exists(f"{in_dir}/_SUCCESS")
-    # the flock was released: the (inert, never-unlinked) lock file
-    # is immediately acquirable by the next contender
-    import fcntl
-
-    fd = os.open(str(base / "in_evict.lock"), os.O_CREAT | os.O_WRONLY)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)  # raises if held
-    finally:
-        os.close(fd)
-
-
-def test_stream_replay_partial_eviction_respects_lock(spark, tmp_path, monkeypatch):
-    """Evicting a partial replay occupant is guarded by an exclusive
-    flock with the _SUCCESS re-check inside it: while another session
-    HOLDS the flock, this session contends instead of rmtree-ing (the
-    holder may be mid-rename of a complete copy — the round-6 race);
-    once the holder releases, eviction proceeds. A lock FILE left by
-    a crashed holder (the kernel released its flock with the process)
-    blocks nobody — round 8's path-based protocol made every
-    contender wait out a 60 s age heuristic for exactly this case,
-    and its stale-lock break carried a rename TOCTOU (ADVICE r8)."""
-    import fcntl
-    import os
-    import threading
-    import time
-
-    from map_reduce_showcase_spark.plans import queries_streaming as qs
-
-    base = tmp_path / "scratch"
-    base.mkdir()
-    in_dir = str(base / "in")
-    os.makedirs(in_dir)
-    open(f"{in_dir}/part-0", "w").write("partial")  # no _SUCCESS
-
-    def write_v2(p):
-        os.makedirs(p)
-        open(f"{p}/part-0", "w").write("v2")
-        open(f"{p}/_SUCCESS", "w").close()
-
-    lock = str(base / "in_evict.lock")
-    hold_for = 1.2
-    held = threading.Event()
-
-    def live_holder():
-        fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        held.set()
-        time.sleep(hold_for)
-        os.close(fd)  # releases
-
-    holder = threading.Thread(target=live_holder, daemon=True)
-    holder.start()
-    assert held.wait(5)
-    t0 = time.time()
-    out = qs._ensure_replay(spark, in_dir, write_v2)
-    waited = time.time() - t0
-    holder.join()
-    # contended while the flock was held, then evicted once released
-    assert waited >= 1.0, "evicted while another session held the flock"
-    assert out == in_dir
-    assert open(f"{in_dir}/part-0").read() == "v2"
-    assert os.path.exists(f"{in_dir}/_SUCCESS")
-
-    # a lock FILE whose holder crashed (no live flock) blocks nobody:
-    # eviction proceeds immediately, no age heuristic
-    os.remove(f"{in_dir}/_SUCCESS")
-    open(f"{in_dir}/part-0", "w").write("partial")
-    assert os.path.exists(lock)  # inert leftover from the first pass
-    t0 = time.time()
-    out = qs._ensure_replay(spark, in_dir, write_v2)
-    assert time.time() - t0 < 30, "waited on a lock nobody holds"
-    assert out == in_dir
-    assert open(f"{in_dir}/part-0").read() == "v2"
-    assert os.path.exists(f"{in_dir}/_SUCCESS")
-
-
-def test_stream_replay_unresolved_lock_serves_own_complete_copy(
-    spark, tmp_path, monkeypatch
-):
-    """The round-7 fall-through read WRONG ROWS: when every lock
-    attempt failed and no _SUCCESS ever appeared, the loser discarded
-    its complete staging copy and the caller streamed the partial
-    occupant. Now the deadline path returns the session's own
-    complete staging copy — a flock held by a live-but-stuck holder
-    for the whole window must never lead to a partial source."""
-    import fcntl
-    import os
-    import threading
-
-    from map_reduce_showcase_spark.plans import queries_streaming as qs
-
-    monkeypatch.setattr(qs, "_EVICT_WAIT_MAX_S", 1.5)
-    base = tmp_path / "scratch"
-    base.mkdir()
-    in_dir = str(base / "in")
-    os.makedirs(in_dir)
-    open(f"{in_dir}/part-0", "w").write("partial")  # no _SUCCESS
-
-    lock = str(base / "in_evict.lock")
-    stop = threading.Event()
-    held = threading.Event()
-
-    def stuck_holder():
-        # a live holder that never finishes its eviction: holds the
-        # flock until told to stop
-        fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        held.set()
-        stop.wait()
-        os.close(fd)
-
-    holder = threading.Thread(target=stuck_holder, daemon=True)
-    holder.start()
-    assert held.wait(5)
-    try:
-        def write_v2(p):
-            os.makedirs(p)
-            open(f"{p}/part-0", "w").write("v2")
-            open(f"{p}/_SUCCESS", "w").close()
-
-        out = qs._ensure_replay(spark, in_dir, write_v2)
-    finally:
-        stop.set()
-        holder.join()
-    # deadline exhausted: the session serves its OWN complete copy,
-    # never the partial occupant
-    assert out != in_dir
-    assert os.path.basename(out).startswith("in_stage")
-    assert open(f"{out}/part-0").read() == "v2"
-    assert os.path.exists(f"{out}/_SUCCESS")
-    # the loser never acquired the flock, so the partial occupant is
-    # NOT evicted — rmtree without holding the lock is the round-6
-    # race this whole protocol exists to prevent
-    assert open(f"{in_dir}/part-0").read() == "partial"  # untouched
-
-
-def test_stream_replay_environmental_lock_error_resolves_immediately(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r9: only PermissionError means cross-user contention.
-    Any other OSError from opening the lock file (ENOSPC, EROFS, a
-    racing scratch sweep removing the parent — here modeled by a
-    DIRECTORY squatting on the lock path, IsADirectoryError) is
-    environmental: the old blanket handler busy-waited the FULL
-    deadline before serving the staging copy, masking a hard failure
-    into a one-minute stall per call. It must now fall through to the
-    own-staging-copy resolution immediately."""
-    import os
-    import time
-
-    from map_reduce_showcase_spark.plans import queries_streaming as qs
-
-    # generous deadline so a regression to contend-and-wait is
-    # unmistakable in the elapsed time, not just slow
-    monkeypatch.setattr(qs, "_EVICT_WAIT_MAX_S", 30)
-    base = tmp_path / "scratch"
-    base.mkdir()
-    in_dir = str(base / "in")
-    os.makedirs(in_dir)
-    open(f"{in_dir}/part-0", "w").write("partial")  # no _SUCCESS
-    os.makedirs(str(base / "in_evict.lock"))  # os.open(..., O_WRONLY) → EISDIR
-
-    def write_v2(p):
-        os.makedirs(p)
-        open(f"{p}/part-0", "w").write("v2")
-        open(f"{p}/_SUCCESS", "w").close()
-
-    t0 = time.time()
-    out = qs._ensure_replay(spark, in_dir, write_v2)
-    elapsed = time.time() - t0
-    assert elapsed < 10, f"busy-waited {elapsed:.1f}s on an environmental error"
-    assert out != in_dir
-    assert os.path.basename(out).startswith("in_stage")
-    assert open(f"{out}/part-0").read() == "v2"
-
-    # and when the staging copy is ALSO unusable, it raises instead
-    # of stalling: incomplete stage + environmental lock error is a
-    # hard failure, not a deadline wait. (in_dir keeps its non-empty
-    # partial occupant so the fast-path rename still loses — an EMPTY
-    # in_dir would be replaced by rename() outright.)
-    assert os.path.exists(f"{in_dir}/part-0")
-
-    def write_partial(p):
-        os.makedirs(p)
-        open(f"{p}/part-0", "w").write("v2")  # no _SUCCESS
-
-    t0 = time.time()
-    try:
-        qs._ensure_replay(spark, in_dir, write_partial)
-        raised = False
-    except RuntimeError:
-        raised = True
-    assert raised
-    assert time.time() - t0 < 10
-    assert open(f"{in_dir}/part-0").read() == "partial"  # untouched
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["rows"] > 0
+    assert any(e.startswith("mrs_bkt_orders_") for e in out["entries"]), out
+    assert any(e.startswith("stream_tumbling_") for e in out["entries"]), out
+    assert not out["after_stop"], f"scratch root survived spark.stop(): {out['root']}"
+    assert not mrs_entries(child_tmp)
+    assert not mrs_entries(tempfile.gettempdir()) - before
 
 
 def test_stamp_increasing_mtimes_orders_parts_by_filename(tmp_path):
-    """The shared replay-mtime stamper (round-12 review: extracted so
-    a hardening can't be applied to one stateful fixture and missed
-    in the other): part files get strictly increasing mtimes in
+    """The shared replay-mtime stamper (one helper, so a hardening
+    can't be applied to one stateful replay and missed in the
+    other): part files get strictly increasing mtimes in
     FILENAME order regardless of their natural (task-completion)
     mtimes, non-part files are untouched, all stamps land in the
     past, and later appends stamped at time.time() sort after every
