@@ -1,3 +1,10 @@
+"""Document-level dedup operators.
+
+The input contract, stated once: an operator that reads documents
+reads a frame with a ``doc_id`` column and a ``text`` column (the
+``documents`` table's shape), and reports documents by ``doc_id``.
+"""
+
 from .components import connected_components
 from .exact import exact_dup_groups, exact_dup_stats
 from .jaccard import jaccard_filter, ngram_jaccard_pairs, shingle_rows, shingle_sizes

@@ -23,10 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: round budget of the label propagation; near-dup graphs settle in 3-6
+_MAX_ROUNDS = 20
 
-def connected_components(
-    pairs: DataFrame, max_rounds: int = 20
-) -> DataFrame:
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(doc_id, component) from an undirected (d1, d2) edge list;
     component = min doc_id reachable. Isolated nodes absent from
     ``pairs`` are absent from the output (join the doc table with a
@@ -43,7 +44,7 @@ def connected_components(
         .select("node", F.col("node").alias("component"))
         .localCheckpoint()
     )
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         neighbor_min = (
             edges.join(labels, edges.b == labels.node)
             .groupBy("a")
@@ -72,9 +73,8 @@ def connected_components(
     else:
         edges.unpersist()
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds "
-            "(graph diameter exceeds the budget); raise max_rounds or "
-            "switch to the large-star/small-star variant"
+            f"connected_components did not converge in _MAX_ROUNDS = {_MAX_ROUNDS} "
+            "rounds (the graph diameter exceeds the budget)"
         )
     edges.unpersist()
     return labels.select(F.col("node").alias("doc_id"), "component")

@@ -27,8 +27,6 @@ def contamination_report(
     is_benchmark: Column,
     n: int = 2,
     flag_threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Per corpus-document overlap with the benchmark shingle set:
     ``(doc_id, n_shingles, n_overlap, overlap_frac, contaminated)``.
@@ -37,10 +35,10 @@ def contamination_report(
     selecting the eval set; all other documents are the corpus
     under test. Documents with zero shingles (< n tokens) carry no
     n-gram evidence and are omitted, matching the SQL oracle."""
-    sh = shingle_rows(docs, n, text_col, id_col)
+    sh = shingle_rows(docs, n)
     # the flag is a function of the source row, not the shingle, so
     # attach it with one id-only join onto the inverted index
-    ids = docs.select(F.col(id_col).alias("doc_id"), is_benchmark.alias("_bench"))
+    ids = docs.select("doc_id", is_benchmark.alias("_bench"))
     sh = sh.join(ids, "doc_id")
     bench = sh.filter(F.col("_bench")).select("shingle").distinct()
     corpus = sh.filter(~F.col("_bench")).select("doc_id", "shingle")

@@ -15,14 +15,14 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint
 
 
-def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dup_groups(docs: DataFrame) -> DataFrame:
     """Duplicate groups: fingerprint → (keeper, n_copies) for groups
     with >1 member. ``keeper`` = min id (deterministic survivor)."""
     return (
-        docs.selectExpr(id_col, f"{fingerprint(text_col)} AS fp")
+        docs.selectExpr("doc_id", f"{fingerprint('text')} AS fp")
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias("keeper"),
+            F.min("doc_id").alias("keeper"),
             F.count(F.lit(1)).alias("n_copies"),
         )
         .filter(F.col("n_copies") > 1)
@@ -30,10 +30,10 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def exact_dup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dup_stats(docs: DataFrame) -> DataFrame:
     """One-row corpus summary: total docs, distinct fingerprints,
     number of excess copies an exact dedup pass would remove."""
-    return docs.selectExpr(f"{fingerprint(text_col)} AS fp").agg(
+    return docs.selectExpr(f"{fingerprint('text')} AS fp").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count_distinct(F.col("fp")).alias("n_distinct"),
         (F.count(F.lit(1)) - F.count_distinct(F.col("fp"))).alias("n_dupes"),

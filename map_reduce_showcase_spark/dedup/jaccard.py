@@ -9,7 +9,9 @@ Scale: the self-join shuffles on the shingle — high-frequency
 shingles (boilerplate) are the skew risk; drop shingles with
 document-frequency above a cap first (standard practice — a shingle
 shared by millions of docs carries no dedup signal but creates a
-quadratic bucket). ``max_shingle_df`` implements that cap.
+quadratic bucket). :func:`cap_shingle_df` implements that cap;
+:func:`containment_pairs` applies it, :func:`ngram_jaccard_pairs`
+pairs the whole index.
 """
 
 from __future__ import annotations
@@ -21,12 +23,7 @@ from pyspark.sql.window import Window
 from ..functions.text import portable_hash60, shingles, tokens
 
 
-def shingle_rows(
-    docs: DataFrame,
-    n: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shingle_rows(docs: DataFrame, n: int = 2) -> DataFrame:
     """(doc_id, shingle) inverted-index rows, distinct per doc.
 
     The raw text is rebalanced first, so a single parquet file does
@@ -38,18 +35,15 @@ def shingle_rows(
 
     return (
         rebalance(docs)
-        .selectExpr(f"{id_col} AS doc_id", f"{tokens(text_col)} AS _toks")
+        .selectExpr("doc_id", f"{tokens('text')} AS _toks")
         .selectExpr("doc_id", f"explode(array_distinct({shingles('_toks', n)})) AS shingle")
     )
 
 
-def cap_shingle_df(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
+def cap_shingle_df(sh: DataFrame, max_shingle_df: int) -> DataFrame:
     """Drop shingles whose corpus document frequency exceeds the cap
     (boilerplate defense — a shingle shared by millions of docs
-    carries no dedup signal but creates a quadratic join bucket).
-    None = no cap."""
-    if max_shingle_df is None:
-        return sh
+    carries no dedup signal but creates a quadratic join bucket)."""
     w = Window.partitionBy("shingle")
     return (
         sh.withColumn("_df", F.count(F.lit(1)).over(w))
@@ -86,13 +80,10 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 2,
     threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = None,
 ) -> DataFrame:
     """All pairs with n-gram Jaccard ≥ threshold:
     ``(d1, d2, jaccard)``, d1 < d2, jaccard rounded to 6 places."""
-    sh = cap_shingle_df(shingle_rows(docs, n, text_col, id_col), max_shingle_df)
+    sh = shingle_rows(docs, n)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -106,10 +97,8 @@ def containment_pairs(
     docs: DataFrame,
     n: int = 2,
     threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = None,
-    hash_shingles: bool = True,
+    *,
+    max_shingle_df: int,
 ) -> DataFrame:
     """Pairs with asymmetric shingle CONTAINMENT ≥ threshold in
     either direction: ``(d1, d2, c1, c2)`` where c1 = |∩|/|A| (the
@@ -123,24 +112,22 @@ def containment_pairs(
     shingle index serves both measures — only the normalizer of the
     verify arithmetic changes.
 
-    ``max_shingle_df`` applies the same boilerplate-shingle DF cap as
-    :func:`ngram_jaccard_pairs`, BEFORE both the intersection join
-    and the per-doc sizes (so both containment normalizers see the
-    capped index consistently).
+    ``max_shingle_df`` is the boilerplate-shingle DF cap
+    (:func:`cap_shingle_df`), applied BEFORE both the intersection
+    join and the per-doc sizes, so both containment normalizers see
+    the capped index consistently.
 
-    ``hash_shingles`` (default on) replaces each shingle string with
-    its portable 60-bit hash BEFORE the DF window and the self-join,
-    so both of this operator's shuffles — and the window's sort —
-    move and compare 8-byte longs instead of n-word strings (the
-    same carry-hashes-never-text rule the minhash, substring-run and
-    passage operators already follow; the hash is the md5-based
-    portable one so a DuckDB oracle replays identical arithmetic,
-    collisions included). String shuffle volume was the dominant
-    data-dependent term in the 16x scale sweep (tail ratio 3.27,
-    the highest non-control value in round 4)."""
-    sh = shingle_rows(docs, n, text_col, id_col)
-    if hash_shingles:
-        sh = sh.selectExpr("doc_id", f"{portable_hash60('shingle')} AS shingle")
+    Each shingle string is replaced by its portable 60-bit hash
+    BEFORE the DF window and the self-join, so both of this
+    operator's shuffles — and the window's sort — move and compare
+    8-byte longs instead of n-word strings, whose volume grows with
+    the corpus (the same carry-hashes-never-text rule the minhash,
+    substring-run and passage operators follow; the hash is the
+    md5-based portable one so a DuckDB oracle replays identical
+    arithmetic, collisions included)."""
+    sh = shingle_rows(docs, n).selectExpr(
+        "doc_id", f"{portable_hash60('shingle')} AS shingle"
+    )
     sh = cap_shingle_df(sh, max_shingle_df)
     a, b = sh.alias("a"), sh.alias("b")
     inter = (

@@ -60,8 +60,6 @@ def minhash_sketches(
     n: int = 2,
     num_hashes: int = 12,
     rows_per_band: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, sz, ks, bkeys), one row per doc: ``ks`` its distinct
     shingle hashes, ``sz = size(ks)``, and ``bkeys`` its
@@ -100,8 +98,8 @@ def minhash_sketches(
     return (
         rebalance(docs)
         .selectExpr(
-            f"{id_col} AS doc_id",
-            f"coalesce({tokens(text_col)}, CAST(array() AS ARRAY<STRING>)) AS _toks",
+            "doc_id",
+            f"coalesce({tokens('text')}, CAST(array() AS ARRAY<STRING>)) AS _toks",
         )
         .selectExpr("doc_id", f"array_distinct({hashed}) AS ks")
         .selectExpr("doc_id", "size(ks) AS sz", "ks", f"array({bkeys}) AS bkeys")
@@ -129,7 +127,7 @@ def band_rows(sketches: DataFrame) -> DataFrame:
 #: True iff no band BEFORE the joined one also matched — the
 #: exactly-once emission filter for banded candidate joins. ONE parsed
 #: expression: the Column-API lambda form of the same tree costs
-#: ~20 ms of py4j round trips per lambda to build (r18 build profile).
+#: ~20 ms of py4j round trips per lambda to build.
 _FIRST_BAND_MATCH = (
     "NOT exists(zip_with(slice(a.bkeys, 1, a.band), "
     "slice(b.bkeys, 1, b.band), (x, y) -> x = y), hit -> hit)"
@@ -176,8 +174,6 @@ def minhash_near_dup_pairs(
     num_hashes: int = 12,
     rows_per_band: int = 3,
     threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Full pipeline: per-document sketches → LSH band join with the
     exact-Jaccard verify ≥ threshold inside it, so the verify only
@@ -185,7 +181,7 @@ def minhash_near_dup_pairs(
     entire point at 100 TB). Output ``(d1, d2, jaccard)``; identical
     columns to :func:`ngram_jaccard_pairs` (its exhaustive twin) so
     tests can diff them for recall."""
-    sk = minhash_sketches(docs, n, num_hashes, rows_per_band, text_col, id_col)
+    sk = minhash_sketches(docs, n, num_hashes, rows_per_band)
     return keep_jaccard(lsh_candidate_pairs(sk), F.col("jac"), threshold)
 
 
@@ -196,8 +192,6 @@ def incremental_minhash_near_dup_pairs(
     num_hashes: int = 12,
     rows_per_band: int = 3,
     threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Batch-vs-corpus near-dup detection — the shape a 100 TB
     pipeline actually runs every day: dedup TODAY'S batch against
@@ -220,5 +214,5 @@ def incremental_minhash_near_dup_pairs(
     Output ``(d1, d2, jaccard)`` with d1 < d2, exactly like
     :func:`minhash_near_dup_pairs` restricted to pairs touching the
     batch."""
-    sk = minhash_sketches(docs, n, num_hashes, rows_per_band, text_col, id_col)
+    sk = minhash_sketches(docs, n, num_hashes, rows_per_band)
     return keep_jaccard(lsh_candidate_pairs(sk, is_new), F.col("jac"), threshold)

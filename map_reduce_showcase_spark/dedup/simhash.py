@@ -30,9 +30,7 @@ from ..functions.text import has_token, portable_hash60, tokens
 SIMHASH_BITS = 32
 
 
-def simhash_docs(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) with a ``SIMHASH_BITS``-bit fingerprint, for
     every doc with at least one token.
 
@@ -54,12 +52,12 @@ def simhash_docs(
         for j in range(SIMHASH_BITS)
     )
     hashed = (
-        f"transform(array_distinct({tokens(text_col)}), "
+        f"transform(array_distinct({tokens('text')}), "
         f"w -> {portable_hash60('w')})"
     )
     return (
-        rebalance(docs.filter(has_token(text_col)))
-        .selectExpr(f"{id_col} AS doc_id", f"{hashed} AS hv")
+        rebalance(docs.filter(has_token("text")))
+        .selectExpr("doc_id", f"{hashed} AS hv")
         .selectExpr("doc_id", f"CAST({bits} AS BIGINT) AS simhash")
     )
 
@@ -68,8 +66,6 @@ def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     n_bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(d1, d2, hamming) pairs with Hamming(simhash) ≤ max_hamming.
 
@@ -79,7 +75,7 @@ def simhash_near_pairs(
         raise ValueError("pigeonhole guarantee needs max_hamming <= n_bands - 1")
     band_bits = SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
-    sh = simhash_docs(docs, text_col, id_col)
+    sh = simhash_docs(docs)
     chunks = F.array(
         *[
             F.struct(

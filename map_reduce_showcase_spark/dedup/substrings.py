@@ -44,19 +44,14 @@ from ..functions.text import portable_hash60, tokens
 from ..functions.util import rebalance
 
 
-def gram_positions(
-    docs: DataFrame,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def gram_positions(docs: DataFrame, k: int = 10) -> DataFrame:
     """``(doc_id, pos, h)`` — every token k-gram start position with
     its 60-bit gram hash. ``pos`` is 1-indexed over the token
     sequence; docs shorter than ``k`` tokens emit nothing.
 
     The gram text exists only inside the hash expression — what
     explodes and shuffles is (int, int, long) rows."""
-    toks = rebalance(docs).selectExpr(f"{id_col} AS doc_id", f"{tokens(text_col)} AS _toks")
+    toks = rebalance(docs).selectExpr("doc_id", f"{tokens('text')} AS _toks")
     # sequence(1, size-k+1) — guarded: sequence(1, 0) would count DOWN
     idx = (
         f"CASE WHEN size(_toks) >= {k} THEN sequence(1, size(_toks) - {k - 1}) "
@@ -71,8 +66,6 @@ def gram_positions(
 def duplicate_runs(
     docs: DataFrame,
     k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_gram_df: int | None = None,
 ) -> DataFrame:
     """Maximal duplicated-substring runs per document:
@@ -94,7 +87,7 @@ def duplicate_runs(
     so a boilerplate mega-gram concentrates its rows in one h
     partition — that's what ``max_gram_df`` bounds, same defense as
     the inverted shingle index's DF cap."""
-    grams = gram_positions(docs, k, text_col, id_col)
+    grams = gram_positions(docs, k)
     wh = Window.partitionBy("h")
     hits = grams.withColumn("df", F.count(F.lit(1)).over(wh)).filter(
         F.col("df") >= 2

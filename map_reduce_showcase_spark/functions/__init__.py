@@ -1,23 +1,18 @@
 from .text import (
     language_id,
-    ngrams,
     punct_ratio,
     quality_score,
     stopword_ratio,
     token_count,
-    word_shingles,
 )
-from .vectors import cosine_similarity, dot, l2_norm
+from .vectors import dot, l2_norm
 
 __all__ = [
     "language_id",
-    "ngrams",
     "punct_ratio",
     "quality_score",
     "stopword_ratio",
     "token_count",
-    "word_shingles",
-    "cosine_similarity",
     "dot",
     "l2_norm",
 ]

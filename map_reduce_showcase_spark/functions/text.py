@@ -177,17 +177,6 @@ def shingles(toks: str, n: int) -> str:
     )
 
 
-def ngrams(text: str, n: int) -> str:
-    """Array of space-joined word n-grams of ``text``; empty when
-    < n tokens."""
-    return shingles(tokens(text), n)
-
-
-def word_shingles(text: str, n: int = 3) -> str:
-    """Distinct word n-gram shingles — the MinHash/Jaccard unit."""
-    return f"array_distinct({ngrams(text, n)})"
-
-
 def portable_hash60(s: str) -> str:
     """Deterministic 60-bit hash portable across Spark and DuckDB:
     first 15 hex chars of md5 as a BIGINT.

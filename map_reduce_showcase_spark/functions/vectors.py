@@ -33,19 +33,15 @@ def l2_norm(a: str) -> str:
     return f"SQRT(aggregate({_doubles(a)}, CAST(0.0 AS DOUBLE), (acc, x) -> acc + (x * x)))"
 
 
-def cosine_similarity(a: str, b: str) -> str:
-    """dot(a,b) / (||a||·||b||), deterministic double arithmetic."""
-    return f"({dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)}))"
-
-
 def cosine_from_norms(a: str, b: str, norm_a: str, norm_b: str) -> str:
-    """``cosine_similarity`` with the norms precomputed.
+    """dot(a,b) / (norm_a·norm_b), deterministic double arithmetic,
+    with the norms precomputed.
 
     Scoring joins evaluate cosine once per PAIR; the norm of each
     vector is pair-invariant, so folding it per pair triples the
     higher-order-function work (dot + 2 norms ≈ 3×dim element ops
     per pair instead of 1×dim). Callers compute ``l2_norm`` once per
-    row before the join and pass the columns here. The arithmetic is
-    the identical expression tree (sqrt of a sequential fold, one
-    divide), so results are bit-equal to ``cosine_similarity``."""
+    row before the join and pass the columns here. The norms are the
+    same sequential folds either way, so the result is bit-equal to
+    dividing by norms computed in place."""
     return f"({dot(a, b)} / ({norm_a} * {norm_b}))"

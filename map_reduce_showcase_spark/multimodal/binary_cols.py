@@ -171,9 +171,11 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_media(
-    media: DataFrame, target_w: int = 32, target_h: int = 32
-) -> DataFrame:
+#: width and height of every resized payload
+RESIZE_PX = 32
+
+
+def resize_media(media: DataFrame) -> DataFrame:
     """Resize stage: payload → fixed-target payload, 1:1 through
     Arrow-batched ``mapInPandas`` — the normalization step every
     vision-training pipeline runs before batching (a model consumes
@@ -181,7 +183,7 @@ def resize_media(
 
     STUB transform (no media libs in the container): the 'resized'
     payload is the original truncated/zero-padded to
-    ``target_w·target_h·3`` bytes — deterministic, so byte
+    ``RESIZE_PX·RESIZE_PX·3`` bytes — deterministic, so byte
     accounting is oracle-checkable. A real implementation swaps in
     PIL's ``Image.resize`` (or an ffmpeg scale filter for video)
     over the same batch iterator; schema and plumbing unchanged.
@@ -189,7 +191,7 @@ def resize_media(
     OUTPUT is fixed-size, so downstream partition sizing becomes
     deterministic — one of the quiet operational wins of resizing
     early in the pipeline."""
-    out_n = target_w * target_h * 3
+    out_n = RESIZE_PX * RESIZE_PX * 3
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

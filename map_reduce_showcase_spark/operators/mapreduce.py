@@ -47,8 +47,7 @@ def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:
     job's writer hash-partitions it without a sort. The reference's
     (count asc, word asc) presentation order (W4,
     ``src/app/wc.rs:60-66``) is applied by :func:`format_word_count`
-    on the collected rows, or by :func:`word_count_report` for a
-    caller that wants an ordered frame.
+    on the collected rows.
     """
     from ..functions.util import rebalance
 
@@ -58,13 +57,6 @@ def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def word_count_report(text_df: DataFrame, text_col: str = "text") -> DataFrame:
-    """wc as a frame in the reference's output order (count asc, word
-    asc). The job façade does not use it: its output comes from
-    :func:`format_word_count`, which sorts the rows itself."""
-    return word_count(text_df, text_col).orderBy(F.col("cnt").asc(), F.col("word").asc())
 
 
 def format_word_count(rows) -> str:
@@ -77,16 +69,10 @@ def format_word_count(rows) -> str:
     return "".join(f"{r['cnt']}\t{r['word']}\n" for r in rows)
 
 
-def grep_lines(
-    lines_df: DataFrame,
-    term: str,
-    path_col: str = "path",
-    line_no_col: str = "line_no",
-    line_col: str = "line",
-) -> DataFrame:
-    """grep: keep lines containing ``term`` (substring, NOT regex —
-    ``src/app/grep.rs:41-46``), with file provenance and 1-based line
-    numbers. Output ``(path, line_no, line)``.
+def grep_lines(lines_df: DataFrame, term: str) -> DataFrame:
+    """grep: keep the ``(path, line_no, line)`` rows whose line
+    contains ``term`` (substring, NOT regex —
+    ``src/app/grep.rs:41-46``); ``line_no`` is 1-based.
 
     The reference's reduce phase only re-sorts matches per file
     (``src/app/grep.rs:64-78``); declaratively that is presentation
@@ -94,11 +80,7 @@ def grep_lines(
     down to the scan — the reference always read 100% of every file
     then filtered in the map fn (SURVEY.md §4.1).
     """
-    return lines_df.filter(F.col(line_col).contains(term)).select(
-        F.col(path_col).alias("path"),
-        F.col(line_no_col).alias("line_no"),
-        F.col(line_col).alias("line"),
-    )
+    return lines_df.filter(F.col("line").contains(term)).select("path", "line_no", "line")
 
 
 def format_grep(rows) -> str:
@@ -134,8 +116,9 @@ def vertex_degree(edges_df: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     )
 
 
-def parse_edge_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Parse whitespace-separated ``src dst`` u64 edge lines (V1,
+def parse_edge_lines(lines_df: DataFrame) -> DataFrame:
+    """Parse the whitespace-separated ``src dst`` u64 edge in each
+    row's ``line`` column (V1,
     ``src/app/vertex_degree.rs:12-27``). The reference fails the
     whole task on a malformed line; callers get an ``(src, dst,
     valid)`` frame and decide what an invalid row does (the job
@@ -147,7 +130,7 @@ def parse_edge_lines(lines_df: DataFrame, line_col: str = "line") -> DataFrame:
     negative vertex id is malformed. ``try_element_at`` and
     ``try_cast`` yield null instead of raising, so a missing token or
     a non-numeric one reaches ``valid`` under ANSI mode too."""
-    parts = F.split(F.trim(F.col(line_col)), r"\s+")
+    parts = F.split(F.trim(F.col("line")), r"\s+")
     src = F.try_element_at(parts, F.lit(1)).try_cast("long")
     dst = F.try_element_at(parts, F.lit(2)).try_cast("long")
     return lines_df.select(

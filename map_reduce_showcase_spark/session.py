@@ -44,7 +44,7 @@ def scratch_dir(spark: SparkSession, name: str) -> str:
 def get_spark(
     app_name: str = "map-reduce-showcase-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
@@ -54,8 +54,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)

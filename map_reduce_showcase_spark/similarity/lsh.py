@@ -13,8 +13,8 @@ exact bucketing — and so every run of the engine buckets identically
 (re-runnable incremental indexing at 100 TB: new data buckets the
 same way forever, no stored model needed).
 
-Scale: the bucket join shuffles each side once on the bucket id;
-multiprobe trades recall for fan-out without rebucketing: a query also
+Scale: the bucket join shuffles each side once on the bucket id.
+Probing buys recall with fan-out, without rebucketing: a query also
 searches every bucket at Hamming distance 1 from its own, one per
 plane (all of them, not only the one whose sign is least certain).
 """
@@ -33,19 +33,19 @@ DIM = 64
 #: 4 planes → 16 cells. For weakly-correlated vectors P(two vectors
 #: agree on one plane) ≈ 1 − θ/π; with θ≈60° that is ~0.67 per
 #: plane, so plane count is a direct recall/fan-out dial — 8 planes
-#: drove recall to ~0.67^8≈4% on this data. 4 planes + Hamming-1
-#: multiprobe lands recall ≈0.6 at ~5/16 of the scoring work.
+#: drove recall to ~0.67^8≈4% on this data. 4 planes + the Hamming-1
+#: probes land recall ≈0.6 at ~5/16 of the scoring work.
 N_PLANES = 4
 
 
-def hyperplane_signs(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[float]]:
+def hyperplane_signs(n_planes: int = N_PLANES) -> list[list[float]]:
     """Deterministic ±1 hyperplane matrix: entry (p, d) is +1 iff the
     low bit of md5(f"{p}:{d}") is set. Reproducible everywhere —
     Python, executors, the SQL oracle — with no RNG state."""
     return [
         [
             1.0 if hashlib.md5(f"{p}:{d}".encode()).digest()[-1] & 1 else -1.0
-            for d in range(dim)
+            for d in range(DIM)
         ]
         for p in range(n_planes)
     ]
@@ -59,18 +59,23 @@ def _plane_sql(plane: list[float]) -> str:
     return "array(" + ",".join(f"{v:.1f}D" for v in plane) + ")"
 
 
+def _sign_bits(emb_sql: str, planes: list[list[float]]) -> str:
+    """SQL text ``(0 + …)`` whose bit p is (emb · plane_p ≥ 0)."""
+    terms = " + ".join(
+        f"(CASE WHEN {dot(emb_sql, _plane_sql(plane))} >= 0 "
+        f"THEN {1 << p} ELSE 0 END)"
+        for p, plane in enumerate(planes)
+    )
+    return f"(0 + {terms})"
+
+
 def lsh_bucket(emb_sql: str, planes: list[list[float]]) -> Column:
     """Bucket id column: bit p = (emb · plane_p ≥ 0). ``emb_sql`` is
     SQL text (a column name), and the whole bucket — every plane's
     dot-product fold included — is ONE parsed expression: the
     Column-API form of the same tree cost 0.24 s of py4j round trips
     per plan build."""
-    terms = " + ".join(
-        f"(CASE WHEN {dot(emb_sql, _plane_sql(plane))} >= 0 "
-        f"THEN {1 << p} ELSE 0 END)"
-        for p, plane in enumerate(planes)
-    )
-    return F.expr(f"CAST((0 + {terms}) AS INT)")
+    return F.expr(f"CAST({_sign_bits(emb_sql, planes)} AS INT)")
 
 
 def banded_band_keys(
@@ -82,18 +87,11 @@ def banded_band_keys(
     restores recall — the classic S-curve, same shape as MinHash
     banding but for cosine. One parsed expression per key (see
     :func:`lsh_bucket`)."""
-    n_bands = len(planes) // rows_per_band
-    keys = []
-    for b in range(n_bands):
-        terms = " + ".join(
-            f"(CASE WHEN {dot(emb_sql, _plane_sql(planes[b * rows_per_band + j]))}"
-            f" >= 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(rows_per_band)
-        )
-        keys.append(
-            F.expr(f"CAST(({b * (1 << rows_per_band)} + (0 + {terms})) AS INT)")
-        )
-    return keys
+    r = rows_per_band
+    return [
+        F.expr(f"CAST(({b << r} + {_sign_bits(emb_sql, planes[b * r:(b + 1) * r])}) AS INT)")
+        for b in range(len(planes) // r)
+    ]
 
 
 def cosine_pairs_lsh(
@@ -164,14 +162,11 @@ def topk_cosine_lsh(
     queries: DataFrame,
     candidates: DataFrame,
     k: int = 5,
-    planes: list[list[float]] | None = None,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate top-k per query, searching the query's bucket
-    plus (with ``multiprobe``) every Hamming-1 neighbor bucket — one
-    probe per plane, each flipping one sign bit; probing instead of
-    rebucketing is how LSH recall is tuned at scale without touching
-    the index. Output ``(query_id, cand_id, rnk, cosine)`` — same
+    plus every Hamming-1 neighbor bucket — one probe per plane, each
+    flipping one sign bit of the ``N_PLANES``-bit bucket; probing
+    instead of rebucketing buys recall without touching the index. Output ``(query_id, cand_id, rnk, cosine)`` — same
     shape as the exact ``topk_cosine`` so tests can measure recall.
 
     Each row's bucket is projected once, as ``b0``, before the probe
@@ -180,12 +175,8 @@ def topk_cosine_lsh(
     side of the plan instead of once per probe."""
     from ..functions.util import rebalance
 
-    if planes is None:
-        planes = hyperplane_signs()
-    bucket = lsh_bucket("embedding", planes)
-    probes = ", ".join(
-        ["b0"] + ([f"b0 ^ {1 << p}" for p in range(len(planes))] if multiprobe else [])
-    )
+    bucket = lsh_bucket("embedding", hyperplane_signs())
+    probes = ", ".join(["b0"] + [f"b0 ^ {1 << p}" for p in range(N_PLANES)])
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),

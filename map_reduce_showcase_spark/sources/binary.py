@@ -28,9 +28,7 @@ _AUDIO_EXT = ("wav", "mp3", "flac", "ogg")
 _VIDEO_EXT = ("mp4", "avi", "mkv", "webm")
 
 
-def read_binary_media(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
+def read_binary_media(spark: SparkSession, path: str) -> DataFrame:
     """Read a directory of media files as the standard media frame
     ``(media_id, media_type, payload)`` consumed by every operator
     in ``multimodal/``.
@@ -39,10 +37,7 @@ def read_binary_media(
     runs, clusters, and engines (the oracle recomputes it with
     ``zlib.crc32``); ``media_type`` is derived from the extension.
     """
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
+    df = spark.read.format("binaryFile").load(path)
     name = F.element_at(F.split(F.col("path"), "/"), -1)
     ext = F.lower(F.element_at(F.split(name, r"\."), -1))
     media_type = (

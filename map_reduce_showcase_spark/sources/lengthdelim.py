@@ -130,13 +130,7 @@ class LengthDelimitedDataSource(DataSource):
         return _Reader(self.options)
 
 
-def write_n_files_reference_format(
-    df,
-    out_dir: str,
-    n_reduce: int,
-    key_col: str = "key",
-    value_col: str = "value",
-) -> int:
+def write_n_files_reference_format(df, out_dir: str, n_reduce: int) -> int:
     """Write a (key binary, value binary) frame as ``n_reduce``
     reference-framed ``mr-out-{i}`` files — the write-side twin of
     :class:`LengthDelimitedDataSource`, completing bidirectional
@@ -154,9 +148,7 @@ def write_n_files_reference_format(
 
     out_dir = _local_path(out_dir)
     os.makedirs(out_dir, exist_ok=True)
-    part = df.select(
-        F.col(key_col).alias("key"), F.col(value_col).alias("value")
-    ).repartition(n_reduce, F.col("key"))
+    part = df.select("key", "value").repartition(n_reduce, F.col("key"))
 
     def _write(idx: int, rows):
         pairs = [(bytes(r["key"]), bytes(r["value"])) for r in rows]

@@ -58,11 +58,11 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def write_n_files(df: DataFrame, path: str, n: int, by_col: str | None = None) -> int:
+def write_n_files(df: DataFrame, path: str, n: int, by_col: str) -> int:
     """Reference-parity sink: ``n`` reduce partitions → up to ``n``
     output files (the reference's ``mr-out-{0..n-1}``). ``by_col``
     hash-distributes rows like ``ihash(key) % n_reduce``
-    (``src/lib.rs:201-208``); without it Spark round-robins.
+    (``src/lib.rs:201-208``).
 
     Returns the number of data files actually written: unlike the
     reference (whose reduce tasks write even empty files), Spark's
@@ -71,8 +71,7 @@ def write_n_files(df: DataFrame, path: str, n: int, by_col: str | None = None) -
     is a Hadoop FS listing, so it holds on any supported filesystem."""
     from pyspark.sql import functions as F
 
-    part = df.repartition(n, F.col(by_col)) if by_col else df.repartition(n)
-    part.write.mode("overwrite").parquet(path)
+    df.repartition(n, F.col(by_col)).write.mode("overwrite").parquet(path)
     return len(_data_file_sizes(df.sparkSession, path))
 
 

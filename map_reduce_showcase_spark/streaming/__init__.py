@@ -4,12 +4,10 @@ from .demo import (
     streaming_tumbling_counts,
     write_stream_foreach_batch,
 )
-from .stateful import streaming_user_running_totals
 
 __all__ = [
     "read_events_stream",
     "streaming_tumbling_counts",
     "streaming_dedup",
     "write_stream_foreach_batch",
-    "streaming_user_running_totals",
 ]

@@ -49,12 +49,12 @@ def streaming_tumbling_counts(
     )
 
 
-def streaming_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exact dedup on event_id within the watermark horizon
+def streaming_dedup(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup on event_id within a 1-hour watermark
     — ``dropDuplicates`` keeps per-key state; the watermark evicts
     state older than the horizon, which is what makes dedup feasible
     on an unbounded stream."""
-    return events.withWatermark("ts", watermark).dropDuplicates(["event_id", "ts"])
+    return events.withWatermark("ts", "1 hour").dropDuplicates(["event_id", "ts"])
 
 
 def write_stream_foreach_batch(
@@ -98,15 +98,15 @@ def materialize_events_for_streaming(
 
 
 def streaming_click_purchase_join(
-    events: DataFrame, horizon: str = "1 hour", watermark: str = "2 hours"
+    events: DataFrame, watermark: str = "2 hours"
 ) -> DataFrame:
     """Stream-stream interval join — the streaming twin of the batch
     ``events_funnel_1h``: every purchase joined to the same user's
-    clicks in the preceding ``horizon``.
+    clicks in the preceding hour.
 
     Both sides carry watermarks and the join condition bounds
     event-time distance, which is what lets Spark EVICT buffered
-    rows: a click older than (watermark + horizon) can never match a
+    rows: a click older than (watermark + 1 hour) can never match a
     future purchase, so state stays bounded on an unbounded stream —
     the discipline a 100 TB/day clickstream requires. Without the
     time bound the state store would grow forever (Spark rejects
@@ -136,7 +136,7 @@ def streaming_click_purchase_join(
     return purchases.join(
         clicks,
         (F.col("c_user") == F.col("p_user"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour"))
         & (F.col("click_ts") <= F.col("purchase_ts")),
         "inner",
     ).select(

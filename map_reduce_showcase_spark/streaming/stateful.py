@@ -24,46 +24,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = "user_id BIGINT, n_events BIGINT, total_value DOUBLE"
-STATE_SCHEMA = "n BIGINT, total DOUBLE"
-
 EXACT_OUTPUT_SCHEMA = "user_id BIGINT, n_events BIGINT, total_cents BIGINT"
 EXACT_STATE_SCHEMA = "n BIGINT, cents BIGINT"
 
 
-def streaming_user_running_totals(events: DataFrame) -> DataFrame:
-    """Running per-user (event count, value sum) maintained as
-    explicit state across micro-batches; emits the updated running
-    totals for each user seen in the batch."""
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def streaming_user_totals_exact(events: DataFrame) -> DataFrame:
     """Running per-user (event count, value sum in integer cents)
-    state — the hash-checkable twin of
-    :func:`streaming_user_running_totals`.
+    maintained as explicit state across micro-batches; emits the
+    updated running totals for each user seen in the batch.
 
     Accumulating ``floor(value*100)`` as int64 instead of raw
     doubles makes the running total ASSOCIATIVE and exact, so the

@@ -25,7 +25,7 @@ from map_reduce_showcase_spark.operators.mapreduce import (
     grep_lines,
     parse_edge_lines,
     vertex_degree,
-    word_count_report,
+    word_count,
 )
 from map_reduce_showcase_spark.sources.text import (
     read_lines_with_path,
@@ -96,7 +96,7 @@ def _expected_vertex_degree(paths: list[str]) -> str:
 @pytest.mark.parametrize("paths", [ALPHABET, GUTENBERG], ids=["alphabet2", "gutenberg"])
 def test_wc_golden(spark, paths):
     df = read_whole_files(spark, paths)
-    got = format_word_count(word_count_report(df, "content").collect())
+    got = format_word_count(word_count(df, "content").collect())
     assert got == _expected_wc(paths)
 
 

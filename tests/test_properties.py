@@ -521,3 +521,51 @@ def test_tracked_files_cite_no_missing_repo_file():
             if doc not in md_names:
                 missing.append(f"{rel}: {doc}")
     assert not missing, missing
+
+
+def test_every_operator_option_has_a_caller():
+    """Every defaulted parameter of a function in the operator
+    directories is set by some call in a tracked ``.py`` file — by
+    keyword, by position, or through ``*``/``**``. A parameter no
+    call sets is one value the code always takes plus a branch for
+    values it never sees, so it belongs in the body as a constant.
+    Calls are matched by name (``f(...)`` and ``x.f(...)``)."""
+    import ast
+    import collections
+    import pathlib
+    import subprocess
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=root, capture_output=True, text=True, check=True
+    ).stdout.splitlines()
+    operator_dirs = tuple(
+        f"map_reduce_showcase_spark/{d}/"
+        for d in ("dedup", "similarity", "operators", "sources", "multimodal", "streaming", "functions")
+    )
+    calls = collections.defaultdict(list)
+    defs = []
+    for rel in tracked:
+        for node in ast.walk(ast.parse((root / rel).read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+                if name:
+                    star = any(isinstance(a, ast.Starred) for a in node.args)
+                    star |= any(k.arg is None for k in node.keywords)
+                    calls[name].append((len(node.args), star, {k.arg for k in node.keywords}))
+            elif rel.startswith(operator_dirs) and isinstance(node, ast.FunctionDef):
+                defs.append((rel, node))
+    dead = []
+    for rel, fn in defs:
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        options = [(i, p.arg) for i, p in enumerate(positional) if i >= first]
+        options += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for i, param in options:
+            if not any(
+                star or param in kws or (i is not None and n_pos > i)
+                for n_pos, star, kws in calls[fn.name]
+            ):
+                dead.append(f"{rel}:{fn.lineno} {fn.name}({param})")
+    assert not dead, "defaulted parameters no call sets:\n" + "\n".join(dead)

@@ -66,7 +66,7 @@ def test_native_minhash_agrees_with_spark_ml_lsh(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from map_reduce_showcase_spark.dedup.minhash import minhash_near_dup_pairs
-    from map_reduce_showcase_spark.functions.text import word_shingles
+    from map_reduce_showcase_spark.functions.text import shingles, tokens
     from map_reduce_showcase_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -77,7 +77,9 @@ def test_native_minhash_agrees_with_spark_ml_lsh(spark, sf_dir):
 
     D = 1 << 18
     sh = (
-        docs.selectExpr("doc_id", f"explode({word_shingles('text')}) AS s")
+        docs.selectExpr(
+            "doc_id", f"explode(array_distinct({shingles(tokens('text'), 3)})) AS s"
+        )
         .select("doc_id", (F.abs(F.hash("s")) % D).alias("idx"))
         .distinct()
     )

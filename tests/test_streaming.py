@@ -121,15 +121,16 @@ def test_streaming_session_window_stateful(spark, sf_dir):
 
 def test_stateful_running_totals_match_batch(spark, sf_dir, events_dir):
     """applyInPandasWithState: per-user running totals across
-    micro-batches; each user's final update equals the batch
-    aggregate."""
+    micro-batches; each user's final update (the one with the most
+    events) equals the batch ``COUNT(*)`` and
+    ``SUM(floor(value * 100))``."""
     from map_reduce_showcase_spark.streaming.stateful import (
-        streaming_user_running_totals,
+        streaming_user_totals_exact,
     )
 
     stream = read_events_stream(spark, events_dir)
     q = (
-        streaming_user_running_totals(stream)
+        streaming_user_totals_exact(stream)
         .writeStream.format("memory")
         .queryName("t_state")
         .outputMode("update")
@@ -140,15 +141,23 @@ def test_stateful_running_totals_match_batch(spark, sf_dir, events_dir):
     final = (
         spark.table("t_state")
         .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("total_cents", "n_events").alias("total_cents"),
+        )
     )
     batch = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.floor(F.col("value") * 100)).alias("total_cents"),
+        )
     )
-    got = {(r["user_id"], r["n_events"]) for r in final.collect()}
-    want = {(r["user_id"], r["n_events"]) for r in batch.collect()}
+    cols = ("user_id", "n_events", "total_cents")
+    got = {tuple(r[c] for c in cols) for r in final.collect()}
+    want = {tuple(r[c] for c in cols) for r in batch.collect()}
+    assert want
     assert got == want
 
 
