@@ -4,16 +4,17 @@ pair).
 
 Iterative small-star label propagation: every node repeatedly adopts
 the minimum component id among itself and its neighbors until a
-fixed point. Convergence is O(graph diameter) rounds; near-dup
-graphs are overwhelmingly tiny cliques/chains, so 3-6 rounds settle
-real corpora.
+fixed point. Rounds grow with the graph's diameter: a path of d
+edges needs d + 1 rounds (d to carry the smallest id to the far end,
+one to see no change), so with a budget of 20 rounds a near-duplicate
+chain of 20 or more edges raises.
 
 Scale notes: each round is one join + one aggregation, both
 partitioned on the node id (consistent partitioning → AQE reuses the
 exchange); ``localCheckpoint`` truncates the growing lineage so
 round N doesn't replay rounds 1..N-1. This is the one deliberately
 iterative/driver-looped operator in the engine — the loop is over
-*rounds* (a handful), never over rows. The reference has no
+*rounds*, never over rows. The reference has no
 iterative operators at all (its only control flow is map→reduce,
 SURVEY.md §3).
 """
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: round budget of the label propagation; near-dup graphs settle in 3-6
+#: round budget of the label propagation (a path of d edges needs d + 1)
 _MAX_ROUNDS = 20
 
 
@@ -73,8 +74,10 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     else:
         edges.unpersist()
         raise RuntimeError(
-            f"connected_components did not converge in _MAX_ROUNDS = {_MAX_ROUNDS} "
-            "rounds (the graph diameter exceeds the budget)"
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds: a path "
+            f"of d edges needs d + 1 rounds, so a near-duplicate chain of {_MAX_ROUNDS} "
+            "or more edges exceeds the budget (ROADMAP direction 1: components in "
+            "logarithmic rounds)"
         )
     edges.unpersist()
     return labels.select(F.col("node").alias("doc_id"), "component")

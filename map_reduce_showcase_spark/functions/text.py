@@ -58,7 +58,7 @@ def _words(words: tuple[str, ...]) -> str:
 
 def tokens(text: str) -> str:
     """Lowercase letter/digit tokens of ``text``, empties dropped."""
-    return f"filter(split(lower({text}), {_regex(TOKEN_SPLIT)}), t -> length(t) > 0)"
+    return f"array_remove(split(lower({text}), {_regex(TOKEN_SPLIT)}), '')"
 
 
 def has_token(text: str) -> str:

@@ -2,7 +2,9 @@
 text.
 
 All built on ``zip_with``/``aggregate`` higher-order functions —
-JVM-side, codegen'd, no Python. Elements are cast to DOUBLE before
+JVM-side, no Python, but interpreted: Spark has no code generation
+for higher-order functions, so an operator that holds one runs
+outside whole-stage codegen. Elements are cast to DOUBLE before
 any arithmetic and accumulated with a sequential left fold so results
 are bit-reproducible (and replayable by the DuckDB oracle, which also
 folds sequentially).
@@ -18,7 +20,7 @@ from __future__ import annotations
 
 
 def _doubles(v: str) -> str:
-    return f"transform({v}, v_ -> CAST(v_ AS DOUBLE))"
+    return f"CAST({v} AS ARRAY<DOUBLE>)"
 
 
 def dot(a: str, b: str) -> str:

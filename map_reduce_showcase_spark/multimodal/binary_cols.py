@@ -114,34 +114,6 @@ def decode_media_meta(media: DataFrame) -> DataFrame:
     return media.mapInPandas(decode, schema=MEDIA_META_SCHEMA)
 
 
-EMBED_DIM = 8
-EMBED_SCHEMA = "media_id BIGINT, embedding ARRAY<DOUBLE>"
-
-
-def extract_embedding(media: DataFrame) -> DataFrame:
-    """Feature-extraction stage: payload → embedding vector via
-    Arrow-batched mapInPandas — the multimodal→vector bridge that
-    feeds the similarity operators. STUB model: dimension i is a
-    scaled 16-bit slice of the payload's md5 (deterministic, and
-    replayable by the SQL oracle); a real model swaps in CLIP/CLAP
-    inference over the same batch iterator, schema unchanged."""
-    import hashlib
-
-    def embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                h = hashlib.md5(payload).hexdigest()
-                vec = [
-                    int(h[4 * i : 4 * i + 4], 16) / 65535.0 - 0.5
-                    for i in range(EMBED_DIM)
-                ]
-                rows.append((mid, vec))
-            yield pd.DataFrame(rows, columns=["media_id", "embedding"])
-
-    return media.mapInPandas(embed, schema=EMBED_SCHEMA)
-
-
 def extract_frames(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
     """Frame-sampling stage (1:N row explosion through mapInPandas):
     slices the payload into fixed-size pseudo-frames. The real

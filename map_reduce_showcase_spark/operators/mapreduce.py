@@ -34,10 +34,7 @@ _NON_ALPHA = r"[^\p{L}]+"
 
 def tokenize(text: Column) -> Column:
     """Array of lowercase alphabetic-only tokens (wc W1)."""
-    return F.filter(
-        F.split(F.lower(text), _NON_ALPHA),
-        lambda w: F.length(w) > 0,
-    )
+    return F.array_remove(F.split(F.lower(text), _NON_ALPHA), "")
 
 
 def word_count(text_df: DataFrame, text_col: str = "text") -> DataFrame:

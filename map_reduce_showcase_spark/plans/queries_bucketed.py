@@ -77,10 +77,8 @@ def q3_bucketed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3-shape fact-fact join over BUCKETED tables: orders and
     lineitem both bucketed+sorted on orderkey, so the join plan has
     NO exchange on either fact side — the only shuffle left is the
-    5-row priority rollup. Cash-in of the promise at
-    ``q3_top_revenue_orders``: same relational semantics (the oracle
-    reads the plain parquet — layout must never change answers),
-    shuffle-free physical plan.
+    5-row priority rollup. The oracle reads the plain parquet: layout
+    must never change answers, only the physical plan.
 
     The merge hint pins sort-merge so the demonstration doesn't
     degrade to a broadcast at toy SF; at 100 TB neither side

@@ -220,9 +220,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     P>0.99 while the J≈0.1 background almost never collides — the
     candidate count is what the verify stage's cost scales with.
     At 100 TB the band equi-join is the only stage that touches
-    pairs; the high-DF shingle cap in ``dedup/minhash.py`` bounds
-    the boilerplate-driven bucket skew that join would otherwise
-    inherit."""
+    pairs. Nothing caps boilerplate-driven bucket skew: every shingle
+    is banded, so identical documents all meet in one band bucket and
+    only the sort-merge join's spill bounds that bucket (ROADMAP
+    direction 5 is the fix: collapse exact copies before banding)."""
     return minhash_near_dup_pairs(
         t(spark, sf_dir, "documents"), n=2, num_hashes=12, rows_per_band=3, threshold=0.7
     )

@@ -258,77 +258,6 @@ def events_funnel_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_multires_rollup",
-    oracle="""
-    SELECT CAST(time_bucket(INTERVAL '1 hour', ts) AS TIMESTAMP) AS bucket_hour,
-           CAST(time_bucket(INTERVAL '1 day', ts) AS TIMESTAMP) AS bucket_day,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY GROUPING SETS (
-      (time_bucket(INTERVAL '1 hour', ts)),
-      (time_bucket(INTERVAL '1 day', ts))
-    )
-    """,
-    tags=("events", "rollup"),
-)
-def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style multi-resolution continuous aggregate: hour
-    and day rollups of the event stream in ONE pass via grouping
-    sets (one expand + one shuffle — never two scans). The batch
-    form of a TimescaleDB continuous aggregate; incremental refresh
-    is the streaming tumbling query."""
-    ev = t(spark, sf_dir, "events").select(
-        F.date_trunc("hour", F.col("ts")).alias("bucket_hour"),
-        F.date_trunc("day", F.col("ts")).alias("bucket_day"),
-        "value",
-    )
-    return (
-        ev.groupingSets([["bucket_hour"], ["bucket_day"]], "bucket_hour", "bucket_day")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec6("value")).cast("double").alias("sum_value"),
-        )
-    )
-
-
-@register(
-    "events_latest_per_user",
-    oracle="""
-    SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-           CAST(ts AS TIMESTAMP) AS last_ts
-    FROM (
-      SELECT user_id, event_id, event_type, ts,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-                                ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
-    tags=("events", "dedup"),
-)
-def events_latest_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Latest-record-per-key dedup (row_number = 1 over ts desc) —
-    the CDC/snapshot-compaction primitive. One shuffle on the key;
-    at 100 TB this is the pattern that replaces ``dropDuplicates``
-    when "which duplicate survives" matters."""
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        t(spark, sf_dir, "events")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-            F.col("ts").alias("last_ts"),
-        )
-    )
-
-
-@register(
     "events_asof_purchase_click",
     oracle="""
     SELECT event_id AS purchase_id, user_id,
@@ -415,106 +344,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_gapfill_1h",
-    oracle="""
-    WITH hourly AS (
-      SELECT time_bucket(INTERVAL '1 hour', ts) AS h, event_type,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sv
-      FROM events GROUP BY 1, 2
-    ),
-    bounds AS (
-      SELECT min(time_bucket(INTERVAL '1 hour', ts)) AS mn,
-             max(time_bucket(INTERVAL '1 hour', ts)) AS mx
-      FROM events
-    ),
-    grid AS (
-      SELECT unnest(generate_series(mn, mx, INTERVAL 1 hour)) AS h FROM bounds
-    ),
-    full_grid AS (
-      SELECT g.h, ty.event_type
-      FROM grid g, (SELECT DISTINCT event_type FROM events) ty
-    ),
-    joined AS (
-      SELECT fg.h, fg.event_type,
-             COALESCE(n, 0) AS n_events,
-             (n IS NULL) AS is_gap,
-             CASE WHEN n IS NOT NULL THEN sv / n END AS avg_raw
-      FROM full_grid fg LEFT JOIN hourly USING (h, event_type)
-    )
-    SELECT event_type, h AS hour_ts,
-           CAST(n_events AS BIGINT) AS n_events, is_gap,
-           round(last_value(avg_raw IGNORE NULLS) OVER (
-             PARTITION BY event_type ORDER BY h
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-             AS avg_value_filled
-    FROM joined
-    """,
-    tags=("events", "timeseries", "gapfill"),
-)
-def events_gapfill_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style downsample + gap-fill: hourly per-type
-    aggregates re-gridded onto a dense hour axis (``sequence`` +
-    explode), missing buckets flagged and forward-filled with the
-    last observed hourly average (``last(..., ignorenulls)`` over a
-    running frame) — the standard time-series normalization before
-    joining sensor/metric streams.
-
-    Shape at 100 TB: the raw scan reduces to |types| x |hours| rows
-    BEFORE any window work, so the fill's per-type sort is over the
-    tiny grid, not the events table; the grid build is a constant
-    frame. Averages divide an exact decimal sum by the bucket count,
-    so the fill replays bit-identically in the oracle."""
-    ev = t(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        F.window("ts", "1 hour").alias("w"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(dec6("value")).cast("double").alias("sv"),
-    ).select(F.col("w.start").alias("h"), "event_type", "n", "sv")
-
-    # bounds and the type dimension both come from the tiny hourly
-    # frame, not the raw table: min/max of the hour buckets equal the
-    # hour-truncated min/max ts, and every event type has ≥1 bucket —
-    # so the raw table is scanned exactly ONCE. The |types|×|hours|
-    # frame is checkpointed because its three consumers build
-    # DIFFERENT aggregates on top (Spark plans distinct partial-agg
-    # exchanges, so exchange reuse can't kick in).
-    hourly = hourly.localCheckpoint(eager=False)
-    bounds = hourly.agg(F.min("h").alias("mn"), F.max("h").alias("mx"))
-    grid = bounds.select(
-        F.explode(F.sequence("mn", "mx", F.expr("INTERVAL 1 HOUR"))).alias("h")
-    )
-    types = hourly.select("event_type").distinct()
-    full_grid = grid.crossJoin(types)  # |hours| x |types| — constant-size frames
-
-    from pyspark.sql.window import Window
-
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    joined = full_grid.join(hourly, ["h", "event_type"], "left").select(
-        "event_type",
-        F.col("h").alias("hour_ts"),
-        F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n_events"),
-        F.col("n").isNull().alias("is_gap"),
-        F.when(F.col("n").isNotNull(), F.col("sv") / F.col("n")).alias("avg_raw"),
-        F.col("h"),
-    )
-    return joined.select(
-        "event_type",
-        "hour_ts",
-        "n_events",
-        "is_gap",
-        F.round(F.last("avg_raw", ignorenulls=True).over(w), 6).alias(
-            "avg_value_filled"
-        ),
-    )
-
-
-@register(
     "events_rate_anomaly",
     oracle="""
     WITH hourly AS (
@@ -545,7 +374,7 @@ def events_gapfill_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND (CAST(s2 AS DOUBLE)
            - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / 24.0) > 0
     """,
-    tags=("events", "timeseries", "anomaly"),
+    tags=("events", "timeseries", "anomaly", "math"),
 )
 def events_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-rate anomaly detection: each hour's event count
@@ -556,7 +385,7 @@ def events_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulate engine-specific float state instead).
 
     Shape at 100 TB: the raw scan reduces to |types| x |hours| rows
-    before any window work (same aggregate-first trick as gap-fill);
+    before any window work (aggregate first, window after);
     the trailing frame is rows-based over that tiny series. The
     z>3 flag is the standard ops alert for rate spikes/drops."""
     from pyspark.sql.window import Window
@@ -706,114 +535,6 @@ def events_sessionize_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_sequence_match",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id,
-             MIN(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
-             MIN(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
-             MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
-      FROM events GROUP BY user_id
-    )
-    SELECT COUNT(*) AS n_users,
-           COUNT(*) FILTER (WHERE t_view IS NOT NULL AND t_click IS NOT NULL
-                              AND t_purchase IS NOT NULL) AS n_all_three,
-           COUNT(*) FILTER (WHERE t_view < t_click
-                              AND t_click < t_purchase) AS n_ordered_path
-    FROM firsts
-    """,
-    tags=("events", "sequence", "cep"),
-)
-def events_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-sequence pattern match (MATCH_RECOGNIZE-lite): users
-    whose FIRST view precedes their first click precedes their
-    first purchase — the strict-order journey query event
-    analytics engines special-case. For first-occurrence
-    semantics the pattern collapses to one conditional-MIN
-    aggregate per user plus scan-local comparisons: one shuffle,
-    no window, no per-event state machine (the general regex-over-
-    events form needs the sessionize + window machinery this
-    registry also has; the aggregate form is the one that scales
-    unconditionally). NULL-safe by construction: a missing stage
-    makes the < chain NULL → not counted."""
-    ev = t(spark, sf_dir, "events")
-
-    def first_ts(et: str):
-        return F.min(F.when(F.col("event_type") == et, F.col("ts")))
-
-    firsts = ev.groupBy("user_id").agg(
-        first_ts("view").alias("t_view"),
-        first_ts("click").alias("t_click"),
-        first_ts("purchase").alias("t_purchase"),
-    )
-    all3 = (
-        F.col("t_view").isNotNull()
-        & F.col("t_click").isNotNull()
-        & F.col("t_purchase").isNotNull()
-    )
-    ordered = (F.col("t_view") < F.col("t_click")) & (
-        F.col("t_click") < F.col("t_purchase")
-    )
-    return firsts.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.count(F.when(all3, 1)).alias("n_all_three"),
-        F.count(F.when(ordered, 1)).alias("n_ordered_path"),
-    )
-
-
-@register(
-    "events_stickiness_dau_wau",
-    oracle="""
-    WITH daily AS (
-      SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
-             CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             COUNT(DISTINCT user_id) AS dau
-      FROM events GROUP BY 1, 2
-    ),
-    weekly AS (
-      SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
-             COUNT(DISTINCT user_id) AS wau
-      FROM events GROUP BY 1
-    )
-    SELECT d.week,
-           CAST(COUNT(*) AS INT) AS n_days,
-           round(CAST(SUM(d.dau) AS DOUBLE) / COUNT(*) / ANY_VALUE(w.wau), 6)
-             AS stickiness
-    FROM daily d JOIN weekly w ON d.week = w.week
-    GROUP BY d.week
-    """,
-    tags=("events", "retention", "distinct"),
-)
-def events_stickiness_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stickiness (mean DAU / WAU per week): the engagement ratio
-    product analytics computes daily. Two exact COUNT(DISTINCT)
-    aggregations at different grains over one scan lineage — daily
-    inside weeks, then weekly — joined on the week key (the weekly
-    frame is tiny and arrives hash-partitioned on its own group
-    key). At 100 TB both distincts become mergeable HLL sketches
-    (`approx_count_distinct`) so the daily sketch UNIONS into the
-    weekly one instead of re-scanning — the exact form here is the
-    oracle-checkable baseline for that."""
-    ev = t(spark, sf_dir, "events")
-    week = F.date_trunc("week", F.col("ts")).alias("week")
-    daily = ev.groupBy(
-        week, F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.countDistinct("user_id").alias("dau"))
-    weekly = ev.groupBy(week).agg(F.countDistinct("user_id").alias("wau"))
-    return (
-        daily.join(weekly, "week")
-        .groupBy("week")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("n_days"),
-            F.round(
-                F.sum("dau").cast("double") / F.count(F.lit(1)) / F.any_value("wau"),
-                6,
-            ).alias("stickiness"),
-        )
-    )
-
-
-@register(
     "events_props_map_explode",
     oracle="""
     WITH kv AS (
@@ -852,43 +573,4 @@ def events_props_map_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(v).alias("sum_val"),
         F.min(v).alias("min_val"),
         F.max(v).alias("max_val"),
-    )
-
-
-@register(
-    "events_variant_extract",
-    oracle="""
-    SELECT event_type,
-           COUNT(*) FILTER (WHERE CAST(json_extract_string(props, '$.k')
-                                       AS BIGINT) > 50) AS n_high,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT))
-                FILTER (WHERE CAST(json_extract_string(props, '$.k')
-                                   AS BIGINT) > 50) AS BIGINT) AS sum_high
-    FROM events
-    GROUP BY event_type
-    """,
-    tags=("events", "json", "variant"),
-)
-def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 VARIANT type: parse the JSON props column once into
-    the binary VARIANT encoding (`parse_json`) and extract typed
-    values with `variant_get` — the modern replacement for repeated
-    get_json_object string re-parses: VARIANT stores a parsed,
-    shredded binary form, so N extractions cost one parse, and at
-    100 TB the column can persist as VARIANT in parquet so the
-    parse happens once at INGEST, never per query. Filter + sum on
-    the extracted bigint; the oracle replays via DuckDB's JSON
-    extraction (same values, different physical encoding — which
-    is the point: VARIANT is an encoding choice, not a semantics
-    change)."""
-    ev = t(spark, sf_dir, "events")
-    k = F.expr("variant_get(parse_json(props), '$.k', 'bigint')")
-    high = F.col("k") > 50
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.when(high, 1)).alias("n_high"),
-            F.sum(F.when(high, F.col("k"))).alias("sum_high"),
-        )
     )

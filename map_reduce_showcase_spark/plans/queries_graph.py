@@ -342,37 +342,6 @@ def _triangle_summary(spark: SparkSession, sf_dir: str, chunk_cap: int) -> DataF
     )
 
 
-@register(
-    "graph_top_copurchase",
-    oracle=f"""
-    WITH {_EDGES_CTE},
-    deg AS (
-      SELECT vertex, COUNT(*) AS degree
-      FROM (SELECT src AS vertex FROM e UNION ALL SELECT dst AS vertex FROM e)
-      GROUP BY vertex
-    )
-    SELECT vertex AS partkey, degree
-    FROM deg
-    ORDER BY degree DESC, partkey ASC
-    LIMIT 20
-    """,
-    tags=("graph", "topk"),
-)
-def graph_top_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Most-connected parts in the co-purchase graph: distinct-edge
-    degree, top 20. One shuffle for the degree agg, then
-    TakeOrderedAndProject — no global sort."""
-    edges = copurchase_edges(spark, sf_dir)
-    return (
-        edges.select(F.col("src").alias("partkey"))
-        .unionAll(edges.select(F.col("dst").alias("partkey")))
-        .groupBy("partkey")
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy(F.col("degree").desc(), F.col("partkey").asc())
-        .limit(20)
-    )
-
-
 _PR_ITER_SQL = """
     c{i} AS (
       SELECT bi.dst AS vertex,
@@ -611,112 +580,4 @@ def _pagerank_adjacency(
         .groupBy("src", "chunk")
         .agg(F.collect_list("dst").alias("nbrs"), F.first("od").alias("od"))
         .select(F.col("src").alias("vertex"), "nbrs", "od")
-    )
-
-
-_KCORE_PEEL_SQL = """
-      SELECT src, dst FROM {edges}
-      WHERE src IN (SELECT vertex FROM (
-              SELECT vertex, COUNT(*) AS d
-              FROM (SELECT src AS vertex FROM {edges}
-                    UNION ALL SELECT dst AS vertex FROM {edges})
-              GROUP BY vertex) WHERE d >= {k})
-        AND dst IN (SELECT vertex FROM (
-              SELECT vertex, COUNT(*) AS d
-              FROM (SELECT src AS vertex FROM {edges}
-                    UNION ALL SELECT dst AS vertex FROM {edges})
-              GROUP BY vertex) WHERE d >= {k})
-"""
-
-_KCORE_K = 4
-
-
-@register(
-    "graph_kcore_peel",
-    oracle=f"""
-    WITH {_EDGES_CTE},
-    p1 AS ({_KCORE_PEEL_SQL.format(edges="e", k=_KCORE_K)}),
-    p2 AS ({_KCORE_PEEL_SQL.format(edges="p1", k=_KCORE_K)}),
-    stats AS (
-      SELECT 0 AS round, COUNT(*) AS n_edges,
-             (SELECT COUNT(DISTINCT v) FROM (SELECT src AS v FROM e
-                UNION ALL SELECT dst FROM e)) AS n_vertices FROM e
-      UNION ALL
-      SELECT 1, COUNT(*),
-             (SELECT COUNT(DISTINCT v) FROM (SELECT src AS v FROM p1
-                UNION ALL SELECT dst FROM p1)) FROM p1
-      UNION ALL
-      SELECT 2, COUNT(*),
-             (SELECT COUNT(DISTINCT v) FROM (SELECT src AS v FROM p2
-                UNION ALL SELECT dst FROM p2)) FROM p2
-    )
-    SELECT round, n_vertices, n_edges FROM stats
-    """,
-    tags=("graph", "kcore", "iterative"),
-)
-def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (two peeling rounds, k={k}): repeatedly
-    remove vertices with degree < k; what survives is the graph's
-    dense backbone — the community-detection prefilter and the
-    spam/bot-cluster signal in co-interaction graphs. Reports
-    (vertices, edges) after rounds 0/1/2; convergence = a round
-    that removes nothing.
-
-    The iterative-graph family's third member, integer-exact end to
-    end (degrees are counts — no decimal machinery needed to make
-    rounds replayable, unlike PageRank's rank mass). Per round: one
-    degree aggregate + one semi-join of edges against surviving
-    vertices — both on the edge list's own keys; rounds compose
-    exactly like connected components (checkpoint lineage on deep
-    peels). The oracle replays both rounds via IN-subqueries; Spark
-    uses left-semi joins (same semantics, null-safe by
-    construction).
-
-    Each round's survivor edge list AND its degree frame are
-    localCheckpoint-ed: the degree frame a round's peel needs anyway
-    also answers that round's stats row — n_vertices is its count
-    and n_edges is sum(d) DIV 2 (every edge contributes two
-    endpoints, so the division is integer-exact) — which removes the
-    per-round countDistinct over the 2|E|-row endpoint stream
-    entirely. Measured 7.3 → 4.1 s at sf0.1 for the checkpoints,
-    then 15.0 → 9.3 s at the 4x sweep point for the degree-frame
-    stats (the countDistinct shuffle was the growing term). On deep
-    peels the checkpoints double as the lineage truncation.""".format(
-        k=_KCORE_K
-    )
-    edges0 = copurchase_edges(spark, sf_dir).localCheckpoint()
-
-    def stats(deg: DataFrame, rnd: int) -> DataFrame:
-        return deg.agg(
-            F.count(F.lit(1)).alias("n_vertices"),
-            F.expr("sum(d) DIV 2").alias("n_edges"),
-        ).select(F.lit(rnd).alias("round"), "n_vertices", "n_edges")
-
-    d0 = _kcore_degrees(edges0).localCheckpoint()
-    p1 = _kcore_peel(edges0, d0, _KCORE_K).localCheckpoint()
-    d1 = _kcore_degrees(p1).localCheckpoint()
-    p2 = _kcore_peel(p1, d1, _KCORE_K)
-    d2 = _kcore_degrees(p2)
-    return stats(d0, 0).unionAll(stats(d1, 1)).unionAll(stats(d2, 2))
-
-
-def _kcore_degrees(edges: DataFrame) -> DataFrame:
-    """Endpoint-count degree frame of an undirected edge list, one per
-    peel round."""
-    return (
-        edges.select(F.col("src").alias("vertex"))
-        .unionAll(edges.select(F.col("dst").alias("vertex")))
-        .groupBy("vertex")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-
-
-def _kcore_peel(edges: DataFrame, deg: DataFrame, k: int) -> DataFrame:
-    """One peel round: keep edges whose BOTH endpoints survive the
-    degree->=k filter (two left-semi joins on the edge list's own
-    keys)."""
-    surv = deg.filter(F.col("d") >= k).select("vertex")
-    return (
-        edges.join(surv, edges.src == surv.vertex, "left_semi")
-        .join(surv, edges.dst == surv.vertex, "left_semi")
     )

@@ -29,7 +29,7 @@ GREP_TERM = "spark"
     WHERE word <> ''
     GROUP BY word
     """,
-    tags=("parity", "aggregation"),
+    tags=("parity", "wc", "aggregation"),
 )
 def wc_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word count (reference ``wc``, ``src/app/wc.rs``) over documents.
@@ -48,7 +48,7 @@ def wc_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     WHERE contains(text, '{GREP_TERM}')
     """,
-    tags=("parity", "filter"),
+    tags=("parity", "grep", "filter"),
 )
 def grep_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """grep (reference ``src/app/grep.rs``): substring filter (not
@@ -78,7 +78,7 @@ def grep_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY vertex
     """,
-    tags=("parity", "aggregation"),
+    tags=("parity", "vertex-degree", "aggregation"),
 )
 def vertex_degree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vertex-degree (``src/app/vertex_degree.rs``) on the lineitem
@@ -102,7 +102,7 @@ def vertex_degree_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e
     WHERE contains(token, '{GREP_TERM}')
     """,
-    tags=("parity", "explode"),
+    tags=("parity", "grep", "explode"),
 )
 def grep_docs_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """grep's positional form: posexplode to (unit, 1-based position)
@@ -132,7 +132,7 @@ def grep_docs_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE contains(text, '{GREP_TERM}')
     GROUP BY source
     """,
-    tags=("parity", "nested-agg"),
+    tags=("parity", "grep", "nested-agg"),
 )
 def grep_docs_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """grep G4's packed per-file aggregation
@@ -177,7 +177,7 @@ def grep_docs_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE word <> ''
     GROUP BY word
     """,
-    tags=("parity", "sink", "readback"),
+    tags=("parity", "wc", "sink", "readback"),
 )
 def process_readback_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full two-command workflow driven end-to-end:
@@ -216,7 +216,7 @@ def process_readback_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE word <> ''
     GROUP BY word
     """,
-    tags=("parity", "interop", "lengthdelim"),
+    tags=("parity", "wc", "interop", "lengthdelim"),
 )
 def wc_reference_file_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F11 interop through the DRIVER surface: compute wc, write the

@@ -11,51 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..multimodal import decode_media_meta, extract_frames, to_media_frame
-from ..multimodal.binary_cols import EMBED_DIM, extract_embedding
 from .registry import register, t
-
-_EMBED_SQL = (
-    "["
-    + ", ".join(
-        f"CAST(concat('0x', substr(md5(text), {4 * i + 1}, 4)) AS INT) / 65535.0 - 0.5"
-        for i in range(EMBED_DIM)
-    )
-    + "]"
-)
-
-
-@register(
-    "multimodal_embed_topk",
-    oracle=f"""
-    WITH e AS (SELECT doc_id AS media_id, {_EMBED_SQL} AS v FROM documents),
-    q AS (SELECT media_id AS query_id, v AS qv FROM e WHERE media_id < 5),
-    ranked AS (
-      SELECT q.query_id, c.media_id AS cand_id,
-             list_cosine_similarity(q.qv, c.v) AS cos,
-             ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                ORDER BY list_cosine_similarity(q.qv, c.v) DESC,
-                                         c.media_id) AS rnk
-      FROM q JOIN e c ON c.media_id <> q.query_id
-    )
-    SELECT query_id, cand_id, CAST(rnk AS INT) AS rnk, round(cos, 6) AS cosine
-    FROM ranked WHERE rnk <= 3
-    """,
-    tags=("multimodal", "similarity"),
-)
-def multimodal_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full multimodal pipeline: binary payload → Arrow-batched
-    feature extraction (stub md5 embedding; real model drop-in) →
-    brute-force cosine top-3 — media lands in the same similarity
-    operators as native embeddings. The oracle replays the stub
-    embedding from md5 slices."""
-    from ..similarity.brute_force import topk_cosine
-
-    media = to_media_frame(t(spark, sf_dir, "documents"), media_type="image")
-    emb = extract_embedding(media).select(
-        F.col("media_id").alias("vec_id"), "embedding"
-    )
-    queries = emb.filter(F.col("vec_id") < 5)
-    return topk_cosine(queries, emb, k=3).withColumn("rnk", F.col("rnk").cast("int"))
 
 
 @register(
@@ -195,43 +151,4 @@ def multimodal_resize_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("in_bytes").alias("in_bytes_total"),
         F.sum("out_bytes").alias("out_bytes_total"),
         F.sum(over).alias("bytes_dropped"),
-    )
-
-
-@register(
-    "multimodal_dedup_exact",
-    oracle="""
-    WITH meta AS (SELECT doc_id AS media_id, md5(text) AS content_md5
-                  FROM documents),
-    groups AS (
-      SELECT content_md5, COUNT(*) AS n_copies, MIN(media_id) AS keeper
-      FROM meta GROUP BY content_md5 HAVING COUNT(*) > 1
-    )
-    SELECT COUNT(*) AS n_dup_groups,
-           CAST(COALESCE(SUM(n_copies), 0) AS BIGINT) AS n_dup_media,
-           CAST(COALESCE(SUM(n_copies - 1), 0) AS BIGINT) AS n_droppable
-    FROM groups
-    """,
-    tags=("multimodal", "dedup"),
-)
-def multimodal_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact MEDIA dedup by decoded content hash: the decode stage's
-    content_md5 (in production: the pixel/sample hash after
-    normalization, or a perceptual pHash for near-dup) feeds the
-    same keeper-selection shape as text `dedup_exact_stats` —
-    dedup generalizes across modalities once payloads reduce to
-    fingerprints at the scan. Reports duplicate groups, total
-    duplicated media, and droppable copies. Shuffle carries 16-byte
-    hashes, never payloads — the property that makes media dedup
-    affordable when payloads are MBs."""
-    media = decode_media_meta(to_media_frame(t(spark, sf_dir, "documents")))
-    groups = (
-        media.groupBy("content_md5")
-        .agg(F.count(F.lit(1)).alias("n_copies"))
-        .filter(F.col("n_copies") > 1)
-    )
-    return groups.agg(
-        F.count(F.lit(1)).alias("n_dup_groups"),
-        F.coalesce(F.sum("n_copies"), F.lit(0)).alias("n_dup_media"),
-        F.coalesce(F.sum(F.col("n_copies") - 1), F.lit(0)).alias("n_droppable"),
     )

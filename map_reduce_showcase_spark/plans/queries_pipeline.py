@@ -168,43 +168,6 @@ def pipeline_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "sample_stratified_docs",
-    oracle="""
-    WITH ranked AS (
-      SELECT lang, doc_id,
-             row_number() OVER (
-               PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-             ) AS rn
-      FROM documents
-    )
-    SELECT lang, doc_id FROM ranked WHERE rn <= 25
-    """,
-    tags=("pipeline", "sampling"),
-)
-def sample_stratified_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling: exactly 25 docs per
-    language, chosen by ranking on the md5 of the stable id — a
-    reproducible 'reservoir' that every engine and every rerun draws
-    identically (``TABLESAMPLE``/``sample()`` re-deal per run and
-    give only approximate strata). One shuffle (the per-lang window);
-    at 100 TB with heavy strata, swap row_number for a bounded
-    per-partition top-k (``sort_array(collect_list)`` capped) — same
-    keys, same answer, no full sort of any stratum."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    return (
-        t(spark, sf_dir, "documents")
-        .select("lang", "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 25)
-        .drop("rn")
-    )
-
-
-@register(
     "salted_event_counts",
     oracle="""
     SELECT event_type, COUNT(*) AS cnt
@@ -228,44 +191,6 @@ def salted_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return salted_count_by_key(
         t(spark, sf_dir, "events"), "event_type", salt_cols=["event_id"], n_salts=16
-    )
-
-
-@register(
-    "split_train_val_test",
-    oracle=f"""
-    SELECT CASE
-             WHEN {portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} % 100 < 80 THEN 'train'
-             WHEN {portable_hash60_duckdb("CAST(doc_id AS VARCHAR)")} % 100 < 90 THEN 'val'
-             ELSE 'test'
-           END AS split,
-           lang,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars
-    FROM documents
-    GROUP BY split, lang
-    """,
-    tags=("pipeline", "split"),
-)
-def split_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 80/10/10 train/val/test split by hashing the
-    stable document id — no RNG state, so every run, every engine,
-    and every future incremental batch splits identically (THE
-    property a reproducible training pipeline needs; ``randomSplit``
-    re-deals on every run). Stratification is just the lang grouping
-    shown here."""
-    bucket = F.expr(f"{portable_hash60('CAST(doc_id AS STRING)')} % 100")
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return (
-        t(spark, sf_dir, "documents")
-        .select(split.alias("split"), "lang", "n_chars")
-        .groupBy("split", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-        )
     )
 
 
@@ -324,138 +249,6 @@ def sample_rebalance_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_docs",
             "target",
-            "n_kept",
-            F.round(
-                F.col("n_kept").cast("double") / F.col("n_docs").cast("double"), 6
-            ).alias("kept_frac"),
-        )
-    )
-
-
-@register(
-    "quality_profile_orders",
-    oracle="""
-    SELECT COUNT(*) AS n_rows,
-           COUNT(*) - COUNT(o_custkey) AS null_custkey,
-           COUNT(*) - COUNT(o_totalprice) AS null_totalprice,
-           COUNT(*) FILTER (WHERE o_totalprice <= 0) AS nonpositive_price,
-           COUNT(*) FILTER (WHERE o_orderdate < TIMESTAMP '1990-01-01'
-                               OR o_orderdate > TIMESTAMP '2030-01-01') AS out_of_range_date,
-           COUNT(DISTINCT o_orderkey) AS distinct_keys,
-           COUNT(*) - COUNT(DISTINCT o_orderkey) AS duplicate_keys
-    FROM orders
-    """,
-    tags=("pipeline", "quality"),
-)
-def quality_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality profile in ONE scan: null counts, range
-    violations, key-uniqueness — the ingest gate before a table
-    enters the pipeline. All conditional aggregates, no extra
-    passes (never profile with one query per check at 100 TB)."""
-    o = t(spark, sf_dir, "orders")
-    cnt = F.count(F.lit(1))
-    return o.agg(
-        cnt.alias("n_rows"),
-        (cnt - F.count("o_custkey")).alias("null_custkey"),
-        (cnt - F.count("o_totalprice")).alias("null_totalprice"),
-        F.count_if(F.col("o_totalprice") <= 0).alias("nonpositive_price"),
-        F.count_if(
-            (F.col("o_orderdate") < F.lit("1990-01-01"))
-            | (F.col("o_orderdate") > F.lit("2030-01-01"))
-        ).alias("out_of_range_date"),
-        F.count_distinct(F.col("o_orderkey")).alias("distinct_keys"),
-        (cnt - F.count_distinct(F.col("o_orderkey"))).alias("duplicate_keys"),
-    )
-
-
-#: temperature for temperature sampling: rate_l ∝ count_l^(1/T - 1),
-#: the multilingual-pretraining standard (T=1 → natural, T→∞ → uniform)
-_TEMP_T = 2.0
-
-
-@register(
-    "sample_temperature_langs",
-    oracle=f"""
-    WITH counts AS (
-      SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang
-    ),
-    -- integer per-lang quota: share ∝ count^(1/T); quotas rounded
-    -- BEFORE any per-doc math so both engines compare pure integers
-    quota AS (
-      SELECT lang, n_docs,
-             CAST(round(
-               pow(CAST(n_docs AS DOUBLE), {1.0 / _TEMP_T})
-               / SUM(pow(CAST(n_docs AS DOUBLE), {1.0 / _TEMP_T})) OVER ()
-               * (SELECT SUM(n_docs) FROM counts) * 0.5
-             ) AS BIGINT) AS n_target
-      FROM counts
-    ),
-    flagged AS (
-      SELECT d.lang, q.n_docs, q.n_target,
-             (({_REBAL_U_SQL.replace("rebal#", "temp#")}) * q.n_docs
-              < least(q.n_target, q.n_docs) * 1000000) AS keep
-      FROM documents d JOIN quota q USING (lang)
-    )
-    SELECT lang, n_docs, n_target,
-           COUNT(*) FILTER (WHERE keep) AS n_kept,
-           round(CAST(COUNT(*) FILTER (WHERE keep) AS DOUBLE)
-                 / CAST(n_docs AS DOUBLE), 6) AS kept_frac
-    FROM flagged
-    GROUP BY lang, n_docs, n_target
-    """,
-    tags=("pipeline", "sampling", "temperature"),
-)
-def sample_temperature_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature sampling across languages (T=2, half the corpus):
-    each language's share of the output budget is proportional to
-    count^(1/T) — the standard softening between natural (T=1) and
-    uniform (T→∞) used by every multilingual pre-training mix — then
-    docs are drawn by the same deterministic integer Bernoulli as
-    :func:`sample_rebalance_langs`. The float pow() appears ONLY in
-    the per-language quota, which is rounded to an integer before
-    any per-doc comparison, so engine float drift cannot flip a
-    draw (quotas are |langs| numbers, checkable by eye; draws are
-    pure integer math).
-
-    Shape at 100 TB: identical to the rebalance query — quota frame
-    is |langs| rows broadcast back, keep predicate is scan-local,
-    the corpus never shuffles."""
-    docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    from pyspark.sql.window import Window
-
-    alpha = 1.0 / _TEMP_T
-    w_all = Window.partitionBy()
-    total = counts.agg(F.sum("n_docs").alias("total"))
-    quota = (
-        counts.join(F.broadcast(total))
-        .select(
-            "lang",
-            "n_docs",
-            F.round(
-                F.pow(F.col("n_docs").cast("double"), F.lit(alpha))
-                / F.sum(F.pow(F.col("n_docs").cast("double"), F.lit(alpha))).over(
-                    w_all
-                )
-                * F.col("total")
-                * F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("n_target"),
-        )
-    )
-    u = F.expr(f"{_salted_hash('temp')} % 1000000")
-    keep = (u * F.col("n_docs")) < (
-        F.least(F.col("n_target"), F.col("n_docs")) * F.lit(1_000_000)
-    )
-    return (
-        docs.join(F.broadcast(quota), "lang")
-        .groupBy("lang", "n_docs", "n_target")
-        .agg(F.count_if(keep).alias("n_kept"))
-        .select(
-            "lang",
-            "n_docs",
-            "n_target",
             "n_kept",
             F.round(
                 F.col("n_kept").cast("double") / F.col("n_docs").cast("double"), 6
@@ -596,8 +389,8 @@ def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     `decontam_benchmark_overlap` checks against external
     benchmarks, applied to the pipeline's own splits).
 
-    Plan: split assignment is the same scan-local hash as
-    `split_train_val_test` (no RNG state, replays identically);
+    Plan: split assignment is a scan-local hash of the doc id (no
+    RNG state, replays identically);
     the eval side joins the distinct train fingerprint set on the
     16-byte md5 — the shuffle carries fingerprints, never text.
     The left join + conditional count (instead of a semi join)
@@ -675,78 +468,6 @@ def quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SNAP_H_SQL = portable_hash60_duckdb("'snap#' || CAST(doc_id AS VARCHAR)")
-_EDIT_H_SQL = portable_hash60_duckdb("'edit#' || CAST(doc_id AS VARCHAR)")
-_V1_PRED_SQL = f"{_SNAP_H_SQL} % 100 < 90"
-_V2_PRED_SQL = f"{_SNAP_H_SQL} % 100 >= 5"
-_CHANGED_SQL = f"{_EDIT_H_SQL} % 7 = 0"
-
-
-@register(
-    "pipeline_snapshot_diff",
-    oracle=f"""
-    WITH v1 AS (
-      SELECT doc_id, {_FP_SQL} AS fp FROM documents WHERE {_V1_PRED_SQL}
-    ),
-    v2 AS (
-      SELECT doc_id,
-             CASE WHEN {_CHANGED_SQL} THEN md5('v2#' || {_FP_SQL})
-                  ELSE {_FP_SQL} END AS fp
-      FROM documents WHERE {_V2_PRED_SQL}
-    )
-    SELECT CASE WHEN v1.doc_id IS NULL THEN 'added'
-                WHEN v2.doc_id IS NULL THEN 'removed'
-                WHEN v1.fp <> v2.fp THEN 'changed'
-                ELSE 'unchanged' END AS status,
-           COUNT(*) AS n_docs
-    FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
-    GROUP BY status
-    """,
-    tags=("pipeline", "cdc", "diff"),
-)
-def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot reconciliation (CDC without a changelog): diff two
-    corpus versions into added / removed / changed / unchanged
-    counts. Two deterministic hash views of `documents` stand in
-    for the versions (v1 = 90% bucket slice, v2 = shifted slice
-    with ~1/7 of shared docs' fingerprints perturbed), so the
-    classification is replayable in any engine; in production v1
-    and v2 are yesterday's and today's corpus roots.
-
-    This is THE operator behind incremental everything: the
-    'added' partition feeds `dedup_incremental_minhash`-style
-    batch-vs-corpus jobs, 'removed' drives tombstone propagation,
-    and 'changed' re-embeds. Plan: both sides reduce to
-    (doc_id, 16-byte fingerprint) AT THE SCAN — the full outer
-    join shuffles ids and hashes, never text — then a 4-row
-    rollup. At 100 TB both snapshots are id-bucketed at write
-    time and the join is exchange-free."""
-    from ..functions.text import fingerprint
-
-    docs = t(spark, sf_dir, "documents")
-    snap = F.expr(f"{_salted_hash('snap')} % 100")
-    edited = F.expr(f"{_salted_hash('edit')} % 7 = 0")
-    fp = F.expr(fingerprint("text"))
-    v1 = docs.filter(snap < 90).select(
-        F.col("doc_id").alias("id1"), fp.alias("fp1")
-    )
-    v2 = docs.filter(snap >= 5).select(
-        F.col("doc_id").alias("id2"),
-        F.when(edited, F.md5(F.concat(F.lit("v2#"), fp))).otherwise(fp).alias("fp2"),
-    )
-    status = (
-        F.when(F.col("id1").isNull(), "added")
-        .when(F.col("id2").isNull(), "removed")
-        .when(F.col("fp1") != F.col("fp2"), "changed")
-        .otherwise("unchanged")
-    )
-    return (
-        v1.join(v2, F.col("id1") == F.col("id2"), "full_outer")
-        .groupBy(status.alias("status"))
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
 _UPD_H_SQL = portable_hash60_duckdb("'upd#' || CAST(o_orderkey AS VARCHAR)")
 _UPD_PRED_SQL = f"{_UPD_H_SQL} % 10 = 0"
 
@@ -814,53 +535,6 @@ def pipeline_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.count(F.when(F.col("was_updated"), 1)).alias("n_updated"),
         F.sum("price").cast("double").alias("total_after"),
-    )
-
-
-@register(
-    "diag_key_skew",
-    oracle="""
-    WITH freq AS (
-      SELECT o_custkey, COUNT(*) AS cnt FROM orders GROUP BY o_custkey
-    ),
-    stats AS (
-      SELECT COUNT(*) AS n_keys,
-             CAST(SUM(cnt) AS BIGINT) AS n_rows,
-             CAST(MAX(cnt) AS BIGINT) AS max_cnt
-      FROM freq
-    )
-    SELECT n_keys, n_rows, max_cnt,
-           round(CAST(max_cnt AS DOUBLE) * n_keys / n_rows, 6)
-             AS skew_factor,
-           round(CAST(max_cnt AS DOUBLE) / n_rows, 6) AS top1_share
-    FROM stats
-    """,
-    tags=("pipeline", "skew", "diagnostics"),
-)
-def diag_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join/agg-key skew report for orders.o_custkey: hottest-key
-    share and the skew factor (max / mean key frequency) — the
-    number you read BEFORE deciding between a plain shuffle, AQE
-    skew splitting, or explicit salting (`operators/skew.py`). At 1
-    the key is uniform; at 100 TB a factor over ~4-8 on a join key
-    means the hot key's partition runs that many times longer than
-    the median task. One aggregate over the key frequencies, one
-    single-row rollup — the diagnostic costs one shuffle of
-    (key, count) pairs, which is why it should run routinely in a
-    pipeline's metadata pass rather than being discovered from a
-    straggling stage."""
-    freq = t(spark, sf_dir, "orders").groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    n_keys = F.count(F.lit(1))
-    n_rows = F.sum("cnt")
-    mx = F.max("cnt")
-    return freq.agg(
-        n_keys.alias("n_keys"),
-        n_rows.alias("n_rows"),
-        mx.alias("max_cnt"),
-        F.round(mx.cast("double") * n_keys / n_rows, 6).alias("skew_factor"),
-        F.round(mx.cast("double") / n_rows, 6).alias("top1_share"),
     )
 
 

@@ -241,52 +241,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q3_top_revenue_orders",
-    oracle=f"""
-    SELECT o.o_orderkey,
-           CAST(SUM({_DISC_PRICE_SQL}) AS DOUBLE) AS revenue,
-           o.o_orderdate, o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-03-15'
-      AND l.l_shipdate > TIMESTAMP '1996-03-15'
-    GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, o_orderkey
-    LIMIT 10
-    """,
-    tags=("join", "topk"),
-)
-def q3_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way join → agg → top-k.
-
-    customer is small relative to the facts → broadcast into orders;
-    orders⋈lineitem shuffles on orderkey (bucket both on orderkey at
-    write time to eliminate it at 100 TB). The final top-10 is
-    TakeOrderedAndProject — no global sort. Revenue sums in integer
-    cents (single-level long: a group is one order, ≤7 lineitems, so
-    the e4-scaled sum stays ≤ ~7e11 — exact at any SF)."""
-    c = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1998-03-15"))
-    l = t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1996-03-15"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(disc_price_cents()).alias("_rev"))
-        .select(
-            "o_orderkey",
-            unscale(F.col("_rev"), 4).alias("revenue"),
-            "o_orderdate",
-            "o_orderpriority",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-@register(
     "q5_revenue_by_nation",
     oracle=f"""
     SELECT n.n_name,
@@ -348,42 +302,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.agg(
         F.sum(rev).cast("double").alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
-    )
-
-
-@register(
-    "q10_returned_item_customers",
-    oracle=f"""
-    SELECT c.c_custkey, c.c_name, n.n_name,
-           CAST(SUM({_DISC_PRICE_SQL}) AS DOUBLE) AS revenue
-    FROM customer c
-    JOIN orders o ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n ON n.n_nationkey = c.c_nationkey
-    WHERE l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, n.n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-    tags=("join", "topk"),
-)
-def q10_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: returned-item revenue per customer, top 20.
-    The returnflag filter lands on the scan; customer/nation
-    broadcast; one fact-fact shuffle on orderkey."""
-    c = t(spark, sf_dir, "customer")
-    o = t(spark, sf_dir, "orders")
-    l = t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = t(spark, sf_dir, "nation")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
-        .select("c_custkey", "c_name", "n_name", "revenue")
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
     )
 
 
@@ -721,97 +639,6 @@ def range_join_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(dec2("o_totalprice")).cast("double").alias("tier_total"),
         )
-    )
-
-
-@register(
-    "scalar_functions_orders",
-    oracle="""
-    SELECT order_year, order_month, priority_code,
-           COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-    FROM (
-      SELECT CAST(year(o_orderdate) AS INT) AS order_year,
-             CAST(month(o_orderdate) AS INT) AS order_month,
-             upper(substr(o_orderpriority, 1, 1)) AS priority_code,
-             o_totalprice
-      FROM orders
-    )
-    GROUP BY order_year, order_month, priority_code
-    """,
-    tags=("scalar", "dates"),
-)
-def scalar_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar date/string function surface (year/month/upper/substr)
-    — the reference's entire scalar library was lowercase + split
-    (SURVEY.md §2.4); everything here is a built-in JVM expression
-    inside whole-stage codegen."""
-    o = t(spark, sf_dir, "orders").select(
-        F.year("o_orderdate").cast("int").alias("order_year"),
-        F.month("o_orderdate").cast("int").alias("order_month"),
-        F.upper(F.substring("o_orderpriority", 1, 1)).alias("priority_code"),
-        "o_totalprice",
-    )
-    return o.groupBy("order_year", "order_month", "priority_code").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(dec2("o_totalprice")).cast("double").alias("total"),
-    )
-
-
-@register(
-    "q7_volume_shipping",
-    oracle=f"""
-    SELECT n1.n_name AS supp_nation,
-           n2.n_name AS cust_nation,
-           CAST(year(l.l_shipdate) AS INT) AS l_year,
-           CAST(SUM({_DISC_PRICE_SQL}) AS DOUBLE) AS revenue
-    FROM lineitem l
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n1  ON s.s_nationkey = n1.n_nationkey
-    JOIN nation n2  ON c.c_nationkey = n2.n_nationkey
-    WHERE n1.n_nationkey <> n2.n_nationkey
-    GROUP BY 1, 2, 3
-    """,
-    tags=("join", "aggregation", "tpch"),
-)
-def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape (generalized to all nation pairs): cross-border
-    shipping volume between supplier nation and customer nation per
-    ship year — the engine's deepest join tree (two fact tables plus
-    three dimensions).
-
-    Scale: lineitem ⋈ orders is the one real shuffle (both sides
-    partition on orderkey; bucketing both tables on it at write time
-    removes the exchange entirely); supplier and both nation copies
-    broadcast; customer joins orders on custkey — dimension-sized
-    here and hinted broadcast, at true scale it becomes the second
-    co-partitioned shuffle. The inequality filter runs on broadcast
-    nation keys, costing nothing. Aggregation is decimal-exact."""
-    l = t(spark, sf_dir, "lineitem")
-    s = t(spark, sf_dir, "supplier")
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    n1 = t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = t(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
-    )
-    return (
-        l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .where(F.col("n1_key") != F.col("n2_key"))
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-        )
-        .agg(F.sum(disc_price()).cast("double").alias("revenue"))
     )
 
 

@@ -1,5 +1,5 @@
 """Second relational batch: statistics, grouping sets, analytic
-windows, date arithmetic, bounded-range self-joins, pivot.
+windows, date arithmetic, pivot, TF-IDF, retention cohorts.
 
 Determinism notes continue from ``registry.py``: variance/stddev are
 computed from exact decimal power sums with the final arithmetic in
@@ -151,44 +151,6 @@ def date_arithmetic_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "selfjoin_repeat_orders_30d",
-    oracle="""
-    SELECT a.o_custkey AS c_custkey, COUNT(*) AS n_followups
-    FROM orders a
-    JOIN orders b
-      ON a.o_custkey = b.o_custkey
-     AND b.o_orderdate > a.o_orderdate
-     AND b.o_orderdate <= a.o_orderdate + INTERVAL 30 DAY
-    GROUP BY a.o_custkey
-    """,
-    tags=("join", "range"),
-)
-def selfjoin_repeat_orders_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-interval self-join: follow-up orders within 30 days.
-    The equi-key (custkey) carries the join; the date range is a
-    post-filter on the matched pairs, so this stays a hash join —
-    the scalable shape for interval joins (never a pure theta join).
-    At 100 TB add a coarse time-bucket to the key to cap per-key
-    fan-out."""
-    o = t(spark, sf_dir, "orders")
-    a = o.select(
-        F.col("o_custkey").alias("c_custkey"), F.col("o_orderdate").alias("d1")
-    )
-    b = o.select(
-        F.col("o_custkey").alias("c_custkey"), F.col("o_orderdate").alias("d2")
-    )
-    return (
-        a.join(b, "c_custkey")
-        .filter(
-            (F.col("d2") > F.col("d1"))
-            & (F.col("d2") <= F.col("d1") + F.expr("INTERVAL 30 DAYS"))
-        )
-        .groupBy("c_custkey")
-        .agg(F.count(F.lit(1)).alias("n_followups"))
-    )
-
-
-@register(
     "pivot_event_types_daily",
     oracle="""
     SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS "day",
@@ -233,7 +195,7 @@ def pivot_event_types_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(tf.tf * ln((1.0 + nd) / (1.0 + df)), 6) AS tfidf
     FROM tf JOIN dfq USING (word), n
     """,
-    tags=("text", "tfidf"),
+    tags=("text", "tfidf", "math"),
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF per (doc, word): term frequency × smoothed IDF — the
@@ -309,47 +271,4 @@ def orders_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("cohort_month", age.alias("age_months")).agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.countDistinct("o_custkey").alias("n_customers"),
-    )
-
-
-@register(
-    "q13_customer_distribution",
-    oracle="""
-    SELECT c_count, COUNT(*) AS custdist
-    FROM (
-      SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-      FROM customer c
-      LEFT OUTER JOIN orders o
-        ON c.c_custkey = o.o_custkey
-       AND o.o_orderpriority <> '1-URGENT'
-      GROUP BY c.c_custkey
-    )
-    GROUP BY c_count
-    """,
-    tags=("join", "aggregation", "tpch"),
-)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: how many customers placed exactly N
-    (non-urgent) orders — including the zero bucket, which is why
-    the outer join exists (an inner join silently drops never-
-    ordered customers; COUNT of the null-extended side counts 0).
-
-    Aggregate-first: orders reduce to (custkey, n) BEFORE the outer
-    join — the join matches |customers| rows against |customers|
-    pre-counted rows instead of null-extending the raw order rows
-    and counting after (at 100 TB that's the difference between
-    joining two customer-sized frames and outer-joining the fact
-    table). The final distribution is a tiny second-level agg."""
-    c = t(spark, sf_dir, "customer").select("c_custkey")
-    per_cust = (
-        t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "1-URGENT")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return (
-        c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left_outer")
-        .select(F.coalesce(F.col("n"), F.lit(0)).alias("c_count"))
-        .groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
     )

@@ -429,63 +429,3 @@ def argmin_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.l_suppkey").alias("cheapest_supp"),
         )
     )
-
-
-@register(
-    "stats_trimmed_mean_price",
-    oracle="""
-    WITH q AS (
-      SELECT o_orderpriority,
-             quantile_cont(o_totalprice, 0.05) AS p05,
-             quantile_cont(o_totalprice, 0.95) AS p95
-      FROM orders GROUP BY o_orderpriority
-    )
-    SELECT o.o_orderpriority,
-           COUNT(*) FILTER (WHERE o_totalprice > p05 AND o_totalprice < p95)
-             AS n_kept,
-           round(CAST(SUM(CASE WHEN o_totalprice > p05 AND o_totalprice < p95
-                               THEN CAST(o_totalprice AS DECIMAL(18,2)) END)
-                      AS DOUBLE)
-                 / COUNT(*) FILTER (WHERE o_totalprice > p05
-                                      AND o_totalprice < p95), 6)
-             AS trimmed_mean,
-           round(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                 / COUNT(*), 6) AS plain_mean
-    FROM orders o JOIN q USING (o_orderpriority)
-    GROUP BY o.o_orderpriority
-    """,
-    tags=("aggregation", "robust-stats"),
-)
-def stats_trimmed_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5%-trimmed mean per priority class, with the plain mean
-    alongside — the robust-statistics shape: per-GROUP quantile
-    thresholds (contrast ``docs_perplexity_buckets``' corpus-global
-    ones) computed on a groups-sized frame, broadcast back into a
-    scan-local conditional aggregate. Outliers never leave their
-    scan partition; the fact table is shuffled once for each of the
-    two aggregates, and at 100 TB the exact quantiles swap for
-    ``approx_percentile`` sketches without changing the plan. The
-    trimmed sum runs in exact DECIMAL so partition order cannot move
-    either mean."""
-    o = t(spark, sf_dir, "orders")
-    q = o.groupBy("o_orderpriority").agg(
-        F.percentile("o_totalprice", F.lit(0.05)).alias("p05"),
-        F.percentile("o_totalprice", F.lit(0.95)).alias("p95"),
-    )
-    kept = (F.col("o_totalprice") > F.col("p05")) & (
-        F.col("o_totalprice") < F.col("p95")
-    )
-    dec = F.col("o_totalprice").cast("decimal(18,2)")
-    n_kept = F.count(F.when(kept, F.lit(1)))
-    n = F.count(F.lit(1))
-    return (
-        o.join(F.broadcast(q), "o_orderpriority")
-        .groupBy("o_orderpriority")
-        .agg(
-            n_kept.alias("n_kept"),
-            F.round(F.sum(F.when(kept, dec)).cast("double") / n_kept, 6).alias(
-                "trimmed_mean"
-            ),
-            F.round(F.sum(dec).cast("double") / n, 6).alias("plain_mean"),
-        )
-    )

@@ -1,4 +1,4 @@
-"""Fourth relational batch: the remaining TPC-H query shapes,
+"""Fourth relational batch: TPC-H query shapes,
 adapted to this catalog's TPC-H-lite schema (no partsupp table, no
 l_commitdate/l_receiptdate/l_shipmode, no c_phone, no p_container —
 each adaptation is stated in the query docstring).
@@ -407,52 +407,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q15_top_suppliers",
-    oracle=f"""
-    WITH revenue AS (
-      SELECT l_suppkey AS supplier_no,
-             SUM({_REVENUE_DEC}) AS total_rev
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-        AND l_shipdate < TIMESTAMP '1995-04-01'
-      GROUP BY l_suppkey
-    )
-    SELECT s.s_suppkey, s.s_name,
-           CAST(r.total_rev AS DOUBLE) AS total_rev
-    FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
-    WHERE r.total_rev = (SELECT MAX(total_rev) FROM revenue)
-    """,
-    tags=("join", "aggregation", "subquery", "tpch"),
-)
-def q15_top_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15: the supplier(s) with maximum revenue in a quarter
-    (the reference SQL's view becomes a CTE; ties all emitted, per
-    spec). The scalar-MAX subquery is a single-row broadcast joined
-    back to the per-supplier aggregate — never a window over the
-    whole aggregate and never a driver-side collect. Decimal-exact
-    revenue makes the tie predicate (=) deterministic across
-    engines, which a double sum could not guarantee. One supplier-
-    key shuffle; everything after is broadcast."""
-    li = t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1995-04-01").cast("timestamp"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(_revenue()).alias("_rev")
-    )
-    mx = revenue.agg(F.max("_rev").alias("_mx"))
-    s = t(spark, sf_dir, "supplier")
-    return (
-        revenue.crossJoin(F.broadcast(mx))
-        .filter(F.col("_rev") == F.col("_mx"))
-        .join(F.broadcast(s), F.col("supplier_no") == s.s_suppkey)
-        .select(
-            "s_suppkey", "s_name", F.col("_rev").cast("double").alias("total_rev")
-        )
-    )
-
-
-@register(
     "q16_supplier_part_variety",
     oracle="""
     SELECT p.p_brand, p.p_type, p.p_size,
@@ -492,174 +446,6 @@ def q16_supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@register(
-    "q20_heavy_shippers",
-    oracle="""
-    WITH shipped AS (
-      SELECT l_suppkey, l_partkey,
-             SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qty
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-        AND l_shipdate < TIMESTAMP '1996-01-01'
-      GROUP BY l_suppkey, l_partkey
-    )
-    SELECT s.s_name, n.n_name
-    FROM supplier s
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    WHERE s.s_suppkey IN (
-      SELECT sh.l_suppkey FROM shipped sh
-      JOIN part p ON p.p_partkey = sh.l_partkey
-      WHERE p.p_name LIKE 'small%' AND sh.qty > 50
-    )
-    """,
-    tags=("join", "semi", "tpch"),
-)
-def q20_heavy_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: suppliers who shipped a large volume of one
-    part family in a year (the partsupp availability comparison
-    becomes a shipped-quantity threshold — no partsupp table; the
-    spec's nested IN-chain is kept as semi-join composition; the
-    spec's ``'forest%'`` part-name prefix is re-aimed at
-    ``'small%'``, a prefix this catalog's adjective-noun p_name
-    generator actually produces — 'forest' never occurs, which
-    left the semi-join chain vacuously green in rounds 1–4).
-
-    Decorrelation: per-(supplier, part) shipped quantities aggregate
-    once; the part-name filter broadcasts into that aggregate; the
-    qualifying supplier set semi-joins into the supplier dim. Every
-    join after the one fact aggregate is broadcast-sized. The fact
-    shuffles once, on the compound group key."""
-    li = t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
-    )
-    shipped = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty")
-    )
-    p = t(spark, sf_dir, "part").filter(F.col("p_name").like("small%"))
-    qualifying = (
-        shipped.join(F.broadcast(p), shipped.l_partkey == p.p_partkey)
-        .filter(F.col("qty") > 50)
-        .select("l_suppkey")
-    )
-    s = t(spark, sf_dir, "supplier")
-    n = t(spark, sf_dir, "nation")
-    return (
-        s.join(qualifying, s.s_suppkey == qualifying.l_suppkey, "left_semi")
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("s_name", "n_name")
-    )
-
-
-@register(
-    "q22_idle_wealthy_customers",
-    oracle="""
-    WITH cutoff AS (
-      SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-               / COUNT(*) AS avg_bal
-      FROM customer WHERE c_acctbal > 0
-    )
-    SELECT c.c_nationkey AS cntry, COUNT(*) AS numcust,
-           CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-    FROM customer c, cutoff
-    WHERE c.c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-      AND c.c_acctbal > cutoff.avg_bal
-      AND NOT EXISTS (
-        SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
-          AND o.o_orderpriority = '1-URGENT'
-      )
-    GROUP BY c.c_nationkey
-    """,
-    tags=("join", "anti", "subquery", "tpch"),
-)
-def q22_idle_wealthy_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22: customers in selected countries with above-average
-    positive balances and no urgent orders (c_nationkey stands in
-    for the spec's phone country code — no c_phone column; the
-    spec's "no orders at all" slice is narrowed to "no 1-URGENT
-    orders" because this catalog's generator gives every customer
-    at least one order, which made the anti-join vacuously empty
-    at every SF — the narrowed slice keeps the identical
-    decorrelated NOT EXISTS shape while actually surviving rows).
-
-    The scalar AVG subquery broadcasts as a 1-row frame; NOT EXISTS
-    is a left-anti join against the distinct-by-construction
-    semi-key of orders. Customer is the driving side, orders only
-    supplies custkeys — at 100 TB project orders to the single join
-    column (done here) so the anti-join's build side is key-only.
-    Decimal-exact balance sums on both the cutoff and the report."""
-    c = t(spark, sf_dir, "customer").filter(
-        F.col("c_nationkey").isin(1, 3, 5, 7, 9, 11, 13)
-    )
-    cutoff = (
-        t(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 0)
-        .agg(
-            (
-                F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_bal")
-        )
-    )
-    o = (
-        t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    return (
-        c.crossJoin(F.broadcast(cutoff))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("cntry"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("totacctbal"),
-        )
-    )
-
-
-@register(
-    "q12_late_shipment_priority",
-    oracle="""
-    SELECT CASE WHEN date_diff('day', CAST(o.o_orderdate AS DATE),
-                               CAST(l.l_shipdate AS DATE)) > 60
-                THEN 'late' ELSE 'on_time' END AS ship_bucket,
-           COUNT(*) FILTER (WHERE o.o_orderpriority IN ('1-URGENT', '2-HIGH'))
-             AS high_line_count,
-           COUNT(*) FILTER (WHERE o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH'))
-             AS low_line_count
-    FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    GROUP BY 1
-    """,
-    tags=("join", "aggregation", "tpch"),
-)
-def q12_late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: line counts by priority class, split by
-    shipping lateness (shipmode and commit/receipt dates don't
-    exist — lateness is shipdate more than 60 days after the order
-    date, which preserves the query's point: a conditional
-    two-column pivot over a fact-fact join). One orderkey co-
-    shuffle, then a 2-row aggregate with both FILTER branches in a
-    single pass."""
-    o = t(spark, sf_dir, "orders")
-    li = t(spark, sf_dir, "lineitem")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    late = (
-        F.datediff(F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date"))
-        > 60
-    )
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy(F.when(late, "late").otherwise("on_time").alias("ship_bucket"))
-        .agg(
-            F.count(F.when(high, 1)).alias("high_line_count"),
-            F.count(F.when(~high, 1)).alias("low_line_count"),
-        )
     )
 
 
@@ -712,74 +498,6 @@ def scalar_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.nullif(F.col("c_mktsegment"), F.lit("BUILDING"))).alias(
             "n_not_building"
         ),
-    )
-
-
-@register(
-    "stats_winsorized_price",
-    oracle="""
-    WITH cuts AS (
-      SELECT round(quantile_cont(o_totalprice, 0.05), 4) AS lo,
-             round(quantile_cont(o_totalprice, 0.95), 4) AS hi
-      FROM orders
-    )
-    SELECT o.o_orderpriority,
-           COUNT(*) AS n,
-           COUNT(*) FILTER (WHERE o.o_totalprice < c.lo
-                               OR o.o_totalprice > c.hi) AS n_clipped,
-           round(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                 / COUNT(*), 4) AS mean_raw,
-           round(CAST(SUM(CAST(round(
-                     CASE WHEN o.o_totalprice < c.lo THEN c.lo
-                          WHEN o.o_totalprice > c.hi THEN c.hi
-                          ELSE o.o_totalprice END, 4) AS DECIMAL(18,4)))
-                   AS DOUBLE) / COUNT(*), 4) AS mean_winsorized
-    FROM orders o CROSS JOIN cuts c
-    GROUP BY o.o_orderpriority
-    """,
-    tags=("aggregation", "stats", "robust"),
-)
-def stats_winsorized_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized mean: clip order prices at the corpus-wide
-    [p05, p95] exact quantiles, report raw vs clipped means per
-    priority (the outlier-robust statistic a metrics pipeline uses
-    when trimming — `stats_trimmed_mean_price` — discards too much).
-
-    Plan: the (lo, hi) cut row is a single-row aggregate broadcast
-    into the scan; clipping is a scan-local CASE; both means ride
-    one map-side-combining aggregate. The quantiles are rounded to
-    4 before use so both engines clip against the identical
-    threshold, and clipped values are rounded then summed in
-    DECIMAL — order-independent and hash-stable. At 100 TB swap the
-    exact quantile for approx_percentile (t-digest, mergeable) and
-    nothing downstream changes."""
-    o = t(spark, sf_dir, "orders")
-    cuts = o.agg(
-        F.round(F.percentile("o_totalprice", F.lit(0.05)), 4).alias("lo"),
-        F.round(F.percentile("o_totalprice", F.lit(0.95)), 4).alias("hi"),
-    )
-    p = F.col("o_totalprice")
-    clipped = (
-        F.when(p < F.col("lo"), F.col("lo"))
-        .when(p > F.col("hi"), F.col("hi"))
-        .otherwise(p)
-    )
-    n = F.count(F.lit(1))
-    return (
-        o.crossJoin(F.broadcast(cuts))
-        .groupBy("o_orderpriority")
-        .agg(
-            n.alias("n"),
-            F.count(F.when((p < F.col("lo")) | (p > F.col("hi")), 1)).alias(
-                "n_clipped"
-            ),
-            F.round(F.sum(p.cast("decimal(18,2)")).cast("double") / n, 4).alias(
-                "mean_raw"
-            ),
-            F.round(
-                F.sum(F.round(clipped, 4).cast("decimal(18,4)")).cast("double") / n, 4
-            ).alias("mean_winsorized"),
-        )
     )
 
 
@@ -943,53 +661,6 @@ def sql_frontend_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(o_view)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(c_view)
     return spark.sql(_SQL_FRONTEND.format(orders=o_view, customer=c_view))
-
-
-@register(
-    "orders_mom_growth",
-    oracle="""
-    WITH monthly AS (
-      SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-      FROM orders GROUP BY 1
-    )
-    SELECT month,
-           CAST(rev AS DOUBLE) AS revenue,
-           round(CASE WHEN LAG(rev) OVER (ORDER BY month) IS NULL THEN NULL
-                      ELSE (CAST(rev AS DOUBLE)
-                            - CAST(LAG(rev) OVER (ORDER BY month) AS DOUBLE))
-                           / CAST(LAG(rev) OVER (ORDER BY month) AS DOUBLE)
-                 END, 6) AS mom_growth
-    FROM monthly
-    """,
-    tags=("aggregation", "window", "timeseries"),
-)
-def orders_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Month-over-month revenue growth — THE period-over-period
-    report. Aggregate FIRST (decimal-exact monthly revenue: one
-    map-side-combining shuffle to ~24 rows), THEN the lag window
-    over the tiny monthly frame — the unpartitioned window is fine
-    precisely because its input is |months|, never |orders| (the
-    same aggregate-before-window discipline as the rate-anomaly and
-    gap-fill queries). Growth is computed in double from the exact
-    decimal sums, one subtraction + one division per row."""
-    from pyspark.sql.window import Window
-
-    monthly = (
-        t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("month"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev"))
-    )
-    w = Window.orderBy("month")
-    prev = F.lag(F.col("rev")).over(w)
-    return monthly.select(
-        "month",
-        F.col("rev").cast("double").alias("revenue"),
-        F.round(
-            (F.col("rev").cast("double") - prev.cast("double")) / prev.cast("double"),
-            6,
-        ).alias("mom_growth"),
-    )
 
 
 @register(

@@ -207,85 +207,6 @@ def streaming_stateful_counts_query(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_SESSION_QUERY_NAME = "mrs_streaming_session_sink"
-
-
-@register(
-    "streaming_session_counts",
-    oracle="""
-    WITH ordered AS (
-      SELECT user_id, ts,
-             LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    ), flagged AS (
-      SELECT user_id, ts,
-             CASE WHEN prev_ts IS NULL OR ts - prev_ts >= INTERVAL '10 minutes'
-                  THEN 1 ELSE 0 END AS new_session
-      FROM ordered
-    ), sessions AS (
-      SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                    ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM flagged
-    )
-    SELECT user_id, CAST(MIN(ts) AS TIMESTAMP) AS session_start,
-           COUNT(*) AS n_events
-    FROM sessions
-    GROUP BY user_id, session_id
-    """,
-    tags=("streaming", "session-window", "stateful"),
-)
-def streaming_session_counts_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SESSION windows in true Structured Streaming: the same
-    10-minute-gap sessionization as the batch twin
-    ``events_session_10m``, but run incrementally over a multi-
-    micro-batch file replay. Session windows are the genuinely
-    stateful window kind — unlike tumbling windows, sessions MERGE
-    as late rows arrive (two open sessions collapse when a bridging
-    event lands), so the state store holds open per-(user, session)
-    intervals that the engine rewrites across batches; complete
-    output mode makes the final table equal the batch aggregation,
-    which the gaps-and-islands oracle checks exactly.
-
-    Scale shape: state is one interval row per open session behind
-    a user_id shuffle; production uses append mode + watermark so
-    closed sessions EMIT and EVICT instead of accumulating (that
-    bounded-state variant is exercised in tests/test_streaming.py).
-    """
-    in_dir, ckpt = _stream_dirs(
-        spark,
-        "session",
-        sf_dir,
-        lambda p: t(spark, sf_dir, "events")
-        .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-        .repartition(4)
-        .write.parquet(p),
-    )
-    for q in spark.streams.active:
-        if q.name == _SESSION_QUERY_NAME:
-            q.stop()
-    stream = (
-        spark.readStream.schema("user_id BIGINT, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    query = (
-        stream.groupBy(F.session_window("ts", "10 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("w.start").alias("session_start"), "n_events")
-        .writeStream.format("memory")
-        .queryName(_SESSION_QUERY_NAME)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(_SESSION_QUERY_NAME).select(
-        "user_id", "session_start", "n_events"
-    )
-
-
 _SSJOIN_QUERY_NAME = "mrs_streaming_ssjoin_sink"
 
 

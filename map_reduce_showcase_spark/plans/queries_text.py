@@ -163,45 +163,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_word_doc_freq",
-    oracle=f"""
-    SELECT word,
-           COUNT(*) AS doc_freq,
-           round(ln((1.0 + (SELECT COUNT(*) FROM documents)) / (1.0 + COUNT(*))), 6) AS idf
-    FROM (
-      SELECT DISTINCT doc_id, unnest({_TOKENS_SQL}) AS word FROM documents
-    )
-    GROUP BY word
-    """,
-    tags=("text", "tfidf"),
-)
-def text_word_doc_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document frequency + smoothed IDF per word — the IDF half of
-    TF-IDF as a plain aggregation (the TF half is ``wc_word_count``).
-    One explode + distinct + count; partial aggregation bounds the
-    shuffle by vocabulary size."""
-    docs = t(spark, sf_dir, "documents")
-    # corpus size as a broadcast 1-row aggregate, keeping the
-    # builder a lazy plan (no job at build time)
-    nd = docs.agg(F.count(F.lit(1)).alias("_nd"))
-    return (
-        docs.selectExpr("doc_id", f"explode({T.tokens('text')}) AS word")
-        .distinct()
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .crossJoin(F.broadcast(nd))
-        .select(
-            "word",
-            "doc_freq",
-            F.round(
-                F.log((F.lit(1.0) + F.col("_nd")) / (F.lit(1.0) + F.col("doc_freq"))),
-                6,
-            ).alias("idf"),
-        )
-    )
-
-
 _NDIST_SQL = f"len(list_distinct({_TOKENS_SQL}))"
 _TOPCNT_SQL = (
     f"list_max(list_transform(list_distinct({_TOKENS_SQL}),"
@@ -277,52 +238,6 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             (distinct_ratio >= 0.2) & (top_frac <= 0.2) & (dup_bigram <= 0.75)
         ).alias("keep"),
-    )
-
-
-_BPE_PAT = r"[a-z]+|[0-9]|[^a-z0-9\s]"
-_BPE_CNT_SQL = f"len(regexp_extract_all(text, '{_BPE_PAT}'))"
-
-
-@register(
-    "text_bpe_token_estimate",
-    oracle=f"""
-    SELECT lang,
-           COUNT(*) AS n_docs,
-           CAST(SUM({_BPE_CNT_SQL}) AS BIGINT) AS total_tokens,
-           round(CAST(SUM({_BPE_CNT_SQL}) AS DOUBLE) / COUNT(*), 6) AS avg_tokens_per_doc,
-           round(CAST(SUM(n_chars) AS DOUBLE)
-                 / CAST(greatest(SUM({_BPE_CNT_SQL}), 1) AS DOUBLE), 6) AS chars_per_token
-    FROM documents
-    GROUP BY lang
-    """,
-    tags=("text", "tokens"),
-)
-def text_bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-tokenizer token budgeting: a BPE-style pre-tokenization
-    regex (letter runs | single digits | punctuation, the GPT-2
-    pretokenizer family restricted to portable character classes)
-    counts sub-word-ready units per doc, aggregated per language —
-    the corpus-sizing number ("how many training tokens is this?")
-    every data pipeline reports. Pure regexp column expression at
-    scan speed; integer sums stay exact, one final IEEE division."""
-    cnt = F.size(F.regexp_extract_all(F.col("text"), F.lit(_BPE_PAT), 0))
-    return (
-        t(spark, sf_dir, "documents")
-        .select("lang", cnt.alias("_cnt"), "n_chars")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_cnt").cast("long").alias("total_tokens"),
-            F.round(F.sum("_cnt").cast("double") / F.count(F.lit(1)), 6).alias(
-                "avg_tokens_per_doc"
-            ),
-            F.round(
-                F.sum("n_chars").cast("double")
-                / F.greatest(F.sum("_cnt"), F.lit(1)).cast("double"),
-                6,
-            ).alias("chars_per_token"),
-        )
     )
 
 
@@ -476,7 +391,7 @@ _BIGRAMS_ALL_SQL = f"""
     JOIN uc u2 ON u2.w = split_part(bg, ' ', 2)
     WHERE c_xy >= 5
     """,
-    tags=("text", "collocations"),
+    tags=("text", "ngrams", "collocations"),
 )
 def text_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level collocation mining: pointwise mutual information
@@ -602,223 +517,6 @@ def docs_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(1.0) - F.col("n_unique").cast("double") / F.col("n_docs"), 6
             ).alias("exact_dup_rate"),
         )
-    )
-
-
-@register(
-    "text_unigram_logprob",
-    oracle=f"""
-    WITH occ AS (
-      SELECT doc_id, unnest({_TOKENS_SQL}) AS word FROM documents
-    ),
-    vocab AS (SELECT word, COUNT(*) AS c FROM occ GROUP BY word),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM vocab)
-    SELECT occ.doc_id,
-           COUNT(*) AS n_tokens,
-           round(CAST(SUM(CAST(-ln(vocab.c / tot.n) AS DECIMAL(28,12)))
-                      AS DOUBLE) / COUNT(*), 6) AS avg_neg_logprob
-    FROM occ JOIN vocab USING (word), tot
-    GROUP BY occ.doc_id
-    """,
-    tags=("text", "quality", "language-model"),
-)
-def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-unigram log-likelihood per document — the shape of a
-    CCNet/KenLM-style perplexity filter with the n-gram LM replaced
-    by the corpus's own unigram distribution (no external model in
-    this container; swapping in real LM scores changes one join
-    input, not the plan). Low avg_neg_logprob = common-word prose;
-    high = rare-token soup — the standard pretraining quality signal.
-
-    Determinism: per-occurrence -ln(p) terms are identical IEEE
-    doubles in both engines (c/n division then ln); the per-doc SUM
-    runs in DECIMAL(28,12), so partition order cannot move the
-    result; one final IEEE division by the token count.
-
-    Scale: token occurrences join the vocabulary on the word — the
-    inverted-index shape again; the vocabulary is Zipf-compact
-    (orders of magnitude smaller than occurrences) and the corpus
-    total broadcasts as a 1-row frame. Two shuffles total (vocab
-    count, per-doc agg); the occurrence stream is never sorted."""
-    occ = (
-        t(spark, sf_dir, "documents")
-        .selectExpr("doc_id", f"explode({T.tokens('text')}) AS word")
-    )
-    vocab = occ.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    tot = vocab.agg(F.sum("c").cast("bigint").alias("n"))
-    neg_lp = -F.log(F.col("c") / F.col("n"))
-    return (
-        occ.join(vocab, "word")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.sum(neg_lp.cast("decimal(28,12)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("avg_neg_logprob"),
-        )
-    )
-
-
-@register(
-    "docs_perplexity_buckets",
-    oracle=f"""
-    WITH occ AS (
-      SELECT doc_id, unnest({_TOKENS_SQL}) AS word FROM documents
-    ),
-    vocab AS (SELECT word, COUNT(*) AS c FROM occ GROUP BY word),
-    tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM vocab),
-    scores AS (
-      SELECT occ.doc_id,
-             round(CAST(SUM(CAST(-ln(vocab.c / tot.n) AS DECIMAL(28,12)))
-                        AS DOUBLE) / COUNT(*), 6) AS s
-      FROM occ JOIN vocab USING (word), tot
-      GROUP BY occ.doc_id
-    ),
-    q AS (
-      SELECT quantile_cont(s, 0.333333) AS p33,
-             quantile_cont(s, 0.666667) AS p66
-      FROM scores
-    )
-    SELECT CASE WHEN s <= p33 THEN 'head'
-                WHEN s <= p66 THEN 'middle'
-                ELSE 'tail' END AS bucket,
-           d.lang,
-           COUNT(*) AS n_docs,
-           round(CAST(SUM(CAST(s AS DECIMAL(18,6))) AS DOUBLE)
-                 / COUNT(*), 6) AS mean_score
-    FROM scores JOIN documents d USING (doc_id), q
-    GROUP BY 1, 2
-    """,
-    tags=("text", "quality", "buckets"),
-)
-def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet's head/middle/tail split: bucket every document by
-    corpus-wide perplexity tertiles (here the unigram-LM score of
-    ``text_unigram_logprob``, whose builder this query composes),
-    reported per (bucket, lang) — the selector that decides which
-    third of a crawl becomes training data.
-
-    The thresholds are ONE tiny (p33, p66) row broadcast into a
-    scan-local CASE — the corpus is never sorted or re-shuffled to
-    be bucketed. Exact interpolated percentiles here (they make the
-    DuckDB oracle exact); at 100 TB swap in ``approx_percentile``'s
-    mergeable t-digest — one expression, same plan otherwise. Doc
-    scores round to 6 places before bucketing so the boundary
-    comparison replays identically in any engine."""
-    scores = text_unigram_logprob(spark, sf_dir).select(
-        "doc_id", F.col("avg_neg_logprob").alias("s")
-    )
-    q = scores.agg(
-        F.percentile("s", F.lit(0.333333)).alias("p33"),
-        F.percentile("s", F.lit(0.666667)).alias("p66"),
-    )
-    d = t(spark, sf_dir, "documents").select("doc_id", "lang")
-    bucket = (
-        F.when(F.col("s") <= F.col("p33"), "head")
-        .when(F.col("s") <= F.col("p66"), "middle")
-        .otherwise("tail")
-    )
-    n = F.count(F.lit(1))
-    return (
-        scores.join(d, "doc_id")
-        .crossJoin(F.broadcast(q))
-        .groupBy(bucket.alias("bucket"), "lang")
-        .agg(
-            n.alias("n_docs"),
-            F.round(
-                F.sum(F.col("s").cast("decimal(18,6)")).cast("double") / n, 6
-            ).alias("mean_score"),
-        )
-    )
-
-
-_HLS_W_SQL = (
-    "(CAST(CAST(concat('0x', substr(md5('w#' || CAST(b AS VARCHAR)), 1, 8)) "
-    "AS BIGINT) % 2001 AS DOUBLE) / 1000.0 - 1.0)"
-)
-_HLS_BUCKET_SQL = (
-    "CAST(concat('0x', substr(md5('b#' || tok), 1, 8)) AS BIGINT) % 1024"
-)
-
-
-@register(
-    "text_hashed_linear_score",
-    oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, lang, unnest({_TOKENS_SQL}) AS tok FROM documents
-    ),
-    bucketed AS (SELECT doc_id, lang, {_HLS_BUCKET_SQL} AS b FROM toks),
-    scored AS (
-      SELECT doc_id, lang,
-             SUM(CAST(round({_HLS_W_SQL}, 6) AS DECIMAL(12,6))) AS s,
-             COUNT(*) AS ntok
-      FROM bucketed GROUP BY doc_id, lang
-    )
-    SELECT lang,
-           COUNT(*) FILTER (WHERE CAST(s AS DOUBLE) / ntok > 0) AS n_positive,
-           COUNT(*) AS n_docs,
-           round(CAST(SUM(CAST(round(CAST(s AS DOUBLE) / ntok, 6)
-                               AS DECIMAL(12,6))) AS DOUBLE) / COUNT(*), 6)
-             AS mean_score
-    FROM scored GROUP BY lang
-    """,
-    tags=("text", "quality", "classifier"),
-)
-def text_hashed_linear_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear classifier inference as a scan-local expression — the
-    fastText-style quality-filter shape (hash each token into a
-    1024-bucket feature space, dot with a weight vector, average
-    over tokens, threshold at 0). The weights here are derived
-    deterministically from the bucket index (md5 → [-1, 1]) so both
-    engines replay the identical model; a real pipeline broadcasts
-    trained weights and nothing else changes.
-
-    This is how classifier-based filtering (DCLM, FineWeb-Edu
-    style) actually runs at 100 TB: the model is a broadcast array,
-    inference is per-row column math fused into the scan — no
-    Python, no model server, no shuffle until the per-lang rollup
-    of scores. Per-doc sums accumulate in DECIMAL over rounded
-    per-token weights, so the scores — and therefore the
-    positive-class counts — are order-independent and
-    hash-stable."""
-    docs = t(spark, sf_dir, "documents")
-    tok = F.expr(f"explode({T.tokens('text')})").alias("tok")
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("b#"), F.col("tok"))), 1, 8), 16, 10)
-        .cast("bigint")
-        % 1024
-    )
-    weight = F.round(
-        (
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("w#"), bucket.cast("string"))), 1, 8),
-                16,
-                10,
-            ).cast("bigint")
-            % 2001
-        ).cast("double")
-        / 1000.0
-        - 1.0,
-        6,
-    )
-    scored = (
-        docs.select("doc_id", "lang", tok)
-        .select("doc_id", "lang", weight.cast("decimal(12,6)").alias("w"))
-        .groupBy("doc_id", "lang")
-        .agg(F.sum("w").alias("s"), F.count(F.lit(1)).alias("ntok"))
-    )
-    mean_doc = F.col("s").cast("double") / F.col("ntok")
-    return scored.groupBy("lang").agg(
-        F.count(F.when(mean_doc > 0, 1)).alias("n_positive"),
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(
-            F.sum(F.round(mean_doc, 6).cast("decimal(12,6)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("mean_score"),
     )
 
 
@@ -1044,8 +742,8 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # matching a target distribution (Xie et al. 2023, "Data Selection
 # for Language Models via Importance Resampling") — per-doc
 # log-likelihood ratio between a target-domain and a corpus-wide
-# hashed n-gram language model. Reuses text_hashed_linear_score's
-# cross-engine-proven 'b#'-md5 1024-bucket feature hash.
+# hashed n-gram language model, over a 'b#'-md5 1024-bucket feature
+# hash that both engines compute identically.
 
 _DSIR_B = 1024
 _DSIR_BUCKET_SQL = "CAST(concat('0x', substr(md5('b#' || tk), 1, 8)) AS BIGINT) % 1024"

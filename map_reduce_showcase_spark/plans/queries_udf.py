@@ -233,9 +233,8 @@ def udf_grouped_map_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 — deterministic without decimal machinery. Scale: one shuffle
     on the group key; each group must fit one worker's memory (fine
     for per-segment/per-tenant groups; for giant groups switch to
-    the broadcast-stats + scan-local CASE shape of
-    `stats_winsorized_price` — same answer, no grouped
-    materialization)."""
+    broadcast per-group stats and a scan-local CASE — same answer,
+    no grouped materialization)."""
 
     def scale(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np

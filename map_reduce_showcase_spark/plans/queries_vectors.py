@@ -63,7 +63,7 @@ def _components_oracle() -> str:
 @register(
     "dedup_connected_components",
     oracle=_components_oracle(),
-    tags=("dedup", "iterative"),
+    tags=("dedup", "components", "iterative"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-level dedup: connected components (iterative min-label
@@ -119,7 +119,7 @@ def _apply_near_oracle() -> str:
 @register(
     "dedup_apply_near",
     oracle=_apply_near_oracle(),
-    tags=("dedup", "iterative", "applied"),
+    tags=("dedup", "components", "iterative", "applied"),
 )
 def dedup_apply_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dedup APPLIED end-to-end: MinHash+LSH pairs → connected
@@ -204,7 +204,7 @@ def _keep_best_oracle() -> str:
 @register(
     "dedup_keep_best_quality",
     oracle=_keep_best_oracle(),
-    tags=("dedup", "iterative", "applied", "quality"),
+    tags=("dedup", "components", "iterative", "applied", "quality"),
 )
 def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware near-dedup: within each near-duplicate cluster

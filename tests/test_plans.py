@@ -68,6 +68,24 @@ def test_q1_whole_stage_codegen(spark, sf_dir):
     assert "codegen id" in plan, "q1 must run inside whole-stage codegen"
 
 
+def test_wc_explode_in_whole_stage_codegen(spark, sf_dir):
+    """wc's tokenizer is native array functions, not a higher-order
+    function: Spark generates no code for those, and an operator that
+    holds one runs outside whole-stage codegen."""
+    import re
+
+    df = REGISTRY["wc_word_count"].builder(spark, sf_dir)
+    df.collect()  # execute so AQE finalizes this dataframe's plan
+    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted"
+    )
+    # the tree lists the final plan's node ids before the initial plan's
+    final_ids = re.findall(r"Generate \((\d+)\)", plan.split("== Initial Plan ==")[0])
+    assert final_ids, plan
+    for i in final_ids:
+        assert re.search(rf"^\({i}\) Generate \[codegen id", plan, re.M), plan
+
+
 def test_wc_partial_aggregation(spark, sf_dir):
     plan = _plan(spark, sf_dir, "wc_word_count")
     assert plan.count("HashAggregate") >= 2, "wc must combine map-side"

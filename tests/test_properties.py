@@ -569,3 +569,138 @@ def test_every_operator_option_has_a_caller():
             ):
                 dead.append(f"{rel}:{fn.lineno} {fn.name}({param})")
     assert not dead, "defaulted parameters no call sets:\n" + "\n".join(dead)
+
+
+#: SURVEY.md's inventory, one row per capability, each mapped to the
+#: registry tags that witness it: a query witnesses a row when it
+#: carries any of the row's tags. The §2.4 rows are the relational
+#: checklist, the §7.2 rows the reference's three apps and the §7.3
+#: rows the LLM-pipeline extensions; the "north star" rows hold the
+#: pipeline operators that BASELINE.json's north star adds beyond
+#: §7.3's list.
+SURVEY_ROWS = {
+    "§2.3 C1: SQL-text submission": ("sql", "frontend"),
+    "§2.4 sources: text, binary and length-delimited files": (
+        "lengthdelim", "interop", "binary-source",
+    ),
+    "§2.4 sinks: write, then read back": ("sink", "readback"),
+    "§2.4 sinks: bucketed and z-ordered layout": ("bucketing", "layout", "zorder"),
+    "§2.4 projection, filter, predicates": ("filter", "predicates", "nulls", "explode"),
+    "§2.4 scalar and correlated subqueries": ("subquery",),
+    "§2.4 join: inner equi-join": ("join",),
+    "§2.4 join: broadcast": ("broadcast",),
+    "§2.4 join: outer": ("outer",),
+    "§2.4 join: semi": ("semi", "exists"),
+    "§2.4 join: anti": ("anti", "not-exists"),
+    "§2.4 join: range": ("range",),
+    "§2.4 join: as-of": ("asof",),
+    "§2.4 agg: sum/avg/min/max/count": ("aggregation",),
+    "§2.4 agg: distinct": ("distinct",),
+    "§2.4 agg: approximate": ("approx", "sketch"),
+    "§2.4 agg: rollup": ("rollup",),
+    "§2.4 agg: cube": ("cube",),
+    "§2.4 agg: grouping sets": ("grouping-sets",),
+    "§2.4 agg: percentiles and statistics": ("percentiles", "stats", "histogram", "argmin"),
+    "§2.4 agg: pivot and unpivot": ("pivot", "unpivot"),
+    "§2.4 agg: having": ("having",),
+    "§2.4 agg: collect_list + sort (G4)": ("nested-agg",),
+    "§2.4 window: rank, lag, analytic": ("window",),
+    "§2.4 window: moving and range frames": ("range-frame", "prefix-sum", "pareto"),
+    "§2.4 sort, limit, top-k": ("topk", "bounded-state"),
+    "§2.4 set ops": ("setops", "union"),
+    "§2.4 scalar: string": ("strings",),
+    "§2.4 scalar: date": ("dates",),
+    "§2.4 scalar: math": ("math",),
+    "§2.4 scalar: array": ("arrays",),
+    "§2.4 scalar: map": ("map",),
+    "§2.4 scalar: JSON": ("json",),
+    "§2.4 streaming: Structured Streaming run": ("streaming",),
+    "§2.4 streaming: tumbling and sliding windows": ("window-agg",),
+    "§2.4 streaming: session windows": ("session-window", "sessionize"),
+    "§2.4 streaming: stateful operators and timeouts": (
+        "stateful", "applyInPandasWithState", "timeout", "eviction",
+    ),
+    "§2.4 streaming: stream-stream join": ("stream-stream-join",),
+    "§2.4 streaming: exactly-once restart": ("exactly-once", "restart"),
+    "§2.4 UDF: scalar pandas UDF": ("pandas-udf",),
+    "§2.4 UDAF": ("udaf",),
+    "§2.4 UDTF": ("udtf",),
+    "§2.4 UDF: grouped and partition maps": ("applyInPandas", "grouped-map", "mapInPandas"),
+    "§7.2 app: wc": ("wc",),
+    "§7.2 app: grep": ("grep",),
+    "§7.2 app: vertex-degree": ("vertex-degree",),
+    "§7.3 dedup: exact": ("exact",),
+    "§7.3 dedup: MinHash LSH near-duplicates": ("minhash",),
+    "§7.3 dedup: connected components": ("components",),
+    "§7.3 dedup: other near-duplicate measures": (
+        "simhash", "jaccard", "containment", "substring", "suffix-array",
+        "passages", "corpus-level", "fuzzy", "entity-resolution", "embedding",
+    ),
+    "§7.3 dedup: decontamination": ("decontamination", "decontam"),
+    "§7.3 dedup: applied to the corpus": ("apply", "applied", "incremental"),
+    "§7.3 similarity: brute-force top-k": ("knn",),
+    "§7.3 similarity: LSH": ("lsh",),
+    "§7.3 similarity: IVF and clustering": ("ivf", "clustering"),
+    "§7.3 similarity: hard negatives, sparse affinity": ("hard-negatives", "training", "sparse"),
+    "§7.3 text: tokenization": ("tokenizer", "bpe", "oov"),
+    "§7.3 text: n-grams": ("ngrams", "collocations"),
+    "§7.3 text: TF-IDF and retrieval": ("tfidf", "retrieval", "bm25"),
+    "§7.3 text: language and source rollups": ("langid", "profile", "corpus-report"),
+    "§7.3 text: lexicon sentiment": ("sentiment",),
+    "§7.3 text: quality signals": (
+        "quality", "repetition", "fingerprint", "pii", "redaction", "selection", "dsir", "sweep",
+    ),
+    "§7.3 multimodal columns": ("multimodal", "resize"),
+    "north star: sampling and mixtures": ("sampling", "weighted", "rebalance", "mixture"),
+    "north star: splits and training order": ("split", "shuffle", "training-order"),
+    "north star: sequence packing and chunking": ("packing", "chunking"),
+    "north star: change data capture": ("cdc", "merge", "upsert"),
+    "north star: skew salting": ("skew",),
+    "north star: graph analytics": ("graph", "triangles", "pagerank"),
+    "north star: event analytics": ("funnel", "retention", "cohort", "timeseries", "anomaly"),
+}
+
+#: tags that name a query's family or a trait of its test data, not a
+#: capability; they witness no row
+FAMILY_TAGS = {
+    "parity", "tpch", "text", "events", "dedup", "similarity", "pipeline", "vectors",
+    "udf", "scalar", "iterative", "may_be_empty", "planted-fixture",
+}
+
+#: rows that no registered query witnesses, each with the reason
+KNOWN_GAPS = {
+    "§7.3 text: lexicon sentiment": "no query scores documents against a sentiment lexicon",
+}
+
+
+def _unwitnessed(specs) -> list[str]:
+    """The rows of ``SURVEY_ROWS`` that no spec carries a tag of."""
+    carried = {tag for spec in specs for tag in spec.tags}
+    return sorted(row for row, tags in SURVEY_ROWS.items() if not carried.intersection(tags))
+
+
+def test_registry_covers_survey_inventory():
+    """Every SURVEY row has a registered witness (or is a known gap),
+    and every registered tag is in the table. Also checks that the
+    check is real: dropping a row's witnesses from a copy of the
+    registry reports that row."""
+    from map_reduce_showcase_spark.plans.registry import REGISTRY, _load_all
+
+    _load_all()
+    witnesses = {
+        row: sorted(n for n, s in REGISTRY.items() if set(s.tags).intersection(tags))
+        for row, tags in SURVEY_ROWS.items()
+    }
+    table = "\n".join(f"{row}: {', '.join(w) or '-'}" for row, w in witnesses.items())
+    assert _unwitnessed(REGISTRY.values()) == sorted(KNOWN_GAPS), table
+
+    carried = {tag for s in REGISTRY.values() for tag in s.tags}
+    listed = {tag for row, tags in SURVEY_ROWS.items() if row not in KNOWN_GAPS for tag in tags}
+    assert carried - listed - FAMILY_TAGS == set(), "registered tags missing from SURVEY_ROWS"
+    assert (listed | FAMILY_TAGS) - carried == set(), "table tags no query carries"
+
+    for row, names in witnesses.items():
+        if row in KNOWN_GAPS:
+            continue
+        rest = [s for n, s in REGISTRY.items() if n not in names]
+        assert row in _unwitnessed(rest), row
